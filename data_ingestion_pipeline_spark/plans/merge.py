@@ -24,10 +24,24 @@ later orphans the extras). Idempotent: merging the same batch twice equals
 merging it once (tested in tests/test_merge.py).
 
 Scale: the batch dedup shuffles only the batch (micro-batch sized); the
-anti-join shuffles store+batch on the key — at 100 TB you bound this by
-partitioning the store on the key (pass ``repartition_keys=True``) so only
-key-matching partitions rewrite; with a Delta/Iceberg backend the same plan
-becomes ``MERGE INTO`` with file-level pruning.
+anti-join shuffles store+batch on the key. Files: the kept stored rows are
+coalesced (no shuffle) to ``ManagedTable.target_file_count`` files, one
+per 128 MiB of stored parquet, and the batch to one file per 128 MiB of its
+plan size estimate, so a version holds about ``ceil(stored / 128 MiB) +
+ceil(batch / 128 MiB)`` files however many commits built it. Without
+the coalesce every commit added a file (2 → 30–42 files over one
+``ingest`` benchmark run), and the write and the next read ran one task
+per tiny file.
+
+Rows: a commit still rewrites every stored row, O(table).
+``repartition_keys=True`` (key-bucketed layout, untouched buckets
+hard-linked) bounds that only for batches that touch few buckets. Measured
+on the benchmark's orders feed (``perfbench`` ``OrdersFeed(1)``): a
+1,250-row batch touches 64 of 64 hash buckets and 61–62 of 64 order-range
+buckets, because 20% of its re-sends pick keys from the whole table — on
+such traffic the keyed path rewrites about the whole table too. With a
+Delta/Iceberg backend the same plan becomes ``MERGE INTO`` with file-level
+pruning.
 """
 
 from __future__ import annotations
@@ -37,6 +51,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_ingestion_pipeline_spark.plans.join_strategies import plan_size_estimate
 from data_ingestion_pipeline_spark.plans.table import ManagedTable
 
 __all__ = ["dedupe_last_wins", "split_updates_inserts", "merge_upsert"]
@@ -90,6 +105,13 @@ def merge_upsert(
 
     Returns the committed version name. First run bootstraps the table.
 
+    File count: the stored rows are written as
+    ``table.target_file_count(base)`` files (one per 128 MiB of stored
+    parquet) and the batch as one file per 128 MiB of its plan size
+    estimate, so a large batch still writes in parallel. The new version
+    holds about ``ceil(stored / 128 MiB) + ceil(batch / 128 MiB)`` files,
+    not one more than its base; the keyed path holds one file per bucket.
+
     ``evolve_schema=True`` composes the reference's two flows in one commit
     (schema sync THEN ingest, ``main.py:9-26``): columns new in the batch
     are added to kept stored rows as typed NULLs, and columns the batch
@@ -103,8 +125,10 @@ def merge_upsert(
     partition directories, the stored scan partition-prunes to the buckets
     the batch touches, and untouched buckets are hard-linked into the new
     version instead of rewritten — per-merge cost becomes O(touched
-    buckets), independent of table size (BASELINE.md §streaming). Falls
-    back to one full (re-bucketing) rewrite when the table is not yet in
+    buckets), which is O(batch) only when a batch touches few buckets; a
+    batch whose keys spread over the table (the benchmark's orders feed,
+    see the module docstring) touches ~all of them. Falls back to one
+    full (re-bucketing) rewrite when the table is not yet in
     the declared layout, and to the plain path when equality-delete
     sidecars are pending or the schema is evolving (deletes are global key
     predicates — folding them per-bucket while hard-linking other buckets
@@ -128,6 +152,16 @@ def merge_upsert(
     base = table.current_version()
     if base is None:
         return table.overwrite(deduped, expected_base=None)
+    # the batch side of the commit is written as one file per 128 MiB of
+    # Catalyst's size estimate (a plan statistic, no job): a large batch
+    # still writes in parallel, and the file count does not follow the
+    # dedupe's shuffle partitions, which AQE leaves uncoalesced on a cached
+    # plan or with AQE off. Capped at the shuffle partitions: a batch with
+    # no source statistics estimates as unbounded and keeps its partitions.
+    batch_files = min(
+        ManagedTable.file_count(plan_size_estimate(deduped)),
+        int(deduped.sparkSession.conf.get("spark.sql.shuffle.partitions")),
+    )
     # deduped feeds BOTH the anti-join (kept) and the union below; without a
     # pin the commit plan scans + window-dedups the batch source TWICE per
     # merge (tools/stream_bench.py caught numInputRows at exactly 2x the
@@ -142,11 +176,16 @@ def merge_upsert(
     # being silently folded away by a stale snapshot
     sidecars = table.sidecar_listing(base)
     stored = table.read(version=base)
-    kept = stored.join(deduped.select(*keys), list(keys), "left_anti")
-    if evolve_schema:
-        merged = kept.unionByName(deduped, allowMissingColumns=True)
-    else:
-        merged = kept.unionByName(deduped)
+    # the kept side by its on-disk bytes, not by the base's file count:
+    # coalesce (no shuffle) packs it into ~128 MiB files, so the base's
+    # files do not carry over one-for-one and a version does not gain a
+    # file per commit
+    kept = stored.join(deduped.select(*keys), list(keys), "left_anti").coalesce(
+        table.target_file_count(base)
+    )
+    merged = kept.unionByName(
+        deduped.coalesce(batch_files), allowMissingColumns=evolve_schema
+    )
     return table.overwrite(
         merged, expected_base=base, expected_sidecars=sidecars
     )

@@ -46,6 +46,8 @@ _PTR_LOCK = ".ptr_lock"
 # dirs with a hidden spec file pinning (key columns, bucket count)
 _BUCKET_COL = "__bucket"
 _BUCKET_SPEC = "_bucket_spec"  # leading _ -> invisible to the data scan
+# file size the layout-sizing rewrites (compact, merge) aim for
+TARGET_FILE_BYTES = 128 * 1024 * 1024
 # sentinel: "caller did not declare a base" (None is a real value — the
 # expected base of a bootstrap commit against a not-yet-existing table)
 _UNSET = object()
@@ -503,11 +505,23 @@ class ManagedTable:
         expected_sidecars=None,
     ) -> str:
         """Full rewrite committed in the key-bucketed layout (the bootstrap
-        / re-bucketing path of keyed partial rewrites). One shuffle on the
-        bucket id so each bucket dir gets one file per holding task."""
+        / re-bucketing path of keyed partial rewrites), one file per
+        bucket dir."""
+        bucket_sql = bucket_sql or self.default_bucket_sql(key_cols, n_buckets)
+        stage = self._stage_bucketed(df, bucket_sql)
+        self._write_bucket_spec(stage, key_cols, n_buckets, bucket_sql)
+        version = self._claim_version(stage)
+        self._commit_pointer(version, expected_base, expected_sidecars)
+        self._vacuum()
+        return version
+
+    def _stage_bucketed(self, df: DataFrame, bucket_sql: str) -> str:
+        """Write ``df`` to a fresh staging dir in the __bucket=K layout. One
+        shuffle on the bucket id puts every bucket in one task, so each
+        bucket dir gets exactly one file however many partitions ``df``
+        has — without it, every commit would add a file per bucket."""
         from pyspark.sql import functions as F
 
-        bucket_sql = bucket_sql or self.default_bucket_sql(key_cols, n_buckets)
         stage = os.path.join(self.root, f"._stage_{uuid.uuid4().hex}")
         (
             df.withColumn(_BUCKET_COL, F.expr(bucket_sql))
@@ -516,11 +530,7 @@ class ManagedTable:
             .partitionBy(_BUCKET_COL)
             .parquet(stage)
         )
-        self._write_bucket_spec(stage, key_cols, n_buckets, bucket_sql)
-        version = self._claim_version(stage)
-        self._commit_pointer(version, expected_base, expected_sidecars)
-        self._vacuum()
-        return version
+        return stage
 
     def read_buckets(
         self, version: str, buckets: Sequence[int], apply_deletes: bool = True
@@ -563,21 +573,15 @@ class ManagedTable:
         """Keyed PARTIAL rewrite: commit a new version in which only the
         ``touched`` buckets' data comes from ``merged``; every untouched
         bucket directory is hard-linked file-by-file from the base
-        snapshot. Versions stay immutable (data files are write-once, so
+        snapshot, and each touched bucket is rewritten as one file, so a
+        bucket holds one file however many commits touched it. Versions
+        stay immutable (data files are write-once, so
         shared inodes are never mutated; _vacuum of the base keeps linked
         files alive via the refcount). The caller must have verified
         ``bucket_spec(expected_base) == (key_cols, n_buckets, bucket_sql)``
         and that ``merged`` contains no rows outside ``touched``."""
-        from pyspark.sql import functions as F
-
         bucket_sql = bucket_sql or self.default_bucket_sql(key_cols, n_buckets)
-        stage = os.path.join(self.root, f"._stage_{uuid.uuid4().hex}")
-        (
-            merged.withColumn(_BUCKET_COL, F.expr(bucket_sql))
-            .write.mode("overwrite")
-            .partitionBy(_BUCKET_COL)
-            .parquet(stage)
-        )
+        stage = self._stage_bucketed(merged, bucket_sql)
         base_dir = os.path.join(self.root, expected_base)
         touched_set = {int(b) for b in touched}
         try:
@@ -648,20 +652,35 @@ class ManagedTable:
             if f.endswith(".parquet")
         )
 
-    def compact(self, target_file_bytes: int = 128 * 1024 * 1024) -> str:
+    @staticmethod
+    def file_count(n_bytes: int, target_file_bytes: int = TARGET_FILE_BYTES) -> int:
+        """Files to write ``n_bytes`` of data in: ``ceil(n_bytes /
+        target_file_bytes)``, at least 1."""
+        return max(1, -(-n_bytes // target_file_bytes))
+
+    def target_file_count(
+        self, version: str, target_file_bytes: int = TARGET_FILE_BYTES
+    ) -> int:
+        """How many files a rewrite of ``version``'s data should produce,
+        sized from its on-disk parquet bytes — a directory walk, not a
+        Spark job. ``compact`` and ``merge_upsert`` both size their output
+        with it, which keeps a version at about this many files instead of
+        one more file per commit."""
+        return self.file_count(self._data_bytes(version), target_file_bytes)
+
+    def compact(self, target_file_bytes: int = TARGET_FILE_BYTES) -> str:
         """Rewrite the current version into ~target-sized files (OPTIMIZE).
 
         Streaming/incremental ingestion accretes many small files; at 100 TB
         the scan-planning and open() overhead of millions of tiny files
         dominates. Sizing from the actual on-disk bytes of the current
         version, ``coalesce`` (no shuffle) bin-packs partitions down to
-        ``ceil(bytes / target)`` files. Data is unchanged — only layout.
+        ``target_file_count`` files. Data is unchanged — only layout.
 
         A KEY-BUCKETED version (keyed partial rewrites) keeps its layout:
         the compaction re-commits through ``overwrite_bucketed`` under the
-        same spec, so small files accreted by per-batch partial rewrites
-        bin-pack per bucket WITHOUT demoting the next merge to a full
-        re-bucketing rewrite. (Folding pending delete sidecars stays
+        same spec (one file per bucket) WITHOUT demoting the next merge to
+        a full re-bucketing rewrite. (Folding pending delete sidecars stays
         correct either way — the read applies them before the rewrite.)
         """
         cur = self.current_version()
@@ -679,9 +698,10 @@ class ManagedTable:
                 expected_base=cur,
                 expected_sidecars=sidecars,
             )
-        n_files = max(1, -(-self._data_bytes(cur) // target_file_bytes))
         return self.overwrite(
-            self.read(version=cur).coalesce(n_files),
+            self.read(version=cur).coalesce(
+                self.target_file_count(cur, target_file_bytes)
+            ),
             expected_base=cur,
             expected_sidecars=sidecars,
         )

@@ -412,3 +412,46 @@ def test_compact_preserves_bucketed_layout(spark, tmp_path):
             }
             shared += bool(ino1 & ino2)
     assert shared >= 1, "post-compaction merge degraded to a full rewrite"
+
+
+def _parquet_files(table):
+    """{dir relative to the current version: parquet file count}."""
+    root = os.path.join(table.root, table.current_version())
+    counts = {}
+    for d, _, files in os.walk(root):
+        n = sum(f.endswith(".parquet") for f in files)
+        if n:
+            counts[os.path.relpath(d, root)] = n
+    return counts
+
+
+@pytest.mark.parametrize("keyed", [False, True], ids=["full", "keyed"])
+def test_merge_file_count_stays_bounded(spark, tmp_path, keyed):
+    """Repeated merges must not add a parquet file per commit: the full
+    path sizes the stored side by bytes (one file per 128 MiB) plus the
+    batch's file; the keyed path writes each touched bucket as one file.
+
+    The batches come from ``spark.range``: like the CSV ingest, they carry
+    a size estimate, so the anti-join broadcasts the batch and the kept
+    rows keep the stored scan's partitioning (one per file). A
+    ``createDataFrame`` batch has no estimate, is shuffle-joined, and AQE
+    coalescing would hide the growth."""
+    t = ManagedTable(spark, str(tmp_path / "t"))
+    kw = dict(repartition_keys=True, n_buckets=4) if keyed else {}
+    for i in range(7):
+        # 24 keys per batch, half of them re-sent from the previous batch,
+        # so every batch both updates and inserts across all buckets
+        batch = spark.range(12 * i, 12 * i + 24).selectExpr(
+            "concat('k', id) AS k",
+            f"{100 * i} + id AS v",
+            f"timestamp('2023-01-01') + make_interval(0, 0, 0, {i}) AS ts",
+        )
+        merge_upsert(t, batch, ["k"], "ts", **kw)
+    counts = _parquet_files(t)
+    if keyed:
+        assert len(counts) == 4 and all(n <= 2 for n in counts.values()), counts
+    else:
+        assert sum(counts.values()) <= 2, counts
+    got = {r.k: r.v for r in t.read().collect()}
+    assert len(got) == 12 * 6 + 24
+    assert got["k12"] == 112 and got["k95"] == 695
