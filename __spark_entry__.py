@@ -1,10 +1,12 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry-point contract for the engine (PySpark target).
 
 Thin shim over ``data_ingestion_pipeline_spark.registry`` — the engine's
-query/oracle registry. The driver's verify runs ``entry(spark)`` as a smoke
-check, runs each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+query/oracle registry. A verifier runs ``entry(spark)`` as a smoke check,
+then runs each ``queries()[name]`` at sf=0.01 and compares it against the
+matching ``oracle_sql()[name]`` in DuckDB (row count + schema +
+order-insensitive value hash); ``tools/check_oracle.py`` does the same
+locally. Both dicts come back in registration order; queries are looked up
+by name, so the order carries no priority.
 """
 
 from __future__ import annotations

@@ -18,14 +18,12 @@ __all__ = ["exact_dedup", "exact_dedup_keys"]
 
 
 def exact_dedup_keys(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Surviving ids: min(id) per fingerprint. Cheap shuffle — two columns."""
+    """Surviving ids: ``(fingerprint, min(id))`` per fingerprint. Cheap
+    shuffle — two columns."""
     return (
-        df.select(
-            fingerprint_md5(F.col(text_col)).alias("__fp"), F.col(id_col)
-        )
-        .groupBy("__fp")
+        df.select(fingerprint_md5(F.col(text_col)).alias("fingerprint"), id_col)
+        .groupBy("fingerprint")
         .agg(F.min(id_col).alias(id_col))
-        .drop("__fp")
     )
 
 

@@ -21,6 +21,7 @@ from data_ingestion_pipeline_spark.dedup.embedding import (
     cosine_pairs_blas,
     lsh_cosine_pairs,
 )
+from data_ingestion_pipeline_spark.dedup.exact import exact_dedup_keys
 from data_ingestion_pipeline_spark.dedup.minhash import (
     minhash_near_dup_pairs,
     minhash_verified_pairs_complete,
@@ -158,11 +159,8 @@ def _augmented_docs(docs: DataFrame) -> DataFrame:
 def exact_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on the planted-duplicate corpus: one surviving (min) id
     per fingerprint. Copies must collapse onto their originals."""
-    aug = _augmented_docs(load_table(spark, sf_dir, "documents"))
-    return (
-        aug.select(fingerprint_md5(F.col("text")).alias("fingerprint"), "doc_id")
-        .groupBy("fingerprint")
-        .agg(F.min("doc_id").alias("doc_id"))
+    return exact_dedup_keys(
+        _augmented_docs(load_table(spark, sf_dir, "documents")), "text", "doc_id"
     )
 
 

@@ -6,6 +6,10 @@ SQL string over the same parquet tables. Column names AND types are aligned
 between the Spark plan and the oracle (aliases identical on both sides;
 month/year cast to int; float aggregates rounded identically on both sides
 so the order-insensitive value hash is deterministic across engines).
+
+``queries()`` and ``oracle_sql()`` export in registration order; the
+``register`` calls below are grouped by subject. Callers look queries up by
+name, so no caller depends on that order.
 """
 
 from __future__ import annotations
@@ -47,634 +51,12 @@ def register(name: str, fn: QueryFn, oracle: str | None) -> None:
     _REGISTRY[name] = (fn, oracle)
 
 
-# The driver verifies queries in REGISTRATION ORDER and has a finite budget
-# (it checks the first 50). The registration calls below stay grouped by
-# subject; these lists re-order the exported dicts so the driver spends its
-# budget where evidence is thinnest. Maintained per round from the latest
-# CORRECTNESS_r{N}.json; tests assert the lists stay in sync with the
-# registry contents.
-#
-# Round-5 state (from CORRECTNESS_r01-r04 + VERDICT r4): 146 of the 254
-# registered queries hold a driver-green row, and every one of those is
-# green at its latest check. The 51 queries below have NO driver row yet
-# (the round-4-late additions); they take the whole round-5 budget.
-# Ordering inside the tier: whole-capability carriers first (the verdict's
-# explicit keeps: kmeans_lloyd, incremental_dedup, scd2_asof, time_travel),
-# then the rest; the single spillover slot (position 51, just past the
-# 50-query budget) goes to cusum_changepoint_daily, the query with the
-# strongest local evidence (hypothesis property suite + tri-SF oracle
-# sweeps) — exactly the spill the round-4 verdict prescribed.
-_ROUND5_PENDING = [
-    # capability-tier carriers (verdict-named keeps first)
-    "kmeans_lloyd_embeddings",
-    "incremental_dedup_documents",
-    "scd2_asof_lookup",
-    "time_travel_orders_versions",
-    "table_diff_snapshots",
-    "kmeans_assign_embeddings",
-    "curation_waterfall_documents",
-    "ngram_novelty_documents",
-    "language_rebalance_plan",
-    "epoch_reshuffle_documents",
-    "streaming_chained_window_rollup_events",
-    "python_datasource_write_roundtrip",
-    "session_variable_brand_report",
-    "sql_scripting_size_report",
-    "lateral_topn_orders_per_customer",
-    "grouping_sets_revenue",
-    "arrow_vector_norms_embeddings",
-    # sketch extensions
-    "approx_distinct_users_trailing7d",
-    "hll_intersection_weekday_weekend_users",
-    # ranking-window queries replanned this round (limit-then-rank /
-    # partition-local run-length) — fresh driver rows prove the replans
-    "zipf_fit_tokens",
-    "top_bigram_collocations_documents",
-    "rake_keywords_documents",
-    "encoding_advisor_orders",
-    # time-series tier
-    "seasonal_naive_mape_events",
-    "theil_sen_daily_trend",
-    "price_index_monthly",
-    "value_drift_weekday_weekend",
-    "bounce_rate_daily",
-    "longest_streak_users",
-    "time_to_convert_quantiles",
-    "kaplan_meier_conversion_events",
-    "ab_test_session_value",
-    # non-parametric / distributional stats tier
-    "mann_whitney_purchase_view_values",
-    "spearman_daily_purchase_view",
-    "kendall_tau_daily_purchase_view",
-    "weighted_median_price_by_flag",
-    "trimmed_mean_price_by_priority",
-    "transpose_priority_quantiles",
-    "benford_digit_test_orders",
-    "corr_matrix_lineitem",
-    "equidepth_histogram_orders",
-    "key_skew_report_events",
-    "k_anonymity_report_events",
-    "abc_classification_parts",
-    # ML-prep / curation tier
-    "bigram_lm_doc_scores",
-    "readability_scores_documents",
-    "scrub_numeric_tokens_events",
-    "weighted_sample_documents",
-    "khop_reach_copurchase",
-    # strongest local evidence last: these absorb any budget shortfall
-    "train_val_test_split_documents",
-    "cusum_changepoint_daily",
-]
-# Queries added in round 5 — they sit just past the pending tier (first
-# driver rows arrive with the round-6 budget); until then each is verified
-# locally via tools/check_oracle.py tri-SF sweeps and, for approximate
-# surfaces, ships with an oracle-checked gate sibling in the same commit.
-_ROUND5_NEW: list[str] = [
-    "customer_spend_deciles_approx",
-    "ann_ivfpq_recall_embeddings",
-    # (ann_ivfpq_topk_embeddings sat here until its round-11 retirement)
-    "gopher_repetition_documents",
-    "winnowing_fingerprints_documents",
-    "table_changes_versions",
-    "mcv_stats_orders",
-    "winnowing_near_copy_pairs_documents",
-    "table_checksum_orders",
-    "incremental_mv_refresh_orders",
-    "vocab_coverage_documents",
-    "rolling_corr_purchase_view_14d",
-    "join_cardinality_estimate_orders_lineitem",
-    "dsir_importance_documents",
-    "dp_noisy_counts_events",
-    "bpe_merges_documents",
-    "hard_negative_mining_embeddings",
-    "frequent_event_sequences",
-    "user_behavior_entropy",
-    "sorted_neighborhood_pairs_parts",
-    "adamic_adar_link_prediction_parts",
-    "target_encoding_loo_orders",
-    "logistic_quality_classifier_documents",
-    "auc_lang_by_length_documents",
-    "ngram_containment_documents",
-    "cuped_adjusted_ab_events",
-    "heaps_law_fit_documents",
-    "bm25_search_documents",
-    "l_diversity_report_events",
-    "rfm_segments_customers",
-    "fd_discovery_orders",
-    "fk_inclusion_audit",
-    "cdc_chunk_dedup_documents",
-    "t_closeness_report_events",
-    "js_divergence_event_types_weekpart",
-    "cramers_v_event_type_dow",
-    "ks_test_purchase_view",
-    "pareto_frontier_parts",
-    "compaction_plan_orders",
-    "seasonal_decompose_daily",
-    "hybrid_search_rrf_documents",
-    "multimodal_audio_chunks",
-    "calibration_report_documents",
-    "fellegi_sunter_linkage_parts",
-    "partition_pruning_report_orders",
-    "label_centroid_similarity_embeddings",
-    "neyman_allocation_documents",
-    "mann_kendall_daily_trend",
-    "ks_by_event_type_bh",
-    "merge_on_read_delete_events",
-    "psi_value_drift_halves",
-    "durbin_watson_daily_trend",
-    "streaming_topk_event_types_daily",
-    "oversample_minority_documents",
-    "pca_power_iteration_embeddings",
-    "holt_linear_daily_forecast",
-    "countmin_event_types",
-    "whitening_isotropy_gain_embeddings",
-    "decision_stump_documents",
-    "fightin_words_batches_documents",
-    "cohort_ltv_curve_events",
-    "fixed_width_roundtrip_orders",
-    "conformal_forecast_interval_daily",
-    "capture_recapture_users",
-    "poisson_bootstrap_ci_orders",
-    "isotonic_calibration_documents",
-    "holt_winters_seasonal_daily",
-    "mmr_rerank_topk_embeddings",
-    "mixture_temperature_allocation",
-    "embedding_int8_quantization_report",
-    "length_bucket_padding_report",
-    "curriculum_schedule_documents",
-    "self_similarity_sample_documents",
-    "kfold_cv_stump_documents",
-    "cross_source_overlap_matrix",
-    "misra_gries_heavy_hitters_events",
-    "bot_cadence_report_events",
-    "markov_stationary_event_types",
-]
-# Round-6 additions sit BEHIND the whole never-checked round-5 backlog
-# (round-5 verdict item 1: the backlog keeps rotation priority until it
-# fits one driver budget) but ahead of the already-green remainder, so
-# they enter the budget only once the backlog drains.
-_ROUND6_NEW: list[str] = [
-    "rfm_segments_customers_approx",
-]
-# NOTE: stateful_event_type_counts_events is PERMANENTLY env-gated here —
-# its transformWithStateInPandas runtime needs python-protobuf, absent in
-# this sandbox (streaming/stateful.py:105). It never registers locally, so
-# it must not occupy a front-tier slot; parity is pytest-covered.
-
-
-# Round-7 rotation (round-6 verdict items 1-2): CORRECTNESS_r06 landed
-# 49 green rows + 1 documented rows-only (ann_ivfpq_topk) on the first 50
-# of the round-6 front — those RETIRE to the remainder. What stays is the
-# 30-name spillover (the tail of _ROUND5_NEW past the r6 budget, plus
-# _ROUND6_NEW) — positions 50-79 last round, positions 0-29 now — followed
-# by round-7 additions (≤20, so backlog + additions fit the 50-slot budget
-# and the never-checked count hits 0 at round end).
-_ROUND7_BACKLOG: list[str] = [
-    "merge_on_read_delete_events",
-    "psi_value_drift_halves",
-    "durbin_watson_daily_trend",
-    "streaming_topk_event_types_daily",
-    "oversample_minority_documents",
-    "pca_power_iteration_embeddings",
-    "holt_linear_daily_forecast",
-    "countmin_event_types",
-    "whitening_isotropy_gain_embeddings",
-    "decision_stump_documents",
-    "fightin_words_batches_documents",
-    "cohort_ltv_curve_events",
-    "fixed_width_roundtrip_orders",
-    "conformal_forecast_interval_daily",
-    "capture_recapture_users",
-    "poisson_bootstrap_ci_orders",
-    "isotonic_calibration_documents",
-    "holt_winters_seasonal_daily",
-    "mmr_rerank_topk_embeddings",
-    "mixture_temperature_allocation",
-    "embedding_int8_quantization_report",
-    "length_bucket_padding_report",
-    "curriculum_schedule_documents",
-    "self_similarity_sample_documents",
-    "kfold_cv_stump_documents",
-    "cross_source_overlap_matrix",
-    "misra_gries_heavy_hitters_events",
-    "bot_cadence_report_events",
-    "markov_stationary_event_types",
-    *_ROUND6_NEW,
-]
-# Queries added in round 7 — registered BEHIND the backlog (positions
-# 30-49) so the driver verifies backlog and additions in the same budget.
-_ROUND7_NEW: list[str] = [
-    "exact_substring_excision_documents",
-    "bpe_encode_documents",
-    "good_turing_unseen_mass_documents",
-    "kneser_ney_bigram_documents",
-    "skipgram_pmi_documents",
-    "mattr_lexical_diversity_documents",
-    "negative_sampling_table_documents",
-    "wilson_ci_purchase_rate_daily",
-    "oneway_anova_event_values",
-    "gini_lorenz_customer_spend",
-    "cooks_distance_price_quantity",
-    "hill_tail_index_orders",
-    "ar2_yule_walker_daily",
-    "tukey_hsd_event_values",
-    "levene_bf_event_values",
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q8_market_share",
-    "tpch_q10_returned_items",
-]
-_NEVER_DRIVER_CHECKED: list[str] = [
-    *_ROUND7_BACKLOG,
-    *_ROUND7_NEW,
-]
-
-# ---- Round-9 rotation (round-8 verdict ask #1) ----
-# CORRECTNESS_r08 landed 50/50 green over the round-8 front (the oldest
-# stale-evidence tier), so that tier retires. The budget's two jobs this
-# round, in priority order:
-#   slots 0-23  — the 24 round-8 additions with NO driver row yet
-#                 (TPC-H completion tier, PII tier, survival/
-#                 experimentation tier, item-item CF, silhouette, growth
-#                 accounting, Matryoshka, DPP, the BMP/WAV codec queries)
-#                 — never-checked ahead of stale;
-#   slots 24-49 — the 26 oldest-stale names per the freshness policy: the
-#                 2 whose latest row is CORRECTNESS_r02
-#                 (views_within_hour_of_purchase — the r8 queue mislabeled
-#                 it never-checked; it holds an r02 green row — and
-#                 revenue_per_product) + the 24 lowest-registration-order
-#                 r03-vintage names (the §2 report/relational core, whose
-#                 implementing modules were refactored in the r4-r7
-#                 helper-folding waves).
-_ROUND9_FRONT: list[str] = [
-    # -- never driver-checked (round-8 additions) --
-    "tpch_q4_shaped_priority_check",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q12_shaped_priority_by_returnflag",
-    "tpch_q14_promo_revenue",
-    "tpch_q15_top_supplier",
-    "tpch_q16_shaped_supplier_diversity",
-    "tpch_q18_large_volume_customers",
-    "tpch_q19_shaped_discounted_revenue",
-    "tpch_q22_shaped_dormant_customers",
-    "pii_detect_documents",
-    "pii_redact_documents",
-    "pii_prevalence_by_source",
-    "item_item_cosine_topk_parts",
-    "srm_check_events",
-    "kaplan_meier_user_retention",
-    "simplified_silhouette_embeddings",
-    "logrank_test_retention_arms",
-    "msprt_always_valid_ab_daily",
-    "growth_accounting_daily_users",
-    "matryoshka_truncation_recall_embeddings",
-    "dpp_ship_year_join_orders",
-    "multimodal_bmp_pixel_stats",
-    "multimodal_wav_pcm_energy",
-    # -- oldest-stale evidence (r02/r03 rows, modules refactored since) --
-    "views_within_hour_of_purchase",
-    "revenue_per_product",
-    "revenue_per_product_sql",
-    "low_stock",
-    "orders_per_product_month",
-    "revenue_per_category",
-    "inventory_status",
-    "most_sold_per_category",
-    "exists_semi_join",
-    "anti_join_new_keys",
-    "in_list_filter",
-    "composite_key_semi_join",
-    "customer_order_enrichment",
-    "top_parts_per_brand",
-    "customer_order_ranks",
-    "revenue_rollup_brand_size",
-    "set_ops_customer_segments",
-    "top_revenue_orders",
-    "price_quantiles_by_priority",
-    "acctbal_full_outer_reconciliation",
-    "order_price_histogram",
-    "order_status_priority_cube",
-    "trailing_spend_30d",
-    "customer_spend_deciles",
-    "orders_above_customer_avg",
-    "brand_share_of_revenue",
-]
-
-# ---- Round-10 rotation (round-9 verdict ask #1) ----
-# CORRECTNESS_r09 landed 50/50 green over the round-9 front, so that tier
-# retires. The round-10 budget, in priority order:
-#   slots 0-19  — the 19 round-9 additions with NO driver row at all
-#                 (`_ROUND10_QUEUE` minus the retired Mann-Kendall
-#                 duplicate) plus the merged `mann_kendall_daily_trend`,
-#                 whose r06 row predates this round's schema change
-#                 (n_pairs added in the duplicate merge);
-#   slots 20-21 — `embedding_lsh_near_dup` / `ann_lsh_topk_embeddings`:
-#                 latest rows are r03 rows-only records, but both were
-#                 PROMOTED to real DuckDB oracles in r8/r9 — a fresh slot
-#                 turns the promotion into hard hash evidence;
-#   slots 22-49 — the 28 oldest-stale names per the freshness policy:
-#                 all 16 r03-vintage rows (streaming/dedup/lakehouse/
-#                 variant tier) + the 12 lowest-registration-order
-#                 r04-vintage rows (sketches, python datasource, schema
-#                 evolution, text base tier).
-_ROUND10_FRONT: list[str] = [
-    # -- never driver-checked (round-9 additions) --
-    "tpch_q2_shaped_min_cost_supplier",
-    "tpch_q9_shaped_product_type_profit",
-    "tpch_q11_shaped_important_stock",
-    "tpch_q13_customer_distribution",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q20_shaped_promotion_suppliers",
-    "tpch_q21_shaped_waiting_suppliers",
-    "bigram_perplexity_documents",
-    "hits_authorities_parts",
-    "ann_pq_sample_adc_topk_embeddings",
-    "kcore_peel_copurchase_parts",
-    "minhash_md5_replay_near_dup_documents",
-    "simhash_md5_replay_near_dup_documents",
-    "textrank_terms_documents",
-    "mutual_information_event_dow",
-    "absorbing_expected_steps_to_purchase",
-    "fellegi_sunter_part_linkage",
-    "jackknife_ratio_metric_ab",
-    "eb_shrunk_purchase_rate_users",
-    # -- schema changed this round (duplicate-MK merge added n_pairs) --
-    "mann_kendall_daily_trend",
-    # -- r03 rows-only vintage, promoted to real oracles in r8/r9 --
-    "embedding_lsh_near_dup",
-    "ann_lsh_topk_embeddings",
-    # -- oldest-stale evidence (r03 rows) --
-    "lang_id_documents",
-    "tumbling_window_events",
-    "scd2_customer_dimension",
-    "merge_cdc_orders",
-    "gdpr_delete_events",
-    "daily_rollup_from_hourly_events",
-    "decontaminate_documents",
-    "xml_roundtrip_events",
-    "variant_shred_events",
-    "recursive_orderkey_hierarchy",
-    "udtf_part_type_words",
-    "zorder_clustered_orders",
-    "observed_metrics_orders",
-    "approx_top_k_event_types",
-    "streaming_dedup_within_watermark_events",
-    "dup_span_profile_documents",
-    # -- oldest-stale evidence (earliest r04 rows) --
-    "approx_distinct_users_daily",
-    "approx_price_quantiles_by_priority",
-    "order_price_percentiles_window",
-    "frequent_users_sketch",
-    "python_datasource_agg",
-    "python_datasource_stream_agg",
-    "schema_evolution_sync",
-    "bucketed_colocated_join",
-    "compacted_sorted_orders",
-    "data_quality_orders",
-    "partitioned_orders_yearly",
-    "text_stats",
-]
-
-# Round-10 additions land here (never driver-checked — freshness policy
-# puts no-evidence names ahead of stale-green when round 11 rotates).
-_ROUND11_QUEUE: list[str] = [
-    "ann_ivfpq_sample_adc_topk_embeddings",
-    "kruskal_wallis_event_values",
-    "cliffs_delta_purchase_view",
-    "mcnemar_weekday_weekend_purchase",
-    "leakage_safe_split_documents",
-    "merge_upsert_keyed_events",
-    "markov_removal_attribution_events",
-    "poisson_glm_daily_trend",
-    "als_rank1_part_factors",
-    "streaming_ingest_merge_keyed_events",
-    "cox_ph_retention_arms",
-    "shapley_attribution_events",
-    "label_propagation_communities_parts",
-    "cmh_test_arm_purchase_by_cohort",
-    "qini_uplift_curve_users",
-    "huber_regression_price_quantity",
-    "binseg_changepoint_daily",
-    "jl_projection_distortion_embeddings",
-    "fisher_exact_region_priority_orders",
-    "poisson_dispersion_daily",
-    "chao1_trigram_richness_documents",
-    "degree_assortativity_copurchase_parts",
-    "nelson_aalen_hazard_retention",
-    "markov_entropy_rate_event_types",
-    "lad_regression_price_quantity",
-    "periodogram_daily_events",
-    "theil_atkinson_customer_spend",
-    "partial_corr_purchase_view_daily",
-    "tost_equivalence_ab_value",
-    "jarque_bera_daily_values",
-    "ljung_box_daily_values",
-    "runs_test_daily_values",
-    "newey_west_daily_trend",
-    "hhi_brand_concentration_by_category",
-    "bowker_symmetry_event_transitions",
-]
-
-# ---- Round-11 rotation (round-10 verdict ask #1) ----
-# CORRECTNESS_r10 landed 50/50 green over the round-10 front, so that tier
-# retires. The round-11 budget, in priority order:
-#   slots 0-34  — the 35 round-10 additions with NO driver row at all
-#                 (`_ROUND11_QUEUE` verbatim: the stats/experimentation/
-#                 survival/graph continuation tier plus both keyed-partial
-#                 MERGE pins, the leakage-safe split and the IVF-PQ
-#                 composition replay);
-#   slots 35-49 — the 15 oldest-stale names per the freshness policy
-#                 (all r04-vintage rows: tokens/TF-IDF/curation/chunking,
-#                 the HLL merge, the three ANN recall gates, star-contract
-#                 near-dup clusters, Bloom decontamination and the
-#                 stream-stream interval left join).
-_ROUND11_FRONT: list[str] = _ROUND11_QUEUE + [
-    "doc_tokens_exploded",
-    "tfidf_top_terms",
-    "curation_pipeline_documents",
-    "chunk_documents",
-    "hll_merge_users_weekly",
-    "ann_lsh_recall_embeddings",
-    "ann_ivf_recall_embeddings",
-    "ann_pq_recall_embeddings",
-    "near_dup_clusters_star_documents",
-    "bloom_decontaminate_documents",
-    "streaming_interval_left_join_events",
-    "build_vocab_documents",
-    "shard_shuffle_documents",
-    "parameterized_brand_filter",
-    "pandas_udaf_price_by_priority",
-]
-
-# Round-11 additions land here (never driver-checked — freshness policy
-# puts no-evidence names ahead of stale-green when round 12 rotates).
-_ROUND12_QUEUE: list[str] = [
-    "dunn_posthoc_event_values",
-    "moods_median_test_event_values",
-    "friedman_test_event_type_values",
-    "cochrans_q_event_types_users",
-    "pacf_daily_values",
-    "randomization_test_ab_value",
-    "hodges_lehmann_purchase_view_daily",
-    "transitivity_copurchase_parts",
-    "nn1_label_accuracy_embeddings",
-    "nmi_ivf_cells_labels_embeddings",
-    "cohens_kappa_quality_flags_documents",
-    "streaming_interval_full_outer_events",
-    "ccf_purchase_view_daily",
-    "granger_lag1_view_to_purchase_daily",
-    "chow_test_daily_midpoint",
-    "breusch_pagan_price_quantity",
-    "jonckheere_terpstra_priority_price",
-    "welch_anova_event_values",
-    "bartlett_test_event_values",
-    "brunner_munzel_purchase_view",
-    "cramer_von_mises_purchase_view",
-    "gmm2_em_daily_values",
-    "pettitt_changepoint_daily",
-    "rmst_user_retention",
-    "anderson_darling_purchase_view",
-    "wasserstein_purchase_view",
-    "energy_distance_purchase_view",
-    "goodman_kruskal_priority_price_orders",
-    "wilcoxon_signed_rank_purchase_view_daily",
-    "cochran_armitage_trend_priority_orders",
-    "adf_test_daily_values",
-    "breusch_godfrey_daily_trend",
-    "white_test_price_quantity",
-    "kmv_distinct_users_events",
-    "ams_f2_user_activity_events",
-    "binned_range_join_orders_bands",
-    "brier_decomposition_documents",
-    "hosmer_lemeshow_documents",
-    "fleming_harrington_test_retention_arms",
-    "life_table_retention",
-    "permutation_entropy_daily_values",
-    "bartels_rank_test_daily_values",
-    "cox_stuart_trend_daily",
-    "theils_u_event_type_dow",
-    "local_clustering_topk_parts",
-    "hurst_rs_daily_values",
-    "esd_outliers_daily",
-    "transfer_entropy_view_purchase_daily",
-    "croston_intermittent_demand_part",
-    "theta_method_forecast_daily",
-    "spectral_entropy_daily_events",
-    "seasonal_mann_kendall_daily",
-    "kendalls_w_weekday_event_types",
-    "dagostino_k2_daily_values",
-    "zone_map_skip_report_orders",
-    "ansari_bradley_purchase_view",
-    "competing_risks_cif_retention",
-    "bloom_index_probe_orders",
-    "near_dup_threshold_sweep_documents",
-    "ann_ivf_nprobe_sweep_embeddings",
-    "hotelling_t2_weekpart_daily",
-    "mahalanobis_outliers_lineitem",
-    "cronbach_alpha_event_types_users",
-    "odds_ratio_ci_priority_status_orders",
-    "canonical_correlation_daily",
-    "quade_test_event_type_values",
-    "box_m_test_weekpart_daily",
-    "mardia_normality_daily",
-    "greenwood_km_ci_retention",
-    "siegel_slope_daily_trend",
-    "cochrane_orcutt_daily_trend",
-    "cusum_squares_daily",
-    "variance_ratio_daily",
-    "turning_points_daily",
-]
-
-
-# ---- Round-12 rotation (round-11 verdict ask #7) ----
-# CORRECTNESS_r11 landed 50/50 green over the round-11 front, so that tier
-# retires to the remainder. The round-12 front leads with the queries whose
-# PLANS this round (and r11) rewrote — the basket-pair graph family, the
-# eager-pinned recall gates, the IRLS/spectral restructures, the re-sized
-# stateful streams, and the batch-6 pinned statistics — so the driver
-# verifies exactly the operators the optimizer touched.
-_ROUND12_FRONT: list[str] = [
-    # r12 basket-pair rewrite (11 queries) + fused ALS/HITS scalars
-    "pagerank_copurchase_parts",
-    "adamic_adar_link_prediction_parts",
-    "copurchase_lift_parts",
-    "item_item_cosine_topk_parts",
-    "triangle_count_copurchase",
-    "kcore_peel_copurchase_parts",
-    "label_propagation_communities_parts",
-    "degree_assortativity_copurchase_parts",
-    "transitivity_copurchase_parts",
-    "local_clustering_topk_parts",
-    "khop_reach_copurchase",
-    "als_rank1_part_factors",
-    "hits_authorities_parts",
-    # r12 IRLS double-fold fix + whitening kernel (+ the r11 spectral pair)
-    "huber_regression_price_quantity",
-    "lad_regression_price_quantity",
-    "whitening_isotropy_gain_embeddings",
-    "pca_power_iteration_embeddings",
-    "breusch_pagan_price_quantity",
-    "white_test_price_quantity",
-    # r12 eager-pin recall family
-    "ann_pq_recall_embeddings",
-    "ann_ivfpq_recall_embeddings",
-    "ann_lsh_recall_embeddings",
-    "ann_ivf_recall_embeddings",
-    "ann_ivf_nprobe_sweep_embeddings",
-    "minhash_scale_recall_documents",
-    "simhash_exact_copy_recall_documents",
-    "embedding_lsh_pair_recall_embeddings",
-    "semantic_dedup_recall_embeddings",
-    "matryoshka_truncation_recall_embeddings",
-    "minhash_md5_replay_near_dup_documents",
-    "simhash_md5_replay_near_dup_documents",
-    "embedding_lsh_near_dup",
-    "embedding_lsh_verified_near_dup",
-    # r12 stream-partition re-sizing
-    "stateful_user_profile_events",
-    "stateful_event_type_counts_pandas_events",
-    # r11 batch-6 pins (re-adjudicated r12) + markov_removal's r11 rewrite
-    "friedman_test_event_type_values",
-    "markov_stationary_event_types",
-    "dunn_posthoc_event_values",
-    "cochrans_q_event_types_users",
-    "isotonic_calibration_documents",
-    "markov_removal_attribution_events",
-    # _daily pin consumers (representatives)
-    "cochrane_orcutt_daily_trend",
-    "durbin_watson_daily_trend",
-    "autocorr_daily_value",
-    "hurst_rs_daily_values",
-    "holt_winters_seasonal_daily",
-    "holt_linear_daily_forecast",
-    # examined-at-floor spot checks
-    "kmeans_lloyd_embeddings",
-    "leakage_safe_split_documents",
-    "near_dup_clusters_documents",
-]
-
-
-def _ordered_names() -> list[str]:
-    front = [n for n in _ROUND12_FRONT if n in _REGISTRY]
-    queue = [n for n in _ROUND12_QUEUE if n in _REGISTRY and n not in front]
-    seen = set(front) | set(queue)
-    # remainder: every name holds a driver row green at its latest check;
-    # within it the ordering is registration order (stable across rounds)
-    return front + queue + [n for n in _REGISTRY if n not in seen]
-
-
 def queries() -> dict[str, QueryFn]:
-    return {name: _REGISTRY[name][0] for name in _ordered_names()}
+    return {name: fn for name, (fn, _) in _REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: _REGISTRY[name][1]
-        for name in _ordered_names()
-        if _REGISTRY[name][1] is not None
-    }
+    return {name: sql for name, (_, sql) in _REGISTRY.items() if sql is not None}
 
 
 # --------------------------------------------------------------------------
@@ -2785,9 +2167,6 @@ register(
     relational.RFM_SEGMENTS_CUSTOMERS_ORACLE,
 )
 
-# Round-6 addition: NOT appended to the front tier — the round-5 verdict
-# freezes rotation priority on the never-driver-checked backlog, so this
-# lands in the remainder tier behind it.
 register(
     "rfm_segments_customers_approx",
     relational.rfm_segments_customers_approx,
@@ -3097,10 +2476,12 @@ register(
 )
 
 # The transformWithStateInPandas check registers only where its python
-# protobuf dependency exists (absent in this sandbox — no installs). The
-# operator itself (streaming/stateful.py::user_event_type_counts_stream)
-# is environment-independent code; the gate is on the RUNTIME dependency,
-# mirroring multimodal/binary_ops.py's strict-codec policy.
+# protobuf dependency exists. The operator itself
+# (streaming/stateful.py::user_event_type_counts_stream) is
+# environment-independent code; the gate is on the RUNTIME dependency,
+# mirroring multimodal/binary_ops.py's strict-codec policy. Without
+# python-protobuf, stateful_event_type_counts_events never registers; its
+# parity is covered in pytest and by the pandas twin below.
 from data_ingestion_pipeline_spark.streaming.stateful import (  # noqa: E402
     transform_with_state_available,
 )

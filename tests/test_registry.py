@@ -1,37 +1,12 @@
 """Structural checks on the query registry / driver contract surface.
 
-The driver verifies queries in registration order with a finite budget
-(first 50), so the export order is part of the contract. Through round 7
-the front tier was "never driver-checked" names; CORRECTNESS_r07 closed
-that ledger. From round 8 the budget's job is RE-VERIFICATION FRESHNESS,
-with one override: names that have NO driver row at all (new additions)
-outrank stale-green names. Round 10's front is the 19 round-9 additions
-(never checked) + the merged Mann-Kendall query (schema changed this
-round) + the two r8/r9 oracle promotions whose latest rows are r03
-rows-only records, followed by the 28 oldest-stale names. Round 11's
-front is the 35 round-10 additions (never checked, `_ROUND11_QUEUE`
-verbatim) followed by the 15 oldest-stale names (all r04 vintage).
-Round 12's front is the re-verification of RESTRUCTURED PLANS: the 50
-operators whose physical plans the r11/r12 optimization rounds rewrote
-(basket-pair graph family, eager-pinned recall gates, IRLS double-fold
-fix, whitening kernel, stream re-sizing, batch-6 pins) — the round-11
-verdict's ask #7.
+``registry.queries()`` and ``registry.oracle_sql()`` export in registration
+order: ``oracle_sql()`` is ``queries()`` with the oracle-less names filtered
+out. Callers look queries up by name; the order carries no priority.
 """
-
-import json
-import pathlib
 
 from data_ingestion_pipeline_spark import registry
 
-
-_ENV_GATED = {"stateful_event_type_counts_events"}  # registers only with protobuf
-_REPO = pathlib.Path(__file__).resolve().parent.parent
-
-# Front names exempt from the "already holds an old driver row" freshness
-# rule, each with its justification: the 35 round-10 additions in slots
-# 0-34 (`_ROUND11_QUEUE` verbatim) have never been driver-checked.
-_ROUND11_NEVER_CHECKED = set(registry._ROUND11_FRONT[:35])
-_SCHEMA_CHANGED: set[str] = set()
 
 # Retired from the registry in round 10 (round-9 verdict ask #4 / #2):
 # rows-only queries whose evidence is carried by oracle-green siblings,
@@ -48,89 +23,16 @@ _RETIRED = {
 }
 
 
-def _latest_green_round() -> dict[str, int]:
-    """name -> round of its latest driver row (hash-green, rows-green, or
-    the documented rows-only no_oracle record). Pinned to r01-r10: the
-    driver writes CORRECTNESS_r11.json at round end and the judge runs
-    pytest after — a bare glob would flip these tests red the moment the
-    budget lands. The pin advances with each round's rotation."""
-    latest: dict[str, int] = {}
-    for i in range(1, 11):
-        p = _REPO / f"CORRECTNESS_r{i:02d}.json"
-        if not p.exists():
-            continue
-        for name, row in json.loads(p.read_text()).items():
-            ok = (
-                row.get("hash_match")
-                or (row.get("rows_match") and row.get("err") is None)
-                or (row.get("err") == "no_oracle" and (row.get("spark_rows") or 0) >= 0)
-            )
-            if ok:
-                latest[name] = i
-    return latest
-
-
-def test_priority_lists_cover_registry_names():
-    names = set(registry._REGISTRY)
-    for n in (
-        registry._ROUND11_FRONT + registry._ROUND12_QUEUE + registry._ROUND12_FRONT
-    ):
-        assert n in names or n in _ENV_GATED, f"priority list names unknown query {n!r}"
-    combined = registry._ROUND11_FRONT + registry._ROUND12_QUEUE
-    assert len(combined) == len(set(combined)), "duplicate priority entries"
-    assert len(registry._ROUND12_FRONT) == len(set(registry._ROUND12_FRONT))
+def test_export_order_is_registration_order():
+    assert list(registry.queries()) == list(registry._REGISTRY)
+    assert list(registry.oracle_sql()) == [
+        n for n, (_, sql) in registry._REGISTRY.items() if sql is not None
+    ]
 
 
 def test_retired_names_stay_out_of_the_registry():
     for n in _RETIRED:
         assert n not in registry._REGISTRY, f"retired name {n!r} re-registered"
-
-
-def test_export_order_spends_driver_budget_on_stale_evidence():
-    """Round-12 rotation contract: the front of queries() is exactly
-    _ROUND12_FRONT (= 50 so the whole tier lands inside the driver
-    budget), followed by the round-12 queue leftover, then the retired
-    remainder."""
-    ordered = list(registry.queries())
-    assert set(ordered) == set(registry._REGISTRY)
-    front = [n for n in registry._ROUND12_FRONT if n in registry._REGISTRY]
-    assert ordered[: len(front)] == front
-    assert len(front) <= 50, "front tier overflows the 50-slot driver budget"
-    assert front[0] == "pagerank_copurchase_parts"
-
-
-def test_front_tier_re_verifies_the_restructured_operators():
-    """Round-12 policy (r11 verdict ask #7): every operator whose plan the
-    optimization rounds rewrote must sit in the driver's 50-slot front —
-    their oracle evidence predates the restructure."""
-    must_include = {
-        # r12 basket-pair rewrite core
-        "pagerank_copurchase_parts",
-        "khop_reach_copurchase",
-        "triangle_count_copurchase",
-        "als_rank1_part_factors",
-        # r12 IRLS/spectral restructures
-        "huber_regression_price_quantity",
-        "whitening_isotropy_gain_embeddings",
-        "pca_power_iteration_embeddings",
-        # r12 eager-pin recall family + streams
-        "ann_ivf_nprobe_sweep_embeddings",
-        "simhash_exact_copy_recall_documents",
-        "stateful_user_profile_events",
-        # r11 batch-6 pins, r12-adjudicated
-        "friedman_test_event_type_values",
-        "dunn_posthoc_event_values",
-    }
-    assert must_include <= set(registry._ROUND12_FRONT)
-
-
-def test_env_gated_queries_stay_out_of_the_budget():
-    # a query that cannot register in this sandbox must not be granted a
-    # front-tier slot the driver would report as absent
-    for n in (
-        registry._ROUND11_FRONT + registry._ROUND12_QUEUE + registry._ROUND12_FRONT
-    ):
-        assert n not in _ENV_GATED
 
 
 def test_oracles_reference_registered_queries():

@@ -1,10 +1,8 @@
 """Round-12 optimization contracts: the basket-pair build, the whitening
-sample kernel, the bench final-line budget, and the per-stream state
-partition defaults."""
+sample kernel, and the per-stream state partition defaults."""
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import functions as F
@@ -100,46 +98,6 @@ def test_whiten_sample_kernel_matches_spark_path(spark):
     )
     assert len(got) == len(want) > 0
     assert got == want  # bitwise: tuples of Python floats compare exact
-
-
-def test_bench_final_line_stays_within_capture_budget():
-    """The driver parses the bench's final JSON line from a 2000-char
-    stdout capture; the bounded queries map must keep the whole line
-    under 1900 bytes while carrying the anchors and the slowest names."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "benchmod", os.path.join(os.path.dirname(__file__), "..", "bench.py")
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-
-    timings = {f"query_name_{i:03d}_with_a_long_suffix": i * 0.017 for i in range(450)}
-    for a in bench._QUERIES_LINE_ANCHORS:
-        timings[a] = 9.9
-    final = {
-        "metric": "headline_queries_total_wall",
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec",
-        "sf": 0.1,
-        "n_queries": len(timings),
-        "slowest": dict(
-            sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:10]
-        ),
-        "detail": "BENCH_DETAIL.json",
-    }
-    base_len = len(json.dumps(final, separators=(",", ":")))
-    final["queries"] = bench._bounded_queries_map(
-        timings, budget=1880 - base_len - 12
-    )
-    line = json.dumps(final, separators=(",", ":"))
-    assert len(line) <= 1900
-    assert len(final["queries"]) >= 20
-    for a in bench._QUERIES_LINE_ANCHORS:
-        assert a in final["queries"]
-    # deterministic: same inputs, same subset
-    again = bench._bounded_queries_map(timings, budget=1880 - base_len - 12)
-    assert again == final["queries"]
 
 
 def test_stream_state_partitions_per_stream_default(spark):

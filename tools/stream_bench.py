@@ -1,11 +1,11 @@
 """Sustained streaming-ingest throughput (round-8 verdict ask #5; keyed
 partial rewrites added for round-9 verdict ask #5).
 
-Every streaming query in the registry is correctness-green, but bench.py
-times ONE micro-batch each. This tool measures the foreachBatch-MERGE
-ingest path (streaming/ingest.py::stream_orders_csv) under a SUSTAINED
-load: N CSV micro-batches derived from the sf orders table drain through
-one availableNow query with maxFilesPerTrigger=1, so each file is its own
+Every streaming query in the registry runs ONE micro-batch per check.
+This tool measures the foreachBatch-MERGE ingest path
+(streaming/ingest.py::stream_orders_csv) under a SUSTAINED load: N CSV
+micro-batches derived from the sf orders table drain through one
+availableNow query with maxFilesPerTrigger=1, so each file is its own
 micro-batch running the full dedup->anti-join->atomic-version-swap MERGE
 into a ManagedTable.
 
@@ -157,7 +157,7 @@ def main() -> None:
     spark.conf.set(
         "spark.sql.streaming.numRecentProgressUpdates", str(n_batches + 16)
     )
-    # same warmup contract as bench.py: measure the engine, not the JIT
+    # warm up first: measure the engine, not the JIT
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     # keyed layout: bucket on the numeric key range so the ascending-id
