@@ -35,7 +35,6 @@ __all__ = [
     "csv_ingest_events",
     "csv_ingest_inventory",
     "merge_upsert_events",
-    "merge_upsert_keyed_events",
     "jsonl_roundtrip_events",
     "orc_roundtrip_events",
     "xml_roundtrip_events",
@@ -213,46 +212,6 @@ WHERE event_id NOT IN (SELECT event_id FROM dedup)
 UNION ALL
 SELECT event_id, ts, user_id, event_type, value FROM dedup
 """
-
-
-def merge_upsert_keyed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME U1-U3 merge scenario as ``merge_upsert_events``, committed
-    through the keyed-partial-rewrite path (plans/merge.py
-    ``repartition_keys=True``): the bootstrap merge lays the table out in
-    16 key-hash bucket directories, and the batch merge partition-prunes
-    its stored scan to the touched buckets and hard-links the rest into
-    the new version. Registering it against the IDENTICAL oracle pins the
-    load-bearing invariant under the driver's value hash: the physical
-    layout (CoW full rewrite vs keyed partial rewrite) must be observably
-    invisible — same rows, same last-wins resolution, same schema (no
-    __bucket leakage into reads)."""
-    events = load_table(spark, sf_dir, "events")
-    cols = ["event_id", "ts", "user_id", "event_type", "value"]
-    stored = events.filter(F.col("event_id") % 3 == 0).select(*cols)
-    batch = (
-        events.filter(F.col("event_id") % 2 == 0)
-        .select(
-            "event_id", "ts", "user_id", "event_type",
-            (F.col("value") * 2).alias("value"),
-        )
-        .unionByName(
-            events.filter(F.col("event_id") % 4 == 0).select(
-                "event_id",
-                (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("ts"),
-                "user_id",
-                "event_type",
-                (F.col("value") * 3).alias("value"),
-            )
-        )
-    )
-
-    root = _scratch(sf_dir, "merge_keyed_demo")
-    shutil.rmtree(root, ignore_errors=True)
-    table = ManagedTable(spark, root)
-    kw = dict(keys=["event_id"], order_col="ts", repartition_keys=True, n_buckets=16)
-    merge_upsert(table, stored, **kw)  # bootstrap commits bucketed
-    merge_upsert(table, batch, **kw)  # partial: pruned scan + hard links
-    return table.read()
 
 
 def jsonl_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:

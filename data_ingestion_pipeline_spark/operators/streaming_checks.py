@@ -27,7 +27,6 @@ from data_ingestion_pipeline_spark.streaming.windows import (
 __all__ = [
     "streaming_interval_full_outer_events",
     "streaming_ingest_merge_events",
-    "streaming_ingest_merge_keyed_events",
     "streaming_incremental_agg_events",
     "tumbling_window_events",
     "sliding_window_events",
@@ -774,69 +773,6 @@ SELECT event_id, ts + INTERVAL 1 HOUR AS ts, user_id, event_type,
        value * 2 AS value
 FROM events
 """
-
-
-def streaming_ingest_merge_keyed_events(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """``streaming_ingest_merge_events`` through the keyed-partial-rewrite
-    sink (plans/merge.py ``repartition_keys=True``): the insert batch
-    bootstraps a 16-bucket key-partitioned table, the update micro-batch
-    commits a partial rewrite (pruned stored scan, untouched buckets
-    hard-linked). Registered against the IDENTICAL oracle — the
-    layout-invariance pin of ``merge_upsert_keyed_events`` extended to
-    the actual streaming foreachBatch path (checkpointed epochs, forced
-    file order)."""
-    from data_ingestion_pipeline_spark.plans.merge import merge_upsert
-    from data_ingestion_pipeline_spark.plans.table import ManagedTable
-
-    import shutil
-
-    src_dir = _shifted_update_source(spark, sf_dir)
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    root = f"/tmp/spark_graft_scratch/{tag}/stream_ingest_keyed_table"
-    ckpt = f"/tmp/spark_graft_scratch/{tag}/stream_ingest_keyed_ckpt"
-    shutil.rmtree(root, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    table = ManagedTable(spark, root)
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType(), True),
-            T.StructField("ts", T.TimestampType(), True),
-            T.StructField("user_id", T.LongType(), True),
-            T.StructField("event_type", T.StringType(), True),
-            T.StructField("value", T.DoubleType(), True),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_upsert(
-            table,
-            batch_df,
-            keys=["event_id"],
-            order_col="ts",
-            repartition_keys=True,
-            n_buckets=16,
-        )
-
-    with _stream_state_partitions(spark):
-        query = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(120)
-    if query.isActive:
-        query.stop()
-    return table.read()
 
 
 def streaming_incremental_agg_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -33,13 +33,13 @@ the coalesce every commit added a file (2 → 30–42 files over one
 ``ingest`` benchmark run), and the write and the next read ran one task
 per tiny file.
 
-Rows: a commit still rewrites every stored row, O(table).
-``repartition_keys=True`` (key-bucketed layout, untouched buckets
-hard-linked) bounds that only for batches that touch few buckets. Measured
-on the benchmark's orders feed (``perfbench`` ``OrdersFeed(1)``): a
-1,250-row batch touches 64 of 64 hash buckets and 61–62 of 64 order-range
-buckets, because 20% of its re-sends pick keys from the whole table — on
-such traffic the keyed path rewrites about the whole table too. With a
+Rows: a commit rewrites every stored row, O(table). Key-bucketed layouts
+do not bound that on the benchmark's orders feed (``perfbench``
+``OrdersFeed(1)``): a 1,250-row batch touches 64 of 64 hash buckets and
+61–62 of 64 order-range buckets, because 20% of its re-sends pick keys
+from the whole table. The lever left for O(batch) commits is
+merge-on-read: append the batch and record the updated keys as an
+equality-delete sidecar (``ManagedTable.equality_delete``). With a
 Delta/Iceberg backend the same plan becomes ``MERGE INTO`` with file-level
 pruning.
 """
@@ -97,9 +97,6 @@ def merge_upsert(
     keys: Sequence[str],
     order_col: str,
     evolve_schema: bool = False,
-    repartition_keys: bool = False,
-    n_buckets: int = 64,
-    bucket_sql: str | None = None,
 ) -> str:
     """Upsert ``batch`` into ``table`` by ``keys`` with last-wins semantics.
 
@@ -110,7 +107,11 @@ def merge_upsert(
     parquet) and the batch as one file per 128 MiB of its plan size
     estimate, so a large batch still writes in parallel. The new version
     holds about ``ceil(stored / 128 MiB) + ceil(batch / 128 MiB)`` files,
-    not one more than its base; the keyed path holds one file per bucket.
+    not one more than its base.
+
+    Pending equality-delete sidecars on the base version are folded in:
+    the stored side is read through ``table.read``, and the new version
+    carries no sidecars.
 
     ``evolve_schema=True`` composes the reference's two flows in one commit
     (schema sync THEN ingest, ``main.py:9-26``): columns new in the batch
@@ -119,32 +120,7 @@ def merge_upsert(
     ``mergeSchema``/auto-evolution semantics on the versioned parquet
     table. Off by default: an unexpected column drifting in silently is
     usually a bug, so widening is opt-in per pipeline.
-
-    ``repartition_keys=True`` is the scale lever the sustained-streaming
-    bench motivates: the table is laid out in ``n_buckets`` key-hash
-    partition directories, the stored scan partition-prunes to the buckets
-    the batch touches, and untouched buckets are hard-linked into the new
-    version instead of rewritten — per-merge cost becomes O(touched
-    buckets), which is O(batch) only when a batch touches few buckets; a
-    batch whose keys spread over the table (the benchmark's orders feed,
-    see the module docstring) touches ~all of them. Falls back to one
-    full (re-bucketing) rewrite when the table is not yet in
-    the declared layout, and to the plain path when equality-delete
-    sidecars are pending or the schema is evolving (deletes are global key
-    predicates — folding them per-bucket while hard-linking other buckets
-    would fork the fold state; evolution changes untouched rows' schema).
-
-    ``bucket_sql`` overrides the default hash bucketing with a caller
-    expression that matches the ingest's key LOCALITY (see
-    ManagedTable.default_bucket_sql) — with uniform hash bucketing a large
-    random-key batch touches every bucket and the partial path degenerates
-    to a full rewrite plus link overhead; with a locality-preserving
-    expression a micro-batch touches O(1) buckets at any table size.
     """
-    if repartition_keys:
-        return _merge_upsert_partial(
-            table, batch, keys, order_col, evolve_schema, n_buckets, bucket_sql
-        )
     deduped = dedupe_last_wins(batch, keys, order_col)
     # read-modify-write: declare the base version so a concurrent commit
     # between our read and our swap aborts (ConcurrentWriteError) instead
@@ -188,69 +164,4 @@ def merge_upsert(
     )
     return table.overwrite(
         merged, expected_base=base, expected_sidecars=sidecars
-    )
-
-
-def _merge_upsert_partial(
-    table: ManagedTable,
-    batch: DataFrame,
-    keys: Sequence[str],
-    order_col: str,
-    evolve_schema: bool,
-    n_buckets: int,
-    bucket_sql: str | None,
-) -> str:
-    """The keyed-partial-rewrite merge path (see merge_upsert docstring).
-
-    Same last-wins/idempotency/OCC semantics as the full path — the ONLY
-    difference is which bytes move: stored rows in untouched buckets are
-    never scanned and never rewritten (their parquet files are hard-linked
-    into the new version)."""
-    from pyspark.sql import functions as F
-
-    bucket_sql = bucket_sql or table.default_bucket_sql(keys, n_buckets)
-    deduped = dedupe_last_wins(batch, keys, order_col)
-    base = table.current_version()
-    if base is None:
-        return table.overwrite_bucketed(
-            deduped, list(keys), n_buckets, bucket_sql, expected_base=None
-        )
-    sidecars = table.sidecar_listing(base)
-    spec = table.bucket_spec(base)
-    if evolve_schema or sidecars or spec != (list(keys), n_buckets, bucket_sql):
-        # one full rewrite: folds pending deletes / applies evolution via
-        # the plain path's read(), then (re-)buckets so the NEXT merge is
-        # partial. Build the merged relation exactly like merge_upsert.
-        deduped_p = deduped.localCheckpoint(eager=False)
-        stored = table.read(version=base)
-        kept = stored.join(deduped_p.select(*keys), list(keys), "left_anti")
-        merged = kept.unionByName(deduped_p, allowMissingColumns=evolve_schema)
-        return table.overwrite_bucketed(
-            merged,
-            list(keys),
-            n_buckets,
-            bucket_sql,
-            expected_base=base,
-            expected_sidecars=sidecars,
-        )
-    # pin: feeds the touched-bucket collect, the anti-join, and the union
-    deduped = deduped.localCheckpoint(eager=False)
-    # bounded collect: at most n_buckets ids (micro-batches touch far fewer)
-    touched = sorted(
-        r["__b"]
-        for r in deduped.select(F.expr(bucket_sql).alias("__b"))
-        .distinct()
-        .collect()
-    )
-    stored_touched = table.read_buckets(base, touched)
-    kept = stored_touched.join(deduped.select(*keys), list(keys), "left_anti")
-    merged = kept.unionByName(deduped)
-    return table.replace_buckets(
-        merged,
-        touched,
-        list(keys),
-        n_buckets,
-        expected_base=base,
-        bucket_sql=bucket_sql,
-        expected_sidecars=sidecars,
     )

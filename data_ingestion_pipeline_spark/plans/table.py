@@ -9,12 +9,17 @@ Delta Lake's transaction log generalizes (SURVEY.md §4.3). Readers resolve
 the pointer once per read, never see partial writes, and concurrent readers
 of the old version are undisturbed because old versions are immutable.
 
-Layout::
+Layout, the same for every commit path (overwrite, merge, delete,
+compaction)::
 
     <root>/
       _LATEST            # text file: name of the current version dir
-      v00000001/...parquet
-      v00000002/...parquet
+      v00000001/part-*.parquet
+      v00000002/part-*.parquet
+      v00000002/_deletes/d000001/   # equality-delete sidecar (merge-on-read)
+
+A version's data files sit flat in its directory; merge and compact write
+about one file per ``TARGET_FILE_BYTES`` of data.
 
 Scale notes: version data is written by executors (a normal distributed
 ``df.write.parquet``); only the pointer flip is a driver-side metadata
@@ -41,11 +46,6 @@ __all__ = ["ManagedTable", "ConcurrentWriteError"]
 
 _POINTER = "_LATEST"
 _PTR_LOCK = ".ptr_lock"
-# key-bucketed layout (keyed partial rewrites): versions committed through
-# overwrite_bucketed/replace_buckets store data under __bucket=K partition
-# dirs with a hidden spec file pinning (key columns, bucket count)
-_BUCKET_COL = "__bucket"
-_BUCKET_SPEC = "_bucket_spec"  # leading _ -> invisible to the data scan
 # file size the layout-sizing rewrites (compact, merge) aim for
 TARGET_FILE_BYTES = 128 * 1024 * 1024
 # sentinel: "caller did not declare a base" (None is a real value — the
@@ -260,10 +260,6 @@ class ManagedTable:
         if not os.path.isdir(path):
             raise FileNotFoundError(f"version {v} not retained in {self.root}")
         df = self.spark.read.parquet(path)
-        if _BUCKET_COL in df.columns:
-            # key-bucketed layout: the bucket is derivable from the keys
-            # (bucket_expr), so it is storage layout, not table schema
-            df = df.drop(_BUCKET_COL)
         if not apply_deletes:
             return df
         sidecars = self._delete_sidecars(v)
@@ -436,182 +432,6 @@ class ManagedTable:
         self._vacuum()
         return version
 
-    # -- key-bucketed layout: keyed partial rewrites --------------------------
-    #
-    # The sustained-streaming bench (tools/stream_bench.py, BASELINE.md
-    # §streaming) names the one genuine scale cliff of the copy-on-write
-    # design: a MERGE rewrites O(table) per micro-batch, so per-batch cost
-    # bends upward once the rewrite exceeds the fixed commit floor. The
-    # lever is layout: hash the merge keys into a fixed number of __bucket=K
-    # partition directories; a merge then (a) partition-PRUNES its stored
-    # scan to the buckets the batch touches and (b) commits a new version
-    # where untouched bucket dirs are HARD-LINKED from the base snapshot —
-    # O(1) metadata per file, no data copy, no scan. Per-batch cost becomes
-    # O(touched buckets) ~ O(batch · table/n_buckets), independent of total
-    # table size once n_buckets scales with the table. On an object store
-    # the hard link becomes a manifest entry (Delta/Iceberg keep exactly
-    # this metadata instead of links); the commit protocol is unchanged —
-    # staged dir, atomic slot claim, pointer swap under the flock.
-
-    @staticmethod
-    def default_bucket_sql(key_cols: Sequence[str], n_buckets: int) -> str:
-        """Deterministic bucket id of a row as a SQL expression string:
-        pmod(xxhash64(keys), n) — stable across sessions/partitionings,
-        pure long arithmetic. A string (not a Column) so the spec file can
-        pin it verbatim and later merges can validate layout compatibility.
-
-        Hash bucketing spreads uniform keys over ALL buckets, so a large
-        random-key batch touches everything — callers whose ingest has key
-        LOCALITY (ascending ids, tenant shards, time-prefixed keys) should
-        pass a bucket expression that PRESERVES that locality (e.g.
-        ``pmod(cast(substr(order_id, 2) as bigint) div 25000, 64)``) so a
-        micro-batch touches O(1) buckets regardless of table size. The only
-        correctness requirement: the expression is a deterministic function
-        of the merge key columns."""
-        return (
-            f"cast(pmod(xxhash64({', '.join(key_cols)}), {n_buckets}) as int)"
-        )
-
-    def _write_bucket_spec(
-        self, stage: str, key_cols: Sequence[str], n_buckets: int, bucket_sql: str
-    ) -> None:
-        with open(os.path.join(stage, _BUCKET_SPEC), "w") as f:
-            f.write(
-                ",".join(key_cols) + "\n" + str(n_buckets) + "\n" + bucket_sql + "\n"
-            )
-
-    def bucket_spec(self, version: str | None = None):
-        """(key_cols, n_buckets, bucket_sql) if ``version`` was committed
-        key-bucketed, else None. A full-rewrite path that loses the layout
-        (compact, delete_where, plain overwrite) simply yields None here
-        and the next keyed merge re-buckets with one full rewrite."""
-        v = version or self.current_version()
-        if v is None:
-            return None
-        try:
-            with open(os.path.join(self.root, v, _BUCKET_SPEC)) as f:
-                keys_line, n_line, expr_line = f.read().splitlines()[:3]
-            return keys_line.split(","), int(n_line), expr_line
-        except (FileNotFoundError, ValueError):
-            return None
-
-    def overwrite_bucketed(
-        self,
-        df: DataFrame,
-        key_cols: Sequence[str],
-        n_buckets: int,
-        bucket_sql: str | None = None,
-        expected_base=_UNSET,
-        expected_sidecars=None,
-    ) -> str:
-        """Full rewrite committed in the key-bucketed layout (the bootstrap
-        / re-bucketing path of keyed partial rewrites), one file per
-        bucket dir."""
-        bucket_sql = bucket_sql or self.default_bucket_sql(key_cols, n_buckets)
-        stage = self._stage_bucketed(df, bucket_sql)
-        self._write_bucket_spec(stage, key_cols, n_buckets, bucket_sql)
-        version = self._claim_version(stage)
-        self._commit_pointer(version, expected_base, expected_sidecars)
-        self._vacuum()
-        return version
-
-    def _stage_bucketed(self, df: DataFrame, bucket_sql: str) -> str:
-        """Write ``df`` to a fresh staging dir in the __bucket=K layout. One
-        shuffle on the bucket id puts every bucket in one task, so each
-        bucket dir gets exactly one file however many partitions ``df``
-        has — without it, every commit would add a file per bucket."""
-        from pyspark.sql import functions as F
-
-        stage = os.path.join(self.root, f"._stage_{uuid.uuid4().hex}")
-        (
-            df.withColumn(_BUCKET_COL, F.expr(bucket_sql))
-            .repartition(_BUCKET_COL)
-            .write.mode("overwrite")
-            .partitionBy(_BUCKET_COL)
-            .parquet(stage)
-        )
-        return stage
-
-    def read_buckets(
-        self, version: str, buckets: Sequence[int], apply_deletes: bool = True
-    ) -> DataFrame:
-        """Partition-pruned scan of a bucketed version: only the named
-        __bucket=K directories are read (Catalyst prunes on the partition
-        column — the 100 TB point: a micro-batch merge scans O(touched)
-        data, not the table)."""
-        from pyspark.sql import functions as F
-
-        path = os.path.join(self.root, version)
-        df = (
-            self.spark.read.parquet(path)
-            .filter(F.col(_BUCKET_COL).isin([int(b) for b in buckets]))
-            .drop(_BUCKET_COL)
-        )
-        if not apply_deletes:
-            return df
-        sidecars = self._delete_sidecars(version)
-        if not sidecars:
-            return df
-        from functools import reduce
-
-        keys = reduce(
-            DataFrame.unionByName,
-            [self.spark.read.parquet(p) for p in sidecars],
-        ).distinct()
-        return df.join(F.broadcast(keys), list(keys.columns), "left_anti")
-
-    def replace_buckets(
-        self,
-        merged: DataFrame,
-        touched: Sequence[int],
-        key_cols: Sequence[str],
-        n_buckets: int,
-        expected_base: str,
-        bucket_sql: str | None = None,
-        expected_sidecars=None,
-    ) -> str:
-        """Keyed PARTIAL rewrite: commit a new version in which only the
-        ``touched`` buckets' data comes from ``merged``; every untouched
-        bucket directory is hard-linked file-by-file from the base
-        snapshot, and each touched bucket is rewritten as one file, so a
-        bucket holds one file however many commits touched it. Versions
-        stay immutable (data files are write-once, so
-        shared inodes are never mutated; _vacuum of the base keeps linked
-        files alive via the refcount). The caller must have verified
-        ``bucket_spec(expected_base) == (key_cols, n_buckets, bucket_sql)``
-        and that ``merged`` contains no rows outside ``touched``."""
-        bucket_sql = bucket_sql or self.default_bucket_sql(key_cols, n_buckets)
-        stage = self._stage_bucketed(merged, bucket_sql)
-        base_dir = os.path.join(self.root, expected_base)
-        touched_set = {int(b) for b in touched}
-        try:
-            for entry in os.listdir(base_dir):
-                if not entry.startswith(f"{_BUCKET_COL}="):
-                    continue
-                if int(entry.split("=", 1)[1]) in touched_set:
-                    continue
-                src = os.path.join(base_dir, entry)
-                dst = os.path.join(stage, entry)
-                os.makedirs(dst, exist_ok=True)
-                for fname in os.listdir(src):
-                    if fname.endswith(".parquet"):
-                        os.link(
-                            os.path.join(src, fname), os.path.join(dst, fname)
-                        )
-        except FileNotFoundError as e:
-            # base vacuumed mid-link -> the table advanced under us; same
-            # outcome _commit_pointer would reach, surfaced earlier
-            shutil.rmtree(stage, ignore_errors=True)
-            raise ConcurrentWriteError(
-                f"table {self.root} base {expected_base!r} vacuumed while "
-                f"linking untouched buckets; re-read and retry"
-            ) from e
-        self._write_bucket_spec(stage, key_cols, n_buckets, bucket_sql)
-        version = self._claim_version(stage)
-        self._commit_pointer(version, expected_base, expected_sidecars)
-        self._vacuum()
-        return version
-
     def delete_where(self, condition) -> str:
         """Delete matching rows (GDPR/right-to-erasure): commit a new
         version holding only the survivors.
@@ -643,7 +463,9 @@ class ManagedTable:
         )
 
     def _data_bytes(self, version: str) -> int:
-        # walk: bucketed versions keep parquet under __bucket=K subdirs
+        # every parquet file under the version dir: the data files, plus
+        # any pending equality-delete sidecars under _deletes (small next
+        # to the data; rewrite_deletes folds them)
         path = os.path.join(self.root, version)
         return sum(
             os.path.getsize(os.path.join(d, f))
@@ -675,29 +497,13 @@ class ManagedTable:
         the scan-planning and open() overhead of millions of tiny files
         dominates. Sizing from the actual on-disk bytes of the current
         version, ``coalesce`` (no shuffle) bin-packs partitions down to
-        ``target_file_count`` files. Data is unchanged — only layout.
-
-        A KEY-BUCKETED version (keyed partial rewrites) keeps its layout:
-        the compaction re-commits through ``overwrite_bucketed`` under the
-        same spec (one file per bucket) WITHOUT demoting the next merge to
-        a full re-bucketing rewrite. (Folding pending delete sidecars stays
-        correct either way — the read applies them before the rewrite.)
+        ``target_file_count`` files. Data is unchanged — only layout;
+        pending delete sidecars are folded in by the read.
         """
         cur = self.current_version()
         if cur is None:
             raise FileNotFoundError(f"table {self.root} has no committed version")
         sidecars = self._delete_sidecars(cur)
-        spec = self.bucket_spec(cur)
-        if spec is not None:
-            key_cols, n_buckets, bucket_sql = spec
-            return self.overwrite_bucketed(
-                self.read(version=cur),
-                key_cols,
-                n_buckets,
-                bucket_sql,
-                expected_base=cur,
-                expected_sidecars=sidecars,
-            )
         return self.overwrite(
             self.read(version=cur).coalesce(
                 self.target_file_count(cur, target_file_bytes)

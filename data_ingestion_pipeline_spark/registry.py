@@ -412,14 +412,6 @@ register(
     ingestion_checks.MERGE_UPSERT_EVENTS_ORACLE,
 )
 
-# Same oracle on purpose: the keyed-partial-rewrite commit path must be
-# observably identical to the CoW path (layout invariance under the hash)
-register(
-    "merge_upsert_keyed_events",
-    ingestion_checks.merge_upsert_keyed_events,
-    ingestion_checks.MERGE_UPSERT_EVENTS_ORACLE,
-)
-
 register(
     "jsonl_roundtrip_events",
     ingestion_checks.jsonl_roundtrip_events,
@@ -869,14 +861,6 @@ register(
 register(
     "streaming_ingest_merge_events",
     streaming_checks.streaming_ingest_merge_events,
-    streaming_checks.STREAMING_INGEST_MERGE_EVENTS_ORACLE,
-)
-
-# Same oracle on purpose: the keyed-partial streaming sink must be
-# observably identical to the CoW streaming sink (layout invariance)
-register(
-    "streaming_ingest_merge_keyed_events",
-    streaming_checks.streaming_ingest_merge_keyed_events,
     streaming_checks.STREAMING_INGEST_MERGE_EVENTS_ORACLE,
 )
 

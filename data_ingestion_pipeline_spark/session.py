@@ -28,6 +28,14 @@ def _default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def _default_driver_memory() -> str:
+    """A quarter of physical memory, clamped to [1g, 16g]. G1 lets the heap
+    grow toward its maximum before it collects hard, so a fixed 16g filled
+    a 16 GB host (15.7 GB RSS) and the kernel killed the JVM."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 * 1024, max(1024, phys // 4 // 2**20))}m"
+
+
 def get_spark(
     app_name: str = "data_ingestion_pipeline_spark",
     master: str | None = None,
@@ -55,7 +63,8 @@ def get_spark(
         # is sized for a thin cluster driver, not for N executor threads.
         # Ignored (harmlessly) once a JVM is already up.
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
         )
         .config("spark.sql.session.timeZone", "UTC")
         # Managed-table warehouse (bucketed tables, saveAsTable) — under

@@ -5,19 +5,22 @@ The reference reads CSV with pandas and post-hoc coercion
 with an explicit schema — no inference pass (inference = an extra full scan
 at 100 TB), malformed rows quarantined instead of failing the job.
 
-``mode="DROPMALFORMED"`` drops unparseable lines at the reader: the
-PERMISSIVE + corrupt-column form either leaks malformed lines as all-NULL
-data rows (if the column is merely dropped) or poisons corrupt-only
-queries like ``df.count()`` with QUERY_ONLY_CORRUPT_RECORD_COLUMN (if it
-is filtered on). At scale, a dead-letter sink is a SEPARATE permissive
-read of the same path routed by ``_corrupt_record IS NOT NULL`` — not
-this ingest path's job.
+One malformed-row rule, ``csv_source``, serves the batch reader and the
+streaming source (``streaming/ingest.py``) alike, so the same files give the
+same table through either path. ``mode="DROPMALFORMED"`` drops unparseable
+lines at the reader: the PERMISSIVE + corrupt-column form either leaks
+malformed lines as all-NULL data rows (if the column is merely dropped) or
+poisons corrupt-only queries like ``df.count()`` with
+QUERY_ONLY_CORRUPT_RECORD_COLUMN (if it is filtered on). At scale, a
+dead-letter sink is a SEPARATE permissive read of the same path routed by
+``_corrupt_record IS NOT NULL`` — not this ingest path's job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamReader
 
 from data_ingestion_pipeline_spark import schemas
 from data_ingestion_pipeline_spark.functions.normalize import (
@@ -25,7 +28,7 @@ from data_ingestion_pipeline_spark.functions.normalize import (
     normalize_orders,
 )
 
-__all__ = ["read_orders_csv", "read_inventory_csv"]
+__all__ = ["csv_source", "read_orders_csv", "read_inventory_csv"]
 
 _CSV_OPTIONS = {
     "header": "true",
@@ -37,8 +40,14 @@ _CSV_OPTIONS = {
 }
 
 
-def _read(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    df = spark.read.options(**_CSV_OPTIONS).schema(schema).csv(path)
+def csv_source(
+    reader: DataFrameReader | DataStreamReader, path: str, schema: T.StructType
+) -> DataFrame:
+    """Parse the CSV files at ``path`` with ``schema``, dropping malformed
+    lines. ``reader`` is ``spark.read`` for a batch read or
+    ``spark.readStream`` (with any source options already set) for a
+    streaming one."""
+    df = reader.options(**_CSV_OPTIONS).schema(schema).csv(path)
     # DROPMALFORMED is projection-dependent under CSV column pruning: a
     # malformed row is dropped only when a parsed column exposes it, so
     # df.count() KEPT such rows and a narrow projection LEAKED them as
@@ -57,11 +66,11 @@ def _read(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
 
 def read_orders_csv(spark: SparkSession, path: str, normalized: bool = True) -> DataFrame:
     """S1 — orders CSV scan (reference ``flows/data_ingestion.py:80-96``)."""
-    raw = _read(spark, path, schemas.ORDERS_CSV_RAW)
+    raw = csv_source(spark.read, path, schemas.ORDERS_CSV_RAW)
     return normalize_orders(raw) if normalized else raw
 
 
 def read_inventory_csv(spark: SparkSession, path: str, normalized: bool = True) -> DataFrame:
     """S2 — inventory CSV scan (reference ``flows/data_ingestion.py:68-77``)."""
-    raw = _read(spark, path, schemas.INVENTORY_CSV_RAW)
+    raw = csv_source(spark.read, path, schemas.INVENTORY_CSV_RAW)
     return normalize_inventory(raw) if normalized else raw

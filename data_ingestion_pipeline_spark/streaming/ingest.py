@@ -20,6 +20,7 @@ from data_ingestion_pipeline_spark import schemas
 from data_ingestion_pipeline_spark.functions.normalize import normalize_orders
 from data_ingestion_pipeline_spark.plans.merge import merge_upsert
 from data_ingestion_pipeline_spark.plans.table import ManagedTable
+from data_ingestion_pipeline_spark.sources.csv_reader import csv_source
 
 __all__ = [
     "stream_orders_csv",
@@ -35,34 +36,24 @@ def stream_orders_csv(
     checkpoint_dir: str,
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
-    repartition_keys: bool = False,
-    n_buckets: int = 64,
-    bucket_sql: str | None = None,
 ) -> StreamingQuery:
     """Ingest order CSVs dropped into ``input_dir``.
 
     Each micro-batch runs the same deterministic MERGE as the batch pipeline
-    (dedup last-wins → anti-join → atomic version swap), so stream-then-batch
-    and batch-then-stream converge to the same table state.
+    (dedup last-wins → anti-join → atomic version swap), and the source
+    drops malformed lines by the batch reader's rule
+    (``sources.csv_reader.csv_source``), so the stream and
+    ``pipeline.ingest_orders`` give the same table for the same files, and
+    stream-then-batch and batch-then-stream converge.
 
     ``available_now=True`` (the test/driver default) drains the files
     present at start and stops; pass ``available_now=False`` for the
     continuous deployment that keeps watching the directory.
-
-    ``repartition_keys=True`` switches the sink to keyed PARTIAL rewrites
-    (plans/merge.py): the table lays out in ``n_buckets`` key partitions
-    and each micro-batch rewrites only the buckets it touches — the lever
-    that keeps per-batch latency flat as the table grows (pass a
-    locality-matched ``bucket_sql``; see ManagedTable.default_bucket_sql).
     """
-    reader = (
-        spark.readStream.schema(schemas.ORDERS_CSV_RAW)
-        .option("header", "true")
-        .option("nullValue", "")
-    )
+    reader = spark.readStream
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.csv(input_dir)
+    raw = csv_source(reader, input_dir, schemas.ORDERS_CSV_RAW)
     normalized = normalize_orders(raw)
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -71,9 +62,6 @@ def stream_orders_csv(
             batch_df,
             keys=schemas.ORDERS_KEY,
             order_col="date_time",
-            repartition_keys=repartition_keys,
-            n_buckets=n_buckets,
-            bucket_sql=bucket_sql,
         )
 
     writer = normalized.writeStream.foreachBatch(apply_batch).option(

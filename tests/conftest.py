@@ -18,10 +18,6 @@ SF_ORACLE = "/root/testdata/sf0.01"
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    # The session's 16g default lets the heap grow to the whole memory of a
-    # 16 GB host during the hypothesis tests (~14 GB RSS measured) before G1
-    # collects; 4g holds the suite at ~5 GB RSS.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
     spark = get_spark("tests")
     yield spark
 

@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -83,6 +82,21 @@ def test_merge_idempotent_and_last_wins(spark, tmp_path):
     )
     merge_upsert(t, b2, ["k"], "ts")
     assert {r.k: r.v for r in t.read().collect()} == {"a": 10, "b": 3, "c": 4}
+
+    # an in-batch duplicate of a STORED key: the later of its two rows
+    # replaces the stored row
+    b3 = _batch(
+        spark,
+        [
+            ("b", 20, dt.datetime(2023, 2, 2)),
+            ("e", 50, dt.datetime(2023, 2, 2)),
+            ("b", 21, dt.datetime(2023, 2, 3)),
+        ],
+    )
+    merge_upsert(t, b3, ["k"], "ts")
+    assert {r.k: r.v for r in t.read().collect()} == {
+        "a": 10, "b": 21, "c": 4, "e": 50
+    }
 
 
 def test_managed_table_versions_and_vacuum(spark, tmp_path):
@@ -188,230 +202,21 @@ def test_merge_upsert_evolves_schema(spark, tmp_path):
     assert table.read().filter(F.col("k") == 4).collect()[0].score is None
 
 
-# -- keyed partial rewrites (round-9 verdict ask #5) -------------------------
-
-
-def _mk_batch(spark, pairs):
+def test_merge_folds_pending_sidecars(spark, tmp_path):
+    """A merge over a version with pending equality deletes folds them:
+    the deleted key stays gone, and the committed version carries no
+    sidecars."""
     import datetime as dt
 
-    return _batch(
-        spark, [(k, v, dt.datetime(2023, 1, d)) for k, v, d in pairs]
-    )
-
-
-def test_partial_merge_matches_full_merge(spark, tmp_path):
-    """The keyed-partial path must be semantically invisible: same final
-    contents as the full-rewrite path on identical inputs."""
-    full = ManagedTable(spark, str(tmp_path / "full"))
-    part = ManagedTable(spark, str(tmp_path / "part"))
-    b0 = _mk_batch(spark, [("a", 1, 1), ("b", 2, 1), ("c", 3, 1), ("d", 4, 1)])
-    b1 = _mk_batch(spark, [("b", 20, 2), ("e", 50, 2), ("b", 21, 3)])
-    for t, kw in ((full, {}), (part, {"repartition_keys": True, "n_buckets": 8})):
-        merge_upsert(t, b0, ["k"], "ts", **kw)
-        merge_upsert(t, b1, ["k"], "ts", **kw)
-    want = sorted((r.k, r.v) for r in full.read().collect())
-    got = sorted((r.k, r.v) for r in part.read().collect())
-    assert got == want == [("a", 1), ("b", 21), ("c", 3), ("d", 4), ("e", 50)]
-    # layout is internal: the read schema carries no bucket column
-    assert "__bucket" not in part.read().columns
-
-
-def test_partial_merge_hardlinks_untouched_buckets(spark, tmp_path):
-    """Untouched bucket dirs must be hard links of the base version's files
-    (same inode — no data copied, no rewrite), and the stored scan must
-    partition-prune to the touched buckets only."""
     t = ManagedTable(spark, str(tmp_path / "t"))
-    big = spark.range(400).selectExpr(
-        "CAST(id AS STRING) AS k", "id AS v", "timestamp('2023-01-01') AS ts"
-    )
-    merge_upsert(t, big, ["k"], "ts", repartition_keys=True, n_buckets=16)
-    v1 = t.current_version()
-    batch = _mk_batch(spark, [("7", 700, 2)])
-    touched = F.expr(t.default_bucket_sql(["k"], 16))
-    (tb,) = (
-        batch.select(touched.alias("b")).distinct().collect()
-    )
-    # pruned scan reads only the touched bucket dir (PartitionFilters on
-    # the layout column — inputFiles() would ignore pushdown)
-    pruned = t.read_buckets(v1, [tb["b"]])
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    scan_line = next(l for l in plan.splitlines() if "FileScan" in l)
-    assert "PartitionFilters" in scan_line and "__bucket" in scan_line.split(
-        "PartitionFilters"
-    )[1].split("]")[0]
-    merge_upsert(t, batch, ["k"], "ts", repartition_keys=True, n_buckets=16)
-    v2 = t.current_version()
-    assert v2 != v1
-    import os as _os
-
-    def inodes(version, bucket_dir):
-        d = _os.path.join(str(tmp_path / "t"), version, bucket_dir)
-        return {
-            f: _os.stat(_os.path.join(d, f)).st_ino
-            for f in _os.listdir(d)
-            if f.endswith(".parquet")
-        }
-
-    linked = rewritten = 0
-    for entry in _os.listdir(_os.path.join(str(tmp_path / "t"), v1)):
-        if not entry.startswith("__bucket="):
-            continue
-        b = int(entry.split("=")[1])
-        if b == tb["b"]:
-            # touched bucket: rewritten, so no shared inodes
-            old, new = inodes(v1, entry), inodes(v2, entry)
-            assert not (set(old.values()) & set(new.values()))
-            rewritten += 1
-        else:
-            assert inodes(v1, entry) == inodes(v2, entry), entry
-            linked += 1
-    assert rewritten == 1 and linked >= 10
-    # contents correct after the partial commit
-    rows = {r.k: r.v for r in t.read().collect()}
-    assert rows["7"] == 700 and len(rows) == 400
-
-
-def test_partial_merge_rebuckets_unbucketed_table(spark, tmp_path):
-    """First repartition_keys merge against a plain table does ONE full
-    re-bucketing rewrite; the next merge goes partial."""
-    t = ManagedTable(spark, str(tmp_path / "t"))
-    merge_upsert(t, _mk_batch(spark, [("a", 1, 1), ("b", 2, 1)]), ["k"], "ts")
-    assert t.bucket_spec() is None
-    merge_upsert(
-        t,
-        _mk_batch(spark, [("a", 10, 2)]),
-        ["k"],
-        "ts",
-        repartition_keys=True,
-        n_buckets=4,
-    )
-    assert t.bucket_spec() == (["k"], 4, t.default_bucket_sql(["k"], 4))
-    rows = {r.k: r.v for r in t.read().collect()}
-    assert rows == {"a": 10, "b": 2}
-
-
-def test_partial_merge_folds_pending_sidecars_via_full_path(spark, tmp_path):
-    """Pending equality deletes force the full fold path (deletes are
-    global key predicates; hard-linking buckets would fork the fold), and
-    the committed version carries no sidecars."""
-    t = ManagedTable(spark, str(tmp_path / "t"))
-    merge_upsert(
-        t,
-        _mk_batch(spark, [("a", 1, 1), ("b", 2, 1), ("c", 3, 1)]),
-        ["k"],
-        "ts",
-        repartition_keys=True,
-        n_buckets=4,
-    )
+    d1, d2 = dt.datetime(2023, 1, 1), dt.datetime(2023, 1, 2)
+    merge_upsert(t, _batch(spark, [("a", 1, d1), ("b", 2, d1), ("c", 3, d1)]), ["k"], "ts")
     t.equality_delete(spark.createDataFrame([("b",)], "k string"), ["k"])
-    merge_upsert(
-        t,
-        _mk_batch(spark, [("d", 4, 2)]),
-        ["k"],
-        "ts",
-        repartition_keys=True,
-        n_buckets=4,
-    )
+    assert t._delete_sidecars(t.current_version())
+    merge_upsert(t, _batch(spark, [("d", 4, d2)]), ["k"], "ts")
     assert t._delete_sidecars(t.current_version()) == []
     rows = {r.k: r.v for r in t.read().collect()}
     assert rows == {"a": 1, "c": 3, "d": 4}
-    # and the layout survived the fold, so the NEXT merge is partial again
-    assert t.bucket_spec() == (["k"], 4, t.default_bucket_sql(["k"], 4))
-
-
-def test_partial_merge_idempotent(spark, tmp_path):
-    t = ManagedTable(spark, str(tmp_path / "t"))
-    b = _mk_batch(spark, [("a", 1, 1), ("b", 2, 1)])
-    merge_upsert(t, b, ["k"], "ts", repartition_keys=True, n_buckets=4)
-    once = sorted((r.k, r.v) for r in t.read().collect())
-    merge_upsert(t, b, ["k"], "ts", repartition_keys=True, n_buckets=4)
-    assert sorted((r.k, r.v) for r in t.read().collect()) == once
-
-
-def test_partial_merge_custom_locality_bucketing(spark, tmp_path):
-    """A caller-supplied bucket expression that matches the ingest's key
-    locality (ascending numeric ids, range-bucketed) makes a key-local
-    batch touch exactly ONE bucket — the flat-latency shape at any table
-    size."""
-    t = ManagedTable(spark, str(tmp_path / "t"))
-    bucket_sql = "cast(pmod(cast(k as bigint) div 100, 8) as int)"
-    base = spark.range(800).selectExpr(
-        "CAST(id AS STRING) AS k", "id AS v", "timestamp('2023-01-01') AS ts"
-    )
-    merge_upsert(
-        t, base, ["k"], "ts",
-        repartition_keys=True, n_buckets=8, bucket_sql=bucket_sql,
-    )
-    assert t.bucket_spec() == (["k"], 8, bucket_sql)
-    # key-local batch: ids 100-149 -> all in bucket pmod(1, 8) = 1
-    local = spark.range(100, 150).selectExpr(
-        "CAST(id AS STRING) AS k", "id + 9000 AS v", "timestamp('2023-01-02') AS ts"
-    )
-    v1 = t.current_version()
-    merge_upsert(
-        t, local, ["k"], "ts",
-        repartition_keys=True, n_buckets=8, bucket_sql=bucket_sql,
-    )
-    v2 = t.current_version()
-    import os as _os
-
-    root = str(tmp_path / "t")
-    relinked = 0
-    for entry in _os.listdir(_os.path.join(root, v1)):
-        if not entry.startswith("__bucket="):
-            continue
-        same = {
-            f: _os.stat(_os.path.join(root, v1, entry, f)).st_ino
-            for f in _os.listdir(_os.path.join(root, v1, entry))
-            if f.endswith(".parquet")
-        } == {
-            f: _os.stat(_os.path.join(root, v2, entry, f)).st_ino
-            for f in _os.listdir(_os.path.join(root, v2, entry))
-            if f.endswith(".parquet")
-        }
-        relinked += same
-    # 7 of 8 buckets hard-linked; only bucket 1 rewritten
-    assert relinked == 7
-    rows = {int(r.k): r.v for r in t.read().collect()}
-    assert rows[120] == 9120 and rows[50] == 50 and len(rows) == 800
-
-
-def test_compact_preserves_bucketed_layout(spark, tmp_path):
-    """Compaction of a key-bucketed table must keep the layout (and its
-    spec) so the NEXT merge stays partial, and must not change contents."""
-    t = ManagedTable(spark, str(tmp_path / "t"))
-    kw = dict(keys=["k"], order_col="ts", repartition_keys=True, n_buckets=4)
-    merge_upsert(t, _mk_batch(spark, [("a", 1, 1), ("b", 2, 1)]), **kw)
-    merge_upsert(t, _mk_batch(spark, [("c", 3, 2)]), **kw)
-    before = sorted((r.k, r.v) for r in t.read().collect())
-    spec = t.bucket_spec()
-    t.compact()
-    assert t.bucket_spec() == spec
-    assert sorted((r.k, r.v) for r in t.read().collect()) == before
-    # next merge is still partial: untouched bucket dirs hard-link
-    v1 = t.current_version()
-    merge_upsert(t, _mk_batch(spark, [("a", 10, 3)]), **kw)
-    v2 = t.current_version()
-    import os as _os
-
-    root = str(tmp_path / "t")
-    shared = 0
-    for entry in _os.listdir(_os.path.join(root, v1)):
-        if not entry.startswith("__bucket="):
-            continue
-        ino1 = {
-            _os.stat(_os.path.join(root, v1, entry, f)).st_ino
-            for f in _os.listdir(_os.path.join(root, v1, entry))
-            if f.endswith(".parquet")
-        }
-        if _os.path.isdir(_os.path.join(root, v2, entry)):
-            ino2 = {
-                _os.stat(_os.path.join(root, v2, entry, f)).st_ino
-                for f in _os.listdir(_os.path.join(root, v2, entry))
-                if f.endswith(".parquet")
-            }
-            shared += bool(ino1 & ino2)
-    assert shared >= 1, "post-compaction merge degraded to a full rewrite"
 
 
 def _parquet_files(table):
@@ -425,11 +230,9 @@ def _parquet_files(table):
     return counts
 
 
-@pytest.mark.parametrize("keyed", [False, True], ids=["full", "keyed"])
-def test_merge_file_count_stays_bounded(spark, tmp_path, keyed):
-    """Repeated merges must not add a parquet file per commit: the full
-    path sizes the stored side by bytes (one file per 128 MiB) plus the
-    batch's file; the keyed path writes each touched bucket as one file.
+def test_merge_file_count_stays_bounded(spark, tmp_path):
+    """Repeated merges must not add a parquet file per commit: the stored
+    side is sized by bytes (one file per 128 MiB) plus the batch's file.
 
     The batches come from ``spark.range``: like the CSV ingest, they carry
     a size estimate, so the anti-join broadcasts the batch and the kept
@@ -437,21 +240,17 @@ def test_merge_file_count_stays_bounded(spark, tmp_path, keyed):
     ``createDataFrame`` batch has no estimate, is shuffle-joined, and AQE
     coalescing would hide the growth."""
     t = ManagedTable(spark, str(tmp_path / "t"))
-    kw = dict(repartition_keys=True, n_buckets=4) if keyed else {}
     for i in range(7):
         # 24 keys per batch, half of them re-sent from the previous batch,
-        # so every batch both updates and inserts across all buckets
+        # so every batch both updates and inserts
         batch = spark.range(12 * i, 12 * i + 24).selectExpr(
             "concat('k', id) AS k",
             f"{100 * i} + id AS v",
             f"timestamp('2023-01-01') + make_interval(0, 0, 0, {i}) AS ts",
         )
-        merge_upsert(t, batch, ["k"], "ts", **kw)
+        merge_upsert(t, batch, ["k"], "ts")
     counts = _parquet_files(t)
-    if keyed:
-        assert len(counts) == 4 and all(n <= 2 for n in counts.values()), counts
-    else:
-        assert sum(counts.values()) <= 2, counts
+    assert sum(counts.values()) <= 2, counts
     got = {r.k: r.v for r in t.read().collect()}
     assert len(got) == 12 * 6 + 24
     assert got["k12"] == 112 and got["k95"] == 695

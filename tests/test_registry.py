@@ -20,6 +20,11 @@ _RETIRED = {
     # round 11: the last rows-only query, retired per the flat-PQ
     # precedent (function stays exported + recall/exactness pytest-gated)
     "ann_ivfpq_topk_embeddings",
+    # one merge path: these pinned the deleted keyed-partial rewrite
+    # against the same oracles as merge_upsert_events and
+    # streaming_ingest_merge_events
+    "merge_upsert_keyed_events",
+    "streaming_ingest_merge_keyed_events",
 }
 
 

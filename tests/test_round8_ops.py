@@ -127,7 +127,7 @@ def test_csv_reader_drops_malformed_consistently(spark, tmp_path):
     — mirrors the JSONL pin."""
     from pyspark.sql import types as T
 
-    from data_ingestion_pipeline_spark.sources.csv_reader import _read
+    from data_ingestion_pipeline_spark.sources.csv_reader import csv_source
 
     p = tmp_path / "c"
     p.mkdir()
@@ -139,7 +139,7 @@ def test_csv_reader_drops_malformed_consistently(spark, tmp_path):
             T.StructField("c", T.DoubleType()),
         ]
     )
-    df = _read(spark, str(p), schema)
+    df = csv_source(spark.read, str(p), schema)
     assert df.count() == 2
     assert sorted((r.a, r.b) for r in df.select("a", "b").collect()) == [
         (1, "x"),

@@ -4,10 +4,12 @@ session windows vs the batch gaps-and-islands formulation."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 import shutil
 
 from pyspark.sql import functions as F
 
+from data_ingestion_pipeline_spark.pipeline import ingest_orders
 from data_ingestion_pipeline_spark.plans.table import ManagedTable
 from data_ingestion_pipeline_spark.streaming.ingest import (
     run_stream_to_completion,
@@ -68,6 +70,36 @@ def test_stream_ingest_foreachbatch_merge(spark, tmp_path):
     q = stream_orders_csv(spark, str(inbox), table, str(tmp_path / "ckpt"))
     run_stream_to_completion(q)
     assert table.read().count() == 3
+
+
+def test_stream_and_batch_drop_the_same_malformed_rows(spark, tmp_path):
+    """The same two files through ``ingest_orders`` and through the stream:
+    the second file re-sends (o1, p1) later with a quantity that does not
+    parse. Both paths drop that line, so both tables keep quantity=2."""
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    rows = [
+        'o1,p1,SEK,2,0,100.0,direct,direct,"",2023-02-01T10:00:00Z',
+        'o1,p1,SEK,two,0,150.0,direct,direct,"",2023-02-02T10:00:00Z',
+    ]
+    for i, row in enumerate(rows):
+        path = inbox / f"batch{i}.csv"
+        _write_orders_csv(path, [row])
+        # the file source drains a backlog in modification-time order
+        os.utime(path, (1_000_000_000 + i,) * 2)
+        ingest_orders(spark, str(path), str(tmp_path / "warehouse"))
+    batch_table = ManagedTable(spark, str(tmp_path / "warehouse" / "orders"))
+
+    stream_table = ManagedTable(spark, str(tmp_path / "stream_tbl"))
+    q = stream_orders_csv(
+        spark, str(inbox), stream_table, str(tmp_path / "ckpt"),
+        max_files_per_trigger=1,
+    )
+    run_stream_to_completion(q)
+
+    for table in (batch_table, stream_table):
+        got = [(r.order_id, r.product_id, r.quantity) for r in table.read().collect()]
+        assert got == [("o1", "p1", 2)]
 
 
 def _mk_events(spark, rows):

@@ -215,11 +215,9 @@ PROBES = [
     # IVF-PQ sample replay: dense 16x corpus, stride adjusts; encode
     # matmul volume grows 16x, probed-cell candidates grow ~16x.
     ("ann_ivfpq_sample_adc_topk_embeddings", ["embeddings"]),
-    # keyed merge: stored+batch both 16x; the partial path's win is
-    # layout-dependent (hash buckets + uniform keys -> all touched), so
-    # this probes the scan/dedup/anti-join staying linear, not the link
-    # trick (stream_bench measures that under locality).
-    ("merge_upsert_keyed_events", ["events"]),
+    # merge: stored+batch both 16x; probes the scan/dedup/anti-join and
+    # the full rewrite staying linear.
+    ("merge_upsert_events", ["events"]),
     # removal attribution / poisson GLM: result grains are |types|- and
     # calendar-bounded; probes read on the lead()/daily aggregation scans.
     ("markov_removal_attribution_events", ["events"]),

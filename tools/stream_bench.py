@@ -1,5 +1,4 @@
-"""Sustained streaming-ingest throughput (round-8 verdict ask #5; keyed
-partial rewrites added for round-9 verdict ask #5).
+"""Sustained streaming-ingest throughput.
 
 Every streaming query in the registry runs ONE micro-batch per check.
 This tool measures the foreachBatch-MERGE ingest path
@@ -11,28 +10,20 @@ into a ManagedTable.
 
 Reports one JSON line: total rows ingested, wall seconds, rows/sec, and
 the per-batch latency series (from StreamingQuery.recentProgress). The
-latency TREND is the point: the default MERGE sink is copy-on-write over
-the whole table, so per-batch cost grows with accumulated table size —
-the series shows where state growth bends the curve. ``mode=keyed``
-switches the sink to keyed partial rewrites (plans/merge.py
-repartition_keys): the table lays out in key-range buckets, each
-micro-batch rewrites only the buckets it touches, and per-batch cost
-stays flat regardless of table size. ``pregrow`` bootstraps the table
-with N x the sf orders rows (disjoint keys ABOVE the stream's key range)
-BEFORE the stream starts, so the two modes can be compared at a
+latency TREND is the point: the MERGE sink is copy-on-write over the
+whole table, so per-batch cost grows with accumulated table size — the
+series shows where state growth bends the curve. ``pregrow`` bootstraps
+the table with N x the sf orders rows (disjoint keys ABOVE the stream's
+key range) BEFORE the stream starts, so the trend can be read at a
 deliberately grown table.
 
-Usage: python tools/stream_bench.py [sf_dir] [n_batches] [mode] [pregrow]
-  mode:    cow (default; full copy-on-write rewrites) | keyed
+Usage: python tools/stream_bench.py [sf_dir] [n_batches] [pregrow]
   pregrow: integer multiplier (default 0 = start empty)
 
 Batches are sliced by CONTIGUOUS orderkey ranges (ascending-id ingest, the
 realistic shape for an autoincrement-keyed stream) with ~5% of each batch
 replaying the previous range's keys one day later so the MERGE update path
-runs every micro-batch. Keyed mode buckets on that same numeric key range
-(ManagedTable.default_bucket_sql's locality note), so a micro-batch
-touches O(1) buckets; with uniform HASH bucketing the same stream would
-touch every bucket and degenerate to a full rewrite.
+runs every micro-batch.
 """
 
 from __future__ import annotations
@@ -115,7 +106,7 @@ def gen_pregrow(sf_dir: str, path: str, mult: int) -> None:
     """One CSV of mult x the orders rows with keys offset ABOVE the
     stream's key range (disjoint: the pregrow mass is never updated by the
     stream — it is the dead weight a copy-on-write merge re-copies every
-    batch and a keyed merge never touches)."""
+    batch)."""
     import duckdb
 
     _, hi = key_span(sf_dir)
@@ -136,15 +127,13 @@ def main() -> None:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
     n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-    mode = sys.argv[3] if len(sys.argv) > 3 else "cow"
-    pregrow = int(sys.argv[4]) if len(sys.argv) > 4 else 0
-    assert mode in ("cow", "keyed"), mode
+    pregrow = int(sys.argv[3]) if len(sys.argv) > 3 else 0
 
     from data_ingestion_pipeline_spark import schemas
-    from data_ingestion_pipeline_spark.functions.normalize import normalize_orders
     from data_ingestion_pipeline_spark.plans.merge import merge_upsert
     from data_ingestion_pipeline_spark.plans.table import ManagedTable
     from data_ingestion_pipeline_spark.session import get_spark
+    from data_ingestion_pipeline_spark.sources.csv_reader import read_orders_csv
     from data_ingestion_pipeline_spark.streaming.ingest import (
         run_stream_to_completion,
         stream_orders_csv,
@@ -160,24 +149,6 @@ def main() -> None:
     # warm up first: measure the engine, not the JIT
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
-    # keyed layout: bucket on the numeric key range so the ascending-id
-    # stream's locality survives bucketing (hash would spread each batch
-    # over every bucket). Width spans the FULL pregrown key space over ~48
-    # of 64 buckets (no wraparound).
-    n_buckets = 64
-    _, hi = key_span(sf_dir)
-    full_span = (pregrow + 1) * (hi + 1)
-    width = full_span // 48 + 1
-    bucket_sql = (
-        f"cast(pmod(cast(substring(order_id, 2, 18) as bigint) "
-        f"div {width}, {n_buckets}) as int)"
-    )
-    keyed_kw = (
-        {"repartition_keys": True, "n_buckets": n_buckets, "bucket_sql": bucket_sql}
-        if mode == "keyed"
-        else {}
-    )
-
     work = tempfile.mkdtemp(prefix="stream_bench_")
     try:
         inbox = os.path.join(work, "inbox")
@@ -190,15 +161,11 @@ def main() -> None:
         if pregrow:
             grow_csv = os.path.join(work, "pregrow.csv")
             gen_pregrow(sf_dir, grow_csv, pregrow)
-            seed = normalize_orders(
-                spark.read.schema(schemas.ORDERS_CSV_RAW)
-                .option("header", "true")
-                .option("nullValue", "")
-                .csv(grow_csv)
-            )
             merge_upsert(
-                table, seed, keys=schemas.ORDERS_KEY, order_col="date_time",
-                **keyed_kw,
+                table,
+                read_orders_csv(spark, grow_csv),
+                keys=schemas.ORDERS_KEY,
+                order_col="date_time",
             )
         t0 = time.time()
         q = stream_orders_csv(
@@ -208,7 +175,6 @@ def main() -> None:
             os.path.join(work, "ckpt"),
             max_files_per_trigger=1,
             available_now=True,
-            **keyed_kw,
         )
         run_stream_to_completion(q, timeout_s=1800.0)
         wall = time.time() - t0
@@ -228,7 +194,6 @@ def main() -> None:
                 {
                     "metric": "stream_ingest_merge_sustained",
                     "sf_dir": sf_dir,
-                    "mode": mode,
                     "pregrow_mult": pregrow,
                     "n_batches": len(batches),
                     "total_rows": total_rows,
