@@ -319,8 +319,8 @@ def compacted_sorted_orders_table(spark: SparkSession, sf_dir: str) -> ManagedTa
         table = ManagedTable(spark, root, keep_versions=3)
         orders = load_table(spark, sf_dir, "orders")
         table.overwrite(orders.repartition(64))
-        table.compact(target_file_bytes=128 * 1024 * 1024)
-        table.sorted_overwrite(table.read(), ["o_orderdate"], num_files=4)
+        table.compact()
+        table.sorted_overwrite(["o_orderdate"], num_files=4)
         write_marker(marker, stamp)
     return ManagedTable(spark, root, keep_versions=3)
 

@@ -811,7 +811,7 @@ def merge_on_read_delete_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read deletion (Iceberg V2 equality deletes / Delta deletion
     vectors): two delete commits land as SIDECARS against the current
     version — an O(keys) metadata write, data files untouched — and reads
-    apply them as a broadcast anti-join; ``rewrite_deletes`` then folds the
+    apply them as a broadcast anti-join; ``compact`` then folds the
     sidecars into new data files (minor compaction). The published shape is
     the per-type profile read BOTH ways, phase-labeled: 'mor' (sidecars
     live) must equal 'cow' (after the rewrite) — the oracle computes one
@@ -849,7 +849,7 @@ def merge_on_read_delete_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(F.lit(phase).alias("phase"), "*")
 
     mor = profile(table.read(), "mor")
-    table.rewrite_deletes()
+    table.compact()
     cow = profile(table.read(), "cow")
     return mor.unionByName(cow)
 

@@ -14,9 +14,13 @@ deterministic, distributed semantics:
    column (the reference's duplicates differ only in their timestamp).
 2. **Split** against the store with a single anti-join (kept stored rows) —
    the reference's per-row membership test (F5/J3/J4) collapses into one
-   set-based join that Catalyst executes as broadcast/shuffled hash.
-3. **Rewrite**: ``stored ▷ batch  ∪  batch_deduped`` committed atomically via
-   ManagedTable's write-new-then-swap.
+   set-based join that Catalyst executes as broadcast/shuffled hash. The
+   stored side is ``ManagedTable.snapshot()``, pending equality deletes
+   folded.
+3. **Rewrite**: ``stored ▷ batch  ∪  batch_deduped`` committed with
+   ``ManagedTable.overwrite(merged, snapshot=snap)``: write-new-then-swap,
+   aborting with ``ConcurrentWriteError`` if another commit landed since
+   the snapshot.
 
 Deviation from the reference, documented per SURVEY.md §2.6: duplicate keys
 within a first-run batch are collapsed (the reference inserts them all and
@@ -54,7 +58,7 @@ from pyspark.sql import functions as F
 from data_ingestion_pipeline_spark.plans.join_strategies import plan_size_estimate
 from data_ingestion_pipeline_spark.plans.table import ManagedTable
 
-__all__ = ["dedupe_last_wins", "split_updates_inserts", "merge_upsert"]
+__all__ = ["dedupe_last_wins", "merge_upsert"]
 
 
 def dedupe_last_wins(
@@ -81,16 +85,6 @@ def dedupe_last_wins(
     )
 
 
-def split_updates_inserts(
-    batch: DataFrame, stored: DataFrame, keys: Sequence[str]
-) -> tuple[DataFrame, DataFrame]:
-    """J3/J4 — the update/insert split as semi/anti joins (reference does this
-    with a per-row dict membership test, ``flows/data_ingestion.py:116-122``)."""
-    updates = batch.join(stored.select(*keys), list(keys), "left_semi")
-    inserts = batch.join(stored.select(*keys), list(keys), "left_anti")
-    return updates, inserts
-
-
 def merge_upsert(
     table: ManagedTable,
     batch: DataFrame,
@@ -110,8 +104,9 @@ def merge_upsert(
     not one more than its base.
 
     Pending equality-delete sidecars on the base version are folded in:
-    the stored side is read through ``table.read``, and the new version
-    carries no sidecars.
+    the stored side is ``table.snapshot()``'s rows, and the new version
+    carries no sidecars. The commit is checked against that snapshot: a
+    concurrent commit raises ``ConcurrentWriteError``.
 
     ``evolve_schema=True`` composes the reference's two flows in one commit
     (schema sync THEN ingest, ``main.py:9-26``): columns new in the batch
@@ -122,12 +117,13 @@ def merge_upsert(
     usually a bug, so widening is opt-in per pipeline.
     """
     deduped = dedupe_last_wins(batch, keys, order_col)
-    # read-modify-write: declare the base version so a concurrent commit
-    # between our read and our swap aborts (ConcurrentWriteError) instead
-    # of being silently overwritten — the caller re-reads and retries.
-    base = table.current_version()
-    if base is None:
-        return table.overwrite(deduped, expected_base=None)
+    # read-modify-write: commit against the snapshot read here, so a
+    # concurrent commit between the read and the swap aborts
+    # (ConcurrentWriteError) instead of being silently overwritten — the
+    # caller re-reads and retries.
+    snap = table.snapshot()
+    if snap.df is None:
+        return table.overwrite(deduped, snapshot=snap)
     # the batch side of the commit is written as one file per 128 MiB of
     # Catalyst's size estimate (a plan statistic, no job): a large batch
     # still writes in parallel, and the file count does not follow the
@@ -147,21 +143,14 @@ def merge_upsert(
     # computes once; lazy skips the extra eager job); blocks are
     # RDD-level and GC-reclaimed after the commit.
     deduped = deduped.localCheckpoint(eager=False)
-    # capture the sidecar listing read() will fold BEFORE constructing the
-    # read: a concurrent equality delete then aborts this merge instead of
-    # being silently folded away by a stale snapshot
-    sidecars = table.sidecar_listing(base)
-    stored = table.read(version=base)
     # the kept side by its on-disk bytes, not by the base's file count:
     # coalesce (no shuffle) packs it into ~128 MiB files, so the base's
     # files do not carry over one-for-one and a version does not gain a
     # file per commit
-    kept = stored.join(deduped.select(*keys), list(keys), "left_anti").coalesce(
-        table.target_file_count(base)
+    kept = snap.df.join(deduped.select(*keys), list(keys), "left_anti").coalesce(
+        table.target_file_count(snap.version)
     )
     merged = kept.unionByName(
         deduped.coalesce(batch_files), allowMissingColumns=evolve_schema
     )
-    return table.overwrite(
-        merged, expected_base=base, expected_sidecars=sidecars
-    )
+    return table.overwrite(merged, snapshot=snap)

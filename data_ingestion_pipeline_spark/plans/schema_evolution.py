@@ -75,19 +75,15 @@ def sync_table_schema(
 
     Analog of the reference's ``sync_table_schema`` (``flows/schema_sync.py:158-180``).
     """
-    base = table.current_version()
-    if base is None:
+    # read-modify-write: commit against the snapshot so a concurrent
+    # ingest commit aborts this rewrite instead of being silently replaced
+    # by the conformed copy of a stale read
+    snap = table.snapshot()
+    if snap.df is None:
         return None
-    # read-modify-write: declare the base + folded sidecar listing so a
-    # concurrent ingest commit aborts this rewrite instead of being
-    # silently replaced by the conformed copy of a stale snapshot
-    sidecars = table.sidecar_listing(base)
-    stored = table.read(version=base)
-    d = diff_schema(stored.schema, declared, protected)
+    d = diff_schema(snap.df.schema, declared, protected)
     if not (d["add"] or d["drop"] or d["cast"]):
         return None
     return table.overwrite(
-        conform_to_schema(stored, declared, protected),
-        expected_base=base,
-        expected_sidecars=sidecars,
+        conform_to_schema(snap.df, declared, protected), snapshot=snap
     )

@@ -21,6 +21,17 @@ compaction)::
 A version's data files sit flat in its directory; merge and compact write
 about one file per ``TARGET_FILE_BYTES`` of data.
 
+Commit protocol: every read-modify-write (merge, schema sync, aggregate
+fold, ``delete_where``, ``compact``, ``sorted_overwrite``) reads through
+``snapshot()`` and commits through ``overwrite(df, snapshot=snap)``. The
+snapshot holds the current version, its equality-delete sidecar listing
+(taken before the read, which folds the sidecars) and the folded rows.
+The commit stages its files, claims the next version slot and, under the
+pointer lock, raises ``ConcurrentWriteError`` if the version or its
+sidecar listing moved since the snapshot; the caller re-reads and
+retries. ``overwrite(df)`` without a snapshot is a blind replacement:
+last commit wins, and the pointer never moves backward.
+
 Scale notes: version data is written by executors (a normal distributed
 ``df.write.parquet``); only the pointer flip is a driver-side metadata
 operation (O(1), independent of data size). On HDFS/S3 the pointer write
@@ -39,27 +50,33 @@ import tempfile
 import time
 import uuid
 from collections.abc import Sequence
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["ManagedTable", "ConcurrentWriteError"]
+__all__ = ["ManagedTable", "Snapshot", "ConcurrentWriteError"]
 
 _POINTER = "_LATEST"
 _PTR_LOCK = ".ptr_lock"
 # file size the layout-sizing rewrites (compact, merge) aim for
 TARGET_FILE_BYTES = 128 * 1024 * 1024
-# sentinel: "caller did not declare a base" (None is a real value — the
-# expected base of a bootstrap commit against a not-yet-existing table)
-_UNSET = object()
 
 
 class ConcurrentWriteError(RuntimeError):
-    """A conflict-checked commit found the table advanced past its base.
+    """A commit against a snapshot found the table moved since the read.
 
-    Raised only for commits that DECLARE the version they read
+    Raised only for commits that pass the ``snapshot`` they read
     (read-modify-write: merge, delete, compaction). The caller's recovery
     is Delta's: re-read the new current version, re-derive, re-commit —
     the losing writer's work is discarded, never silently merged over."""
+
+
+class Snapshot(NamedTuple):
+    """What a read-modify-write commit read (``ManagedTable.snapshot``)."""
+
+    version: str | None  # None: the table has no committed version yet
+    sidecars: list[str]  # the version's equality-delete sidecars
+    df: DataFrame | None  # the version's rows, sidecars folded; None if empty
 
 
 class ManagedTable:
@@ -81,10 +98,6 @@ class ManagedTable:
             return v or None
         except FileNotFoundError:
             return None
-
-    def exists(self) -> bool:
-        return self.current_version() is not None
-
 
     def _swap_pointer(self, version: str) -> None:
         # POSIX rename is atomic within a filesystem: readers see either the
@@ -183,21 +196,17 @@ class ManagedTable:
         finally:
             os.close(fd)
 
-    def _commit_pointer(
-        self, version: str, expected_base, expected_sidecars=None
-    ) -> None:
-        """Move the pointer to ``version`` under the commit lock. If the
-        committer declared the base it read (``expected_base`` is not the
-        _UNSET sentinel) and the table has advanced, abort with
-        ConcurrentWriteError and discard the claimed (never-pointed)
-        version. ``expected_sidecars`` additionally pins the base
-        version's equality-delete listing as read — a sidecar that landed
-        after this commit derived its data (rewrite_deletes' race) aborts
-        it instead of being silently folded away. Undeclared commits are
-        last-commit-wins, but the pointer never moves BACKWARD (claim
-        order and commit order can invert across writers — the earlier
-        claim stays on disk as a retained HISTORICAL version in claim
-        order, it just never becomes current)."""
+    def _commit_pointer(self, version: str, snapshot: Snapshot | None) -> None:
+        """Move the pointer to ``version`` under the commit lock. A commit
+        against a ``snapshot`` aborts with ConcurrentWriteError, and
+        discards the claimed (never-pointed) version, if the current
+        version or its sidecar listing differs from the snapshot's: a
+        sidecar that landed after the snapshot would otherwise be folded
+        away silently. Blind commits are last-commit-wins, but the pointer
+        never moves BACKWARD (claim order and commit order can invert
+        across writers — the earlier claim stays on disk as a retained
+        HISTORICAL version in claim order, it just never becomes
+        current)."""
         try:
             fd = self._ptr_locked()
         except RuntimeError:
@@ -207,26 +216,17 @@ class ManagedTable:
             raise
         try:
             cur = self.current_version()
-            conflict = None
-            if expected_base is not _UNSET and cur != expected_base:
-                conflict = (
-                    f"advanced {expected_base!r} -> {cur!r} since this "
-                    f"commit's base was read"
-                )
-            elif (
-                expected_sidecars is not None
-                and self._delete_sidecars(cur) != expected_sidecars
+            if snapshot is not None and (
+                cur != snapshot.version
+                or (cur and self._delete_sidecars(cur) != snapshot.sidecars)
             ):
-                conflict = (
-                    f"equality-delete sidecars changed on {cur!r} since "
-                    f"this commit's base was read"
-                )
-            if conflict:
                 shutil.rmtree(
                     os.path.join(self.root, version), ignore_errors=True
                 )
                 raise ConcurrentWriteError(
-                    f"table {self.root} {conflict}; re-read and retry"
+                    f"table {self.root} moved from {snapshot.version!r} "
+                    f"({len(snapshot.sidecars)} delete sidecars) to {cur!r} "
+                    f"since the snapshot was read; re-read and retry"
                 )
             if cur is None or int(version[1:]) > int(cur[1:]):
                 self._swap_pointer(version)
@@ -239,9 +239,7 @@ class ManagedTable:
 
     # -- read / write -------------------------------------------------------
 
-    def read(
-        self, version: str | None = None, apply_deletes: bool = True
-    ) -> DataFrame:
+    def read(self, version: str | None = None) -> DataFrame:
         """Read the current version, or a retained older one (time travel).
 
         Versions are immutable once the pointer moves past them, so reading
@@ -250,8 +248,7 @@ class ManagedTable:
 
         If the version carries equality-delete sidecars
         (``equality_delete``), they are applied merge-on-read as an
-        anti-join unless ``apply_deletes=False`` (the raw-data-file view a
-        compaction job reads).
+        anti-join.
         """
         v = version or self.current_version()
         if v is None:
@@ -260,8 +257,6 @@ class ManagedTable:
         if not os.path.isdir(path):
             raise FileNotFoundError(f"version {v} not retained in {self.root}")
         df = self.spark.read.parquet(path)
-        if not apply_deletes:
-            return df
         sidecars = self._delete_sidecars(v)
         if not sidecars:
             return df
@@ -273,9 +268,31 @@ class ManagedTable:
             DataFrame.unionByName,
             [self.spark.read.parquet(p) for p in sidecars],
         ).distinct()
-        # delete sets are small relative to data (bounded by rewrite_deletes
+        # delete sets are small relative to data (bounded by compaction
         # cadence) — broadcast the anti-join so the read stays shuffle-free
         return df.join(F.broadcast(keys), list(keys.columns), "left_anti")
+
+    def snapshot(self) -> Snapshot:
+        """The current version, its sidecar listing and its folded rows:
+        the read half of every read-modify-write commit. Pass it back as
+        ``overwrite(df, snapshot=snap)``. On an empty table the version
+        is None and ``df`` is None; the commit then bootstraps the table
+        and conflicts with any concurrent bootstrap."""
+        v = self.current_version()
+        if v is None:
+            return Snapshot(None, [], None)
+        # list the sidecars BEFORE read() lists the ones it folds: a
+        # sidecar landing between the two shows up as a commit-time
+        # mismatch (a spurious but safe abort); the reverse order could
+        # fold a listing the commit check then misses (a lost delete)
+        sidecars = self._delete_sidecars(v)
+        return Snapshot(v, sidecars, self.read(version=v))
+
+    def _committed_snapshot(self) -> Snapshot:
+        snap = self.snapshot()
+        if snap.df is None:
+            raise FileNotFoundError(f"table {self.root} has no committed version")
+        return snap
 
     # -- merge-on-read deletes (Iceberg V2 equality-delete style) -----------
 
@@ -292,15 +309,6 @@ class ManagedTable:
             os.path.join(d, s) for s in os.listdir(d) if s.startswith("d")
         )
 
-    def sidecar_listing(self, version: str) -> list[str]:
-        """Public capture point for OCC read-modify-write commits: every
-        path that FOLDS a version's equality deletes (rewrite_deletes,
-        delete_where, compact, merge) must capture this listing BEFORE
-        read() and pass it as ``expected_sidecars`` — a sidecar landing
-        after the capture then aborts the commit instead of being silently
-        folded away."""
-        return self._delete_sidecars(version)
-
     def equality_delete(self, keys: DataFrame, key_cols: Sequence[str]) -> str:
         """Merge-on-read delete: write an equality-delete SIDECAR against
         the current version — the data files are untouched (asserted by
@@ -308,7 +316,7 @@ class ManagedTable:
         axis: ``delete_where`` is copy-on-write (pay the rewrite at delete
         time, reads stay pure scans); ``equality_delete`` is merge-on-read
         (O(keys) delete commit, every read pays a broadcast anti-join until
-        ``rewrite_deletes`` folds the sidecars in). Iceberg V2 equality
+        a rewrite such as ``compact`` folds the sidecars in). Iceberg V2 equality
         deletes / Delta deletion vectors make exactly this trade.
 
         All sidecars of a version must share one key-column list (pinned by
@@ -369,10 +377,9 @@ class ManagedTable:
         # conflict check mirroring _commit_pointer: if the table advanced
         # while the sidecar was being written, it attached to a version no
         # reader resolves anymore — roll it back and make the caller
-        # re-read. Verified under the commit lock, so a racing
-        # rewrite_deletes either saw this sidecar in its commit-time
-        # listing check (and aborted) or moved the pointer first (and this
-        # aborts).
+        # re-read. Verified under the commit lock, so a racing snapshot
+        # commit either saw this sidecar in its commit-time listing check
+        # (and aborted) or moved the pointer first (and this aborts).
         try:
             fd = self._ptr_locked()
         except RuntimeError:
@@ -393,42 +400,20 @@ class ManagedTable:
             self._ptr_unlock(fd)
         return v
 
-    def rewrite_deletes(self) -> str:
-        """Fold the current version's delete sidecars into the data files
-        (the minor-compaction half of a table service): commits a new
-        version whose scan needs no anti-join. Merge-on-read == copy-on-
-        write parity is oracle-proved by the registered query."""
-        base = self.current_version()
-        # capture the sidecar listing BEFORE read() lists them for the plan:
-        # a sidecar landing between the two shows up as a commit-time
-        # mismatch (spurious-but-safe abort); the reverse order could fold
-        # a listing the conflict check then fails to notice (lost delete)
-        sidecars = self._delete_sidecars(base) if base else []
-        return self.overwrite(
-            self.read(version=base),
-            expected_base=base,
-            expected_sidecars=sidecars,
-        )
-
-    def overwrite(
-        self, df: DataFrame, expected_base=_UNSET, expected_sidecars=None
-    ) -> str:
+    def overwrite(self, df: DataFrame, snapshot: Snapshot | None = None) -> str:
         """Commit ``df`` as the new table contents.
 
         Write-stage-claim-swap: data lands in a unique hidden staging
         directory, an atomic rename claims the next version slot (safe
         against concurrent claimers), and the pointer moves under the
-        commit lock. Pass ``expected_base=<version read>`` (or ``None``
-        for a bootstrap) to make this an OPTIMISTIC-CONCURRENCY commit
-        that raises ConcurrentWriteError instead of silently overwriting
-        a concurrent writer's changes — every read-modify-write path in
-        this module (merge, delete_where, rewrite_deletes, compact)
-        declares its base; blind full replacements may omit it and get
-        last-commit-wins."""
+        commit lock. With the ``snapshot`` that ``df`` was derived from,
+        the commit raises ConcurrentWriteError instead of silently
+        overwriting a concurrent writer's changes; without it, it is a
+        blind replacement (last commit wins)."""
         stage = os.path.join(self.root, f"._stage_{uuid.uuid4().hex}")
         df.write.mode("overwrite").parquet(stage)
         version = self._claim_version(stage)
-        self._commit_pointer(version, expected_base, expected_sidecars)
+        self._commit_pointer(version, snapshot)
         self._vacuum()
         return version
 
@@ -452,20 +437,15 @@ class ManagedTable:
         """
         from pyspark.sql import functions as F
 
-        base = self.current_version()
-        sidecars = self._delete_sidecars(base) if base else []
+        snap = self._committed_snapshot()
         return self.overwrite(
-            self.read(version=base).filter(
-                ~F.coalesce(condition, F.lit(False))
-            ),
-            expected_base=base,
-            expected_sidecars=sidecars,
+            snap.df.filter(~F.coalesce(condition, F.lit(False))), snapshot=snap
         )
 
     def _data_bytes(self, version: str) -> int:
         # every parquet file under the version dir: the data files, plus
         # any pending equality-delete sidecars under _deletes (small next
-        # to the data; rewrite_deletes folds them)
+        # to the data; compact folds them)
         path = os.path.join(self.root, version)
         return sum(
             os.path.getsize(os.path.join(d, f))
@@ -475,47 +455,40 @@ class ManagedTable:
         )
 
     @staticmethod
-    def file_count(n_bytes: int, target_file_bytes: int = TARGET_FILE_BYTES) -> int:
+    def file_count(n_bytes: int) -> int:
         """Files to write ``n_bytes`` of data in: ``ceil(n_bytes /
-        target_file_bytes)``, at least 1."""
-        return max(1, -(-n_bytes // target_file_bytes))
+        TARGET_FILE_BYTES)``, at least 1."""
+        return max(1, -(-n_bytes // TARGET_FILE_BYTES))
 
-    def target_file_count(
-        self, version: str, target_file_bytes: int = TARGET_FILE_BYTES
-    ) -> int:
+    def target_file_count(self, version: str) -> int:
         """How many files a rewrite of ``version``'s data should produce,
         sized from its on-disk parquet bytes — a directory walk, not a
         Spark job. ``compact`` and ``merge_upsert`` both size their output
         with it, which keeps a version at about this many files instead of
         one more file per commit."""
-        return self.file_count(self._data_bytes(version), target_file_bytes)
+        return self.file_count(self._data_bytes(version))
 
-    def compact(self, target_file_bytes: int = TARGET_FILE_BYTES) -> str:
-        """Rewrite the current version into ~target-sized files (OPTIMIZE).
+    def compact(self) -> str:
+        """Rewrite the current version into ~``TARGET_FILE_BYTES`` files
+        (OPTIMIZE), folding its pending delete sidecars.
 
         Streaming/incremental ingestion accretes many small files; at 100 TB
         the scan-planning and open() overhead of millions of tiny files
         dominates. Sizing from the actual on-disk bytes of the current
         version, ``coalesce`` (no shuffle) bin-packs partitions down to
-        ``target_file_count`` files. Data is unchanged — only layout;
-        pending delete sidecars are folded in by the read.
+        ``target_file_count`` files. The rows are the snapshot's, with the
+        equality deletes applied, so the new version carries no sidecars
+        and its scan needs no anti-join (the minor-compaction half of a
+        table service).
         """
-        cur = self.current_version()
-        if cur is None:
-            raise FileNotFoundError(f"table {self.root} has no committed version")
-        sidecars = self._delete_sidecars(cur)
+        snap = self._committed_snapshot()
         return self.overwrite(
-            self.read(version=cur).coalesce(
-                self.target_file_count(cur, target_file_bytes)
-            ),
-            expected_base=cur,
-            expected_sidecars=sidecars,
+            snap.df.coalesce(self.target_file_count(snap.version)), snapshot=snap
         )
 
-    def sorted_overwrite(
-        self, df: DataFrame, sort_cols: Sequence[str], num_files: int
-    ) -> str:
-        """Commit ``df`` range-clustered on ``sort_cols`` (Z-order lite).
+    def sorted_overwrite(self, sort_cols: Sequence[str], num_files: int) -> str:
+        """Rewrite the current version range-clustered on ``sort_cols``
+        (Z-order lite).
 
         ``repartitionByRange`` gives files with DISJOINT value ranges and
         ``sortWithinPartitions`` orders rows inside each, so every parquet
@@ -524,10 +497,12 @@ class ManagedTable:
         scanning them (asserted from the footers in pytest). At cluster
         scale, size num_files from plan stats or a prior version's bytes.
         """
+        snap = self._committed_snapshot()
         return self.overwrite(
-            df.repartitionByRange(num_files, *sort_cols).sortWithinPartitions(
+            snap.df.repartitionByRange(num_files, *sort_cols).sortWithinPartitions(
                 *sort_cols
-            )
+            ),
+            snapshot=snap,
         )
 
     def _vacuum(self) -> None:

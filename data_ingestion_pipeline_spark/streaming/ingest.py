@@ -102,19 +102,17 @@ def merge_additive_aggregates(
     """
     from pyspark.sql import functions as F
 
-    # read-modify-write: declare the base (and its sidecar listing, which
-    # read() folds) so a concurrent commit aborts with ConcurrentWriteError
-    # instead of this fold silently discarding it — two micro-batch drivers
-    # racing here would otherwise undercount with no error
-    base = table.current_version()
-    if base is None:
-        table.overwrite(batch_agg, expected_base=None)
+    # read-modify-write: commit against the snapshot so a concurrent commit
+    # aborts with ConcurrentWriteError instead of this fold silently
+    # discarding it — two micro-batch drivers racing here would otherwise
+    # undercount with no error
+    snap = table.snapshot()
+    if snap.df is None:
+        table.overwrite(batch_agg, snapshot=snap)
         return
-    sidecars = table.sidecar_listing(base)
-    current = table.read(version=base)
     merged = (
-        current.unionByName(batch_agg)
+        snap.df.unionByName(batch_agg)
         .groupBy(*keys)
         .agg(*[F.sum(c).alias(c) for c in sum_cols])
     )
-    table.overwrite(merged, expected_base=base, expected_sidecars=sidecars)
+    table.overwrite(merged, snapshot=snap)

@@ -12,7 +12,6 @@ from data_ingestion_pipeline_spark.pipeline import run_pipeline
 from data_ingestion_pipeline_spark.plans.merge import (
     dedupe_last_wins,
     merge_upsert,
-    split_updates_inserts,
 )
 from data_ingestion_pipeline_spark.plans.schema_evolution import (
     conform_to_schema,
@@ -41,18 +40,6 @@ def test_dedupe_last_wins(spark):
     )
     out = {r.k: r.v for r in dedupe_last_wins(b, ["k"], "ts").collect()}
     assert out == {"a": 2, "b": 9}
-
-
-def test_split_updates_inserts(spark):
-    import datetime as dt
-
-    stored = _batch(spark, [("a", 1, dt.datetime(2023, 1, 1))])
-    batch = _batch(
-        spark, [("a", 5, dt.datetime(2023, 2, 1)), ("c", 7, dt.datetime(2023, 2, 1))]
-    )
-    upd, ins = split_updates_inserts(batch, stored, ["k"])
-    assert [r.k for r in upd.collect()] == ["a"]
-    assert [r.k for r in ins.collect()] == ["c"]
 
 
 def test_merge_idempotent_and_last_wins(spark, tmp_path):
@@ -97,16 +84,6 @@ def test_merge_idempotent_and_last_wins(spark, tmp_path):
     assert {r.k: r.v for r in t.read().collect()} == {
         "a": 10, "b": 21, "c": 4, "e": 50
     }
-
-
-def test_managed_table_versions_and_vacuum(spark, tmp_path):
-    t = ManagedTable(spark, str(tmp_path / "t"), keep_versions=2)
-    for i in range(4):
-        t.overwrite(spark.range(i + 1).withColumnRenamed("id", "x"))
-    assert t.read().count() == 4
-    versions = [d for d in os.listdir(t.root) if d.startswith("v")]
-    assert len(versions) <= 2  # vacuumed
-    assert t.current_version() == "v00000004"
 
 
 def test_schema_evolution_add_drop_cast(spark, tmp_path):

@@ -1,6 +1,6 @@
 """Semantics tests for round-3 operators: SCD2 history invariants, CDC
-feed classes, delete-by-key audit trail, rollup losslessness, and
-decontamination recall on planted leaks."""
+feed classes, rollup losslessness, and decontamination recall on planted
+leaks."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from data_ingestion_pipeline_spark.operators import lakehouse_checks, llm_data
 from data_ingestion_pipeline_spark.plans.scd import merge_changes, scd2_apply
-from data_ingestion_pipeline_spark.plans.table import ManagedTable
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 from tests.conftest import SF_SMOKE
 
@@ -64,17 +63,6 @@ def test_cdc_feed_classes(spark):
     # unchanged re-sends (keys %7==1) emit nothing
     assert feed.filter("o_orderkey % 7 = 1 AND o_orderkey < 100000000").count() == 0
     feed.unpersist()
-
-
-def test_delete_where_keeps_audit_versions(spark, tmp_path):
-    table = ManagedTable(spark, str(tmp_path / "t"), keep_versions=3)
-    events = load_table(spark, SF_SMOKE, "events").select("event_id", "user_id")
-    table.overwrite(events)
-    v_before = table.current_version()
-    table.delete_where(F.col("user_id") % 17 == 0)
-    # current version has no matching rows; the prior one still does
-    assert table.read().filter("user_id % 17 = 0").count() == 0
-    assert table.read(v_before).filter("user_id % 17 = 0").count() > 0
 
 
 def test_rollup_from_hourly_equals_direct_daily(spark):

@@ -77,21 +77,6 @@ def test_frequent_users_sketch_is_exact_heavy_hitter_set(spark):
     assert got == exact and (0 in {u for u, _ in got})
 
 
-def test_delete_where_null_condition_keeps_rows(spark, tmp_path):
-    """SQL DELETE semantics: rows where the predicate evaluates to NULL
-    (e.g. NULL key) must SURVIVE a delete — only TRUE deletes."""
-    from data_ingestion_pipeline_spark.plans.table import ManagedTable
-
-    df = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (None, "c")], "user_id int, payload string"
-    )
-    t = ManagedTable(spark, str(tmp_path / "t"))
-    t.overwrite(df)
-    t.delete_where(F.col("user_id") == 1)
-    left = {(r.user_id, r.payload) for r in t.read().collect()}
-    assert left == {(2, "b"), (None, "c")}
-
-
 def test_dup_span_profile_short_documents(spark):
     """Documents shorter than the 8-token window emit one partial window
     instead of throwing INVALID_ARRAY_INDEX under ANSI mode; identical

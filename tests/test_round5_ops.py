@@ -220,44 +220,6 @@ def test_chunk_stitch_queries_range_partition(spark, name, key):
     assert key in plan, f"{name} lost its range-partitioned chunk pass"
 
 
-def test_equality_delete_is_merge_on_read(spark, tmp_path):
-    """Delete commits must not touch data files; reads apply sidecars;
-    rewrite_deletes folds them in; key-spec drift is rejected."""
-    import os
-
-    from data_ingestion_pipeline_spark.plans.table import ManagedTable
-
-    t = ManagedTable(spark, str(tmp_path / "t"), keep_versions=3)
-    df = spark.range(100).selectExpr("id AS k", "id * 2 AS v")
-    t.overwrite(df)
-    v = t.current_version()
-    data_files = {
-        f: os.path.getmtime(os.path.join(str(tmp_path / "t"), v, f))
-        for f in os.listdir(os.path.join(str(tmp_path / "t"), v))
-        if f.endswith(".parquet")
-    }
-    t.equality_delete(spark.range(0, 100, 10).selectExpr("id AS k"), ["k"])
-    t.equality_delete(spark.range(5, 100, 10).selectExpr("id AS k"), ["k"])
-    # data files untouched by both delete commits
-    for f, mtime in data_files.items():
-        assert os.path.getmtime(os.path.join(str(tmp_path / "t"), v, f)) == mtime
-    # merged read excludes both delete sets; raw read sees everything
-    assert t.read().count() == 80
-    assert t.read(apply_deletes=False).count() == 100
-    # sidecars accumulated under the version, hidden from the data scan
-    assert len(t._delete_sidecars(v)) == 2
-    # key-spec drift is an error, not silent corruption
-    with pytest.raises(ValueError, match="key mismatch"):
-        t.equality_delete(spark.range(3).selectExpr("id AS v"), ["v"])
-    # rewrite folds deletes into data files: new version, no sidecars,
-    # same logical contents with or without apply_deletes
-    t.rewrite_deletes()
-    v2 = t.current_version()
-    assert v2 != v
-    assert t._delete_sidecars(v2) == []
-    assert t.read(apply_deletes=False).count() == 80
-
-
 def test_mann_kendall_matches_direct(spark):
     from data_ingestion_pipeline_spark.operators import analytics_checks
 

@@ -441,99 +441,6 @@ def test_matryoshka_full_width_slice_is_identity(spark):
     assert full_set == sliced_set
 
 
-def test_managed_table_occ_conflict_and_retry(spark, tmp_path):
-    """Optimistic concurrency on ManagedTable: a commit that declares its
-    base aborts (ConcurrentWriteError) when an interloper committed first,
-    the interloper's state survives untouched, the loser's claimed version
-    directory is discarded, and the standard re-read-and-retry succeeds."""
-    import os
-
-    from data_ingestion_pipeline_spark.plans.table import (
-        ConcurrentWriteError,
-        ManagedTable,
-    )
-
-    t = ManagedTable(spark, str(tmp_path / "occ"))
-    t.overwrite(spark.range(5).withColumnRenamed("id", "k"), expected_base=None)
-    base = t.current_version()
-
-    t.overwrite(spark.range(7).withColumnRenamed("id", "k"))  # interloper
-
-    with pytest.raises(ConcurrentWriteError):
-        t.overwrite(
-            spark.range(1).withColumnRenamed("id", "k"), expected_base=base
-        )
-    assert t.read().count() == 7, "loser must not clobber the interloper"
-    assert not any(
-        d.startswith("._stage_") for d in os.listdir(t.root)
-    ), "staging cleaned up via claim-rename"
-    claimed = sorted(d for d in os.listdir(t.root) if d.startswith("v"))
-    assert t.current_version() == claimed[-1], "aborted claim discarded"
-
-    fresh = t.current_version()
-    t.overwrite(spark.range(3).withColumnRenamed("id", "k"), expected_base=fresh)
-    assert t.read().count() == 3
-
-    # two bootstrappers: second expected_base=None commit conflicts
-    t2 = ManagedTable(spark, str(tmp_path / "boot"))
-    t2.overwrite(spark.range(2), expected_base=None)
-    with pytest.raises(ConcurrentWriteError):
-        t2.overwrite(spark.range(9), expected_base=None)
-
-
-def test_managed_table_claim_collision_skips_taken_slot(spark, tmp_path):
-    """A version slot already claimed by a concurrent writer (non-empty
-    directory, pointer not yet moved) is skipped, never overwritten: the
-    commit lands on the next free slot and the pointer resolves to it."""
-    import os
-
-    from data_ingestion_pipeline_spark.plans.table import ManagedTable
-
-    t = ManagedTable(spark, str(tmp_path / "claim"))
-    t.overwrite(spark.range(3))
-    blocker = os.path.join(t.root, "v00000002")
-    os.makedirs(blocker)
-    with open(os.path.join(blocker, "part-in-flight"), "w") as f:
-        f.write("concurrent writer's half-commit")
-    v = t.overwrite(spark.range(4))
-    assert v == "v00000003"
-    assert t.read().count() == 4
-    with open(os.path.join(blocker, "part-in-flight")) as f:
-        assert f.read(), "the in-flight claim was not clobbered"
-
-
-def test_managed_table_sidecar_listing_pinned_at_commit(spark, tmp_path):
-    """rewrite_deletes' conflict axis: a sidecar that lands after the
-    rewrite captured its base listing must abort the rewrite (it would
-    otherwise be silently folded away by the stale fold)."""
-    from data_ingestion_pipeline_spark.plans.table import (
-        ConcurrentWriteError,
-        ManagedTable,
-    )
-
-    t = ManagedTable(spark, str(tmp_path / "mor"))
-    t.overwrite(spark.range(10).withColumnRenamed("id", "k"))
-    base = t.current_version()
-    t.equality_delete(spark.range(2).withColumnRenamed("id", "k"), ["k"])
-    listing = t._delete_sidecars(base)
-
-    # a concurrent deleter lands another sidecar after the capture
-    t.equality_delete(
-        spark.range(2, 4).withColumnRenamed("id", "k"), ["k"]
-    )
-    with pytest.raises(ConcurrentWriteError):
-        t.overwrite(
-            t.read(version=base),
-            expected_base=base,
-            expected_sidecars=listing,
-        )
-    # the unsuspecting fold aborted; a fresh rewrite folds BOTH sidecars
-    v2 = t.rewrite_deletes()
-    assert t.current_version() == v2
-    assert t.read().count() == 6
-    assert t._delete_sidecars(v2) == []
-
-
 def test_codecs_roundtrip_and_format_conformance():
     """The dependency-free BMP/WAV codecs must round-trip exactly (incl.
     the odd-width padded-row case and the top-down negative-height BMP
@@ -590,93 +497,3 @@ def test_codecs_roundtrip_and_format_conformance():
             "<4sI", b"data", 0
         )
         decode_wav_pcm16(stereo)
-
-
-def test_occ_review_fixes(spark, tmp_path):
-    """Fixes from the round-8 adversarial review of the OCC machinery:
-    (a) sidecar slots claim max+1, so a rollback GAP cannot busy-loop the
-    next deleter onto an existing name; (b) a crashed writer's stale
-    .ptr_lock is broken instead of wedging the table; (c) every
-    read-modify-write path forwards the sidecar listing it folds, so a
-    racing equality delete aborts the fold everywhere, not only in
-    rewrite_deletes."""
-    import os
-    import time
-    from unittest import mock
-
-    from data_ingestion_pipeline_spark.plans.table import ManagedTable
-    from data_ingestion_pipeline_spark.plans.merge import merge_upsert
-    from data_ingestion_pipeline_spark.plans.schema_evolution import (
-        sync_table_schema,
-    )
-    from data_ingestion_pipeline_spark.streaming.ingest import (
-        merge_additive_aggregates,
-    )
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    t = ManagedTable(spark, str(tmp_path / "occfix"))
-    t.overwrite(
-        spark.range(10).select(
-            F.col("id").alias("k"), F.lit(1).alias("n")
-        )
-    )
-    v = t.current_version()
-
-    # (a) gap in the sidecar sequence: d000001 + d000003 exist -> next
-    # claim must be d000004, terminating immediately
-    t.equality_delete(spark.range(1).withColumnRenamed("id", "k"), ["k"])
-    d1 = t._delete_sidecars(v)[0]
-    os.rename(d1, os.path.join(os.path.dirname(d1), "d000003"))
-    t.equality_delete(spark.range(1, 2).withColumnRenamed("id", "k"), ["k"])
-    names = sorted(os.path.basename(p) for p in t._delete_sidecars(v))
-    assert names == ["d000003", "d000004"]
-
-    # (b) stale lock from a crashed writer: backdate its mtime past the
-    # 60 s threshold; the next commit must break it and succeed
-    lock = os.path.join(t.root, ".ptr_lock")
-    with open(lock, "w"):
-        pass
-    os.utime(lock, (time.time() - 3600, time.time() - 3600))
-    t.overwrite(spark.range(3).select(F.col("id").alias("k"), F.lit(1).alias("n")))
-    assert t.read().count() == 3 and not os.path.exists(lock)
-
-    # (c) every RMW path forwards expected_sidecars to overwrite()
-    seen = {}
-
-    def spy(df, expected_base=None, expected_sidecars=None, _orig=ManagedTable.overwrite):
-        seen[spying] = (expected_base, expected_sidecars)
-        return "v99999999"
-
-    for spying, call in [
-        ("delete_where", lambda: t.delete_where(F.col("k") < 0)),
-        ("compact", lambda: t.compact()),
-        ("merge_upsert", lambda: merge_upsert(
-            t,
-            spark.range(1).select(F.col("id").alias("k"), F.lit(9).alias("n")),
-            ["k"],
-            "n",
-        )),
-        ("merge_additive", lambda: merge_additive_aggregates(
-            t,
-            spark.range(1).select(F.col("id").alias("k"), F.lit(9).alias("n")),
-            ["k"],
-            ["n"],
-        )),
-        ("sync_schema", lambda: sync_table_schema(
-            t,
-            T.StructType(
-                [
-                    T.StructField("k", T.LongType(), True),
-                    T.StructField("n", T.IntegerType(), True),
-                    T.StructField("extra", T.StringType(), True),
-                ]
-            ),
-            protected=["k"],
-        )),
-    ]:
-        with mock.patch.object(ManagedTable, "overwrite", autospec=False, side_effect=spy):
-            call()
-        base, sidecars = seen[spying]
-        assert base == t.current_version(), spying
-        assert sidecars is not None, f"{spying} must pin the sidecar listing"
