@@ -27,9 +27,9 @@ from pyspark.sql import types as T
 
 from data_ingestion_pipeline_spark.functions.numeric import dec_sum2
 from data_ingestion_pipeline_spark.operators.scratch import (
-    marker_current,
-    source_stamp,
-    write_marker,
+    build_once,
+    scratch_dir,
+    sf_tag,
 )
 from data_ingestion_pipeline_spark.plans.schema_evolution import sync_table_schema
 from data_ingestion_pipeline_spark.plans.table import ManagedTable
@@ -46,14 +46,6 @@ __all__ = [
     "compacted_sorted_orders",
     "compacted_sorted_orders_table",
 ]
-
-_SCRATCH = "/tmp/spark_graft_scratch"
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return os.path.join(_SCRATCH, tag, name)
-
 
 # Declared target: p_container is NEW (appears as typed NULL), p_size is
 # CAST int→long, and the stored extra column legacy_note must be DROPPED
@@ -72,7 +64,7 @@ def schema_evolution_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9/S10/S11 end to end: seed a managed table from ``part`` with an
     extra legacy column, sync it to the declared schema (add+drop+cast via
     projecting rewrite, atomic version swap), return the evolved table."""
-    root = _scratch(sf_dir, "evolution_part")
+    root = scratch_dir(sf_dir, "evolution_part")
     shutil.rmtree(root, ignore_errors=True)
     table = ManagedTable(spark, root)
     seed = load_table(spark, sf_dir, "part").select(
@@ -97,16 +89,15 @@ FROM part
 def partitioned_orders_path(spark: SparkSession, sf_dir: str) -> str:
     """Write ``orders`` partitioned by order-year (idempotent per sf_dir);
     returns the dataset path. Separate so tests can inspect the layout."""
-    path = _scratch(sf_dir, "orders_by_year")
-    marker = os.path.join(path, "_STAMP")
-    stamp = source_stamp(os.path.join(sf_dir, "orders.parquet"))
-    if not marker_current(marker, stamp):
+    path = scratch_dir(sf_dir, "orders_by_year")
+
+    def build() -> None:
         orders = load_table(spark, sf_dir, "orders").withColumn(
             "o_year", F.year("o_orderdate")
         )
         orders.write.partitionBy("o_year").mode("overwrite").parquet(path)
-        write_marker(marker, stamp)
-    return path
+
+    return build_once(path, [os.path.join(sf_dir, "orders.parquet")], build)
 
 
 def partitioned_orders_yearly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,7 +265,7 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_bucketed,
     )
 
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
+    tag = sf_tag(sf_dir)
     lt, ot = f"b_lineitem_{tag}", f"b_orders_{tag}"
     if not (spark.catalog.tableExists(lt) and spark.catalog.tableExists(ot)):
         li = load_table(spark, sf_dir, "lineitem").select(
@@ -305,24 +296,20 @@ GROUP BY o_orderpriority
 
 
 def compacted_sorted_orders_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
-    """Build (once per sf_dir) a ManagedTable exercising the three layout
-    rewrites: v1 = fragmented ingest (64 small files, the shape streaming
-    ingestion accretes), v2 = compact() bin-packing to ~target-size files,
-    v3 = sorted_overwrite() range-clustering on o_orderdate so parquet
-    footers carry disjoint min/max stats. Separate so pytest can inspect
-    versions and footers."""
-    root = _scratch(sf_dir, "orders_layout")
-    marker = os.path.join(root, "_BUILT")
-    stamp = source_stamp(os.path.join(sf_dir, "orders.parquet"))
-    if not marker_current(marker, stamp):
-        shutil.rmtree(root, ignore_errors=True)
-        table = ManagedTable(spark, root, keep_versions=3)
-        orders = load_table(spark, sf_dir, "orders")
-        table.overwrite(orders.repartition(64))
-        table.compact()
-        table.sorted_overwrite(["o_orderdate"], num_files=4)
-        write_marker(marker, stamp)
-    return ManagedTable(spark, root, keep_versions=3)
+    """Build a ManagedTable exercising the three layout rewrites: v1 =
+    fragmented ingest (64 small files, the shape streaming ingestion
+    accretes), v2 = compact() bin-packing to ~target-size files, v3 =
+    sorted_overwrite() range-clustering on o_orderdate so parquet footers
+    carry disjoint min/max stats. Rebuilt on every call: compact and
+    sorted_overwrite are the code under test. Separate so pytest can
+    inspect versions and footers."""
+    root = scratch_dir(sf_dir, "orders_layout")
+    shutil.rmtree(root, ignore_errors=True)
+    table = ManagedTable(spark, root, keep_versions=3)
+    table.overwrite(load_table(spark, sf_dir, "orders").repartition(64))
+    table.compact()
+    table.sorted_overwrite(["o_orderdate"], num_files=4)
+    return table
 
 
 def compacted_sorted_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -367,9 +354,8 @@ def catalog_database_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference creates in Postgres (``flows/schema_sync.py:33-78``), here as
     a real catalog database complementing ManagedTable's versioned roots.
     Oracle recomputes the aggregate straight from ``part``."""
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    db = f"graft_catalog_{tag}"
-    loc = _scratch(sf_dir, "catalog_db")
+    db = f"graft_catalog_{sf_tag(sf_dir)}"
+    loc = scratch_dir(sf_dir, "catalog_db")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
     # Idempotent across fresh sessions: the in-memory catalog forgets the
     # table but its location directory persists — drop both before the

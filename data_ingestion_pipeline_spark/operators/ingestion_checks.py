@@ -23,9 +23,9 @@ from data_ingestion_pipeline_spark.functions.normalize import (
     rename_columns_snake_case,
 )
 from data_ingestion_pipeline_spark.operators.scratch import (
-    marker_current,
-    source_stamp,
-    write_marker,
+    build_once,
+    scratch_dir,
+    sf_tag,
 )
 from data_ingestion_pipeline_spark.plans.merge import merge_upsert
 from data_ingestion_pipeline_spark.plans.table import ManagedTable
@@ -42,14 +42,6 @@ __all__ = [
     "jdbc_roundtrip_orders",
     "fixed_width_roundtrip_orders",
 ]
-
-_SCRATCH = "/tmp/spark_graft_scratch"
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return os.path.join(_SCRATCH, tag, name)
-
 
 # CSV shape for the round-trip: camelCase headers + ISO8601 string timestamps,
 # mirroring the reference CSV quirks (mixed second/minute precision,
@@ -76,7 +68,7 @@ def csv_ingest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     is lossless.
     """
     events = load_table(spark, sf_dir, "events")
-    out = _scratch(sf_dir, "events_csv")
+    out = scratch_dir(sf_dir, "events_csv")
     formatted = events.select(
         F.col("event_id").alias("eventId"),
         F.when(
@@ -125,7 +117,7 @@ def csv_ingest_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_ingestion_pipeline_spark.sources.csv_reader import read_inventory_csv
 
     part = load_table(spark, sf_dir, "part")
-    out = _scratch(sf_dir, "inventory_csv")
+    out = scratch_dir(sf_dir, "inventory_csv")
     formatted = part.select(
         F.col("p_partkey").cast("string").alias("productId"),
         F.col("p_name").alias("name"),
@@ -183,7 +175,7 @@ def merge_upsert_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    root = _scratch(sf_dir, "merge_demo")
+    root = scratch_dir(sf_dir, "merge_demo")
     shutil.rmtree(root, ignore_errors=True)
     table = ManagedTable(spark, root)
     table.overwrite(stored)
@@ -228,7 +220,7 @@ def jsonl_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_jsonl,
     )
 
-    path = _scratch(sf_dir, "events_jsonl")
+    path = scratch_dir(sf_dir, "events_jsonl")
     fmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -257,15 +249,15 @@ def orc_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate-pushdown + column-pruning story as parquet). Binary-faithful
     for every type including timestamps, so the oracle is simply the source
     rows."""
-    path = _scratch(sf_dir, "events_orc")
+    path = scratch_dir(sf_dir, "events_orc")
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    marker = os.path.join(path, "_STAMP")
-    stamp = source_stamp(os.path.join(sf_dir, "events.parquet"))
-    if not marker_current(marker, stamp):
-        events.write.mode("overwrite").orc(path)
-        write_marker(marker, stamp)
+    build_once(
+        path,
+        [os.path.join(sf_dir, "events.parquet")],
+        lambda: events.write.mode("overwrite").orc(path),
+    )
     return spark.read.schema(events.schema).orc(path)
 
 
@@ -280,25 +272,25 @@ def xml_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     counterpart to the columnar ORC/parquet paths; schema-on-read with an
     explicit schema, same as the CSV/JSONL ingests. Timestamps round-trip
     through ISO-8601 text under the pinned UTC session."""
-    path = _scratch(sf_dir, "events_xml")
+    path = scratch_dir(sf_dir, "events_xml")
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
     # default XML timestamp rendering truncates to milliseconds; pin a
     # microsecond format on both sides so the round trip is lossless
     ts_fmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
-    marker = os.path.join(path, "_STAMP")
-    stamp = source_stamp(os.path.join(sf_dir, "events.parquet"))
-    if not marker_current(marker, stamp):
-        (
+    build_once(
+        path,
+        [os.path.join(sf_dir, "events.parquet")],
+        lambda: (
             events.write.mode("overwrite")
             .format("xml")
             .option("rootTag", "events")
             .option("rowTag", "event")
             .option("timestampFormat", ts_fmt)
             .save(path)
-        )
-        write_marker(marker, stamp)
+        ),
+    )
     return (
         spark.read.schema(events.schema)
         .format("xml")
@@ -358,7 +350,7 @@ def jdbc_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = load_table(spark, sf_dir, "orders")
-    url = derby_url(_scratch(sf_dir, "derby_orders_db"))
+    url = derby_url(scratch_dir(sf_dir, "derby_orders_db"))
     write_jdbc(orders, url, "orders_sink", mode="overwrite")
     lo, hi = orders.agg(
         F.min("o_orderkey"), F.max("o_orderkey")
@@ -398,8 +390,7 @@ def python_datasource_stream_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         synthetic_events_stream,
     )
 
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    name = f"pyds_stream_{tag}"
+    name = f"pyds_stream_{sf_tag(sf_dir)}"
     stream = synthetic_events_stream(spark, n=30_000, batch=10_000)
     agg = stream.groupBy("bucket").agg(
         F.count("*").cast("bigint").alias("n_rows"),
@@ -409,7 +400,6 @@ def python_datasource_stream_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pin state partitions like every other stateful stream here: 7 state
     # rows per micro-batch do not need 32 per-partition store commits
-    # (the _stream_state_partitions contract — env-sized on a cluster)
     with _stream_state_partitions(spark):
         query = (
             agg.writeStream.outputMode("complete")
@@ -455,7 +445,7 @@ def python_datasource_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     )
 
     spark.dataSource.register(JsonlSinkDataSource)
-    root = _scratch(sf_dir, "pyds_write")
+    root = scratch_dir(sf_dir, "pyds_write")
     out = os.path.join(root, "events_jsonl")
     # purchase slice only: the two-phase commit contract under test is
     # volume-independent, and a Python row-at-a-time writer is the SLOW
@@ -526,7 +516,7 @@ def fixed_width_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("o_orderdate", "date8", 8),
         ("o_orderpriority", "string", 15),
     ]
-    path = _scratch(sf_dir, "orders_fixed_width")
+    path = scratch_dir(sf_dir, "orders_fixed_width")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",

@@ -14,13 +14,13 @@ tables, so a plain-SQL DuckDB oracle can recompute the closed-form result.
 
 from __future__ import annotations
 
-import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestion_pipeline_spark.functions.numeric import dec_sum2
+from data_ingestion_pipeline_spark.operators.scratch import scratch_dir
 from data_ingestion_pipeline_spark.plans.scd import merge_changes, scd2_apply
 from data_ingestion_pipeline_spark.plans.table import ManagedTable
 from data_ingestion_pipeline_spark.sources.catalog import load_table
@@ -42,14 +42,6 @@ __all__ = [
     "compaction_plan_orders",
     "merge_on_read_delete_events",
 ]
-
-_SCRATCH = "/tmp/spark_graft_scratch"
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return os.path.join(_SCRATCH, tag, name)
-
 
 def scd2_customer_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD Type-2 customer dimension after one change batch.
@@ -155,7 +147,7 @@ def gdpr_delete_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     prior versions stay readable as the bounded audit window — asserted in
     pytest). Returns the post-delete per-type profile; the oracle
     recomputes it from the raw table with the same predicate."""
-    root = _scratch(sf_dir, "gdpr_events")
+    root = scratch_dir(sf_dir, "gdpr_events")
     shutil.rmtree(root, ignore_errors=True)
     table = ManagedTable(spark, root, keep_versions=3)
     events = load_table(spark, sf_dir, "events").select(
@@ -227,28 +219,19 @@ GROUP BY 1
 
 def zorder_orders_path(spark: SparkSession, sf_dir: str) -> str:
     """orders re-laid-out as 8 files z-ordered on (o_custkey, o_orderdate)
-    — built once per fixture vintage (source-stamped marker). Separate so
-    pytest can read the parquet footers and measure per-file min/max
-    overlap on BOTH dimensions."""
-    from data_ingestion_pipeline_spark.operators.scratch import (
-        marker_current,
-        source_stamp,
-        write_marker,
-    )
+    — rebuilt on every call, since zorder_frame is the code under test.
+    Separate so pytest can read the parquet footers and measure per-file
+    min/max overlap on BOTH dimensions."""
     from data_ingestion_pipeline_spark.plans.zorder import zorder_frame
 
-    path = _scratch(sf_dir, "orders_zorder")
-    marker = os.path.join(path, "_STAMP")
-    stamp = source_stamp(os.path.join(sf_dir, "orders.parquet"))
-    if not marker_current(marker, stamp):
-        orders = load_table(spark, sf_dir, "orders").withColumn(
-            "o_orderdate_days", F.datediff("o_orderdate", F.lit("1990-01-01"))
-        )
-        laid_out = zorder_frame(
-            orders, ["o_custkey", "o_orderdate_days"], num_files=8
-        ).drop("o_orderdate_days")
-        laid_out.write.mode("overwrite").parquet(path)
-        write_marker(marker, stamp)
+    path = scratch_dir(sf_dir, "orders_zorder")
+    orders = load_table(spark, sf_dir, "orders").withColumn(
+        "o_orderdate_days", F.datediff("o_orderdate", F.lit("1990-01-01"))
+    )
+    laid_out = zorder_frame(
+        orders, ["o_custkey", "o_orderdate_days"], num_files=8
+    ).drop("o_orderdate_days")
+    laid_out.write.mode("overwrite").parquet(path)
     return path
 
 
@@ -469,7 +452,7 @@ def time_travel_orders_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plans/table.py: immutable version directories + keep_versions
     retention). Oracle derives the expected diff closed-form from the
     reprice rule, checking the retention machinery against ground truth."""
-    root = _scratch(sf_dir, "timetravel_orders")
+    root = scratch_dir(sf_dir, "timetravel_orders")
     shutil.rmtree(root, ignore_errors=True)
     table = ManagedTable(spark, root, keep_versions=3)
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
@@ -632,7 +615,7 @@ def table_changes_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side explode of 0-2 change structs per joined row — shuffle is
     the key join only; unchanged rows emit nothing. The oracle derives
     every feed row closed-form from the maintenance rules."""
-    root = _scratch(sf_dir, "cdc_orders")
+    root = scratch_dir(sf_dir, "cdc_orders")
     shutil.rmtree(root, ignore_errors=True)
     table = ManagedTable(spark, root, keep_versions=3)
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
@@ -823,7 +806,7 @@ def merge_on_read_delete_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge-on-read defers it (delete latency O(keys), reads pay the
     anti-join until compaction) — the trade a table service tunes by
     rewrite cadence."""
-    root = _scratch(sf_dir, "mor_delete_events")
+    root = scratch_dir(sf_dir, "mor_delete_events")
     shutil.rmtree(root, ignore_errors=True)
     table = ManagedTable(spark, root, keep_versions=3)
     events = load_table(spark, sf_dir, "events").select(

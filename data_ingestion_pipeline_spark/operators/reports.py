@@ -43,14 +43,6 @@ def _revenue():
     return F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
 
 
-def _round2(c):
-    # Float sums are order-dependent in the last ulps and Spark's partial
-    # aggregation order is nondeterministic; both engine and oracle round
-    # to cents so the cross-engine value hash is stable (SURVEY.md §7
-    # "hard parts" #3).
-    return F.round(c, 2)
-
-
 def revenue_per_product(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1 — total revenue per product, highest first.
 

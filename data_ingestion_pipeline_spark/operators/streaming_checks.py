@@ -17,7 +17,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_ingestion_pipeline_spark.operators.scratch import (
+    build_once,
+    scratch_dir,
+    sf_tag,
+)
 from data_ingestion_pipeline_spark.sources.catalog import load_table, normalize_event_ts
+from data_ingestion_pipeline_spark.streaming.ingest import run_stream_to_completion
 from data_ingestion_pipeline_spark.streaming.windows import (
     sessionize_gaps_and_islands,
     sliding_event_stats,
@@ -126,25 +132,17 @@ def _stream_state_partitions(spark: SparkSession, default: str = "4"):
     the shared 4, while Python-compute-bound stateful streams
     (applyInPandasWithState: per-partition Arrow worker round-trips are
     the cost, not commits) pass a higher one — the r11→r12 adjudication
-    of the stateful_user_profile regression. On a real cluster size this
-    to state volume / executor count instead (SPARK_GRAFT_STREAM_PARTS)."""
-    n = os.environ.get("SPARK_GRAFT_STREAM_PARTS", default)
+    of the stateful_user_profile regression. On a real cluster the right
+    count follows state volume / executor count instead."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n)
+    spark.conf.set("spark.sql.shuffle.partitions", default)
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def streaming_tumbling_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real Structured Streaming run: file source over events.parquet →
-    event-time watermark → tumbling window agg → memory sink, drained with
-    an availableNow trigger. Output mode 'complete' so windows still inside
-    the watermark are emitted too (static input never advances past them).
-    """
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    name = f"stream_tumbling_{tag}"
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The streaming file source requires a directory; glob-filter it down to
     # the events file so the other tables in sf_dir aren't picked up.
     events_file = os.path.join(sf_dir, "events.parquet")
@@ -153,49 +151,60 @@ def streaming_tumbling_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    events = normalize_event_ts(raw)
-    agg = tumbling_event_stats(events, duration="1 hour", watermark="2 hours")
+    return normalize_event_ts(raw)
+
+
+def _drain_to_memory(df: DataFrame, name: str, mode: str) -> DataFrame:
+    """Run the streaming frame ``df`` to completion into the memory-sink
+    table ``name`` and return that table. The availableNow trigger drains
+    exactly the finite input present at start, so the table must equal
+    the batch answer over that input — the batch-equivalence every
+    streaming check here is hash-checked on."""
+    query = (
+        df.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    run_stream_to_completion(query)
+    return df.sparkSession.table(name)
+
+
+def streaming_tumbling_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Real Structured Streaming run: file source over events.parquet →
+    event-time watermark → tumbling window agg → memory sink, drained with
+    an availableNow trigger. Output mode 'complete' so windows still inside
+    the watermark are emitted too (static input never advances past them).
+    """
+    agg = tumbling_event_stats(
+        _events_stream(spark, sf_dir), duration="1 hour", watermark="2 hours"
+    )
     with _stream_state_partitions(spark):
-        query = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(120)
-    if query.isActive:
-        query.stop()
-    return spark.table(name)
+        return _drain_to_memory(agg, f"stream_tumbling_{sf_tag(sf_dir)}", "complete")
 
 
-def _planted_dup_source(sf_dir: str) -> tuple[str, str]:
-    """events.parquet duplicated into two files under scratch — a streaming
-    source whose second batch replays the first (state must span batches).
-    Returns (sf tag, source dir). Idempotent per sf_dir."""
+def _planted_dup_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream over events.parquet copied twice under scratch, one file per
+    micro-batch: the second batch replays the first, so state must span
+    batches. The copies are rebuilt when the fixture file changes."""
     import shutil
 
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    src_dir = f"/tmp/spark_graft_scratch/{tag}/stream_dedup_src"
-    marker = os.path.join(src_dir, "_planted")
     events_path = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(events_path)
-    # The marker records the source file's identity so a regenerated fixture
-    # (new size/mtime) invalidates stale copies instead of silently replaying
-    # old data against the new oracle tables.
-    stamp = f"{st.st_size}:{st.st_mtime_ns}"
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if current != stamp:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        os.makedirs(src_dir, exist_ok=True)
-        shutil.copy(events_path, os.path.join(src_dir, "copy_a.parquet"))
-        shutil.copy(events_path, os.path.join(src_dir, "copy_b.parquet"))
-        with open(marker, "w") as f:
-            f.write(stamp)
-    return tag, src_dir
+    src_dir = scratch_dir(sf_dir, "stream_dedup_src")
+
+    def build() -> None:
+        for copy in ("copy_a", "copy_b"):
+            shutil.copy(events_path, os.path.join(src_dir, f"{copy}.parquet"))
+
+    build_once(src_dir, [events_path], build)
+    raw = (
+        spark.readStream.schema(_events_stream_schema(spark, events_path))
+        .option("pathGlobFilter", "*.parquet")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+    )
+    return normalize_event_ts(raw)
 
 
 def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -208,34 +217,14 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the events table itself (every column identical across planted
     copies, so which copy wins is immaterial).
     """
-    tag, src_dir = _planted_dup_source(sf_dir)
-    name = f"stream_dedup_{tag}"
-    raw = (
-        spark.readStream.schema(
-            _events_stream_schema(spark, os.path.join(src_dir, "copy_a.parquet"))
-        )
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     from data_ingestion_pipeline_spark.streaming.windows import dedup_events_stream
 
-    events = normalize_event_ts(raw)
+    events = _planted_dup_source(spark, sf_dir)
     deduped = dedup_events_stream(events, watermark="24 hours").select(
         "event_id", "user_id", "event_type", "value"
     )
     with _stream_state_partitions(spark):
-        query = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(120)
-    if query.isActive:
-        query.stop()
-    return spark.table(name)
+        return _drain_to_memory(deduped, f"stream_dedup_{sf_tag(sf_dir)}", "append")
 
 
 STREAMING_DEDUP_EVENTS_ORACLE = """
@@ -275,34 +264,16 @@ def streaming_dedup_rocksdb_events(spark: SparkSession, sf_dir: str) -> DataFram
     choice is a pure capacity/performance knob, never a semantics change;
     at 100 TB-scale state (billions of live dedup keys) RocksDB is the
     only one of the two that survives."""
-    tag, src_dir = _planted_dup_source(sf_dir)
-    name = f"stream_dedup_rocks_{tag}"
-    raw = (
-        spark.readStream.schema(
-            _events_stream_schema(spark, os.path.join(src_dir, "copy_a.parquet"))
-        )
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
     from data_ingestion_pipeline_spark.streaming.windows import dedup_events_stream
 
-    events = normalize_event_ts(raw)
+    events = _planted_dup_source(spark, sf_dir)
     deduped = dedup_events_stream(events, watermark="24 hours").select(
         "event_id", "user_id", "event_type", "value"
     )
     with _stream_state_partitions(spark), _rocksdb_state_store(spark):
-        query = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
+        return _drain_to_memory(
+            deduped, f"stream_dedup_rocks_{sf_tag(sf_dir)}", "append"
         )
-        query.awaitTermination(120)
-    if query.isActive:
-        query.stop()
-    return spark.table(name)
 
 
 def stateful_user_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -320,33 +291,14 @@ def stateful_user_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from data_ingestion_pipeline_spark.streaming.stateful import user_profile_stream
 
-    tag, src_dir = _planted_dup_source(sf_dir)
-    name = f"stream_profile_{tag}"
-    raw = (
-        spark.readStream.schema(
-            _events_stream_schema(spark, os.path.join(src_dir, "copy_a.parquet"))
-        )
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    events = normalize_event_ts(raw)
-    profiles = user_profile_stream(events)
+    profiles = user_profile_stream(_planted_dup_source(spark, sf_dir))
     # Python-compute-bound stateful stream: measured sweep {4,8,16} =
     # 4.80/3.43/7.30 s — 8 partitions beat the commit-bound default 4
     # (r11 regression, VERDICT ask #3)
     with _stream_state_partitions(spark, default="8"):
-        query = (
-            profiles.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
+        emitted = _drain_to_memory(
+            profiles, f"stream_profile_{sf_tag(sf_dir)}", "update"
         )
-        query.awaitTermination(120)
-    if query.isActive:
-        query.stop()
-    emitted = spark.table(name)
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
@@ -383,29 +335,11 @@ def stateful_event_type_counts_events(spark: SparkSession, sf_dir: str) -> DataF
         user_event_type_counts_stream,
     )
 
-    tag, src_dir = _planted_dup_source(sf_dir)
-    name = f"stream_tws_counts_{tag}"
-    raw = (
-        spark.readStream.schema(
-            _events_stream_schema(spark, os.path.join(src_dir, "copy_a.parquet"))
-        )
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    counts = user_event_type_counts_stream(normalize_event_ts(raw))
+    counts = user_event_type_counts_stream(_planted_dup_source(spark, sf_dir))
     with _stream_state_partitions(spark, default="8"):
-        query = (
-            counts.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
+        emitted = _drain_to_memory(
+            counts, f"stream_tws_counts_{sf_tag(sf_dir)}", "update"
         )
-        query.awaitTermination(120)
-    if query.isActive:
-        query.stop()
-    emitted = spark.table(name)
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id", "event_type").orderBy(F.col("n_events").desc())
@@ -437,30 +371,12 @@ def stateful_event_type_counts_pandas_events(spark: SparkSession, sf_dir: str) -
         user_event_type_counts_pandas_stream,
     )
 
-    tag, src_dir = _planted_dup_source(sf_dir)
-    name = f"stream_aips_counts_{tag}"
-    raw = (
-        spark.readStream.schema(
-            _events_stream_schema(spark, os.path.join(src_dir, "copy_a.parquet"))
-        )
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    counts = user_event_type_counts_pandas_stream(normalize_event_ts(raw))
+    counts = user_event_type_counts_pandas_stream(_planted_dup_source(spark, sf_dir))
     # measured sweep {4,8,16} = 4.33/3.05/4.78 s (see profile stream above)
     with _stream_state_partitions(spark, default="8"):
-        query = (
-            counts.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
+        emitted = _drain_to_memory(
+            counts, f"stream_aips_counts_{sf_tag(sf_dir)}", "update"
         )
-        query.awaitTermination(120)
-    if query.isActive:
-        query.stop()
-    emitted = spark.table(name)
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id", "event_type").orderBy(F.col("n_events").desc())
@@ -476,23 +392,6 @@ STATEFUL_EVENT_TYPE_COUNTS_PANDAS_EVENTS_ORACLE = (
 )
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events_file = os.path.join(sf_dir, "events.parquet")
-    raw = (
-        spark.readStream.schema(_events_stream_schema(spark, events_file))
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    return normalize_event_ts(raw)
-
-
-def _drain(query, spark: SparkSession, name: str) -> DataFrame:
-    query.awaitTermination(120)
-    if query.isActive:
-        query.stop()
-    return spark.table(name)
-
-
 def streaming_interval_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real stream-stream interval join: purchases ⋈ same-user views within
     the hour before, both sides file-source streams with 2h watermarks so
@@ -503,20 +402,11 @@ def streaming_interval_join_events(spark: SparkSession, sf_dir: str) -> DataFram
         purchases_with_recent_views,
     )
 
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    name = f"stream_ivjoin_{tag}"
     purchases = _events_stream(spark, sf_dir).filter(F.col("event_type") == "purchase")
     views = _events_stream(spark, sf_dir).filter(F.col("event_type") == "view")
     joined = purchases_with_recent_views(purchases, views)
     with _stream_state_partitions(spark):
-        query = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        return _drain(query, spark, name)
+        return _drain_to_memory(joined, f"stream_ivjoin_{sf_tag(sf_dir)}", "append")
 
 
 STREAMING_INTERVAL_JOIN_EVENTS_ORACLE = """
@@ -547,20 +437,11 @@ def streaming_interval_left_join_events(spark: SparkSession, sf_dir: str) -> Dat
         purchases_with_recent_views_outer,
     )
 
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    name = f"stream_ivljoin_{tag}"
     purchases = _events_stream(spark, sf_dir).filter(F.col("event_type") == "purchase")
     views = _events_stream(spark, sf_dir).filter(F.col("event_type") == "view")
     joined = purchases_with_recent_views_outer(purchases, views)
     with _stream_state_partitions(spark):
-        query = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        out = _drain(query, spark, name)
+        out = _drain_to_memory(joined, f"stream_ivljoin_{sf_tag(sf_dir)}", "append")
     cutoff = (
         load_table(spark, sf_dir, "events")
         .agg(F.max("ts").alias("m"))
@@ -595,8 +476,6 @@ def streaming_enriched_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ManagedTable pointer) is re-read. Oracle: the same join batch-side."""
     from data_ingestion_pipeline_spark.streaming.joins import enrich_events_with_dim
 
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    name = f"stream_enrich_{tag}"
     events = _events_stream(spark, sf_dir)
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
@@ -605,14 +484,7 @@ def streaming_enriched_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "c_mktsegment", "event_type",
         F.round("value", 2).alias("value"),
     )
-    query = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return _drain(query, spark, name)
+    return _drain_to_memory(enriched, f"stream_enrich_{sf_tag(sf_dir)}", "append")
 
 
 STREAMING_ENRICHED_EVENTS_ORACLE = """
@@ -632,19 +504,10 @@ def streaming_session_window_events(spark: SparkSession, sf_dir: str) -> DataFra
     """
     from data_ingestion_pipeline_spark.streaming.windows import session_window_stats
 
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    name = f"stream_session_{tag}"
     events = _events_stream(spark, sf_dir)
     agg = session_window_stats(events, gap="5 minutes", watermark="30 minutes")
     with _stream_state_partitions(spark):
-        query = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        return _drain(query, spark, name)
+        return _drain_to_memory(agg, f"stream_session_{sf_tag(sf_dir)}", "complete")
 
 
 STREAMING_SESSION_WINDOW_EVENTS_ORACLE = """
@@ -674,25 +537,15 @@ FROM numbered GROUP BY user_id, session_seq
 def _shifted_update_source(spark: SparkSession, sf_dir: str) -> str:
     """Two-file streaming source with a forced arrival order: file A = the
     events table as-is, file B (newer mtime) = the same events one hour
-    later at value×2 — an update batch for every stored key. Built once per
-    sf_dir (mtimes pinned so the file source's modification-time ordering is
-    deterministic)."""
+    later at value×2 — an update batch for every stored key. Rebuilt when
+    the fixture file changes (mtimes pinned so the file source's
+    modification-time ordering is deterministic)."""
     import shutil
     import glob
 
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    src_dir = f"/tmp/spark_graft_scratch/{tag}/stream_ingest_src"
-    marker = os.path.join(src_dir, "_planted")
-    events_path = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(events_path)
-    stamp = f"{st.st_size}:{st.st_mtime_ns}"
-    current = None
-    if os.path.exists(marker):
-        with open(marker) as f:
-            current = f.read().strip()
-    if current != stamp:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        os.makedirs(src_dir, exist_ok=True)
+    src_dir = scratch_dir(sf_dir, "stream_ingest_src")
+
+    def build() -> None:
         base = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "user_id", "event_type", "value"
         )
@@ -707,9 +560,8 @@ def _shifted_update_source(spark: SparkSession, sf_dir: str) -> str:
             shutil.move(part, dst)
             os.utime(dst, (mtime, mtime))
             shutil.rmtree(tmp, ignore_errors=True)
-        with open(marker, "w") as f:
-            f.write(stamp)
-    return src_dir
+
+    return build_once(src_dir, [os.path.join(sf_dir, "events.parquet")], build)
 
 
 def streaming_ingest_merge_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -729,9 +581,8 @@ def streaming_ingest_merge_events(spark: SparkSession, sf_dir: str) -> DataFrame
     import shutil
 
     src_dir = _shifted_update_source(spark, sf_dir)
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    root = f"/tmp/spark_graft_scratch/{tag}/stream_ingest_table"
-    ckpt = f"/tmp/spark_graft_scratch/{tag}/stream_ingest_ckpt"
+    root = scratch_dir(sf_dir, "stream_ingest_table")
+    ckpt = scratch_dir(sf_dir, "stream_ingest_ckpt")
     shutil.rmtree(root, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     table = ManagedTable(spark, root)
@@ -756,15 +607,12 @@ def streaming_ingest_merge_events(spark: SparkSession, sf_dir: str) -> DataFrame
         merge_upsert(table, batch_df, keys=["event_id"], order_col="ts")
 
     with _stream_state_partitions(spark):
-        query = (
+        run_stream_to_completion(
             stream.writeStream.foreachBatch(apply_batch)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
-        query.awaitTermination(120)
-    if query.isActive:
-        query.stop()
     return table.read()
 
 
@@ -781,9 +629,10 @@ def streaming_incremental_agg_events(spark: SparkSession, sf_dir: str) -> DataFr
     aggregates (count + exact integer-micro value sum) fold ADDITIVELY into
     a versioned summary table (streaming/ingest.py::merge_additive_aggregates).
     Running state lives in the table — not the state store — so the summary
-    is restart-safe and batch-readable mid-stream. Two identical batches ⇒
-    final summary is exactly 2× the table's per-user aggregates, which is
-    the closed form the oracle computes."""
+    is batch-readable mid-stream; a replayed epoch would be summed twice,
+    which this single uninterrupted run never triggers. Two identical
+    batches ⇒ final summary is exactly 2× the table's per-user aggregates,
+    which is the closed form the oracle computes."""
     from data_ingestion_pipeline_spark.plans.table import ManagedTable
     from data_ingestion_pipeline_spark.streaming.ingest import (
         merge_additive_aggregates,
@@ -791,21 +640,11 @@ def streaming_incremental_agg_events(spark: SparkSession, sf_dir: str) -> DataFr
 
     import shutil
 
-    tag, src_dir = _planted_dup_source(sf_dir)
-    root = f"/tmp/spark_graft_scratch/{tag}/stream_incr_agg_table"
-    ckpt = f"/tmp/spark_graft_scratch/{tag}/stream_incr_agg_ckpt"
+    root = scratch_dir(sf_dir, "stream_incr_agg_table")
+    ckpt = scratch_dir(sf_dir, "stream_incr_agg_ckpt")
     shutil.rmtree(root, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     table = ManagedTable(spark, root)
-
-    raw = (
-        spark.readStream.schema(
-            _events_stream_schema(spark, os.path.join(src_dir, "copy_a.parquet"))
-        )
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         partial = batch_df.groupBy("user_id").agg(
@@ -822,15 +661,13 @@ def streaming_incremental_agg_events(spark: SparkSession, sf_dir: str) -> DataFr
         )
 
     with _stream_state_partitions(spark):
-        query = (
-            raw.writeStream.foreachBatch(apply_batch)
+        run_stream_to_completion(
+            _planted_dup_source(spark, sf_dir)
+            .writeStream.foreachBatch(apply_batch)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
-        query.awaitTermination(120)
-    if query.isActive:
-        query.stop()
     return table.read()
 
 
@@ -853,32 +690,14 @@ def streaming_dedup_within_watermark_events(spark: SparkSession, sf_dir: str) ->
         dedup_events_stream_within_watermark,
     )
 
-    tag, src_dir = _planted_dup_source(sf_dir)
-    name = f"stream_dedup_wm_{tag}"
-    raw = (
-        spark.readStream.schema(
-            _events_stream_schema(spark, os.path.join(src_dir, "copy_a.parquet"))
-        )
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    events = normalize_event_ts(raw)
+    events = _planted_dup_source(spark, sf_dir)
     deduped = dedup_events_stream_within_watermark(events, watermark="24 hours").select(
         "event_id", "user_id", "event_type", "value"
     )
     with _stream_state_partitions(spark):
-        query = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
+        return _drain_to_memory(
+            deduped, f"stream_dedup_wm_{sf_tag(sf_dir)}", "append"
         )
-        query.awaitTermination(120)
-    if query.isActive:
-        query.stop()
-    return spark.table(name)
 
 
 STREAMING_DEDUP_WITHIN_WATERMARK_EVENTS_ORACLE = """
@@ -901,8 +720,6 @@ def streaming_observed_ingest_metrics_events(spark: SparkSession, sf_dir: str) -
     auditing costs zero extra scans in either mode."""
     from decimal import Decimal
 
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    name = f"stream_observe_{tag}"
     src = _events_stream(spark, sf_dir)
     observed = src.observe(
         "ingest_audit",
@@ -916,9 +733,7 @@ def streaming_observed_ingest_metrics_events(spark: SparkSession, sf_dir: str) -
             .trigger(availableNow=True)
             .start()
         )
-        query.awaitTermination(120)
-    if query.isActive:
-        query.stop()
+        run_stream_to_completion(query)
     n_rows, total = 0, Decimal(0)
     for progress in query.recentProgress:
         metrics = (progress.get("observedMetrics") or {}).get("ingest_audit")
@@ -950,19 +765,10 @@ def streaming_chained_window_rollup_events(
         chained_daily_rollup_stream,
     )
 
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    name = f"stream_chained_{tag}"
     events = _events_stream(spark, sf_dir)
     agg = chained_daily_rollup_stream(events, watermark="2 hours")
     with _stream_state_partitions(spark):
-        query = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        return _drain(query, spark, name)
+        return _drain_to_memory(agg, f"stream_chained_{sf_tag(sf_dir)}", "append")
 
 
 STREAMING_CHAINED_WINDOW_ROLLUP_EVENTS_ORACLE = """
@@ -987,34 +793,16 @@ def streaming_topk_event_types_daily(spark: SparkSession, sf_dir: str) -> DataFr
     query ranks at read time). Top-3 types per day, count-desc with type
     tie-break; the rank window partitions by window start (never global).
     """
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    name = f"stream_topk_types_{tag}"
-    events_file = os.path.join(sf_dir, "events.parquet")
-    raw = (
-        spark.readStream.schema(_events_stream_schema(spark, events_file))
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    events = normalize_event_ts(raw)
     agg = (
-        events.withWatermark("ts", "2 days")
+        _events_stream(spark, sf_dir)
+        .withWatermark("ts", "2 days")
         .groupBy(F.window("ts", "1 day").alias("win"), "event_type")
         .agg(F.count("*").cast("bigint").alias("n_events"))
     )
     with _stream_state_partitions(spark):
-        query = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(120)
-    if query.isActive:
-        query.stop()
+        sink = _drain_to_memory(agg, f"stream_topk_types_{sf_tag(sf_dir)}", "complete")
     from pyspark.sql import Window
 
-    sink = spark.table(name)
     rw = Window.partitionBy(F.col("win.start")).orderBy(
         F.col("n_events").desc(), F.col("event_type").asc()
     )
@@ -1069,22 +857,13 @@ def streaming_interval_full_outer_events(
         purchases_views_interval_full_outer,
     )
 
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    name = f"stream_ivlfull_{tag}"
     purchases = _events_stream(spark, sf_dir).filter(
         F.col("event_type") == "purchase"
     )
     views = _events_stream(spark, sf_dir).filter(F.col("event_type") == "view")
     joined = purchases_views_interval_full_outer(purchases, views)
     with _stream_state_partitions(spark):
-        query = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        out = _drain(query, spark, name)
+        out = _drain_to_memory(joined, f"stream_ivlfull_{sf_tag(sf_dir)}", "append")
     cutoff = (
         load_table(spark, sf_dir, "events")
         .agg(F.max("ts").alias("m"))

@@ -7,9 +7,13 @@ One place to configure the engine so every entry point (tests, bench,
 - AQE on (runtime shuffle coalescing, skew-join splitting) — at 100 TB the
   static plan is always wrong somewhere; AQE re-plans from observed stats.
 - Arrow on (fast pandas interchange for the pandas-UDF slow path).
-- Shuffle partitions default to the local core count; on a real cluster this
-  is overridden via ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` (rule of thumb:
-  ~2-3x total executor cores, or let AQE coalesce from a high initial value).
+- 4 MiB scan splits and AQE advisory partitions, sized for small local
+  fixtures; ``extra_conf`` overrides these (or any conf) on a cluster.
+
+Environment: ``SPARK_GRAFT_MASTER`` (default ``local[$SPARK_GRAFT_CPUS]``,
+cores default to the host's), ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` (default
+max(cores, 8); on a cluster ~2-3x total executor cores),
+``SPARK_GRAFT_DRIVER_MEM`` and ``SPARK_GRAFT_WAREHOUSE``.
 """
 
 from __future__ import annotations
@@ -19,6 +23,14 @@ import os
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "stop_spark"]
+
+# Scan-task split size and AQE's advisory shuffle-partition size. The
+# fixtures are SINGLE small parquet files, so the 128 MB split default
+# yields 1-2 scan partitions and every CPU-heavy expression pipeline
+# (shingling, minhash, vector math) serializes onto 2 cores; AQE's 64 MB
+# advisory target would likewise coalesce the small-but-CPU-dense shuffles
+# to 1-2 partitions. On a cluster pass 128-512 MB through ``extra_conf``.
+_SPLIT_BYTES = str(4 * 1024 * 1024)
 
 
 def _default_parallelism() -> int:
@@ -38,23 +50,15 @@ def _default_driver_memory() -> str:
 
 def get_spark(
     app_name: str = "data_ingestion_pipeline_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) the engine's SparkSession.
-
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a cluster
-    pass ``None`` with a pre-set master URL in the environment, or an explicit
-    ``yarn``/``k8s://...`` value.
-    """
+    """Build (or reuse) the engine's SparkSession; ``extra_conf`` entries
+    are applied last and override any default here."""
     cores = _default_parallelism()
-    if master is None:
-        master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cores, 8)))
-        )
+    master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
+    shuffle_partitions = int(
+        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cores, 8)))
+    )
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -83,25 +87,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
-        # Scan-task sizing. Two regimes:
-        # - cluster, 100 TB: 128-512 MB per task (set via env) so task count
-        #   stays bounded and each task's input fits executor memory;
-        # - local bench: the fixtures are SINGLE small parquet files, so the
-        #   128 MB default yields 1-2 scan partitions and every CPU-heavy
-        #   expression pipeline (shingling, minhash, vector math) serializes
-        #   onto 2 of 32 cores. A small split size restores scan parallelism.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4194304"),
-        )
-        # Same trade for AQE: its 64 MB advisory target would coalesce the
-        # small-but-CPU-dense shuffles of the local bench to 1-2 partitions.
-        # Sized in bytes of shuffle data, not compute — keep it small locally,
-        # raise via env on a real cluster where shuffle volume dominates.
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "4194304"),
-        )
+        .config("spark.sql.files.maxPartitionBytes", _SPLIT_BYTES)
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", _SPLIT_BYTES)
         .config("spark.ui.enabled", "false")
         # Parquet TIMESTAMP(NANOS) (the events fixture) is otherwise a hard
         # error; read as long and convert in the catalog loader.

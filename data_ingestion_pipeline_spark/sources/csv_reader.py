@@ -64,13 +64,11 @@ def csv_source(
     return df.where(F.length(marker) >= 0)
 
 
-def read_orders_csv(spark: SparkSession, path: str, normalized: bool = True) -> DataFrame:
+def read_orders_csv(spark: SparkSession, path: str) -> DataFrame:
     """S1 — orders CSV scan (reference ``flows/data_ingestion.py:80-96``)."""
-    raw = csv_source(spark.read, path, schemas.ORDERS_CSV_RAW)
-    return normalize_orders(raw) if normalized else raw
+    return normalize_orders(csv_source(spark.read, path, schemas.ORDERS_CSV_RAW))
 
 
-def read_inventory_csv(spark: SparkSession, path: str, normalized: bool = True) -> DataFrame:
+def read_inventory_csv(spark: SparkSession, path: str) -> DataFrame:
     """S2 — inventory CSV scan (reference ``flows/data_ingestion.py:68-77``)."""
-    raw = csv_source(spark.read, path, schemas.INVENTORY_CSV_RAW)
-    return normalize_inventory(raw) if normalized else raw
+    return normalize_inventory(csv_source(spark.read, path, schemas.INVENTORY_CSV_RAW))

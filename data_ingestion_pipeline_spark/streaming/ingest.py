@@ -3,9 +3,16 @@
 The north-star composition (SURVEY.md §7 M4): the batch ingestion pipeline's
 normalize + MERGE become the per-micro-batch function of a Structured
 Streaming job. ``foreachBatch`` is the escape hatch that lets an
-append-oriented streaming writer drive an upsert sink (SURVEY.md §4.3);
-checkpointing makes delivery effectively exactly-once into the versioned
-table (each epoch's MERGE is idempotent, so replays converge).
+append-oriented streaming writer drive an upsert sink (SURVEY.md §4.3).
+
+The table commit is not tied to the epoch: a crash after an epoch's table
+commit and before its checkpoint offset commit replays that epoch on
+restart. The upsert (``stream_orders_csv``) is idempotent — a last-wins
+MERGE of the same batch gives the same table — so its replays converge.
+The additive fold (``merge_additive_aggregates``) is not: a replayed epoch
+is summed again (a probe folded ``(u1,3),(u2,6)`` into ``(u1,4),(u2,8)``
+after one replay), and stays so until commits carry a writer/epoch token
+the table can skip.
 
 At scale the file source is a drop-in for Kafka/queue sources — the
 transformation graph is identical; only ``readStream.format(...)`` changes.
@@ -91,10 +98,11 @@ def merge_additive_aggregates(
     """Fold a micro-batch's partial aggregates into a persistent summary
     table — incremental materialized-view maintenance. Unlike the
     state-store form (streaming/stateful.py) the running state lives in the
-    versioned TABLE: restart-safe without a state store, readable by any
-    batch consumer mid-stream, and the merge is a plain keyed aggregation
-    (sum of longs — exact, associative, so batch arrival order and
-    partitioning cannot change the result).
+    versioned TABLE: no state store, readable by any batch consumer
+    mid-stream, and the merge is a plain keyed aggregation (sum of longs —
+    exact, associative, so batch arrival order and partitioning cannot
+    change the result). It is NOT replay-safe: an epoch that a restart
+    replays after its table commit is added twice (module docstring).
 
     At scale the union+groupBy shuffles current-summary + batch partials on
     the key — bound it by partitioning the summary on the key so only

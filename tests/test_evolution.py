@@ -135,3 +135,39 @@ def test_layout_versions_compact_and_cluster(spark):
     assert table.read(v1).count() == n
     with pytest.raises(FileNotFoundError):
         table.read("v99999999")
+
+
+def test_layout_checks_rebuild_on_every_call(spark, monkeypatch):
+    """The layout queries exercise package code (sorted_overwrite,
+    zorder_frame), so their scratch tables are rebuilt on every call: a
+    cached copy would check the output of whatever code built it first."""
+    from data_ingestion_pipeline_spark.operators.evolution_checks import (
+        compacted_sorted_orders_table,
+    )
+    from data_ingestion_pipeline_spark.operators.lakehouse_checks import (
+        zorder_orders_path,
+    )
+    from data_ingestion_pipeline_spark.plans import zorder
+    from data_ingestion_pipeline_spark.plans.table import ManagedTable
+
+    calls = {"sorted_overwrite": 0, "zorder_frame": 0}
+
+    def counting(name, fn):
+        def wrapped(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+
+        return wrapped
+
+    monkeypatch.setattr(
+        ManagedTable,
+        "sorted_overwrite",
+        counting("sorted_overwrite", ManagedTable.sorted_overwrite),
+    )
+    monkeypatch.setattr(
+        zorder, "zorder_frame", counting("zorder_frame", zorder.zorder_frame)
+    )
+    for _ in range(2):
+        compacted_sorted_orders_table(spark, SF_SMOKE)
+        zorder_orders_path(spark, SF_SMOKE)
+    assert calls == {"sorted_overwrite": 2, "zorder_frame": 2}

@@ -3,8 +3,6 @@ sample kernel, and the per-stream state partition defaults."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -101,24 +99,15 @@ def test_whiten_sample_kernel_matches_spark_path(spark):
 
 
 def test_stream_state_partitions_per_stream_default(spark):
-    """Python-stateful streams pass their own default (8); the env var
-    still overrides everything (the cluster contract)."""
+    """Commit-bound streams take 4 state partitions, Python-stateful
+    streams pass their own default (8); the session value comes back."""
     from data_ingestion_pipeline_spark.operators.streaming_checks import (
         _stream_state_partitions,
     )
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    env_backup = os.environ.pop("SPARK_GRAFT_STREAM_PARTS", None)
-    try:
-        with _stream_state_partitions(spark):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
-        with _stream_state_partitions(spark, default="8"):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-        os.environ["SPARK_GRAFT_STREAM_PARTS"] = "12"
-        with _stream_state_partitions(spark, default="8"):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "12"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == old
-    finally:
-        os.environ.pop("SPARK_GRAFT_STREAM_PARTS", None)
-        if env_backup is not None:
-            os.environ["SPARK_GRAFT_STREAM_PARTS"] = env_backup
+    with _stream_state_partitions(spark):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    with _stream_state_partitions(spark, default="8"):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == old

@@ -106,6 +106,33 @@ def test_source_stamp_subsecond_regeneration(tmp_path):
     assert source_stamp(str(p)) != s1
 
 
+def test_build_once_rebuilds_only_when_source_stamp_moves(tmp_path):
+    """build_once builds into an empty dir, skips while the source stamp
+    holds, and rebuilds from scratch once the source's mtime moves."""
+    import os
+
+    from data_ingestion_pipeline_spark.operators.scratch import build_once
+
+    src = tmp_path / "src.parquet"
+    src.write_bytes(b"x" * 64)
+    out = str(tmp_path / "out")
+    builds = []
+
+    def build():
+        assert os.listdir(out) == []  # stale output never survives a rebuild
+        builds.append(1)
+        (tmp_path / "out" / "data").write_text(str(len(builds)))
+
+    assert build_once(out, [str(src)], build) == out
+    assert build_once(out, [str(src)], build) == out
+    assert len(builds) == 1
+    st = os.stat(src)
+    os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+    build_once(out, [str(src)], build)
+    assert len(builds) == 2
+    assert (tmp_path / "out" / "data").read_text() == "2"
+
+
 def test_star_contraction_closes_long_chain_in_log_rounds(spark):
     """A 1024-node chain has diameter 1023: label propagation cannot close
     it in 15 rounds, star contraction must (O(log n) alternations)."""
