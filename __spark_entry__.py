@@ -5,8 +5,10 @@ query/oracle registry. A verifier runs ``entry(spark)`` as a smoke check,
 then runs each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` in DuckDB (row count + schema +
 order-insensitive value hash); ``tools/check_oracle.py`` does the same
-locally. Both dicts come back in registration order; queries are looked up
-by name, so the order carries no priority.
+locally. A query is declared once, in its operator module: a function plus
+a ``NAME_ORACLE`` string beside it (see the registry's docstring). Both
+dicts come back in module order, then definition order; queries are looked
+up by name, so the order carries no priority.
 """
 
 from __future__ import annotations

@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 from data_ingestion_pipeline_spark.dedup.ngram import shingle_sets
 
 __all__ = [
-    "minhash_signatures",
     "lsh_candidate_pairs",
     "minhash_near_dup_pairs",
     "minhash_verified_pairs_complete",
@@ -65,16 +64,6 @@ def _exploded_shingles(sets: DataFrame, id_col: str) -> DataFrame:
     return sets.select(
         F.col(id_col), F.explode_outer("sset").alias("sh")
     ).filter(F.col("sh").isNotNull())
-
-
-def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, num_hashes: int = 32, shingle_n: int = 3
-) -> DataFrame:
-    """(id, sig_0..sig_{K-1}) — one row per document."""
-    sets = shingle_sets(df, text_col, id_col, shingle_n)
-    return _signatures_from_exploded(
-        _exploded_shingles(sets, id_col), id_col, num_hashes
-    )
 
 
 def _signatures_from_exploded(

@@ -5,9 +5,10 @@ whole-stage-codegen) — no Python UDFs: at 100 TB a row-at-a-time UDF on the
 documents table is the difference between hours and days. The operators
 composed from these live in ``dedup/`` and the registry.
 
-Function surface: tokenization (whitespace + BPE-ish regex), n-gram
-shingling, quality metrics (length/ratio features), md5 fingerprinting,
-and a rule-based language-ID heuristic (script ranges + stopword voting).
+Function surface: whitespace tokenization (plus the BPE-ish split pattern
+the corpus queries use), quality metrics (length/ratio features), md5
+fingerprinting, and a rule-based language-ID heuristic (script ranges +
+stopword voting).
 """
 
 from __future__ import annotations
@@ -17,9 +18,7 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "tokens",
-    "bpe_ish_tokens",
     "token_count",
-    "shingles",
     "fingerprint_md5",
     "rolling_fingerprint",
     "clean_text",
@@ -40,35 +39,8 @@ def tokens(col: Column) -> Column:
     return F.split(F.trim(col), r"\s+")
 
 
-def bpe_ish_tokens(col: Column) -> Column:
-    """Subword-ish tokenization: letter runs, digit runs, punctuation marks."""
-    return F.regexp_extract_all(col, F.lit(BPE_ISH_PATTERN), 0)
-
-
 def token_count(col: Column) -> Column:
     return F.size(tokens(col))
-
-
-def shingles(tok: Column, n: int = 3) -> Column:
-    """n-gram shingles over a token array (array<string> of space-joined
-    n-grams) — the unit set for Jaccard/MinHash near-dup detection.
-
-    Pure expression: sequence + transform + slice, no UDF. A document with
-    fewer than ``n`` tokens yields its whole text as the single shingle.
-    The token expression binds to a lambda argument first so a computed
-    ``tok`` (e.g. a raw split) evaluates once per row, not once per
-    shingle position (the O(len²) trap ``repetition_ratio`` documents).
-    """
-    return F.element_at(
-        F.transform(
-            F.array(tok),
-            lambda t: F.transform(
-                F.sequence(F.lit(1), F.greatest(F.size(t) - (n - 1), F.lit(1))),
-                lambda i: F.concat_ws(" ", F.slice(t, i, n)),
-            ),
-        ),
-        1,
-    )
 
 
 def fingerprint_md5(col: Column) -> Column:

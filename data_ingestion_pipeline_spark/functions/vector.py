@@ -27,13 +27,12 @@ escalation path in similarity/brute_force.py.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
 from functools import reduce
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["dot", "dot_const", "l2_norm", "cosine", "as_double_array"]
+__all__ = ["dot", "l2_norm", "cosine", "as_double_array"]
 
 
 def as_double_array(col: Column) -> Column:
@@ -52,21 +51,6 @@ def dot(a: Column, b: Column, dim: int | None = None) -> Column:
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, x: acc + x,
-    )
-
-
-def dot_const(a: Column, values: Sequence[float]) -> Column:
-    """⟨a, constant vector⟩ with the constants inlined as scalar literals.
-
-    NOT ``dot(a, F.array(*lits), dim)``: indexing a CreateArray expression
-    re-materializes the whole literal array per *term*, turning one dot into
-    O(dim²) work per row. Scalar literals keep it O(dim) straight-line
-    codegen. Same left-fold order as ``dot``.
-    """
-    return reduce(
-        lambda acc, iv: acc + a[iv[0]] * F.lit(float(iv[1])),
-        enumerate(values),
-        F.lit(0.0),
     )
 
 

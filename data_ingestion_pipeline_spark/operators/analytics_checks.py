@@ -27,95 +27,6 @@ from data_ingestion_pipeline_spark.functions.numeric import dec_sum
 from data_ingestion_pipeline_spark.functions.pairs import basket_pairs
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 
-__all__ = [
-    "regression_price_quantity_by_flag",
-    "welch_ttest_purchase_view_daily",
-    "markov_event_transitions",
-    "absorbing_expected_steps_to_purchase",
-    "frequent_event_sequences",
-    "sorted_neighborhood_pairs_parts",
-    "adamic_adar_link_prediction_parts",
-    "cuped_adjusted_ab_events",
-    "l_diversity_report_events",
-    "fd_discovery_orders",
-    "fk_inclusion_audit",
-    "user_behavior_entropy",
-    "interpolated_daily_user_value",
-    "fuzzy_part_name_pairs",
-    "fellegi_sunter_part_linkage",
-    "pagerank_copurchase_parts",
-    "hits_authorities_parts",
-    "kcore_peel_copurchase_parts",
-    "chi_square_event_dow",
-    "dunn_posthoc_event_values",
-    "moods_median_test_event_values",
-    "friedman_test_event_type_values",
-    "cochrans_q_event_types_users",
-    "transitivity_copurchase_parts",
-    "jonckheere_terpstra_priority_price",
-    "brunner_munzel_purchase_view",
-    "cramer_von_mises_purchase_view",
-    "anderson_darling_purchase_view",
-    "wasserstein_purchase_view",
-    "energy_distance_purchase_view",
-    "goodman_kruskal_priority_price_orders",
-    "wilcoxon_signed_rank_purchase_view_daily",
-    "cochran_armitage_trend_priority_orders",
-    "theils_u_event_type_dow",
-    "local_clustering_topk_parts",
-    "seasonal_mann_kendall_daily",
-    "kendalls_w_weekday_event_types",
-    "ansari_bradley_purchase_view",
-    "canonical_correlation_daily",
-    "quade_test_event_type_values",
-    "mutual_information_event_dow",
-    "robust_outliers_mad",
-    "twap_user_day",
-    "ewma_user_value",
-    "copurchase_lift_parts",
-    "triangle_count_copurchase",
-    "linear_attribution_daily",
-    "profile_columns_orders",
-    "mcv_stats_orders",
-    "join_cardinality_estimate_orders_lineitem",
-    "canonical_entities_parts",
-    "ab_test_session_value",
-    "time_to_convert_quantiles",
-    "key_skew_report_events",
-    "kaplan_meier_conversion_events",
-    "mann_whitney_purchase_view_values",
-    "kruskal_wallis_event_values",
-    "cliffs_delta_purchase_view",
-    "spearman_daily_purchase_view",
-    "kendall_tau_daily_purchase_view",
-    "theil_sen_daily_trend",
-    "k_anonymity_report_events",
-    "dp_noisy_counts_events",
-    "encoding_advisor_orders",
-    "longest_streak_users",
-    "abc_classification_parts",
-    "trimmed_mean_price_by_priority",
-    "price_index_monthly",
-    "readability_scores_documents",
-    "benford_digit_test_orders",
-    "value_drift_weekday_weekend",
-    "weighted_median_price_by_flag",
-    "bounce_rate_daily",
-    "t_closeness_report_events",
-    "js_divergence_event_types_weekpart",
-    "cramers_v_event_type_dow",
-    "ks_test_purchase_view",
-    "fellegi_sunter_linkage_parts",
-    "partition_pruning_report_orders",
-    "mann_kendall_daily_trend",
-    "markov_removal_attribution_events",
-    "ks_by_event_type_bh",
-    "capture_recapture_users",
-    "poisson_bootstrap_ci_orders",
-    "bot_cadence_report_events",
-    "markov_stationary_event_types",
-]
-
 
 # ---------------------------------------------------------------------------
 # Grouped least-squares regression diagnostics

@@ -30,12 +30,6 @@ from pyspark.sql import functions as F
 
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 
-__all__ = [
-    "bpe_merges_documents",
-    "bpe_encode_documents",
-    "BPE_MERGES_DOCUMENTS_ORACLE",
-    "BPE_ENCODE_DOCUMENTS_ORACLE",
-]
 
 N_MERGES = 5
 

@@ -32,16 +32,6 @@ from pyspark.sql import functions as F
 from data_ingestion_pipeline_spark.functions.numeric import dec_sum
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 
-__all__ = [
-    "logistic_quality_classifier_documents",
-    "auc_lang_by_length_documents",
-    "calibration_report_documents",
-    "decision_stump_documents",
-    "isotonic_calibration_documents",
-    "kfold_cv_stump_documents",
-    "brier_decomposition_documents",
-    "hosmer_lemeshow_documents",
-]
 
 N_STEPS = 5
 LR = 0.1

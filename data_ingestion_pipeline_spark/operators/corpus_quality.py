@@ -40,17 +40,6 @@ from data_ingestion_pipeline_spark.functions.numeric import dec_sum
 from data_ingestion_pipeline_spark.functions.partitioning import fan_out
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 
-__all__ = [
-    "cohens_kappa_quality_flags_documents",
-    "gopher_repetition_documents",
-    "winnowing_fingerprints_documents",
-    "winnowing_near_copy_pairs_documents",
-    "vocab_coverage_documents",
-    "dsir_importance_documents",
-    "fightin_words_batches_documents",
-    "bigram_perplexity_documents",
-    "BIGRAM_PERPLEXITY_DOCUMENTS_ORACLE",
-]
 
 # Gopher §A1.1 thresholds, token-adapted (see module docstring)
 TOP2_MAX = 0.20

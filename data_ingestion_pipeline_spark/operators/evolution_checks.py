@@ -35,17 +35,6 @@ from data_ingestion_pipeline_spark.plans.schema_evolution import sync_table_sche
 from data_ingestion_pipeline_spark.plans.table import ManagedTable
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 
-__all__ = [
-    "catalog_database_roundtrip",
-    "schema_evolution_sync",
-    "partitioned_orders_yearly",
-    "partitioned_orders_path",
-    "dpp_ship_year_join_orders",
-    "data_quality_orders",
-    "bucketed_colocated_join",
-    "compacted_sorted_orders",
-    "compacted_sorted_orders_table",
-]
 
 # Declared target: p_container is NEW (appears as typed NULL), p_size is
 # CAST int→long, and the stored extra column legacy_note must be DROPPED
@@ -259,14 +248,17 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Big⋈big join over tables bucketed on the join key: SortMergeJoin
     with NO Exchange on either side (asserted in pytest) — write-once
     shuffle, join-many-times-free. Result is layout-independent, so the
-    oracle recomputes it from the raw tables."""
+    oracle recomputes it from the raw tables. The tables live in a database
+    whose LOCATION is under the scratch root, not in the caller's warehouse."""
     from data_ingestion_pipeline_spark.plans.bucketed import (
         read_bucketed,
         write_bucketed,
     )
 
-    tag = sf_tag(sf_dir)
-    lt, ot = f"b_lineitem_{tag}", f"b_orders_{tag}"
+    db = f"graft_bucketed_{sf_tag(sf_dir)}"
+    loc = scratch_dir(sf_dir, "bucketed_db")
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
+    lt, ot = f"{db}.b_lineitem", f"{db}.b_orders"
     if not (spark.catalog.tableExists(lt) and spark.catalog.tableExists(ot)):
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_quantity", "l_extendedprice"

@@ -23,69 +23,6 @@ from pyspark.sql import functions as F
 from data_ingestion_pipeline_spark.functions.numeric import dec_sum, dec_sum2
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 
-__all__ = [
-    "breusch_pagan_price_quantity",
-    "white_test_price_quantity",
-    "fleming_harrington_test_retention_arms",
-    "life_table_retention",
-    "competing_risks_cif_retention",
-    "hotelling_t2_weekpart_daily",
-    "mahalanobis_outliers_lineitem",
-    "cronbach_alpha_event_types_users",
-    "odds_ratio_ci_priority_status_orders",
-    "box_m_test_weekpart_daily",
-    "mardia_normality_daily",
-    "greenwood_km_ci_retention",
-    "welch_anova_event_values",
-    "bartlett_test_event_values",
-    "rmst_user_retention",
-    "wilson_ci_purchase_rate_daily",
-    "oneway_anova_event_values",
-    "gini_lorenz_customer_spend",
-    "cooks_distance_price_quantity",
-    "hill_tail_index_orders",
-    "tukey_hsd_event_values",
-    "levene_bf_event_values",
-    "jackknife_ratio_metric_ab",
-    "eb_shrunk_purchase_rate_users",
-    "randomization_test_ab_value",
-    "hodges_lehmann_purchase_view_daily",
-    "mcnemar_weekday_weekend_purchase",
-    "poisson_glm_daily_trend",
-    "cox_ph_retention_arms",
-    "cmh_test_arm_purchase_by_cohort",
-    "qini_uplift_curve_users",
-    "huber_regression_price_quantity",
-    "fisher_exact_region_priority_orders",
-    "poisson_dispersion_daily",
-    "nelson_aalen_hazard_retention",
-    "lad_regression_price_quantity",
-    "theil_atkinson_customer_spend",
-    "partial_corr_purchase_view_daily",
-    "tost_equivalence_ab_value",
-    "WILSON_CI_PURCHASE_RATE_DAILY_ORACLE",
-    "ONEWAY_ANOVA_EVENT_VALUES_ORACLE",
-    "GINI_LORENZ_CUSTOMER_SPEND_ORACLE",
-    "COOKS_DISTANCE_PRICE_QUANTITY_ORACLE",
-    "HILL_TAIL_INDEX_ORDERS_ORACLE",
-    "TUKEY_HSD_EVENT_VALUES_ORACLE",
-    "LEVENE_BF_EVENT_VALUES_ORACLE",
-    "JACKKNIFE_RATIO_METRIC_AB_ORACLE",
-    "EB_SHRUNK_PURCHASE_RATE_USERS_ORACLE",
-    "MCNEMAR_WEEKDAY_WEEKEND_PURCHASE_ORACLE",
-    "POISSON_GLM_DAILY_TREND_ORACLE",
-    "COX_PH_RETENTION_ARMS_ORACLE",
-    "CMH_TEST_ARM_PURCHASE_BY_COHORT_ORACLE",
-    "QINI_UPLIFT_CURVE_USERS_ORACLE",
-    "HUBER_REGRESSION_PRICE_QUANTITY_ORACLE",
-    "FISHER_EXACT_REGION_PRIORITY_ORDERS_ORACLE",
-    "POISSON_DISPERSION_DAILY_ORACLE",
-    "NELSON_AALEN_HAZARD_RETENTION_ORACLE",
-    "LAD_REGRESSION_PRICE_QUANTITY_ORACLE",
-    "THEIL_ATKINSON_CUSTOMER_SPEND_ORACLE",
-    "PARTIAL_CORR_PURCHASE_VIEW_DAILY_ORACLE",
-    "TOST_EQUIVALENCE_AB_VALUE_ORACLE",
-]
 
 _Z = 1.96  # 95% two-sided
 

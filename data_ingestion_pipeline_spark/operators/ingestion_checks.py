@@ -31,17 +31,6 @@ from data_ingestion_pipeline_spark.plans.merge import merge_upsert
 from data_ingestion_pipeline_spark.plans.table import ManagedTable
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 
-__all__ = [
-    "csv_ingest_events",
-    "csv_ingest_inventory",
-    "merge_upsert_events",
-    "jsonl_roundtrip_events",
-    "orc_roundtrip_events",
-    "xml_roundtrip_events",
-    "python_datasource_agg",
-    "jdbc_roundtrip_orders",
-    "fixed_width_roundtrip_orders",
-]
 
 # CSV shape for the round-trip: camelCase headers + ISO8601 string timestamps,
 # mirroring the reference CSV quirks (mixed second/minute precision,

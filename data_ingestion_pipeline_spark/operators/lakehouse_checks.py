@@ -25,23 +25,6 @@ from data_ingestion_pipeline_spark.plans.scd import merge_changes, scd2_apply
 from data_ingestion_pipeline_spark.plans.table import ManagedTable
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 
-__all__ = [
-    "scd2_customer_dimension",
-    "merge_cdc_orders",
-    "gdpr_delete_events",
-    "daily_rollup_from_hourly_events",
-    "zorder_clustered_orders",
-    "zorder_orders_path",
-    "observed_metrics_orders",
-    "scd2_asof_lookup",
-    "table_diff_snapshots",
-    "time_travel_orders_versions",
-    "table_changes_versions",
-    "table_checksum_orders",
-    "incremental_mv_refresh_orders",
-    "compaction_plan_orders",
-    "merge_on_read_delete_events",
-]
 
 def scd2_customer_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD Type-2 customer dimension after one change batch.

@@ -44,66 +44,12 @@ from data_ingestion_pipeline_spark.functions.text import (
 from data_ingestion_pipeline_spark.functions.partitioning import fan_out
 from data_ingestion_pipeline_spark.similarity.brute_force import topk_cosine
 from data_ingestion_pipeline_spark.similarity.ivf import ivf_topk
-from data_ingestion_pipeline_spark.similarity.lsh import ann_topk, ann_topk_multitable
+from data_ingestion_pipeline_spark.similarity.lsh import ann_topk_multitable
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 
 # Embedding width of the fixture corpus — known at plan time, which lets
 # every vector expression unroll into codegen'd multiply-adds.
 EMB_DIM = 64
-
-__all__ = [
-    "near_dup_threshold_sweep_documents",
-    "ann_ivf_nprobe_sweep_embeddings",
-    "doc_tokens_exploded",
-    "tfidf_top_terms",
-    "bm25_search_documents",
-    "hybrid_search_rrf_documents",
-    "oversample_minority_documents",
-    "cdc_chunk_dedup_documents",
-    "curation_pipeline_documents",
-    "chunk_documents",
-    "text_stats",
-    "exact_dedup_documents",
-    "ngram_jaccard_documents",
-    "ngram_containment_documents",
-    "minhash_near_dup_documents",
-    "simhash_near_dup_documents",
-    "embedding_cosine_dedup",
-    "embedding_lsh_near_dup",
-    "cosine_topk_embeddings",
-    "matryoshka_truncation_recall_embeddings",
-    "mmr_rerank_topk_embeddings",
-    "mixture_temperature_allocation",
-    "length_bucket_padding_report",
-    "curriculum_schedule_documents",
-    "self_similarity_sample_documents",
-    "cross_source_overlap_matrix",
-    "hard_negative_mining_embeddings",
-    "ann_lsh_topk_embeddings",
-    "ann_ivf_topk_embeddings",
-    "json_extract_events",
-    "lang_id_documents",
-    "doc_fingerprint_rolling",
-    "quality_filter_documents",
-    "stratified_sample_documents",
-    "leakage_safe_split_documents",
-    "near_dup_clusters_documents",
-    "text_hygiene_documents",
-    "knn_graph_embeddings",
-    "pack_documents_context_windows",
-    "corpus_mixture_documents",
-    "dedup_survivor_quality_documents",
-    "decontaminate_documents",
-    "ann_pq_topk_embeddings",
-    "ann_pq_sample_adc_topk_embeddings",
-    "minhash_md5_replay_near_dup_documents",
-    "simhash_md5_replay_near_dup_documents",
-    "ann_ivfpq_topk_embeddings",
-    "ann_ivfpq_sample_adc_topk_embeddings",
-    "ann_ivfpq_recall_embeddings",
-    "variant_shred_events",
-    "dup_span_profile_documents",
-]
 
 
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -968,6 +914,9 @@ GROUP BY doc_id, sz
 """
 
 
+BLOOM_DECONTAMINATE_DOCUMENTS_ORACLE = DECONTAMINATE_DOCUMENTS_ORACLE
+
+
 NGRAM_JACCARD_DOCUMENTS_ORACLE = r"""
 WITH base AS (
     SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks FROM documents
@@ -1503,6 +1452,9 @@ def embedding_lsh_verified_near_dup(spark: SparkSession, sf_dir: str) -> DataFra
         aug, "vec_id", "embedding", threshold=0.8, n_bands=64, planes_per_band=12,
         dim=EMB_DIM,
     )
+
+
+EMBEDDING_LSH_VERIFIED_NEAR_DUP_ORACLE = EMBEDDING_COSINE_DEDUP_ORACLE
 
 
 def cosine_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2173,6 +2125,9 @@ FROM reach GROUP BY node
 """
 
 
+NEAR_DUP_CLUSTERS_STAR_DOCUMENTS_ORACLE = NEAR_DUP_CLUSTERS_DOCUMENTS_ORACLE
+
+
 def leakage_safe_split_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup-aware train/val/test split: every document is assigned by
     md5(CLUSTER root), not md5(doc_id), so a near-duplicate pair can never
@@ -2465,7 +2420,12 @@ def _ivfpq_model(sf_dir: str, emb: DataFrame):
 def ann_ivfpq_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ (IVF-ADC + exact refine) approximate top-10 for a small
     query batch (rows-only: approximate by construction; recall gated by
-    ``ann_ivfpq_recall_embeddings``).
+    ``ann_ivfpq_recall_embeddings``). Not a registered query: its
+    Lloyd-trained codebooks (10 numpy k-means iterations, pairwise-summation
+    means) are not bitwise-replayable in SQL, and every downstream stage is
+    hash-checked by ``ann_ivfpq_sample_adc_topk_embeddings``,
+    ``ann_ivf_topk_embeddings`` (routing) and
+    ``ann_pq_sample_adc_topk_embeddings`` (flat-PQ ADC).
 
     The composed billion-scale index (similarity/ivfpq.py): coarse cells
     prune candidates to ~N·nprobe/C, product-quantized residuals score

@@ -22,19 +22,6 @@ from pyspark.sql import functions as F
 
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 
-__all__ = [
-    "good_turing_unseen_mass_documents",
-    "kneser_ney_bigram_documents",
-    "skipgram_pmi_documents",
-    "mattr_lexical_diversity_documents",
-    "negative_sampling_table_documents",
-    "GOOD_TURING_UNSEEN_MASS_DOCUMENTS_ORACLE",
-    "KNESER_NEY_BIGRAM_DOCUMENTS_ORACLE",
-    "SKIPGRAM_PMI_DOCUMENTS_ORACLE",
-    "MATTR_LEXICAL_DIVERSITY_DOCUMENTS_ORACLE",
-    "NEGATIVE_SAMPLING_TABLE_DOCUMENTS_ORACLE",
-]
-
 
 def _tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")

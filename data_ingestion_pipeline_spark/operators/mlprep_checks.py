@@ -25,36 +25,6 @@ from data_ingestion_pipeline_spark.functions.numeric import dec_sum
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 from data_ingestion_pipeline_spark.operators.llm_data import EMB_DIM
 
-__all__ = [
-    "nn1_label_accuracy_embeddings",
-    "nmi_ivf_cells_labels_embeddings",
-    "jl_projection_distortion_embeddings",
-    "chao1_trigram_richness_documents",
-    "JL_PROJECTION_DISTORTION_EMBEDDINGS_ORACLE",
-    "CHAO1_TRIGRAM_RICHNESS_DOCUMENTS_ORACLE",
-    "embedding_int8_quantization_report",
-    "kmeans_assign_embeddings",
-    "target_encoding_loo_orders",
-    "heaps_law_fit_documents",
-    "bigram_lm_doc_scores",
-    "train_val_test_split_documents",
-    "als_rank1_part_factors",
-    "scrub_numeric_tokens_events",
-    "weighted_sample_documents",
-    "corr_matrix_lineitem",
-    "equidepth_histogram_orders",
-    "khop_reach_copurchase",
-    "zipf_fit_tokens",
-    "top_bigram_collocations_documents",
-    "rake_keywords_documents",
-    "textrank_terms_documents",
-    "arrow_vector_norms_embeddings",
-    "kmeans_lloyd_embeddings",
-    "label_centroid_similarity_embeddings",
-    "neyman_allocation_documents",
-    "pca_power_iteration_embeddings",
-    "whitening_isotropy_gain_embeddings",
-]
 
 EMBEDDING_DIM = 64  # fixture embedding width (TESTDATA.md; asserted in tests)
 

@@ -29,19 +29,6 @@ from data_ingestion_pipeline_spark.multimodal.binary_ops import (
 from data_ingestion_pipeline_spark.functions.partitioning import fan_out
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 
-__all__ = [
-    "media_from_documents",
-    "multimodal_metadata",
-    "multimodal_image_features",
-    "multimodal_frame_sample",
-    "audio_from_documents",
-    "multimodal_audio_chunks",
-    "bmp_media_from_documents",
-    "multimodal_bmp_pixel_stats",
-    "wav_media_from_documents",
-    "multimodal_wav_pcm_energy",
-]
-
 
 def media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → media rows: payload = encode(text, UTF-8), typed meta

@@ -36,14 +36,6 @@ from pyspark.sql import functions as F
 
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 
-__all__ = [
-    "pii_detect_documents",
-    "pii_redact_documents",
-    "pii_prevalence_by_source",
-    "PII_DETECT_DOCUMENTS_ORACLE",
-    "PII_REDACT_DOCUMENTS_ORACLE",
-    "PII_PREVALENCE_BY_SOURCE_ORACLE",
-]
 
 # (class, pattern, replacement) in FIXED application order — counts are
 # order-independent (patterns are mutually non-overlapping: @-anchored /

@@ -16,52 +16,8 @@ from pyspark.sql import functions as F
 from data_ingestion_pipeline_spark.functions.numeric import dec_sum, dec_sum2
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 
-__all__ = [
-    "kmv_distinct_users_events",
-    "ams_f2_user_activity_events",
-    "binned_range_join_orders_bands",
-    "zone_map_skip_report_orders",
-    "bloom_index_probe_orders",
-    "misra_gries_heavy_hitters_events",
-    "hll_merge_users_weekly",
-    "approx_top_k_event_types",
-    "customers_with_orders",
-    "customers_without_orders",
-    "in_list_filter",
-    "composite_key_semi_join",
-    "customer_order_enrichment",
-    "top_parts_per_brand",
-    "customer_order_ranks",
-    "brand_share_of_revenue",
-    "distinct_users_daily",
-    "approx_distinct_users_daily",
-    "revenue_rollup_brand_size",
-    "set_ops_customer_segments",
-    "rfm_segments_customers",
-    "rfm_segments_customers_approx",
-    "top_revenue_orders",
-    "event_type_pivot",
-    "price_quantiles_by_priority",
-    "approx_price_quantiles_by_priority",
-    "acctbal_full_outer_reconciliation",
-    "latest_event_per_user",
-    "order_price_histogram",
-    "order_status_priority_cube",
-    "event_counts_unpivot",
-    "daily_user_activity_gapfilled",
-    "event_value_outliers",
-    "frequent_users_sketch",
-    "trailing_spend_30d",
-    "customer_spend_deciles",
-    "customer_spend_deciles_approx",
-    "user_event_type_sets",
-    "salted_skew_join_events",
-    "pareto_frontier_parts",
-    "countmin_event_types",
-]
 
-
-def customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+def exists_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 — existence semi-join, the set-based form of the reference's
     per-key lookup (``flows/data_ingestion.py:12-32``). EXISTS ≡ left_semi."""
     customer = load_table(spark, sf_dir, "customer")
@@ -71,7 +27,13 @@ def customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("c_custkey", "c_name", "c_mktsegment")
 
 
-def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+EXISTS_SEMI_JOIN_ORACLE = """
+    SELECT c_custkey, c_name, c_mktsegment FROM customer
+    WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+    """
+
+
+def anti_join_new_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4 — anti-join: the insert-set complement (``flows/data_ingestion.py:121-122``).
 
     Scoped to finished ('F') orders so the anti side is non-empty at every
@@ -82,6 +44,14 @@ def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return customer.join(
         orders, customer.c_custkey == orders.o_custkey, "left_anti"
     ).select("c_custkey", "c_name", "c_mktsegment")
+
+
+ANTI_JOIN_NEW_KEYS_ORACLE = """
+    SELECT c_custkey, c_name, c_mktsegment FROM customer
+    WHERE NOT EXISTS (
+        SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus = 'F'
+    )
+    """
 
 
 def in_list_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -95,6 +65,12 @@ def in_list_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return part.filter(
         F.col("p_brand").isin("Brand#1", "Brand#2", "Brand#3")
     ).select("p_partkey", "p_name", "p_brand", "p_size")
+
+
+IN_LIST_FILTER_ORACLE = """
+    SELECT p_partkey, p_name, p_brand, p_size FROM part
+    WHERE p_brand IN ('Brand#1', 'Brand#2', 'Brand#3')
+    """
 
 
 def composite_key_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,6 +89,12 @@ def composite_key_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lineitem.join(
         batch_keys, ["l_orderkey", "l_linenumber"], "left_semi"
     ).select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
+
+
+COMPOSITE_KEY_SEMI_JOIN_ORACLE = """
+    SELECT l_orderkey, l_linenumber, l_partkey, l_quantity
+    FROM lineitem WHERE l_orderkey % 10 = 0
+    """
 
 
 def customer_order_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -137,6 +119,18 @@ def customer_order_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+CUSTOMER_ORDER_ENRICHMENT_ORACLE = """
+    SELECT r_name, n_name, CAST(COUNT(*) AS BIGINT) AS n_orders,
+           CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,6))), 2) AS DOUBLE)
+               AS total_value
+    FROM orders
+    JOIN customer ON o_custkey = c_custkey
+    JOIN nation ON c_nationkey = n_nationkey
+    JOIN region ON n_regionkey = r_regionkey
+    GROUP BY r_name, n_name
+    """
+
+
 def top_parts_per_brand(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     """Top-K per group via ranking window — the distributed form of
     "most sold per category" when only the leaders are wanted.
@@ -158,6 +152,19 @@ def top_parts_per_brand(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFra
         per_part.withColumn("brand_rank", F.row_number().over(w))
         .filter(F.col("brand_rank") <= k)
     )
+
+
+TOP_PARTS_PER_BRAND_ORACLE = """
+    SELECT p_brand, p_partkey, p_name, total_sold, brand_rank FROM (
+        SELECT p_brand, p_partkey, p_name, SUM(l_quantity) AS total_sold,
+               ROW_NUMBER() OVER (
+                   PARTITION BY p_brand
+                   ORDER BY SUM(l_quantity) DESC, p_partkey ASC
+               ) AS brand_rank
+        FROM lineitem JOIN part ON l_partkey = p_partkey
+        GROUP BY p_brand, p_partkey, p_name
+    ) WHERE brand_rank <= 3
+    """
 
 
 def customer_order_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -186,6 +193,20 @@ def customer_order_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+CUSTOMER_ORDER_RANKS_ORACLE = """
+    SELECT o_custkey, o_orderkey,
+           CAST(ROW_NUMBER() OVER w AS INTEGER) AS order_seq,
+           CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,6))) OVER (
+               PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+           ), 2) AS DOUBLE) AS running_spend,
+           CAST(DATEDIFF('day', LAG(o_orderdate) OVER w, o_orderdate) AS INTEGER)
+               AS days_since_prev
+    FROM orders
+    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+    """
+
+
 def brand_share_of_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aggregate + global-window share-of-total: percent of revenue per brand.
 
@@ -210,6 +231,20 @@ def brand_share_of_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("rev").cast("double") * 100.0 / total.cast("double"), 4
         ).alias("revenue_share_pct"),
     )
+
+
+BRAND_SHARE_OF_REVENUE_ORACLE = """
+    WITH per_brand AS (
+        SELECT p_brand,
+               SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS rev
+        FROM lineitem JOIN part ON l_partkey = p_partkey
+        GROUP BY p_brand
+    )
+    SELECT p_brand, CAST(ROUND(rev, 2) AS DOUBLE) AS brand_revenue,
+           ROUND(CAST(rev AS DOUBLE) * 100.0 / CAST(SUM(rev) OVER () AS DOUBLE), 4)
+               AS revenue_share_pct
+    FROM per_brand
+    """
 
 
 def distinct_users_daily(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,14 +27,6 @@ from pyspark.sql import functions as F
 from data_ingestion_pipeline_spark.functions.numeric import dec_sum2
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 
-__all__ = [
-    "revenue_per_product",
-    "low_stock",
-    "orders_per_product_month",
-    "revenue_per_category",
-    "inventory_status",
-    "most_sold_per_category",
-]
 
 def _revenue():
     # The reference computes o.quantity * o.amount (reference README.md:46,
@@ -64,6 +56,15 @@ def revenue_per_product(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+REVENUE_PER_PRODUCT_ORACLE = """
+    SELECT p_partkey, p_name,
+           CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount)
+                               AS DECIMAL(18,6))), 2) AS DOUBLE) AS total_revenue
+    FROM lineitem JOIN part ON l_partkey = p_partkey
+    GROUP BY p_partkey, p_name
+    """
+
+
 def low_stock(spark: SparkSession, sf_dir: str, threshold: int = 10) -> DataFrame:
     """Q2 — items with stock below a threshold, most-depleted first.
 
@@ -80,6 +81,12 @@ def low_stock(spark: SparkSession, sf_dir: str, threshold: int = 10) -> DataFram
         .select("p_partkey", "p_name", "p_brand", "p_type", "p_size")
         .orderBy(F.col("p_size").asc(), F.col("p_partkey").asc())
     )
+
+
+LOW_STOCK_ORACLE = """
+    SELECT p_partkey, p_name, p_brand, p_type, p_size
+    FROM part WHERE p_size < 10
+    """
 
 
 def orders_per_product_month(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -112,6 +119,16 @@ def orders_per_product_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+ORDERS_PER_PRODUCT_MONTH_ORACLE = """
+    SELECT p_partkey, p_name,
+           CAST(EXTRACT(MONTH FROM l_shipdate) AS INTEGER) AS ship_month,
+           CAST(EXTRACT(YEAR FROM l_shipdate) AS INTEGER) AS ship_year,
+           SUM(l_quantity) AS total_quantity
+    FROM lineitem JOIN part ON l_partkey = p_partkey
+    GROUP BY 1, 2, 3, 4
+    """
+
+
 def revenue_per_category(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4 — revenue per category (p_brand as the category analog).
 
@@ -127,6 +144,15 @@ def revenue_per_category(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(dec_sum2(_revenue()).alias("total_revenue"))
         .orderBy(F.col("total_revenue").desc())
     )
+
+
+REVENUE_PER_CATEGORY_ORACLE = """
+    SELECT p_brand,
+           CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount)
+                               AS DECIMAL(18,6))), 2) AS DOUBLE) AS total_revenue
+    FROM lineitem JOIN part ON l_partkey = p_partkey
+    GROUP BY p_brand
+    """
 
 
 def inventory_status(spark: SparkSession, sf_dir: str, product_key: int = 1) -> DataFrame:
@@ -166,6 +192,17 @@ def inventory_status(spark: SparkSession, sf_dir: str, product_key: int = 1) -> 
     )
 
 
+INVENTORY_STATUS_ORACLE = """
+    SELECT p_partkey, p_name,
+           CAST(p_size AS DOUBLE) AS current_stock,
+           SUM(l_quantity) AS total_sold,
+           CAST(p_size AS DOUBLE) - SUM(l_quantity) AS remaining_stock
+    FROM part LEFT JOIN lineitem ON p_partkey = l_partkey
+    WHERE p_partkey = 1
+    GROUP BY p_partkey, p_name, p_size
+    """
+
+
 def most_sold_per_category(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q6 — units sold per product, grouped under category, best-sellers first.
 
@@ -179,3 +216,10 @@ def most_sold_per_category(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("l_quantity").alias("total_sold"))
         .orderBy(F.col("total_sold").desc(), F.col("p_partkey").asc())
     )
+
+
+MOST_SOLD_PER_CATEGORY_ORACLE = """
+    SELECT p_brand, p_partkey, p_name, SUM(l_quantity) AS total_sold
+    FROM lineitem JOIN part ON l_partkey = p_partkey
+    GROUP BY p_brand, p_partkey, p_name
+    """

@@ -18,21 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_ingestion_pipeline_spark.operators import reports
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 
-__all__ = [
-    "REPORT_SQL",
-    "run_report_sql",
-    "revenue_per_product_sql",
-    "orders_above_customer_avg",
-    "recursive_orderkey_hierarchy",
-    "udtf_part_type_words",
-    "lateral_topn_orders_per_customer",
-    "grouping_sets_revenue",
-    "session_variable_brand_report",
-    "sql_scripting_size_report",
-    "transpose_priority_quantiles",
-]
 
 # Translation of /root/reference/README.md:36-149 onto the star schema —
 # text-identical semantics to operators/reports.py's DataFrame builders.
@@ -102,6 +90,9 @@ def revenue_per_product_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1 through the SQL-text surface — registered in the driver contract to
     prove both surfaces stay in lock-step (same oracle as the builder form)."""
     return run_report_sql(spark, sf_dir, "revenue_per_product")
+
+
+REVENUE_PER_PRODUCT_SQL_ORACLE = reports.REVENUE_PER_PRODUCT_ORACLE
 
 
 def orders_above_customer_avg(spark: SparkSession, sf_dir: str) -> DataFrame:

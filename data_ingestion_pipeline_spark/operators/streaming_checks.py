@@ -30,25 +30,6 @@ from data_ingestion_pipeline_spark.streaming.windows import (
     tumbling_event_stats,
 )
 
-__all__ = [
-    "streaming_interval_full_outer_events",
-    "streaming_ingest_merge_events",
-    "streaming_incremental_agg_events",
-    "tumbling_window_events",
-    "sliding_window_events",
-    "sessionize_events",
-    "streaming_tumbling_events",
-    "streaming_dedup_events",
-    "streaming_dedup_within_watermark_events",
-    "stateful_user_profile_events",
-    "stateful_event_type_counts_events",
-    "stateful_event_type_counts_pandas_events",
-    "streaming_interval_join_events",
-    "streaming_enriched_events",
-    "streaming_session_window_events",
-    "streaming_topk_event_types_daily",
-]
-
 
 def tumbling_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tumbling_event_stats(load_table(spark, sf_dir, "events"))
@@ -184,6 +165,9 @@ def streaming_tumbling_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _drain_to_memory(agg, f"stream_tumbling_{sf_tag(sf_dir)}", "complete")
 
 
+STREAMING_TUMBLING_EVENTS_ORACLE = TUMBLING_WINDOW_EVENTS_ORACLE
+
+
 def _planted_dup_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream over events.parquet copied twice under scratch, one file per
     micro-batch: the second batch replays the first, so state must span
@@ -276,6 +260,9 @@ def streaming_dedup_rocksdb_events(spark: SparkSession, sf_dir: str) -> DataFram
         )
 
 
+STREAMING_DEDUP_ROCKSDB_EVENTS_ORACLE = STREAMING_DEDUP_EVENTS_ORACLE
+
+
 def stateful_user_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary-state streaming (applyInPandasWithState): per-user running
     profile over the duplicated two-batch source — the second batch folds
@@ -330,7 +317,9 @@ def stateful_event_type_counts_events(spark: SparkSession, sf_dir: str) -> DataF
     second batch replays the first — the final emission per (user, type)
     must be exactly 2× the base count, proving typed MapState survives
     micro-batch boundaries. Same drain-then-take-final-row pattern as the
-    applyInPandasWithState profile check above."""
+    applyInPandasWithState profile check above. Registered only where
+    python-protobuf is importable (``transform_with_state_available``);
+    elsewhere pytest and the pandas twin below cover its semantics."""
     from data_ingestion_pipeline_spark.streaming.stateful import (
         user_event_type_counts_stream,
     )

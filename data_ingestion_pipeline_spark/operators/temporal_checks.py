@@ -19,15 +19,6 @@ from data_ingestion_pipeline_spark.functions.temporal import (
 )
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 
-__all__ = [
-    "asof_prev_view_per_purchase",
-    "views_within_hour_of_purchase",
-    "purchase_funnel_users",
-    "daily_cohort_retention",
-    "cohort_ltv_curve_events",
-    "growth_accounting_daily_users",
-]
-
 
 def asof_prev_view_per_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """For every purchase event: the same user's most recent 'view' strictly

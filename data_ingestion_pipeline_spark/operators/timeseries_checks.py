@@ -25,56 +25,6 @@ from pyspark.sql import functions as F
 from data_ingestion_pipeline_spark.functions.numeric import dec_sum
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 
-__all__ = [
-    "ccf_purchase_view_daily",
-    "granger_lag1_view_to_purchase_daily",
-    "chow_test_daily_midpoint",
-    "pacf_daily_values",
-    "gmm2_em_daily_values",
-    "pettitt_changepoint_daily",
-    "adf_test_daily_values",
-    "breusch_godfrey_daily_trend",
-    "permutation_entropy_daily_values",
-    "bartels_rank_test_daily_values",
-    "cox_stuart_trend_daily",
-    "hurst_rs_daily_values",
-    "esd_outliers_daily",
-    "transfer_entropy_view_purchase_daily",
-    "croston_intermittent_demand_part",
-    "theta_method_forecast_daily",
-    "spectral_entropy_daily_events",
-    "dagostino_k2_daily_values",
-    "siegel_slope_daily_trend",
-    "cochrane_orcutt_daily_trend",
-    "cusum_squares_daily",
-    "variance_ratio_daily",
-    "turning_points_daily",
-    "rolling_corr_purchase_view_14d",
-    "autocorr_daily_value",
-    "ar2_yule_walker_daily",
-    "rolling_zscore_anomaly_daily",
-    "seasonal_naive_mape_events",
-    "cusum_changepoint_daily",
-    "holt_winters_seasonal_daily",
-    "seasonal_decompose_daily",
-    "psi_value_drift_halves",
-    "durbin_watson_daily_trend",
-    "holt_linear_daily_forecast",
-    "conformal_forecast_interval_daily",
-    "binseg_changepoint_daily",
-    "periodogram_daily_events",
-    "jarque_bera_daily_values",
-    "ljung_box_daily_values",
-    "runs_test_daily_values",
-    "newey_west_daily_trend",
-    "BINSEG_CHANGEPOINT_DAILY_ORACLE",
-    "PERIODOGRAM_DAILY_EVENTS_ORACLE",
-    "JARQUE_BERA_DAILY_VALUES_ORACLE",
-    "LJUNG_BOX_DAILY_VALUES_ORACLE",
-    "RUNS_TEST_DAILY_VALUES_ORACLE",
-    "NEWEY_WEST_DAILY_TREND_ORACLE",
-]
-
 
 def _daily(spark: SparkSession, sf_dir: str, by_type: bool) -> DataFrame:
     """Daily exact-decimal value totals (optionally per event_type).

@@ -33,53 +33,6 @@ from data_ingestion_pipeline_spark.functions.numeric import dec_sum
 from data_ingestion_pipeline_spark.plans.join_strategies import broadcast_if_small
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 
-__all__ = [
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q8_market_share",
-    "tpch_q10_returned_items",
-    "tpch_q4_shaped_priority_check",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q12_shaped_priority_by_returnflag",
-    "tpch_q14_promo_revenue",
-    "tpch_q15_top_supplier",
-    "tpch_q16_shaped_supplier_diversity",
-    "tpch_q18_large_volume_customers",
-    "tpch_q19_shaped_discounted_revenue",
-    "tpch_q22_shaped_dormant_customers",
-    "TPCH_Q1_PRICING_SUMMARY_ORACLE",
-    "TPCH_Q3_SHIPPING_PRIORITY_ORACLE",
-    "TPCH_Q5_LOCAL_SUPPLIER_VOLUME_ORACLE",
-    "TPCH_Q8_MARKET_SHARE_ORACLE",
-    "TPCH_Q10_RETURNED_ITEMS_ORACLE",
-    "TPCH_Q4_SHAPED_PRIORITY_CHECK_ORACLE",
-    "TPCH_Q6_FORECAST_REVENUE_ORACLE",
-    "TPCH_Q7_VOLUME_SHIPPING_ORACLE",
-    "TPCH_Q12_SHAPED_PRIORITY_BY_RETURNFLAG_ORACLE",
-    "TPCH_Q14_PROMO_REVENUE_ORACLE",
-    "TPCH_Q15_TOP_SUPPLIER_ORACLE",
-    "TPCH_Q16_SHAPED_SUPPLIER_DIVERSITY_ORACLE",
-    "TPCH_Q18_LARGE_VOLUME_CUSTOMERS_ORACLE",
-    "TPCH_Q19_SHAPED_DISCOUNTED_REVENUE_ORACLE",
-    "TPCH_Q22_SHAPED_DORMANT_CUSTOMERS_ORACLE",
-    "tpch_q2_shaped_min_cost_supplier",
-    "tpch_q9_shaped_product_type_profit",
-    "tpch_q11_shaped_important_stock",
-    "tpch_q13_customer_distribution",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q20_shaped_promotion_suppliers",
-    "tpch_q21_shaped_waiting_suppliers",
-    "TPCH_Q2_SHAPED_MIN_COST_SUPPLIER_ORACLE",
-    "TPCH_Q9_SHAPED_PRODUCT_TYPE_PROFIT_ORACLE",
-    "TPCH_Q11_SHAPED_IMPORTANT_STOCK_ORACLE",
-    "TPCH_Q13_CUSTOMER_DISTRIBUTION_ORACLE",
-    "TPCH_Q17_SMALL_QUANTITY_REVENUE_ORACLE",
-    "TPCH_Q20_SHAPED_PROMOTION_SUPPLIERS_ORACLE",
-    "TPCH_Q21_SHAPED_WAITING_SUPPLIERS_ORACLE",
-]
-
 
 def _disc_price() -> F.Column:
     return F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))

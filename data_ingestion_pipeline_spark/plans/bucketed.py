@@ -18,6 +18,7 @@ Rules that make it work (all encoded in ``write_bucketed``):
 
 from __future__ import annotations
 
+import os
 import shutil
 from collections.abc import Sequence
 from urllib.parse import urlparse
@@ -32,22 +33,18 @@ def write_bucketed(
 ) -> None:
     """Overwrite ``table_name`` bucketed+sorted by ``keys``.
 
-    The warehouse directory outlives the in-memory catalog (new session =
-    empty metastore, same /tmp warehouse), so a stale table location must
-    be cleared or ``saveAsTable`` fails with LOCATION_ALREADY_EXISTS.
+    A database's directory outlives the in-memory catalog (new session =
+    empty metastore, same directory on disk), so a stale table location
+    must be cleared or ``saveAsTable`` fails with LOCATION_ALREADY_EXISTS.
+    A managed table lives at ``<database location>/<table>``; a
+    catalog-qualified name (catalog.db.table) keys on its LAST two segments.
     """
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    if warehouse:
-        # Spark lays out db-qualified tables at <warehouse>/<db>.db/<table>;
-        # an unqualified name lives directly under the warehouse root. A
-        # catalog-qualified name (catalog.db.table) keys on its LAST two
-        # segments — indexing the first would rmtree <warehouse>/<catalog>,
-        # the wrong path, leaving the real stale directory behind.
-        parts = table_name.lower().split(".")
-        rel = f"{parts[-2]}.db/{parts[-1]}" if len(parts) >= 2 else parts[0]
-        shutil.rmtree(f"{warehouse}/{rel}", ignore_errors=True)
+    parts = table_name.lower().split(".")
+    db = parts[-2] if len(parts) >= 2 else spark.catalog.currentDatabase()
+    db_dir = urlparse(spark.catalog.getDatabase(db).locationUri).path
+    shutil.rmtree(os.path.join(db_dir, parts[-1]), ignore_errors=True)
     (
         df.write.bucketBy(buckets, *keys)
         .sortBy(*keys)

@@ -22,7 +22,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["get_spark"]
 
 # Scan-task split size and AQE's advisory shuffle-partition size. The
 # fixtures are SINGLE small parquet files, so the 128 MB split default
@@ -101,9 +101,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -25,17 +25,16 @@ Design for 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_ingestion_pipeline_spark.functions.partitioning import fan_out
-from data_ingestion_pipeline_spark.functions.vector import as_double_array, cosine, dot
+from data_ingestion_pipeline_spark.functions.vector import as_double_array, cosine
 
 __all__ = [
     "strided_sample_rows",
     "sample_centroids",
     "select_probe_cells",
-    "assign_expr",
     "ivf_assign",
     "ivf_topk",
 ]
@@ -85,18 +84,6 @@ def sample_centroids(
     """
     rows, _ = strided_sample_rows(corpus, n_centroids, id_col, vec_col)
     return [list(r["v"]) for r in rows]
-
-
-def assign_expr(vec: Column, centroids: list[list[float]]) -> Column:
-    """Nearest-centroid id (argmax of dot products, first-wins on ties) as
-    a pure expression — kept as the no-Python fallback, but the batched
-    kernel below is the production path: the fold-form dots here are
-    interpreted per element (CodegenFallback), ~20× slower than one numpy
-    matmul per Arrow batch at C=16, dim=64 (measured)."""
-    scores = F.array(
-        *[dot(vec, F.array(*[F.lit(x) for x in c])) for c in centroids]
-    )
-    return (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
 
 
 def _assign_batched(corpus_d: DataFrame, centroids: list[list[float]]) -> DataFrame:

@@ -34,7 +34,6 @@ __all__ = [
     "hyperplanes",
     "bucket_expr",
     "band_buckets",
-    "bucketize",
     "ann_topk",
     "ann_topk_multitable",
 ]
@@ -120,19 +119,6 @@ def band_buckets(
     # which pandas_udf's type-hint inference can't resolve from strings)
     _buckets.__annotations__ = {"v": pd.Series, "return": pd.Series}
     return pandas_udf(_buckets, "array<long>")(vec)
-
-
-def bucketize(
-    corpus: DataFrame, planes: list[list[float]], vec_col: str = "embedding"
-) -> DataFrame:
-    """The double-cast is projected to a bound column FIRST: the unrolled
-    per-plane dots index it element-wise, and indexing a cast *expression*
-    would re-cast the whole array per term (O(dim²)/row)."""
-    return (
-        corpus.withColumn("_vd", as_double_array(F.col(vec_col)))
-        .withColumn("bucket", bucket_expr(F.col("_vd"), planes))
-        .drop("_vd")
-    )
 
 
 def ann_topk(

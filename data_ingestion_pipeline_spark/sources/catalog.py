@@ -1,9 +1,10 @@
 """Parquet table catalog for the benchmark star schema.
 
-The driver fixtures (TESTDATA.md) are one parquet file per table under
-``/root/testdata/sf{N}/``. ``register_views`` exposes them as temp views so
-both the DataFrame API and ``spark.sql`` resolve the same relations — the
-dual query surface the reference offers via psql (SURVEY.md §3, entry 3).
+The fixtures (TESTDATA.md) are one parquet file per table in a
+scale-factor directory (``sf{N}/``). ``load_table`` reads one of them;
+callers that run SQL text register the DataFrames as temp views, so both
+the DataFrame API and ``spark.sql`` resolve the same relations — the dual
+query surface the reference offers via psql (SURVEY.md §3, entry 3).
 
 Scale note: these are plain ``spark.read.parquet`` scans — Catalyst pushes
 filters and prunes columns into the parquet reader, and at cluster scale the
@@ -21,9 +22,6 @@ __all__ = [
     "TABLES",
     "DIM_TABLES",
     "load_table",
-    "load_tables",
-    "register_views",
-    "default_sf_dir",
     "normalize_event_ts",
 ]
 
@@ -46,10 +44,6 @@ TABLES = (
 # orders of magnitude below lineitem — at very large SF Catalyst's size
 # estimate + AQE makes the final call, broadcast() is only a hint.)
 DIM_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
-
-
-def default_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -103,16 +97,3 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
         df.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
         return df.withColumn(col, F.col(col).cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
-    sf_dir = sf_dir or default_sf_dir()
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
-    """Register every table as a temp view; returns the DataFrames too."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

@@ -67,22 +67,33 @@ def test_quality_violations_quarantine_route(spark):
 
 
 def test_bucketed_join_has_no_exchange(spark):
+    from urllib.parse import urlparse
+
     from pyspark.sql import functions as F
 
     from data_ingestion_pipeline_spark.operators.evolution_checks import (
         bucketed_colocated_join,
     )
+    from data_ingestion_pipeline_spark.operators.scratch import scratch_dir
     from tests.conftest import SF_SMOKE
 
     # materialize the bucketed tables, then inspect the join-only plan with
     # broadcast disabled so the bucketed SortMergeJoin is what we see
     bucketed_colocated_join(spark, SF_SMOKE).collect()
+    lt, ot = "graft_bucketed_sf0_001.b_lineitem", "graft_bucketed_sf0_001.b_orders"
+    # the bucketed copies live under the scratch root, not the warehouse
+    scratch = scratch_dir(SF_SMOKE, "bucketed_db") + "/"
+    for t in (lt, ot):
+        loc = {
+            r.col_name: r.data_type
+            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {t}").collect()
+        }["Location"]
+        assert urlparse(loc).path.startswith(scratch), (t, loc)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        tag = "sf0_001"
-        j = spark.table(f"b_lineitem_{tag}").join(
-            spark.table(f"b_orders_{tag}"),
+        j = spark.table(lt).join(
+            spark.table(ot),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
         plan = j._jdf.queryExecution().executedPlan().toString()

@@ -4,11 +4,12 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_ingestion_pipeline_spark import schemas
-from data_ingestion_pipeline_spark.pipeline import run_pipeline
+from data_ingestion_pipeline_spark.pipeline import run_pipeline, with_retries
 from data_ingestion_pipeline_spark.plans.merge import (
     dedupe_last_wins,
     merge_upsert,
@@ -150,7 +151,6 @@ def test_merge_upsert_evolves_schema(spark, tmp_path):
     """evolve_schema=True: a batch with a NEW column widens the table (old
     rows get typed NULLs); without the flag the widening batch is rejected
     (silent drift stays opt-in)."""
-    import pytest
     from pyspark.sql import functions as F
 
     from data_ingestion_pipeline_spark.plans.merge import merge_upsert
@@ -231,3 +231,28 @@ def test_merge_file_count_stays_bounded(spark, tmp_path):
     got = {r.k: r.v for r in t.read().collect()}
     assert len(got) == 12 * 6 + 24
     assert got["k12"] == 112 and got["k95"] == 695
+
+
+def test_with_retries_returns_after_one_failure():
+    calls = []
+
+    def flaky():
+        calls.append(1)
+        if len(calls) == 1:
+            raise OSError("source not ready")
+        return "rows"
+
+    assert with_retries(flaky, retries=2, delay_seconds=0) == "rows"
+    assert len(calls) == 2
+
+
+def test_with_retries_reraises_last_failure():
+    calls = []
+
+    def failing():
+        calls.append(1)
+        raise OSError(f"attempt {len(calls)}")
+
+    with pytest.raises(OSError, match="attempt 3"):
+        with_retries(failing, retries=2, delay_seconds=0)
+    assert len(calls) == 3
