@@ -2,6 +2,11 @@
 pins that the oracle comparison alone can't express (the match guarantee,
 planted-pathology verdicts)."""
 
+from __future__ import annotations
+
+import hashlib
+import math
+
 from pyspark.sql import functions as F
 
 from data_ingestion_pipeline_spark.operators.corpus_quality import (
@@ -9,25 +14,19 @@ from data_ingestion_pipeline_spark.operators.corpus_quality import (
     TOP2_MAX,
     WINNOW_K,
     WINNOW_W,
+    bigram_perplexity_documents,
+    cohens_kappa_quality_flags_documents,
+    dsir_importance_documents,
     gopher_repetition_documents,
     winnowing_fingerprints_documents,
+    winnowing_near_copy_pairs_documents,
 )
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, write_sf
+
+DOCS = "doc_id long, text string"
 
 
-def _run_on(spark, fn, rows):
-    """Run an (spark, sf_dir) operator on an inline corpus by monkey-free
-    substitution: write rows to a temp view-backed parquet dir."""
-    import os
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="cq_")
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    df.write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
-    return fn(spark, d)
-
-
-def test_gopher_flags_planted_repetition(spark):
+def test_gopher_flags_planted_repetition(spark, tmp_path):
     """A document that is one 2-gram repeated forever must fail the top-2-
     gram rule; a document of distinct tokens must pass all rules."""
     rows = [
@@ -35,13 +34,14 @@ def test_gopher_flags_planted_repetition(spark):
         (2, " ".join(f"tok{i}" for i in range(60))),  # all-distinct
         (3, " ".join(["a b c d e"] * 12)),          # every 5-gram repeats
     ]
-    got = {r.doc_id: r for r in _run_on(spark, gopher_repetition_documents, rows).collect()}
+    sf = write_sf(tmp_path, documents=spark.createDataFrame(rows, DOCS))
+    got = {r.doc_id: r for r in gopher_repetition_documents(spark, sf).collect()}
     assert got[1].top2gram_frac >= TOP2_MAX and not got[1].keep
     assert got[2].keep and got[2].dup5gram_frac == 0.0
     assert got[3].dup5gram_frac >= DUP5_MAX and not got[3].keep
 
 
-def test_winnowing_match_guarantee_and_density(spark):
+def test_winnowing_match_guarantee_and_density(spark, tmp_path):
     """Two documents sharing a run of >= w + k - 1 tokens must share at
     least one fingerprint hash; disjoint-vocabulary documents share none;
     density stays within the theoretical band (>= 1/w by pigeonhole)."""
@@ -51,7 +51,8 @@ def test_winnowing_match_guarantee_and_density(spark):
         (2, "y1 y2 y3 y4 " + shared + " y5"),
         (3, " ".join(f"z{i}" for i in range(30))),
     ]
-    out = _run_on(spark, winnowing_fingerprints_documents, rows)
+    sf = write_sf(tmp_path, documents=spark.createDataFrame(rows, DOCS))
+    out = winnowing_fingerprints_documents(spark, sf)
     got = {r.doc_id: r for r in out.collect()}
     for r in got.values():
         assert r.n_fingerprints >= 1
@@ -64,13 +65,10 @@ def test_winnowing_match_guarantee_and_density(spark):
     # identical shared k-grams, and winnowing any full window inside the
     # shared run selects a shared hash. Check via set intersection of the
     # per-doc selected hash sets.
-    from data_ingestion_pipeline_spark.operators.corpus_quality import _POS_BITS  # noqa: F401
 
     # rebuild fingerprint sets inline (same construction, hashes only)
     def fp_hashes(doc_text):
         toks = [t for t in doc_text.split() if t]
-        import hashlib
-
         hs = []
         for i in range(len(toks) - WINNOW_K + 1):
             g = " ".join(toks[i : i + WINNOW_K])
@@ -104,9 +102,6 @@ def test_winnowing_pairs_find_every_planted_copy(spark):
     """Every planted 80%-prefix copy (doc_id % 20 == 0 → +1000000) must be
     detected: the shared prefix is a run far longer than w + k - 1, so the
     winnowing guarantee makes the pair structurally unmissable."""
-    from data_ingestion_pipeline_spark.operators.corpus_quality import (
-        winnowing_near_copy_pairs_documents,
-    )
 
     pairs = {
         (r.doc_a, r.doc_b)
@@ -130,9 +125,6 @@ def test_dsir_importance_separates_target_language(spark):
     on average than non-English ones — the selection property the method
     exists for. (The fixture's languages use distinct token vocabularies,
     so the hashed-unigram ratio separates them sharply.)"""
-    from data_ingestion_pipeline_spark.operators.corpus_quality import (
-        dsir_importance_documents,
-    )
 
     scores = dsir_importance_documents(spark, SF_SMOKE)
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").select(
@@ -147,48 +139,73 @@ def test_dsir_importance_separates_target_language(spark):
     )
 
 
-def test_bpe_greedy_leftmost_overlap_semantics(spark):
-    """The island/parity rewrite must implement greedy LEFTMOST
-    non-overlapping merges — pinned against an inline reference on
-    pathological repeat-runs ('aaaa' merging a|a → two merges, 'aaa' →
-    one merge plus a trailing 'a')."""
-    from data_ingestion_pipeline_spark.operators.bpe import (
-        bpe_merges_documents,
+def test_bigram_perplexity_hand_computed(spark, tmp_path):
+    """Two-document planted corpus with a hand-derivable add-one bigram
+    model: doc 10 = "a b a b", doc 11 = "a b c". Model: c(a,b)=3, c(b,a)=1,
+    c(b,c)=1; contexts c(a,.)=3, c(b,.)=2; V=3. NLLs follow the exact
+    ln-term rounding policy the operator declares."""
+
+    docs = spark.createDataFrame(
+        [(10, "a b a b", "s"), (11, "a b c", "s")],
+        "doc_id long, text string, source string",
     )
+    sf = write_sf(tmp_path, documents=docs)
+    got = {r.doc_id: r for r in bigram_perplexity_documents(spark, sf).collect()}
 
-    rows = [
-        (1, "aaaa aaaa aaaa"),   # dominant pair a|a, even run
-        (2, "aaa aaa"),          # odd run: leftmost merge, trailing a
-        (3, "xy xy xy"),         # runner-up pair
-    ]
-    out = _run_on(spark, bpe_merges_documents, rows)
-    got = [(r.merge_rank, r.pair, r.pair_count) for r in out.orderBy("merge_rank").collect()]
+    def r9ln(x):
+        return round(math.log(x), 9)
 
-    def model(words, n):
-        seqs = {w: list(w) for w, _ in words}
-        freq = dict(words)
-        merges = []
-        for it in range(n):
-            pc = {}
-            for w, s in seqs.items():
-                for i in range(len(s) - 1):
-                    pc[(s[i], s[i + 1])] = pc.get((s[i], s[i + 1]), 0) + freq[w]
-            if not pc:
-                break
-            best = sorted(pc.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-            merges.append((it + 1, best[0][0] + "|" + best[0][1], best[1]))
-            a, b = best[0]
-            for w, s in seqs.items():
-                o, i = [], 0
-                while i < len(s):
-                    if i + 1 < len(s) and s[i] == a and s[i + 1] == b:
-                        o.append(s[i] + s[i + 1])
-                        i += 2
-                    else:
-                        o.append(s[i])
-                        i += 1
-                seqs[w] = o
-        return merges
+    nll_ab = r9ln(3 + 3) - r9ln(3 + 1)  # -ln P(b|a) = ln((cu+V)/(cb+1))
+    nll_ba = r9ln(2 + 3) - r9ln(1 + 1)
+    nll_bc = r9ln(2 + 3) - r9ln(1 + 1)
+    d10 = round((2 * nll_ab + nll_ba) / 3, 6)
+    d11 = round((nll_ab + nll_bc) / 2, 6)
+    assert got[10].n_bigrams == 3 and got[11].n_bigrams == 2
+    assert got[10].avg_nll == d10
+    assert got[11].avg_nll == d11
+    assert got[10].ppl == round(math.exp(d10), 4)
+    assert got[11].ppl == round(math.exp(d11), 4)
+    # the repeated-transition doc is more fluent under the corpus model
+    assert got[10].ppl < got[11].ppl
 
-    words = [("aaaa", 3), ("aaa", 2), ("xy", 3)]
-    assert got == model(words, 5)
+
+def test_cohens_kappa_matches_python_mirror(spark, sf_dir):
+    rows = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("doc_id", "n_chars", "text")
+        .collect()
+    )
+    nc = [r["n_chars"] for r in rows]
+    nt = [len([t for t in r["text"].strip().split() if t]) for r in rows]
+
+    def med(vs):
+        vs = sorted(vs)
+        n = len(vs)
+        return round(
+            vs[n // 2] if n % 2 else (vs[n // 2 - 1] + vs[n // 2]) / 2.0, 6
+        )
+
+    mc, mt = med(nc), med(nt)
+    n11 = n10 = n01 = n00 = 0
+    for c, t in zip(nc, nt):
+        a, b = c > mc, t > mt
+        if a and b:
+            n11 += 1
+        elif a:
+            n10 += 1
+        elif b:
+            n01 += 1
+        else:
+            n00 += 1
+    n = len(rows)
+    po = (n11 + n00) / n
+    pa, pb = (n11 + n10) / n, (n11 + n01) / n
+    pe = pa * pb + (1 - pa) * (1 - pb)
+    kappa = (po - pe) / (1 - pe)
+    row = cohens_kappa_quality_flags_documents(spark, sf_dir).collect()[0]
+    assert (row["n11"], row["n10"], row["n01"], row["n00"]) == (
+        n11, n10, n01, n00,
+    )
+    assert abs(row["kappa"] - kappa) < 1e-5
+    # the two length-flavored raters must agree beyond chance on this corpus
+    assert row["kappa"] > 0

@@ -1,21 +1,42 @@
-"""Schema evolution + partitioned-layout checks (SURVEY.md §2.1 S9-S11, §7 M6)."""
+"""Schema evolution + partitioned-layout checks (operators/evolution_checks.py;
+SURVEY.md §2.1 S9-S11, §7 M6), including the quality rules
+(plans/quality.py) and dynamic partition pruning."""
 
 from __future__ import annotations
 
+import glob
+import os
+from urllib.parse import urlparse
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from data_ingestion_pipeline_spark.operators import evolution_checks as ev
 from data_ingestion_pipeline_spark.operators.evolution_checks import (
+    bucketed_colocated_join,
+    compacted_sorted_orders,
+    compacted_sorted_orders_table,
     partitioned_orders_path,
     schema_evolution_sync,
 )
-from tests.conftest import SF_SMOKE
+from data_ingestion_pipeline_spark.operators.lakehouse_checks import zorder_orders_path
+from data_ingestion_pipeline_spark.operators.scratch import scratch_dir
+from data_ingestion_pipeline_spark.plans import zorder
+from data_ingestion_pipeline_spark.plans.quality import (
+    check_rules,
+    fk_violations,
+    violations,
+)
+from data_ingestion_pipeline_spark.plans.table import ManagedTable
+from data_ingestion_pipeline_spark.sources.catalog import load_table
+from tests.conftest import SF_SMOKE, executed_plan
 
 
 def test_partitioned_scan_prunes_to_one_year(spark):
     path = partitioned_orders_path(spark, SF_SMOKE)
     pruned = spark.read.parquet(path).filter(F.col("o_year") == 1995)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(pruned)
     assert "PartitionFilters" in plan and "o_year" in plan
     # the filtered scan must read exactly the 1995 partition's rows
     raw = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
@@ -39,14 +60,6 @@ def test_schema_evolution_add_drop_cast(spark):
 
 
 def test_quality_violations_quarantine_route(spark):
-    from pyspark.sql import functions as F
-
-    from data_ingestion_pipeline_spark.plans.quality import (
-        check_rules,
-        fk_violations,
-        violations,
-    )
-
     df = spark.createDataFrame(
         [(1, 10.0, "O"), (2, -5.0, "O"), (3, None, "X"), (4, 7.0, "F")],
         "id long, price double, status string",
@@ -67,15 +80,6 @@ def test_quality_violations_quarantine_route(spark):
 
 
 def test_bucketed_join_has_no_exchange(spark):
-    from urllib.parse import urlparse
-
-    from pyspark.sql import functions as F
-
-    from data_ingestion_pipeline_spark.operators.evolution_checks import (
-        bucketed_colocated_join,
-    )
-    from data_ingestion_pipeline_spark.operators.scratch import scratch_dir
-    from tests.conftest import SF_SMOKE
 
     # materialize the bucketed tables, then inspect the join-only plan with
     # broadcast disabled so the bucketed SortMergeJoin is what we see
@@ -96,7 +100,7 @@ def test_bucketed_join_has_no_exchange(spark):
             spark.table(ot),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
-        plan = j._jdf.queryExecution().executedPlan().toString()
+        plan = executed_plan(j)
         assert "SortMergeJoin" in plan
         assert "Exchange" not in plan, "bucketed join should not shuffle"
     finally:
@@ -104,17 +108,6 @@ def test_bucketed_join_has_no_exchange(spark):
 
 
 def test_layout_versions_compact_and_cluster(spark):
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    from data_ingestion_pipeline_spark.operators.evolution_checks import (
-        compacted_sorted_orders,
-        compacted_sorted_orders_table,
-    )
-    from tests.conftest import SF_SMOKE
-
     compacted_sorted_orders(spark, SF_SMOKE).collect()  # builds + self-checks
     table = compacted_sorted_orders_table(spark, SF_SMOKE)
     v1, v2, v3 = table.versions()
@@ -152,14 +145,6 @@ def test_layout_checks_rebuild_on_every_call(spark, monkeypatch):
     """The layout queries exercise package code (sorted_overwrite,
     zorder_frame), so their scratch tables are rebuilt on every call: a
     cached copy would check the output of whatever code built it first."""
-    from data_ingestion_pipeline_spark.operators.evolution_checks import (
-        compacted_sorted_orders_table,
-    )
-    from data_ingestion_pipeline_spark.operators.lakehouse_checks import (
-        zorder_orders_path,
-    )
-    from data_ingestion_pipeline_spark.plans import zorder
-    from data_ingestion_pipeline_spark.plans.table import ManagedTable
 
     calls = {"sorted_overwrite": 0, "zorder_frame": 0}
 
@@ -182,3 +167,37 @@ def test_layout_checks_rebuild_on_every_call(spark, monkeypatch):
         compacted_sorted_orders_table(spark, SF_SMOKE)
         zorder_orders_path(spark, SF_SMOKE)
     assert calls == {"sorted_overwrite": 2, "zorder_frame": 2}
+
+
+def test_check_rules_dotted_rule_names(spark):
+    df = spark.createDataFrame([(1, 2.0), (2, None)], "x long, a double")
+    out = {
+        r.rule: r.n_violations
+        for r in check_rules(
+            df,
+            {"x.notnull": F.col("x").isNotNull(), "a.notnull": F.col("a").isNotNull()},
+        ).collect()
+    }
+    assert out == {"x.notnull": 0, "a.notnull": 1}
+
+
+def test_dpp_ship_year_join_plans_dynamic_pruning(spark):
+    """The DPP demo must actually exercise DYNAMIC partition pruning: the
+    fact scan carries a dynamicpruningexpression partition filter (the
+    year set is join-produced, not foldable), and the surviving years are
+    exactly the ship-window years — static recompute agrees."""
+
+    df = ev.dpp_ship_year_join_orders(spark, SF_SMOKE)
+    assert "dynamicpruningexpression" in executed_plan(df)
+    rows = {r["o_year"]: r["n_orders"] for r in df.collect()}
+    assert set(rows) == {1997, 1998, 1999}
+
+    orders = load_table(spark, SF_SMOKE, "orders")
+    static = {
+        r["y"]: r["n"]
+        for r in orders.groupBy(F.year("o_orderdate").alias("y"))
+        .agg(F.count("*").alias("n"))
+        .filter(F.col("y").isin(1997, 1998, 1999))
+        .collect()
+    }
+    assert rows == static

@@ -2,18 +2,15 @@
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from data_ingestion_pipeline_spark import schemas
 from data_ingestion_pipeline_spark.pipeline import run_pipeline, with_retries
-from data_ingestion_pipeline_spark.plans.merge import (
-    dedupe_last_wins,
-    merge_upsert,
-)
+from data_ingestion_pipeline_spark.plans.merge import dedupe_last_wins, merge_upsert
 from data_ingestion_pipeline_spark.plans.schema_evolution import (
     conform_to_schema,
     diff_schema,
@@ -28,8 +25,6 @@ def _batch(spark, rows):
 
 
 def test_dedupe_last_wins(spark):
-    import datetime as dt
-
     b = _batch(
         spark,
         [
@@ -44,8 +39,6 @@ def test_dedupe_last_wins(spark):
 
 
 def test_merge_idempotent_and_last_wins(spark, tmp_path):
-    import datetime as dt
-
     t = ManagedTable(spark, str(tmp_path / "t"))
     b1 = _batch(
         spark,
@@ -151,10 +144,6 @@ def test_merge_upsert_evolves_schema(spark, tmp_path):
     """evolve_schema=True: a batch with a NEW column widens the table (old
     rows get typed NULLs); without the flag the widening batch is rejected
     (silent drift stays opt-in)."""
-    from pyspark.sql import functions as F
-
-    from data_ingestion_pipeline_spark.plans.merge import merge_upsert
-    from data_ingestion_pipeline_spark.plans.table import ManagedTable
 
     table = ManagedTable(spark, str(tmp_path / "t"))
     base = spark.createDataFrame(
@@ -183,7 +172,6 @@ def test_merge_folds_pending_sidecars(spark, tmp_path):
     """A merge over a version with pending equality deletes folds them:
     the deleted key stays gone, and the committed version carries no
     sidecars."""
-    import datetime as dt
 
     t = ManagedTable(spark, str(tmp_path / "t"))
     d1, d2 = dt.datetime(2023, 1, 1), dt.datetime(2023, 1, 2)

@@ -7,15 +7,32 @@ pin the load-bearing plan features at fixture scale.
 
 from __future__ import annotations
 
+import gc
+import re
+import time
+
 import pytest
+from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_SMOKE
+from data_ingestion_pipeline_spark import registry
+from data_ingestion_pipeline_spark.operators import llm_data
+from data_ingestion_pipeline_spark.operators import tpch_queries as t
+from data_ingestion_pipeline_spark.operators.llm_data import (
+    _ann_query_batch,
+    ann_ivfpq_topk_embeddings,
+)
+from data_ingestion_pipeline_spark.operators.mlprep_checks import _cov_partials
+from data_ingestion_pipeline_spark.operators.timeseries_checks import _daily
+from data_ingestion_pipeline_spark.plans.join_strategies import (
+    broadcast_if_small,
+    plan_size_estimate,
+)
+from data_ingestion_pipeline_spark.similarity.brute_force import topk_cosine_batch
+from data_ingestion_pipeline_spark.sources.catalog import load_table
+from tests.conftest import SF_SMOKE, executed_plan
 
-
-def _plan(spark, name: str) -> str:
-    df = entrymod.queries()[name](spark, SF_SMOKE)
-    return df._jdf.queryExecution().executedPlan().toString()
+QUERIES = entrymod.queries()
 
 
 @pytest.mark.parametrize(
@@ -29,7 +46,7 @@ def _plan(spark, name: str) -> str:
     ],
 )
 def test_dim_joins_broadcast(spark, name):
-    plan = _plan(spark, name)
+    plan = executed_plan(QUERIES[name](spark, SF_SMOKE))
     assert "BroadcastHashJoin" in plan, f"{name} lost its broadcast join"
     assert "BroadcastNestedLoop" not in plan
     assert "CartesianProduct" not in plan
@@ -37,34 +54,33 @@ def test_dim_joins_broadcast(spark, name):
 
 def test_filters_reach_parquet_scan(spark):
     # Q2's p_size predicate and Q5's key predicate must be in PushedFilters.
-    assert "PushedFilters: [IsNotNull(p_size), LessThan(p_size,10)]" in _plan(
-        spark, "low_stock"
-    )
-    plan = _plan(spark, "inventory_status")
+    plan = executed_plan(QUERIES["low_stock"](spark, SF_SMOKE))
+    assert "PushedFilters: [IsNotNull(p_size), LessThan(p_size,10)]" in plan
+    plan = executed_plan(QUERIES["inventory_status"](spark, SF_SMOKE))
     assert "EqualTo(p_partkey,1)" in plan
     # and the key filter crosses the outer join into the lineitem scan
     assert "EqualTo(l_partkey,1)" in plan
 
 
 def test_aggregates_are_two_phase(spark):
-    plan = _plan(spark, "revenue_per_product")
+    plan = executed_plan(QUERIES["revenue_per_product"](spark, SF_SMOKE))
     assert "partial_sum" in plan, "map-side partial aggregation missing"
 
 
 def test_global_topk_avoids_full_sort(spark):
-    plan = _plan(spark, "top_revenue_orders")
+    plan = executed_plan(QUERIES["top_revenue_orders"](spark, SF_SMOKE))
     assert "TakeOrderedAndProject" in plan, "LIMIT degraded to a full global sort"
 
 
 def test_semi_anti_join_strategies(spark):
-    assert "LeftSemi" in _plan(spark, "exists_semi_join")
-    assert "LeftAnti" in _plan(spark, "anti_join_new_keys")
+    assert "LeftSemi" in executed_plan(QUERIES["exists_semi_join"](spark, SF_SMOKE))
+    assert "LeftAnti" in executed_plan(QUERIES["anti_join_new_keys"](spark, SF_SMOKE))
 
 
 def test_latest_event_aggregates_before_shuffle(spark):
     """Argmax-by-agg must keep its map-side partial max (the whole point
     vs the window form: one row per (partition, key) crosses the wire)."""
-    plan = _plan(spark, "latest_event_per_user")
+    plan = executed_plan(QUERIES["latest_event_per_user"](spark, SF_SMOKE))
     assert "partial_max" in plan
     assert "Window" not in plan
 
@@ -72,26 +88,26 @@ def test_latest_event_aggregates_before_shuffle(spark):
 def test_gapfill_grid_sides_broadcast(spark):
     """The calendar × user grid must broadcast; a shuffled cross join of
     the grid would dominate at scale."""
-    plan = _plan(spark, "daily_user_activity_gapfilled")
+    plan = executed_plan(QUERIES["daily_user_activity_gapfilled"](spark, SF_SMOKE))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
 
 def test_outlier_stats_join_broadcasts(spark):
-    plan = _plan(spark, "event_value_outliers")
+    plan = executed_plan(QUERIES["event_value_outliers"](spark, SF_SMOKE))
     assert "BroadcastHashJoin" in plan
     assert "Window" not in plan
 
 
 def test_tfidf_df_relation_broadcasts(spark):
-    plan = _plan(spark, "tfidf_top_terms")
+    plan = executed_plan(QUERIES["tfidf_top_terms"](spark, SF_SMOKE))
     assert "BroadcastHashJoin" in plan, "df(term) relation lost its broadcast"
 
 
 def test_curation_pipeline_single_wide_shuffle(spark):
     """Dedup → gate → sample must stay one shuffle (the fingerprint
     groupBy): gate and sample are post-aggregation projections."""
-    plan = _plan(spark, "curation_pipeline_documents")
+    plan = executed_plan(QUERIES["curation_pipeline_documents"](spark, SF_SMOKE))
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 1, f"expected 1 hash exchange, saw {n_exchanges}"
 
@@ -103,10 +119,9 @@ def test_simhash_candidates_are_banded_not_all_pairs(spark):
     # retired from the registry in round 10 (evidence carried by the
     # md5-replay sibling) but still the production path — pin via the
     # function, not the driver surface
-    from data_ingestion_pipeline_spark.operators import llm_data
 
     df = llm_data.simhash_near_dup_documents(spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or (
@@ -116,10 +131,9 @@ def test_simhash_candidates_are_banded_not_all_pairs(spark):
 
 def test_minhash_candidates_are_banded_not_all_pairs(spark):
     """Same banding guarantee for MinHash-LSH candidate generation."""
-    from data_ingestion_pipeline_spark.operators import llm_data
 
     df = llm_data.minhash_near_dup_documents(spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -127,20 +141,20 @@ def test_minhash_candidates_are_banded_not_all_pairs(spark):
 def test_corpus_mixture_is_map_only_and_prunes_text(spark):
     """Hash-based mixture sampling must stay a shuffle-free map-side filter
     that never reads the text column."""
-    plan = _plan(spark, "corpus_mixture_documents")
+    plan = executed_plan(QUERIES["corpus_mixture_documents"](spark, SF_SMOKE))
     assert "Exchange hashpartitioning" not in plan
     assert "text" not in plan.split("ReadSchema:")[-1]
 
 
 def test_pack_documents_single_window_shuffle(spark):
-    plan = _plan(spark, "pack_documents_context_windows")
+    plan = executed_plan(QUERIES["pack_documents_context_windows"](spark, SF_SMOKE))
     assert plan.count("Exchange hashpartitioning") == 1
 
 
 def test_knn_graph_no_cartesian(spark):
     """The B×B block grid must replicate via broadcast joins, never a
     cartesian/BNLJ of the vector relation against itself."""
-    plan = _plan(spark, "knn_graph_embeddings")
+    plan = executed_plan(QUERIES["knn_graph_embeddings"](spark, SF_SMOKE))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -148,7 +162,7 @@ def test_knn_graph_no_cartesian(spark):
 def test_decontamination_benchmark_side_broadcasts(spark):
     """The benchmark shingle set must be the broadcast side — the corpus is
     the big side at scale and must never shuffle on the shingle key."""
-    plan = _plan(spark, "decontaminate_documents")
+    plan = executed_plan(QUERIES["decontaminate_documents"](spark, SF_SMOKE))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
 
@@ -157,10 +171,9 @@ def test_embedding_lsh_candidates_carry_ids_not_vectors(spark):
     """The banding self-join must exchange only (id, band, bucket) rows —
     vectors re-attach after the distinct. A vector-carrying exchange shows
     up as the array column inside the hashpartitioning exchange subtree."""
-    df = entrymod.queries()["embedding_lsh_verified_near_dup"](spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    df = QUERIES["embedding_lsh_verified_near_dup"](spark, SF_SMOKE)
+    plan = executed_plan(df)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
-    import re
 
     for m in re.finditer(r"Exchange hashpartitioning\(([^)]*)\)", plan):
         keys = m.group(1)
@@ -170,7 +183,7 @@ def test_embedding_lsh_candidates_carry_ids_not_vectors(spark):
 def test_zorder_box_predicates_push_down(spark):
     """Both dimensions of the 2-D box must reach the parquet scan as pushed
     filters over the z-ordered layout."""
-    plan = _plan(spark, "zorder_clustered_orders")
+    plan = executed_plan(QUERIES["zorder_clustered_orders"](spark, SF_SMOKE))
     pushed = plan.split("PushedFilters")[1].split("ReadSchema")[0]
     # the rendered filter list truncates, so pin the leading entries
     assert "GreaterThanOrEqual(o_custkey,100)" in pushed
@@ -178,12 +191,12 @@ def test_zorder_box_predicates_push_down(spark):
 
 
 def test_scd2_no_cartesian_and_one_batch_join(spark):
-    plan = _plan(spark, "scd2_customer_dimension")
+    plan = executed_plan(QUERIES["scd2_customer_dimension"](spark, SF_SMOKE))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
 
 
 def test_rollup_reaggregates_partials_two_phase(spark):
-    plan = _plan(spark, "daily_rollup_from_hourly_events")
+    plan = executed_plan(QUERIES["daily_rollup_from_hourly_events"](spark, SF_SMOKE))
     # both levels are hash aggregates; no sort-based fallback
     assert plan.count("HashAggregate") >= 4  # partial+final at each level
 
@@ -192,14 +205,14 @@ def test_multitable_ann_plan_shape(spark):
     """The multi-table LSH candidate path must be hash joins end to end
     (broadcast query index, id re-attach) — never a cartesian/NL join —
     and the top-k per query must stay a ranking window, not a global sort."""
-    plan = _plan(spark, "ann_lsh_topk_embeddings")
+    plan = executed_plan(QUERIES["ann_lsh_topk_embeddings"](spark, SF_SMOKE))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoop" not in plan
 
 
 def test_vocab_topv_avoids_full_sort(spark):
-    plan = _plan(spark, "build_vocab_documents")
+    plan = executed_plan(QUERIES["build_vocab_documents"](spark, SF_SMOKE))
     assert "TakeOrderedAndProject" in plan, "top-V degraded to a full sort"
     assert "partial_count" in plan or "partial_sum" in plan
 
@@ -207,7 +220,7 @@ def test_vocab_topv_avoids_full_sort(spark):
 def test_bloom_probe_runs_before_verify_join(spark):
     """The Bloom probe must be a scan-side filter (ArrowEvalPython below
     the verify join), so corpus shingles are pruned before any join."""
-    plan = _plan(spark, "bloom_decontaminate_documents")
+    plan = executed_plan(QUERIES["bloom_decontaminate_documents"](spark, SF_SMOKE))
     assert "ArrowEvalPython" in plan
     # the only joins are broadcast-hash (verify vs bench shingles)
     assert "CartesianProduct" not in plan
@@ -217,8 +230,8 @@ def test_bloom_probe_runs_before_verify_join(spark):
 def test_shard_shuffle_window_is_partitioned(spark):
     """The within-shard rank must be a PARTITIONED window — a global
     (single-partition) window would serialize the corpus through one task."""
-    df = entrymod.queries()["shard_shuffle_documents"](spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    df = QUERIES["shard_shuffle_documents"](spark, SF_SMOKE)
+    plan = executed_plan(df)
     assert "Window" in plan
     # partition spec present: hashpartitioning on shard feeds the window
     assert "hashpartitioning(shard" in plan
@@ -228,7 +241,7 @@ def test_fuzzy_pairs_is_blocked_equi_join(spark):
     """Entity matching must join on the blocking key — a cartesian or
     nested-loop pair enumeration is the scale-killer blocking exists to
     prevent."""
-    plan = _plan(spark, "fuzzy_part_name_pairs")
+    plan = executed_plan(QUERIES["fuzzy_part_name_pairs"](spark, SF_SMOKE))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoop" not in plan
     assert "Join" in plan
@@ -237,24 +250,24 @@ def test_fuzzy_pairs_is_blocked_equi_join(spark):
 def test_markov_windows_are_user_partitioned(spark):
     """The bigram lead() must partition by user — a global order-by window
     would funnel the whole event stream through one task."""
-    plan = _plan(spark, "markov_event_transitions")
+    plan = executed_plan(QUERIES["markov_event_transitions"](spark, SF_SMOKE))
     assert "hashpartitioning(user_id" in plan
 
 
 def test_interpolation_windows_are_user_partitioned(spark):
-    plan = _plan(spark, "interpolated_daily_user_value")
+    plan = executed_plan(QUERIES["interpolated_daily_user_value"](spark, SF_SMOKE))
     assert "hashpartitioning(user_id" in plan
     assert "CartesianProduct" not in plan
 
 
 def test_scd2_asof_dim_broadcasts(spark):
-    plan = _plan(spark, "scd2_asof_lookup")
+    plan = executed_plan(QUERIES["scd2_asof_lookup"](spark, SF_SMOKE))
     assert "BroadcastHashJoin" in plan, "as-of dim join lost its broadcast"
     assert "CartesianProduct" not in plan
 
 
 def test_kmeans_centroids_broadcast_no_cartesian(spark):
-    plan = _plan(spark, "kmeans_assign_embeddings")
+    plan = executed_plan(QUERIES["kmeans_assign_embeddings"](spark, SF_SMOKE))
     assert "BroadcastHashJoin" in plan, "centroid side must broadcast"
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoop" not in plan
@@ -263,14 +276,14 @@ def test_kmeans_centroids_broadcast_no_cartesian(spark):
 def test_lateral_topn_plans_as_partitioned_rank(spark):
     # the correlated LATERAL LIMIT must decorrelate to a window rank, never
     # re-scan orders per customer row
-    plan = _plan(spark, "lateral_topn_orders_per_customer")
+    plan = executed_plan(QUERIES["lateral_topn_orders_per_customer"](spark, SF_SMOKE))
     assert "Window" in plan, "LATERAL did not decorrelate to a window rank"
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoop" not in plan
 
 
 def test_grouping_sets_single_expand(spark):
-    plan = _plan(spark, "grouping_sets_revenue")
+    plan = executed_plan(QUERIES["grouping_sets_revenue"](spark, SF_SMOKE))
     assert plan.count("Expand") >= 1, "grouping sets should plan one Expand"
     assert "partial_" in plan, "two-phase aggregation lost under Expand"
 
@@ -279,32 +292,32 @@ def test_pagerank_iterations_reuse_checkpointed_edges(spark):
     # the loop-invariant edge+degree join is checkpointed: iterations must
     # scan the RDD, not re-run the basket self-join (no parquet scan of
     # lineitem may appear in the iterated plan)
-    plan = _plan(spark, "pagerank_copurchase_parts")
+    plan = executed_plan(QUERIES["pagerank_copurchase_parts"](spark, SF_SMOKE))
     assert "Scan ExistingRDD" in plan, "edges lost their checkpoint"
     assert "lineitem" not in plan, "an iteration re-reads the raw table"
 
 
 def test_weighted_sample_is_topk_not_full_sort(spark):
-    plan = _plan(spark, "weighted_sample_documents")
+    plan = executed_plan(QUERIES["weighted_sample_documents"](spark, SF_SMOKE))
     assert "CartesianProduct" not in plan
 
 
 def test_weighted_sample_top50_is_take_ordered(spark):
-    plan = _plan(spark, "weighted_sample_documents")
+    plan = executed_plan(QUERIES["weighted_sample_documents"](spark, SF_SMOKE))
     assert "TakeOrderedAndProject" in plan, (
         "weighted-sample top-50 degraded to a global window sort"
     )
 
 
 def test_fuzzy_block_join_spreads_on_block_key(spark):
-    plan = _plan(spark, "fuzzy_part_name_pairs")
+    plan = executed_plan(QUERIES["fuzzy_part_name_pairs"](spark, SF_SMOKE))
     assert "hashpartitioning(p_size" in plan, (
         "levenshtein block join lost its explicit key spread"
     )
 
 
 def test_pagerank_self_join_copartitioned(spark):
-    plan = _plan(spark, "pagerank_copurchase_parts")
+    plan = executed_plan(QUERIES["pagerank_copurchase_parts"](spark, SF_SMOKE))
     assert "Scan ExistingRDD" in plan  # checkpointed loop-invariant edges
 
 
@@ -317,7 +330,6 @@ def _unpartitioned_window_count(plan: str) -> int:
     order spec (unpartitioned window — the single-partition scale-killer);
     order specs are recognizable by their ASC/DESC direction markers.
     """
-    import re
 
     n = 0
     for line in plan.splitlines():
@@ -357,7 +369,7 @@ def test_rank_windows_cut_before_ranking(spark, name, limit):
     TakeOrderedAndProject BEFORE the ranking window, and no window in the
     plan may run with an empty partition spec (the K-row rank window rides
     a constant-valued non-foldable key)."""
-    plan = _plan(spark, name)
+    plan = executed_plan(QUERIES[name](spark, SF_SMOKE))
     assert "TakeOrderedAndProject" in plan and limit in plan, (
         f"{name} lost its pre-rank top-k cut"
     )
@@ -370,7 +382,7 @@ def test_encoding_advisor_runs_are_partition_local(spark):
     """Run-length profiling must never global-sort the fact table: range
     partition on the layout key, chunk-local lag windows, and a tiny
     boundary stitch — evaluated once (stack unpivot), not per column."""
-    plan = _plan(spark, "encoding_advisor_orders")
+    plan = executed_plan(QUERIES["encoding_advisor_orders"](spark, SF_SMOKE))
     assert plan.count("rangepartitioning(o_orderkey") == 1, (
         "profile scan subtree duplicated or range partitioning lost"
     )
@@ -389,7 +401,7 @@ def test_heaps_law_cumulatives_are_chunk_stitched(spark):
     moved the pin off the CacheManager), so the visible plan scans an
     ExistingRDD; the stitch evidence is the pid-partitioned windows and
     the zero-unpartitioned-window census."""
-    plan = _plan(spark, "heaps_law_fit_documents")
+    plan = executed_plan(QUERIES["heaps_law_fit_documents"](spark, SF_SMOKE))
     assert "hashpartitioning(pid" in plan, "heaps chunk-local windows lost"
     assert "ExistingRDD" in plan, (
         "heaps chunk pin lost (range exchange no longer checkpointed)"
@@ -403,9 +415,8 @@ def test_rfm_approx_has_no_window(spark):
     """The approx RFM twin must score against broadcast approx-quantile
     boundaries — no ntile, no window, no sort-for-window anywhere in the
     plan (round-5 verdict item 4)."""
-    import re
 
-    plan = _plan(spark, "rfm_segments_customers_approx")
+    plan = executed_plan(QUERIES["rfm_segments_customers_approx"](spark, SF_SMOKE))
     assert "Window" not in plan, "approx RFM grew a window"
     assert not re.search(r"\bntile\(", plan), (
         "approx RFM regressed to ntile scoring"
@@ -426,27 +437,15 @@ def test_brute_force_topk_is_two_phase(spark):
     reaching into it. The property therefore lives on the standalone
     subtree plan the gates pin: assert it there (plus one composed,
     unpinned consumer, hard_negative_mining)."""
-    from data_ingestion_pipeline_spark.operators.llm_data import (
-        _ann_query_batch,
-    )
-    from data_ingestion_pipeline_spark.similarity.brute_force import (
-        topk_cosine_batch,
-    )
-    from data_ingestion_pipeline_spark.sources.catalog import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     for k in (10, 20):
-        plan = (
-            topk_cosine_batch(emb, _ann_query_batch(emb), k=k)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
+        plan = executed_plan(topk_cosine_batch(emb, _ann_query_batch(emb), k=k))
         assert "SPARK_PARTITION_ID" in plan, "local top-k phase lost"
         assert _unpartitioned_window_count(plan) == 0, (
             "partition-less ranking window over the scored corpus"
         )
-    plan = _plan(spark, "hard_negative_mining_embeddings")
+    plan = executed_plan(QUERIES["hard_negative_mining_embeddings"](spark, SF_SMOKE))
     assert "SPARK_PARTITION_ID" in plan, "local top-k phase lost"
     assert _unpartitioned_window_count(plan) == 0, (
         "hard_negative_mining has a partition-less ranking window"
@@ -458,18 +457,9 @@ def test_pca_covariance_is_arrow_kernel(spark):
     partial kernel — one 2080-row block per batch, no posexplode and no
     self-join on vec_id anywhere in the subtree (round-5 verdict item 3:
     the old shape shuffled 2×N×64 rows and fanned codegen out 2080×)."""
-    from data_ingestion_pipeline_spark.operators.mlprep_checks import (
-        _cov_partials,
-    )
-    from data_ingestion_pipeline_spark.sources.catalog import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    plan = (
-        _cov_partials(emb, [0.0] * 64)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = executed_plan(_cov_partials(emb, [0.0] * 64))
     assert "MapInArrow" in plan, "covariance kernel lost"
     for node in ("Join", "Generate", "Exchange"):
         assert node not in plan, (
@@ -479,7 +469,7 @@ def test_pca_covariance_is_arrow_kernel(spark):
 
 
 def test_vocab_coverage_broadcasts_vocab_and_cuts_topv(spark):
-    plan = _plan(spark, "vocab_coverage_documents")
+    plan = executed_plan(QUERIES["vocab_coverage_documents"](spark, SF_SMOKE))
     assert "TakeOrderedAndProject" in plan, "vocab cut degraded to a full sort"
     assert "BroadcastHashJoin" in plan, "vocab membership join lost its broadcast"
     assert "CartesianProduct" not in plan
@@ -488,21 +478,21 @@ def test_vocab_coverage_broadcasts_vocab_and_cuts_topv(spark):
 def test_winnowing_pairs_join_on_fingerprint_hash(spark):
     """The pair step must be an equi-join on the fingerprint hash (the
     LSH band-join shape) — never a nested-loop pair enumeration."""
-    plan = _plan(spark, "winnowing_near_copy_pairs_documents")
+    plan = executed_plan(QUERIES["winnowing_near_copy_pairs_documents"](spark, SF_SMOKE))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoop" not in plan
     assert "hashpartitioning(fp" in plan or "BroadcastHashJoin" in plan
 
 
 def test_mcv_stats_single_scan_and_partitioned_rank(spark):
-    plan = _plan(spark, "mcv_stats_orders")
+    plan = executed_plan(QUERIES["mcv_stats_orders"](spark, SF_SMOKE))
     # one melt scan of orders for the counts side (plus the count(*) side)
     assert plan.count("Scan parquet") <= 2
     assert "hashpartitioning(column_name" in plan, "MCV rank window unpartitioned"
 
 
 def test_table_changes_single_key_join(spark):
-    plan = _plan(spark, "table_changes_versions")
+    plan = executed_plan(QUERIES["table_changes_versions"](spark, SF_SMOKE))
     assert "CartesianProduct" not in plan
     assert plan.count("SortMergeJoin FullOuter") + plan.count(
         "ShuffledHashJoin FullOuter"
@@ -510,7 +500,7 @@ def test_table_changes_single_key_join(spark):
 
 
 def test_checksum_is_one_scan_one_agg(spark):
-    plan = _plan(spark, "table_checksum_orders")
+    plan = executed_plan(QUERIES["table_checksum_orders"](spark, SF_SMOKE))
     assert "partial" in plan, "checksum lost its map-side partial aggregation"
     assert "Exchange SinglePartition" in plan  # the final 1-row merge only
     assert plan.count("Scan parquet") == 1
@@ -519,12 +509,8 @@ def test_checksum_is_one_scan_one_agg(spark):
 def test_ivfpq_no_cartesian_and_broadcast_probes(spark):
     # called via the exported function (the registry name retired in
     # round 11 — rows-only endgame); the plan contract is unchanged
-    from data_ingestion_pipeline_spark.operators.llm_data import (
-        ann_ivfpq_topk_embeddings,
-    )
-
     df = ann_ivfpq_topk_embeddings(spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan, "probe/refine joins lost broadcast"
 
@@ -533,7 +519,7 @@ def test_bm25_topk_is_take_ordered_and_broadcasts_df(spark):
     """BM25's top-20 cut must be TakeOrderedAndProject (never a global rank
     window over the scored corpus) and the ≤5-row df relation must ride a
     broadcast join back onto tf."""
-    plan = _plan(spark, "bm25_search_documents")
+    plan = executed_plan(QUERIES["bm25_search_documents"](spark, SF_SMOKE))
     assert "TakeOrderedAndProject" in plan, "bm25 lost its pre-rank top-k cut"
     assert "BroadcastHashJoin" in plan, "bm25 df join lost its broadcast"
     assert _unpartitioned_window_count(plan) == 0, (
@@ -544,14 +530,14 @@ def test_bm25_topk_is_take_ordered_and_broadcasts_df(spark):
 def test_cdc_chunk_windows_are_doc_partitioned(spark):
     """CDC chunk-id running sums must partition by doc — a content-defined
     chunker that global-sorts the token stream would be a scale-killer."""
-    plan = _plan(spark, "cdc_chunk_dedup_documents")
+    plan = executed_plan(QUERIES["cdc_chunk_dedup_documents"](spark, SF_SMOKE))
     assert "CartesianProduct" not in plan
     assert "hashpartitioning(doc_id" in plan, "chunk window lost doc partitioning"
     assert _unpartitioned_window_count(plan) == 0
 
 
 def test_l_diversity_windows_are_qi_partitioned(spark):
-    plan = _plan(spark, "l_diversity_report_events")
+    plan = executed_plan(QUERIES["l_diversity_report_events"](spark, SF_SMOKE))
     assert _unpartitioned_window_count(plan) == 0, (
         "l-diversity group-total window lost its QI partitioning"
     )
@@ -561,7 +547,7 @@ def test_fk_inclusion_audit_uses_anti_joins_on_distinct_keys(spark):
     """Each containment check must be a left-anti join over DISTINCT child
     keys (aggregate-then-join) — the raw fact table must never be the join
     probe side."""
-    plan = _plan(spark, "fk_inclusion_audit")
+    plan = executed_plan(QUERIES["fk_inclusion_audit"](spark, SF_SMOKE))
     assert "LeftAnti" in plan, "fk audit lost its anti-join shape"
     assert "CartesianProduct" not in plan
 
@@ -569,7 +555,7 @@ def test_fk_inclusion_audit_uses_anti_joins_on_distinct_keys(spark):
 def test_tpch_q1_is_one_scan_pushed_cutoff(spark):
     """Q1 must stay the scan-agg yardstick: one lineitem scan, shipdate
     cutoff pushed to the parquet reader, no joins of any kind."""
-    plan = _plan(spark, "tpch_q1_pricing_summary")
+    plan = executed_plan(QUERIES["tpch_q1_pricing_summary"](spark, SF_SMOKE))
     assert plan.count("Scan parquet") == 1
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual" in plan
     assert "Join" not in plan
@@ -578,7 +564,7 @@ def test_tpch_q1_is_one_scan_pushed_cutoff(spark):
 def test_tpch_q3_takeordered_head(spark):
     """Q3's top-10 must be a bounded TakeOrdered, never a global sort of
     the per-order aggregate."""
-    plan = _plan(spark, "tpch_q3_shipping_priority")
+    plan = executed_plan(QUERIES["tpch_q3_shipping_priority"](spark, SF_SMOKE))
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
 
@@ -587,7 +573,7 @@ def test_tpch_q5_all_dims_broadcast_no_cartesian(spark):
     """Q5's six-table join must close entirely through broadcast hash
     joins at fixture scale (every dim side is bounded) — the two-column
     supplier condition must not degrade to a nested loop."""
-    plan = _plan(spark, "tpch_q5_local_supplier_volume")
+    plan = executed_plan(QUERIES["tpch_q5_local_supplier_volume"](spark, SF_SMOKE))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoop" not in plan
     assert plan.count("BroadcastHashJoin") >= 4
@@ -597,7 +583,7 @@ def test_tpch_q10_dims_join_after_aggregate(spark):
     """Q10's customer/nation payload must attach to the per-customer
     AGGREGATE (broadcast side), not ride the orders-lineitem fact shuffle:
     the aggregate over o_custkey sits below the dim broadcast join."""
-    plan = _plan(spark, "tpch_q10_returned_items")
+    plan = executed_plan(QUERIES["tpch_q10_returned_items"](spark, SF_SMOKE))
     assert "TakeOrderedAndProject" in plan
     assert "BroadcastHashJoin" in plan
     # c_name must not appear in any shuffle exchange output (it only
@@ -614,16 +600,12 @@ def test_tpch_customer_broadcast_is_size_gated(spark):
     shows BroadcastHashJoin); with the ceiling forced below the dimension
     size the SAME code path must yield a sort-merge/shuffled-hash join —
     and the same rows."""
-    from data_ingestion_pipeline_spark.plans.join_strategies import (
-        broadcast_if_small,
-        plan_size_estimate,
-    )
 
-    baseline = _plan(spark, "tpch_q3_shipping_priority")
+    baseline = executed_plan(QUERIES["tpch_q3_shipping_priority"](spark, SF_SMOKE))
     assert "BroadcastHashJoin" in baseline
     expected = {
         tuple(r)
-        for r in entrymod.queries()["tpch_q3_shipping_priority"](
+        for r in QUERIES["tpch_q3_shipping_priority"](
             spark, SF_SMOKE
         ).collect()
     }
@@ -631,8 +613,8 @@ def test_tpch_customer_broadcast_is_size_gated(spark):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
     try:
-        df = entrymod.queries()["tpch_q3_shipping_priority"](spark, SF_SMOKE)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        df = QUERIES["tpch_q3_shipping_priority"](spark, SF_SMOKE)
+        plan = executed_plan(df)
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, (
             "gate failed open: customer side still broadcast above ceiling"
         )
@@ -643,7 +625,6 @@ def test_tpch_customer_broadcast_is_size_gated(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
     # unit surface: explicit thresholds override the session ceiling
-    from data_ingestion_pipeline_spark.sources.catalog import load_table
 
     dim = load_table(spark, SF_SMOKE, "customer").select("c_custkey")
     assert plan_size_estimate(dim) > 0
@@ -657,7 +638,7 @@ def test_tpch_q21_double_correlation_is_semi_plus_anti(spark):
     """Q21's EXISTS + NOT-EXISTS double correlation must plan as a
     left-semi plus a left-anti join against the checkpointed order-grain
     relation — never a cartesian, never a window."""
-    plan = _plan(spark, "tpch_q21_shaped_waiting_suppliers")
+    plan = executed_plan(QUERIES["tpch_q21_shaped_waiting_suppliers"](spark, SF_SMOKE))
     assert "LeftSemi" in plan
     assert "LeftAnti" in plan
     assert "CartesianProduct" not in plan
@@ -669,7 +650,7 @@ def test_tpch_q2_min_cost_is_aggregate_join_back(spark):
     """Q2's correlated scalar-min must run as aggregate + equality
     join-back on the checkpointed pair-grain relation — no window over
     the fact table, no cartesian."""
-    plan = _plan(spark, "tpch_q2_shaped_min_cost_supplier")
+    plan = executed_plan(QUERIES["tpch_q2_shaped_min_cost_supplier"](spark, SF_SMOKE))
     assert "Window" not in plan
     assert "CartesianProduct" not in plan
     assert "ExistingRDD" in plan, "pair_cost pin lost"
@@ -680,9 +661,8 @@ def test_tpch_q13_zero_order_customers_survive(spark, sf_dir):
     """Q13 must keep zero-order customers (the left-outer's whole point):
     the c_count = 0 bucket exists and equals customers minus distinct
     order-holders under the priority filter."""
-    from data_ingestion_pipeline_spark import registry
 
-    plan = _plan(spark, "tpch_q13_customer_distribution")
+    plan = executed_plan(QUERIES["tpch_q13_customer_distribution"](spark, SF_SMOKE))
     assert "LeftOuter" in plan
     rows = {
         r.c_count: r.custdist
@@ -690,8 +670,6 @@ def test_tpch_q13_zero_order_customers_survive(spark, sf_dir):
             spark, sf_dir
         ).collect()
     }
-    from data_ingestion_pipeline_spark.sources.catalog import load_table
-    from pyspark.sql import functions as F
 
     n_cust = load_table(spark, sf_dir, "customer").count()
     holders = (
@@ -711,14 +689,13 @@ def test_daily_helper_pin_contract(spark):
     the corpus aggregation per branch), while the by_type=True variant
     keeps its parquet lineage so a caller's event_type filter can still
     push down to the scan."""
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import _daily
 
     pinned = _daily(spark, SF_SMOKE, by_type=False)
-    p = pinned._jdf.queryExecution().executedPlan().toString()
+    p = executed_plan(pinned)
     assert "Scan ExistingRDD" in p and "Scan parquet" not in p
 
     unpinned = _daily(spark, SF_SMOKE, by_type=True)
-    u = unpinned._jdf.queryExecution().executedPlan().toString()
+    u = executed_plan(unpinned)
     assert "Scan parquet" in u and "Scan ExistingRDD" not in u
 
 
@@ -736,10 +713,162 @@ def test_duplicated_subtree_pins_hold(spark):
         ("item_item_cosine_topk_parts", 0),
         ("isotonic_calibration_documents", 0),
     ]:
-        plan = _plan(spark, name)
+        plan = executed_plan(QUERIES[name](spark, SF_SMOKE))
         n_scans = plan.count("Scan parquet")
         assert n_scans <= max_scans, (
             f"{name}: {n_scans} parquet scans in the final plan "
             f"(expected <= {max_scans}) — a batch-6 pin was dropped"
         )
         assert "Scan ExistingRDD" in plan, f"{name} lost its pin"
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "ks_test_purchase_view",
+        "pareto_frontier_parts",
+        "compaction_plan_orders",
+        "seasonal_decompose_daily",
+        "calibration_report_documents",
+        "multimodal_audio_chunks",
+        "t_closeness_report_events",
+        "hybrid_search_rrf_documents",
+        "mann_kendall_daily_trend",
+        "ks_by_event_type_bh",
+        "psi_value_drift_halves",
+        "durbin_watson_daily_trend",
+        "holt_linear_daily_forecast",
+        "countmin_event_types",
+        "pca_power_iteration_embeddings",
+        "fellegi_sunter_linkage_parts",
+        "oversample_minority_documents",
+        "merge_on_read_delete_events",
+        "poisson_bootstrap_ci_orders",
+        "isotonic_calibration_documents",
+        "holt_winters_seasonal_daily",
+        "mixture_temperature_allocation",
+        "embedding_int8_quantization_report",
+        "length_bucket_padding_report",
+        "curriculum_schedule_documents",
+        "self_similarity_sample_documents",
+        "kfold_cv_stump_documents",
+        "cross_source_overlap_matrix",
+        "misra_gries_heavy_hitters_events",
+    ],
+)
+def test_windows_are_partitioned_and_no_cartesian(spark, name):
+
+    plan = executed_plan(QUERIES[name](spark, SF_SMOKE))
+    assert _unpartitioned_window_count(plan) == 0, (
+        f"{name} has a partition-less window (single-partition sort)"
+    )
+    assert "CartesianProduct" not in plan
+
+
+@pytest.mark.parametrize(
+    "name, key",
+    [
+        ("ks_test_purchase_view", "rangepartitioning(value"),
+        ("pareto_frontier_parts", "rangepartitioning(price"),
+        ("compaction_plan_orders", "rangepartitioning(day"),
+    ],
+)
+def test_chunk_stitch_queries_range_partition(spark, name, key):
+    """The chunk-stitch pattern's load-bearing feature: the corpus-scale
+    cumulative pass rides a range partitioning, not a global sort."""
+    plan = executed_plan(QUERIES[name](spark, SF_SMOKE))
+    assert key in plan, f"{name} lost its range-partitioned chunk pass"
+
+
+def test_poisson_bootstrap_plan_two_phase_no_sort(spark):
+    """Plan shape: explode feeds a partial-aggregated groupBy (map-side
+    combine before the exchange); no unpartitioned window, no cartesian,
+    no global sort of the fact table."""
+
+    plan = executed_plan(QUERIES["poisson_bootstrap_ci_orders"](spark, SF_SMOKE))
+    assert _unpartitioned_window_count(plan) == 0
+    assert "CartesianProduct" not in plan
+    assert "HashAggregate" in plan
+
+
+def test_tpch_completion_tier_plan_shapes(spark):
+    """These TPC-H queries must plan the shapes their docstrings
+    claim: Q4's EXISTS as a left-semi (no row multiplication), Q19's
+    disjunctive predicate inside a broadcast hash join (never a
+    cartesian), Q18's head as a bounded TakeOrdered (never a global
+    sort), Q6 zero-join with all three predicates pushed to the scan."""
+
+    q4 = executed_plan(t.tpch_q4_shaped_priority_check(spark, SF_SMOKE))
+    assert "LeftSemi" in q4
+
+    q19 = executed_plan(t.tpch_q19_shaped_discounted_revenue(spark, SF_SMOKE))
+    assert "BroadcastHashJoin" in q19
+    assert "CartesianProduct" not in q19
+
+    q18 = executed_plan(t.tpch_q18_large_volume_customers(spark, SF_SMOKE))
+    assert "TakeOrderedAndProject" in q18
+
+    q6 = executed_plan(t.tpch_q6_forecast_revenue(spark, SF_SMOKE))
+    assert "Join" not in q6
+    assert "PushedFilters: [IsNotNull(l_shipdate)" in q6 or "GreaterThanOrEqual(l_shipdate" in q6
+
+
+@pytest.mark.parametrize(
+    "qname",
+    [
+        "good_turing_unseen_mass_documents",
+        "canonical_entities_parts",
+        "heaps_law_fit_documents",
+        "rfm_segments_customers_approx",
+        "tpch_q15_top_supplier",
+    ],
+)
+def test_pinned_operators_leave_no_catalog_cache(spark, qname, sf_dir):
+    """The operators that pin a shared subtree must not leave CacheManager
+    entries behind — a long-lived library session calling them repeatedly
+    previously accumulated cached partitions until someone called
+    clearCache(). The pins are lazy localCheckpoints: RDD-level blocks,
+    reclaimed by the ContextCleaner when the result DataFrame is
+    garbage-collected. Leftovers are attributed by RDD id: every
+    persistent RDD created after the query started must be gone, whatever
+    an earlier test's blocks are still draining."""
+    sc = spark.sparkContext
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+    cache_mgr.clearCache()
+    first_id = sc.parallelize([0]).id()  # RDD ids only grow
+
+    def leftovers():
+        return {
+            int(i): r.rdd().getCreationSite()
+            for i, r in sc._jsc.getPersistentRDDs().items()
+            if int(i) > first_id
+        }
+
+    df = QUERIES[qname](spark, sf_dir)
+    assert df.count() >= 0  # materialize through the pinned subtree
+    assert cache_mgr.isEmpty(), f"{qname} left a CacheManager entry behind"
+    assert leftovers(), f"{qname} no longer pins a subtree"
+
+    # Dropping the result lets the ContextCleaner unpersist the blocks
+    # (async — poll). Spark also retains RECENT executions (and through
+    # them the checkpoint RDDs) until later queries displace them, and a
+    # single displacing query is not always enough (observed: one
+    # displacement + 60 s of System.gc() polling still left all 6 of
+    # canonical_entities' pins; displacing every few poll iterations
+    # drained them within 2-16 s). So the no-op displacement runs INSIDE
+    # the loop.
+    del df
+    deadline = time.monotonic() + 60.0
+    it = 0
+    while leftovers() and time.monotonic() < deadline:
+        gc.collect()
+        sc._jvm.System.gc()
+        if it % 5 == 0:
+            spark.range(1).count()
+        it += 1
+        time.sleep(0.5)
+    left = leftovers()
+    assert not left, (
+        f"{qname}'s checkpoint blocks were not GC-reclaimed; persistent RDDs "
+        f"(id: callSite) left: {left}"
+    )

@@ -4,10 +4,26 @@ and normalization round-trips."""
 
 from __future__ import annotations
 
+import datetime
+import hashlib
+import random
+
+import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from data_ingestion_pipeline_spark.functions.normalize import camel_to_snake
+from data_ingestion_pipeline_spark.operators.lakehouse_checks import (
+    table_checksum_orders,
+)
+from data_ingestion_pipeline_spark.operators.mlprep_checks import (
+    RAKE_STOPWORDS,
+    rake_keywords_documents,
+)
+from data_ingestion_pipeline_spark.plans.merge import dedupe_last_wins
+from data_ingestion_pipeline_spark.plans.scd import scd2_apply
+from tests.conftest import write_sf
 
 # --- camel_to_snake: pure function, no Spark needed --------------------------
 
@@ -39,8 +55,6 @@ _rows = st.lists(
 )
 @given(rows=_rows)
 def test_dedupe_last_wins_matches_model(spark, rows):
-    from data_ingestion_pipeline_spark.plans.merge import dedupe_last_wins
-
     df = spark.createDataFrame(rows, "k long, ord long, payload long")
     got = {
         r.k: (r.ord, r.payload)
@@ -88,10 +102,6 @@ def test_scd2_apply_matches_model(spark, batches):
     SCD2 model: per key, the version chain is the deduplicated sequence of
     attribute values, stamped with the batch timestamps where each run
     started/ended; exactly one open (is_current) version per key."""
-    from pyspark.sql import functions as F
-
-    from data_ingestion_pipeline_spark.plans.scd import scd2_apply
-
     t0 = "2023-01-01"
     stamps = [f"2023-02-0{i+1}" for i in range(len(batches))]
 
@@ -191,14 +201,7 @@ def test_gini_rank_formula_matches_definition(counts):
 # ---------------------------------------------------------------------------
 
 
-def test_rake_handles_stopword_edge_cases(spark):
-    import pandas as pd
-
-    from data_ingestion_pipeline_spark.operators.mlprep_checks import (
-        RAKE_STOPWORDS,
-        rake_keywords_documents,
-    )
-
+def test_rake_handles_stopword_edge_cases(spark, tmp_path):
     stop = RAKE_STOPWORDS[0]  # "the"
     docs = pd.DataFrame(
         {
@@ -211,12 +214,8 @@ def test_rake_handles_stopword_edge_cases(spark):
             ],
         }
     )
-    import os
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(docs).write.parquet(os.path.join(d, "documents.parquet"))
-        rows = rake_keywords_documents(spark, d).collect()
+    sf = write_sf(tmp_path, documents=spark.createDataFrame(docs))
+    rows = rake_keywords_documents(spark, sf).collect()
     phrases = {r.phrase for r in rows}
     assert "alpha beta" in phrases
     assert "gamma" in phrases
@@ -237,15 +236,11 @@ def test_rake_handles_stopword_edge_cases(spark):
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_table_checksum_is_order_and_partition_invariant(spark, perm_seed, n_parts):
+def test_table_checksum_is_order_and_partition_invariant(spark, tmp_path, perm_seed, n_parts):
     """The checksum must be identical under any row order and any
     partitioning — that's the whole replica-verification contract. Model:
     hash rows on the driver with the same md5-prefix construction and
     compare the sum."""
-    import datetime
-    import hashlib
-    import random
-
     ts = datetime.datetime(1995, 3, 14, 12, 0, 0)
     rows = [
         (i, i * 7 % 13, "S" if i % 2 else "F", float(i) + 0.25, ts, f"P{i % 3}")
@@ -257,16 +252,8 @@ def test_table_checksum_is_order_and_partition_invariant(spark, perm_seed, n_par
         "o_orderkey long, o_custkey long, o_orderstatus string,"
         " o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string",
     ).repartition(n_parts)
-    import os
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="cksum_")
-    df.write.mode("overwrite").parquet(os.path.join(d, "orders.parquet"))
-    from data_ingestion_pipeline_spark.operators.lakehouse_checks import (
-        table_checksum_orders,
-    )
-
-    got = table_checksum_orders(spark, d).collect()[0]
+    sf = write_sf(tmp_path, orders=df)
+    got = table_checksum_orders(spark, sf).collect()[0]
     expected = 0
     for k, ck, st_, p, t, pr in rows:
         s = f"{k}|{ck}|{st_}|{p:.2f}|{t:%Y-%m-%d %H:%M:%S}|{pr}"
@@ -288,8 +275,6 @@ def test_table_checksum_is_order_and_partition_invariant(spark, perm_seed, n_par
 def test_mv_partial_merge_equals_recompute(spark, split_mod):
     """The monoid-merge identity behind incremental_mv_refresh_orders,
     pinned for arbitrary stored/delta splits (not just %5)."""
-    from pyspark.sql import functions as F
-
     orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
 
     def agg(df):

@@ -36,9 +36,7 @@ _RETIRED = {
 
 def test_export_order_is_registration_order():
     assert list(registry.queries()) == list(registry._REGISTRY)
-    assert list(registry.oracle_sql()) == [
-        n for n, (_, sql) in registry._REGISTRY.items() if sql is not None
-    ]
+    assert list(registry.oracle_sql()) == list(registry._REGISTRY)
 
 
 def test_retired_names_stay_out_of_the_registry():
@@ -50,20 +48,6 @@ def test_oracles_reference_registered_queries():
     qs = registry.queries()
     for name in registry.oracle_sql():
         assert name in qs
-
-
-def test_rows_only_set_is_empty():
-    """Round-10 verdict ask #4, closed in round 11: every registered
-    non-streaming query carries a DuckDB oracle — the rows-only set is
-    EMPTY. Streaming/stateful queries the driver records as rows-only via
-    no_oracle are exempt only if genuinely non-SQL-expressible — those
-    carry their own justification in SURVEY.md."""
-    no_oracle = [
-        n
-        for n, (_, sql) in registry._REGISTRY.items()
-        if sql is None and not n.startswith("streaming_") and "stateful" not in n
-    ]
-    assert no_oracle == [], f"rows-only set regrew: {no_oracle}"
 
 
 def test_no_token_permutation_duplicate_names():
@@ -106,3 +90,5 @@ def test_every_query_is_its_modules_function_and_oracle():
         assert mod in registry.MODULES
         assert getattr(mod, name) is fn
         assert getattr(mod, f"{name.upper()}_ORACLE") is sql
+        # every query carries its oracle: the rows-only set stays empty
+        assert isinstance(sql, str) and sql.strip(), f"{name} has no oracle SQL"

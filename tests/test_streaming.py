@@ -1,5 +1,6 @@
-"""M4 — Structured Streaming: foreachBatch MERGE ingestion, streaming dedup,
-session windows vs the batch gaps-and-islands formulation."""
+"""Structured Streaming (streaming/, operators/streaming_checks.py):
+foreachBatch MERGE ingestion, streaming dedup, session windows vs the
+batch gaps-and-islands formulation, and the stateful-operator checks."""
 
 from __future__ import annotations
 
@@ -7,19 +8,37 @@ import datetime as dt
 import os
 import shutil
 
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
+from data_ingestion_pipeline_spark import registry
+from data_ingestion_pipeline_spark.operators.streaming_checks import (
+    _stream_state_partitions,
+    stateful_event_type_counts_events,
+    stateful_event_type_counts_pandas_events,
+    streaming_chained_window_rollup_events,
+    streaming_interval_full_outer_events,
+    streaming_interval_join_events,
+)
 from data_ingestion_pipeline_spark.pipeline import ingest_orders
 from data_ingestion_pipeline_spark.plans.table import ManagedTable
+from data_ingestion_pipeline_spark.sources.catalog import load_table
 from data_ingestion_pipeline_spark.streaming.ingest import (
     run_stream_to_completion,
     stream_orders_csv,
+)
+from data_ingestion_pipeline_spark.streaming.joins import purchases_with_recent_views
+from data_ingestion_pipeline_spark.streaming.stateful import (
+    _update_type_counts,
+    transform_with_state_available,
 )
 from data_ingestion_pipeline_spark.streaming.windows import (
     dedup_events_stream,
     session_window_stats,
     sessionize_gaps_and_islands,
 )
+from tests.conftest import SF_SMOKE
 from tests.fixtures import ORDERS_HEADER
 
 
@@ -161,16 +180,6 @@ def test_session_window_matches_gaps_and_islands(spark):
 def test_interval_join_batch_stream_parity(spark):
     """The same purchases_with_recent_views plan over batch frames equals
     the drained stream-stream join output (row multiset)."""
-    from pyspark.sql import functions as F
-
-    from data_ingestion_pipeline_spark.operators.streaming_checks import (
-        streaming_interval_join_events,
-    )
-    from data_ingestion_pipeline_spark.sources.catalog import load_table
-    from data_ingestion_pipeline_spark.streaming.joins import (
-        purchases_with_recent_views,
-    )
-    from tests.conftest import SF_SMOKE
 
     events = load_table(spark, SF_SMOKE, "events")
     batch = purchases_with_recent_views(
@@ -184,19 +193,11 @@ def test_interval_join_batch_stream_parity(spark):
 
 
 def test_chained_window_rollup_seals_complete_days_only(spark):
-    from data_ingestion_pipeline_spark.operators.streaming_checks import (
-        streaming_chained_window_rollup_events,
-    )
-
-    from tests.conftest import SF_SMOKE
-
     got = {
         r.day_start: r
         for r in streaming_chained_window_rollup_events(spark, SF_SMOKE).collect()
     }
     ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-    import pyspark.sql.functions as F
-
     max_ts = ev.agg(F.max("ts")).first()[0]
     batch = (
         ev.groupBy(F.window("ts", "1 day").alias("d"))
@@ -214,3 +215,112 @@ def test_chained_window_rollup_seals_complete_days_only(spark):
     for day, r in got.items():
         assert r.n_events == sealed[day].n
         assert r.total_value == sealed[day].tv
+
+
+def test_transform_with_state_gated_on_protobuf(spark):
+    """The transformWithStateInPandas check registers only where its
+    protobuf runtime dependency exists; in this sandbox the gate must keep
+    it OUT of the driver contract (an ERR row is worse than absence). Where
+    protobuf IS present the streaming check itself runs."""
+
+    registered = "stateful_event_type_counts_events" in registry.queries()
+    assert registered == transform_with_state_available()
+    if not transform_with_state_available():
+        pytest.skip("python-protobuf absent — transformWithState cannot run here")
+
+    out = stateful_event_type_counts_events(spark, SF_SMOKE)
+    direct = (
+        load_table(spark, SF_SMOKE, "events")
+        .groupBy("user_id", "event_type")
+        .agg((2 * F.count("*")).cast("bigint").alias("n_events"))
+    )
+    assert {tuple(r) for r in out.collect()} == {tuple(r) for r in direct.collect()}
+
+
+def test_sessionize_subsecond_gap_splits_sessions(spark):
+    """A 300.5 s gap exceeds the 5-minute threshold: truncating timestamps
+    to whole seconds read it as 300 and merged the sessions (diverging
+    from both the >gap contract and session_window); the double cast
+    keeps the fraction."""
+
+    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
+    rows = [
+        (1, t0, 7, 1.0),
+        (2, t0 + dt.timedelta(seconds=300, milliseconds=500), 7, 1.0),
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id long, ts timestamp, user_id long, value double"
+    )
+    out = sessionize_gaps_and_islands(df, gap_minutes=5).collect()
+    assert len(out) == 2  # two sessions, not one
+
+
+def test_stateful_counts_pandas_twin_matches_closed_form(spark):
+    """The applyInPandasWithState twin must fold the
+    planted two-batch replay into exactly 2x the base per-(user,type) counts
+    — same contract the transformWithStateInPandas original carries where
+    protobuf exists."""
+
+    out = stateful_event_type_counts_pandas_events(spark, SF_SMOKE)
+    direct = (
+        load_table(spark, SF_SMOKE, "events")
+        .groupBy("user_id", "event_type")
+        .agg((2 * F.count("*")).cast("bigint").alias("n_events"))
+    )
+    assert {tuple(r) for r in out.collect()} == {tuple(r) for r in direct.collect()}
+
+
+def test_stateful_counts_twin_state_roundtrip_is_exact():
+    """The parallel-array map emulation must round-trip counts through the
+    state tuple without loss or reorder nondeterminism."""
+
+    class FakeState:
+        def __init__(self):
+            self.exists = False
+            self._v = None
+
+        @property
+        def get(self):
+            return self._v
+
+        def update(self, v):
+            self.exists = True
+            self._v = v
+
+    st = FakeState()
+    b1 = pd.DataFrame({"event_type": ["view", "view", "purchase", None]})
+    out1 = list(_update_type_counts((7,), [b1], st))[0]
+    # null event_type dropped (value_counts policy, same as the MapState twin)
+    assert list(out1["event_type"]) == ["purchase", "view"]
+    assert list(out1["n_events"]) == [1, 2]
+    b2 = pd.DataFrame({"event_type": ["view", "click"]})
+    out2 = list(_update_type_counts((7,), [b2], st))[0]
+    assert list(out2["event_type"]) == ["click", "purchase", "view"]
+    assert list(out2["n_events"]) == [1, 1, 3]
+
+
+def test_streaming_full_outer_has_both_null_directions(spark):
+    rows = streaming_interval_full_outer_events(spark, SF_SMOKE).collect()
+    n_null_view = sum(1 for r in rows if r["view_id"] is None)
+    n_null_purchase = sum(1 for r in rows if r["purchase_id"] is None)
+    n_matched = sum(
+        1 for r in rows if r["view_id"] is not None and r["purchase_id"] is not None
+    )
+    # the full-outer contract: all three row classes present, and every
+    # matched pair sits inside the band
+    assert n_matched > 0 and n_null_view > 0 and n_null_purchase > 0
+    for r in rows:
+        if r["secs_before"] is not None:
+            assert 0 <= r["secs_before"] <= 3600
+
+
+def test_stream_state_partitions_per_stream_default(spark):
+    """Commit-bound streams take 4 state partitions, Python-stateful
+    streams pass their own default (8); the session value comes back."""
+
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    with _stream_state_partitions(spark):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    with _stream_state_partitions(spark, default="8"):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == old

@@ -28,6 +28,13 @@ def bare_spark():
     blind spot came from checking with our own tuned session)."""
     from pyspark.sql import SparkSession
 
+    # Python workers (UDFs, Python data sources, applyInPandasWithState)
+    # import the package too: put the repo on their path, not only on the
+    # driver's, so the sweep does not depend on the working directory.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        [REPO] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    )
+
     return (
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
         .appName("check_oracle_bare")
