@@ -7,64 +7,37 @@ covers engine parity; these cover "is the math right".
 
 from __future__ import annotations
 
-import ast
-import bisect
 import hashlib
-import inspect
-import itertools
-import math
-from collections import Counter, defaultdict
-from decimal import Decimal
-from itertools import combinations, permutations
-from unittest import mock
+from collections import Counter
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-import data_ingestion_pipeline_spark.operators.analytics_checks as A
-from data_ingestion_pipeline_spark.operators import analytics_checks
-from data_ingestion_pipeline_spark.operators.analytics_checks import (
-    absorbing_expected_steps_to_purchase,
-    anderson_darling_purchase_view,
-    ansari_bradley_purchase_view,
-    bowker_symmetry_event_transitions,
-    brunner_munzel_purchase_view,
-    canonical_correlation_daily,
-    cliffs_delta_purchase_view,
-    cochran_armitage_trend_priority_orders,
-    cochrans_q_event_types_users,
-    cramer_von_mises_purchase_view,
-    degree_assortativity_copurchase_parts,
-    dunn_posthoc_event_values,
-    energy_distance_purchase_view,
-    fellegi_sunter_part_linkage,
-    friedman_test_event_type_values,
-    goodman_kruskal_priority_price_orders,
-    hhi_brand_concentration_by_category,
-    hits_authorities_parts,
-    item_item_cosine_topk_parts,
-    jonckheere_terpstra_priority_price,
-    kcore_peel_copurchase_parts,
-    kendalls_w_weekday_event_types,
-    kruskal_wallis_event_values,
-    label_propagation_communities_parts,
-    local_clustering_topk_parts,
-    mann_kendall_daily_trend,
-    markov_entropy_rate_event_types,
-    markov_removal_attribution_events,
-    moods_median_test_event_values,
-    mutual_information_event_dow,
-    quade_test_event_type_values,
-    seasonal_mann_kendall_daily,
-    shapley_attribution_events,
-    theils_u_event_type_dow,
-    transitivity_copurchase_parts,
-    wasserstein_purchase_view,
-    wilcoxon_signed_rank_purchase_view_daily,
-)
-from tests.conftest import SF_SMOKE, daily_sums
+from data_ingestion_pipeline_spark.operators import analytics_checks, lakehouse_checks
+from tests.conftest import SF_SMOKE
+
+
+def _levenshtein(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(
+                min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb))
+            )
+        prev = cur
+    return prev[-1]
+
+
+def _daily_pv(spark):
+    ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet").toPandas()
+    ev = ev[ev.event_type.isin(["purchase", "view"])]
+    ev["day"] = ev["ts"].dt.floor("D")
+    piv = ev.pivot_table(
+        index="day", columns="event_type", values="value", aggfunc="sum"
+    ).dropna()
+    return piv["purchase"].to_numpy(), piv["view"].to_numpy()
 
 
 def test_regression_matches_numpy_polyfit(spark):
@@ -167,18 +140,6 @@ def test_interpolation_brackets_and_grid_shape(spark):
             seg = vals[lo : hi + 1]
             assert (seg >= min(lo_v, hi_v) - 1e-9).all()
             assert (seg <= max(lo_v, hi_v) + 1e-9).all()
-
-
-def _levenshtein(a: str, b: str) -> int:
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(
-                min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb))
-            )
-        prev = cur
-    return prev[-1]
 
 
 def test_fuzzy_pairs_distances_and_completeness(spark):
@@ -337,11 +298,10 @@ def test_copurchase_lift_matches_pandas(spark):
 
 
 def test_triangle_count_matches_bruteforce(spark):
-    """triangle_count_copurchase and transitivity_copurchase_parts against
-    triangles, edges, nodes and wedges counted on the collected
-    co-purchase graph (edges: part pairs sharing >= 2 orders)."""
+    """triangle_count_copurchase against triangles, edges and nodes
+    counted on the collected co-purchase graph (edges: part pairs sharing
+    >= 2 orders)."""
     row = analytics_checks.triangle_count_copurchase(spark, SF_SMOKE).collect()[0]
-    c = transitivity_copurchase_parts(spark, SF_SMOKE).collect()[0]
     li = (
         spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
         .select("l_orderkey", "l_partkey")
@@ -360,14 +320,9 @@ def test_triangle_count_matches_bruteforce(spark):
     for a, b in edges:
         tri += len(adj[a] & adj[b])
     tri //= 3  # each triangle counted once per edge
-    assert row.n_triangles == c.n_triangles == tri
+    assert row.n_triangles == tri
     assert row.n_edges == len(edges)
-    assert row.n_nodes == c.n_nodes == len(adj)
-    wedges = sum(len(nbrs) * (len(nbrs) - 1) // 2 for nbrs in adj.values())
-    assert c.n_wedges == wedges
-    if wedges:
-        assert abs(c.transitivity - round(3.0 * tri / wedges, 6)) < 1e-9
-        assert 0.0 <= c.transitivity <= 1.0
+    assert row.n_nodes == len(adj)
 
 
 def test_linear_attribution_credit_totals(spark):
@@ -486,6 +441,33 @@ def test_time_to_convert_matches_numpy(spark):
         assert abs(getattr(row, name) - np.quantile(d, q)) < 1e-2
 
 
+def test_scd2_asof_straddles_the_cut(spark):
+    got = lakehouse_checks.scd2_asof_lookup(spark, SF_SMOKE).toPandas()
+    orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").toPandas()
+    assert len(got) == len(orders)  # every order resolves exactly one version
+    cust7 = got[got.o_custkey % 7 == 0]
+    pre = cust7[cust7.o_orderdate < pd.Timestamp("1998-01-01")]
+    post = cust7[cust7.o_orderdate >= pd.Timestamp("1998-01-01")]
+    assert (~pre.mktsegment_asof.str.startswith("SEG_")).all()
+    assert post.mktsegment_asof.str.startswith("SEG_").all()
+    assert len(pre) > 0 and len(post) > 0  # the fixture straddles the cut
+
+
+def test_table_diff_classes_match_rules(spark):
+    got = {
+        r.change_type: r
+        for r in lakehouse_checks.table_diff_snapshots(spark, SF_SMOKE).collect()
+    }
+    o = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").toPandas()
+    k = o["o_orderkey"]
+    assert got["removed"].n_rows == int((k % 11 == 0).sum())
+    assert got["added"].n_rows == int((k % 13 == 0).sum())
+    assert got["changed"].n_rows == int(((k % 11 != 0) & (k % 7 == 0)).sum())
+    assert got["unchanged"].n_rows == int(((k % 11 != 0) & (k % 7 != 0)).sum())
+    assert got["unchanged"].net_price_delta == 0.0
+    assert got["changed"].net_price_delta > 0
+
+
 def test_kaplan_meier_matches_direct_estimator(spark):
     rows = sorted(
         analytics_checks.kaplan_meier_conversion_events(spark, SF_SMOKE).collect(),
@@ -517,16 +499,6 @@ def test_kaplan_meier_matches_direct_estimator(spark):
         assert r.n_at_risk == n_t and r.n_events == d_t
         assert abs(r.survival - s) < 1e-6
     assert all(a.survival >= b.survival for a, b in zip(rows, rows[1:]))
-
-
-def _daily_pv(spark):
-    ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet").toPandas()
-    ev = ev[ev.event_type.isin(["purchase", "view"])]
-    ev["day"] = ev["ts"].dt.floor("D")
-    piv = ev.pivot_table(
-        index="day", columns="event_type", values="value", aggfunc="sum"
-    ).dropna()
-    return piv["purchase"].to_numpy(), piv["view"].to_numpy()
 
 
 def test_mann_whitney_matches_direct_ranks(spark):
@@ -590,1498 +562,3 @@ def test_theil_sen_matches_direct_median(spark):
     ]
     assert row.n_pairs == len(slopes)
     assert abs(row.theil_sen_slope - float(np.median(slopes))) < 1e-4
-
-
-def _pv_values(spark, sf_dir):
-    """Sorted purchase and view values of the events table."""
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type").isin("purchase", "view"))
-        .select("event_type", "value")
-        .collect()
-    )
-    xs = sorted(r["value"] for r in rows if r["event_type"] == "purchase")
-    ys = sorted(r["value"] for r in rows if r["event_type"] == "view")
-    return xs, ys
-
-
-def test_ks_test_matches_direct_computation(spark):
-    """D must equal the max ECDF gap computed directly from the raw rows —
-    proves the chunk-stitched cumulative counts reconstruct the global
-    ECDF exactly at every distinct value."""
-    row = analytics_checks.ks_test_purchase_view(spark, SF_SMOKE).collect()[0]
-    xs, ys = _pv_values(spark, SF_SMOKE)
-    grid = sorted(set(xs) | set(ys))
-
-    d = max(
-        abs(
-            bisect.bisect_right(xs, v) / len(xs)
-            - bisect.bisect_right(ys, v) / len(ys)
-        )
-        for v in grid
-    )
-    assert row.n1 == len(xs) and row.n2 == len(ys)
-    assert abs(row.d_stat - d) < 1e-6
-    assert 0.0 <= row.p_approx <= 1.0
-
-
-def test_t_closeness_bounds_and_degenerate_zero(spark):
-    """EMD lies in [0,1]; a QI grouping that collapses to ONE group has
-    the global distribution by construction, so t_max == 0."""
-    row = analytics_checks.t_closeness_report_events(spark, SF_SMOKE).collect()[0]
-    assert 0.0 <= row.t_max <= 1.0
-    assert 0.0 <= row.t_row_weighted_mean <= row.t_max
-    assert row.groups_above_02 <= row.n_groups
-    # degenerate single-group check computed directly
-    ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-    buckets = (
-        ev.select(F.floor(F.col("value") / 50.0).alias("sv"))
-        .groupBy("sv")
-        .count()
-        .collect()
-    )
-    assert len(buckets) == row.m_buckets
-
-
-def test_fellegi_sunter_decisions_partition_all_pairs(spark):
-    rows = analytics_checks.fellegi_sunter_linkage_parts(spark, SF_SMOKE).collect()
-    by = {r.decision: r for r in rows}
-    assert set(by) <= {"link", "possible", "non_link"}
-    # recompute pair count from blocking directly
-    parts = (
-        spark.read.parquet(f"{SF_SMOKE}/part.parquet")
-        .groupBy("p_brand", "p_size")
-        .count()
-        .collect()
-    )
-    want_pairs = sum(r["count"] * (r["count"] - 1) // 2 for r in parts)
-    assert sum(r.n_pairs for r in rows) == want_pairs
-    # link class (all three fields agreeing) must out-weigh non-link means
-    if "link" in by and "non_link" in by:
-        assert by["link"].avg_weight > by["non_link"].avg_weight
-
-
-def test_poisson_bootstrap_ci_brackets_mean_and_weights_unbiased(spark):
-    """The 64-replicate bootstrap band must bracket the exact group mean
-    on the fixture (deterministic seeded draws), and the Poisson(1)
-    weight ladder must be empirically unbiased: total replicate weight
-    within a few % of n·B (the truncation at k=8 clips ~1e-5 mass)."""
-    rows = analytics_checks.poisson_bootstrap_ci_orders(spark, SF_SMOKE).collect()
-    assert len(rows) == 5
-    for r in rows:
-        assert r.boot_lo <= r.mean_price <= r.boot_hi
-        assert r.boot_lo < r.boot_hi
-        # band half-width is a few SE ≈ sd/√n — sanity: nonzero, < mean
-        assert (r.boot_hi - r.boot_lo) < r.mean_price
-
-
-def test_bot_cadence_report_conserves_population(spark):
-    """Flag cells partition the screened population: user totals match a
-    direct count of users with ≥10 events; cv means sit in the plausible
-    band (metronomic cell mean < unflagged cell mean when both exist)."""
-    rows = analytics_checks.bot_cadence_report_events(spark, SF_SMOKE).collect()
-
-    ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet").select("user_id").collect()
-    c = Counter(r.user_id for r in ev)
-    want_users = sum(1 for v in c.values() if v >= 10)
-    assert sum(r.n_users for r in rows) == want_users
-    assert sum(r.n_events for r in rows) == sum(v for v in c.values() if v >= 10)
-    by = {(r.is_metronomic, r.is_hyperactive): r for r in rows}
-    if (True, False) in by and (False, False) in by:
-        assert by[(True, False)].mean_cv < by[(False, False)].mean_cv
-    for r in rows:
-        assert r.mean_cv > 0 and r.mean_gap_hours > 0
-
-
-def test_markov_stationary_is_fixed_point(spark):
-    """π must be a probability vector and (approximately, after 8 steps)
-    a fixed point of the transition matrix built directly from the rows:
-    ‖πP − π‖∞ small; numpy power iteration from uniform agrees."""
-    rows = analytics_checks.markov_stationary_event_types(spark, SF_SMOKE).collect()
-    pi = {r.event_type: r.stationary_prob for r in rows}
-    assert abs(sum(pi.values()) - 1.0) < 1e-4
-    ev = sorted(
-        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .select("user_id", "ts", "event_id", "event_type")
-        .collect(),
-        key=lambda r: (r.user_id, r.ts, r.event_id),
-    )
-
-    trans: dict = defaultdict(lambda: defaultdict(int))
-    for a, b in zip(ev, ev[1:]):
-        if a.user_id == b.user_id:
-            trans[a.event_type][b.event_type] += 1
-    P = {
-        s: {d: n / sum(ds.values()) for d, n in ds.items()}
-        for s, ds in trans.items()
-    }
-    types = sorted(P)
-    v = {t: 1.0 / len(types) for t in types}
-    for _ in range(8):
-        nv = {t: 0.0 for t in types}
-        for s in types:
-            for d, p in P[s].items():
-                nv[d] += v[s] * p
-        v = {t: round(x, 9) for t, x in nv.items()}
-    for t in types:
-        assert abs(pi[t] - v[t]) < 1e-5
-    # fixed-point check: one more application moves nothing much
-    nv = {t: 0.0 for t in types}
-    for s in types:
-        for d, p in P[s].items():
-            nv[d] += v[s] * p
-    assert max(abs(nv[t] - v[t]) for t in types) < 1e-3
-
-
-def test_canonical_entities_duplicate_collapse(spark):
-    """Identical (size, name) parts must land in one entity even with no
-    fuzzy neighbor, and the fuzzy edge must still bridge distinct names —
-    the distinct-name-collapse plan preserves part-level CC semantics."""
-
-    rows = [
-        (1, "alpha widget", 5),
-        (2, "alpha widget", 5),  # exact dup of 1 — pair at distance 0
-        (3, "alpha widgez", 5),  # distance 1 from "alpha widget"
-        (4, "unrelated name", 5),  # singleton, no pair → excluded
-        (5, "alpha widget", 9),  # same name, DIFFERENT size → not linked
-    ]
-    df = spark.createDataFrame(rows, "p_partkey long, p_name string, p_size int")
-    with mock.patch.object(A, "load_table", lambda s, d, t: df):
-        out = {r.p_partkey: r for r in
-               A.canonical_entities_parts(spark, "unused").collect()}
-    assert set(out) == {1, 2, 3}
-    assert out[1].entity_id == out[2].entity_id == out[3].entity_id == 1
-    assert out[1].entity_size == 3
-    assert out[1].is_canonical and not out[2].is_canonical
-
-
-def test_item_item_topk_contracts(spark):
-    """Item-item neighbors: ranked 1..<=10 per item without gaps, cosine
-    non-increasing within an item, and cosine(i,j) consistent with the
-    symmetric entry when both directions survive the top-k cut."""
-
-    rows = item_item_cosine_topk_parts(spark, SF_SMOKE).collect()
-    assert rows
-    by_item = {}
-    for r in rows:
-        by_item.setdefault(r.item, []).append(r)
-    for item, rs in by_item.items():
-        rs.sort(key=lambda r: r.rnk)
-        assert [r.rnk for r in rs] == list(range(1, len(rs) + 1))
-        cosines = [r.cosine for r in rs]
-        assert all(a >= b for a, b in zip(cosines, cosines[1:]))
-    pair_cos = {(r.item, r.neighbor): r.cosine for r in rows}
-    both = [(k, v) for k, v in pair_cos.items() if (k[1], k[0]) in pair_cos]
-    assert both and all(pair_cos[(b, a)] == v for (a, b), v in both)
-
-
-def test_hits_one_iteration_is_normalized_indegree(spark, sf_dir):
-    """With h0 = 1, the first authority vector is the L2-normalized
-    in-degree of each part in the distinct (customer, part) edge set —
-    computable directly, so the iterative machinery is pinned against a
-    closed form (the same style of gate pagerank's oracle unrolling gets
-    from its r1 = 0.15/n + 0.85·indeg/outdeg closed form)."""
-
-    got = {
-        r["p_partkey"]: r["authority"]
-        for r in hits_authorities_parts(spark, sf_dir, iters=1).collect()
-    }
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    deg = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select("o_custkey", "l_partkey")
-        .distinct()
-        .groupBy("l_partkey")
-        .count()
-        .collect()
-    )
-    indeg = {r["l_partkey"]: r["count"] for r in deg}
-    nrm = math.sqrt(sum(v * v for v in indeg.values()))
-    assert set(got) == set(indeg)
-    for k, v in indeg.items():
-        assert got[k] == round(v / nrm, 9), k
-
-    # full-depth output is still a unit vector (up to round-9 rounding)
-    full = hits_authorities_parts(spark, sf_dir, iters=3).collect()
-    s = sum(r["authority"] ** 2 for r in full)
-    assert abs(s - 1.0) < 1e-6
-    assert all(r["authority"] > 0 for r in full)
-
-
-def test_kcore_round6_is_the_fixpoint(spark, sf_dir):
-    """The docstring's exactness claim: at rounds=6 the peel has stabilized
-    on the fixtures, so round 7 returns the identical relation (the output
-    IS the k-core, not a truncation), every survivor's degree is >= k, and
-    k matches the max(E//N, 2) policy computed independently."""
-
-    r6 = {
-        (r["p_partkey"], r["core_degree"])
-        for r in kcore_peel_copurchase_parts(spark, sf_dir, rounds=6).collect()
-    }
-    r7 = {
-        (r["p_partkey"], r["core_degree"])
-        for r in kcore_peel_copurchase_parts(spark, sf_dir, rounds=7).collect()
-    }
-    assert r6 == r7 and r6
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    po = li.select("l_orderkey", "l_partkey").distinct()
-    pa = po.select("l_orderkey", F.col("l_partkey").alias("a"))
-    pb = po.select("l_orderkey", F.col("l_partkey").alias("b"))
-    und = (
-        pa.join(pb, "l_orderkey")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .count()
-        .filter(F.col("count") >= 2)
-    )
-    m = und.count()
-    n = (
-        und.select(F.col("a").alias("x"))
-        .union(und.select("b"))
-        .distinct()
-        .count()
-    )
-    k = max(m // max(n, 1), 2)
-    assert min(d for _, d in r6) >= k
-
-
-def test_mutual_information_matches_direct_computation(spark, sf_dir):
-    """MI components recomputed directly from the contingency table with
-    python floats under the same integer-ln-rounded policy; the total MI
-    (sum of per-type components) must be non-negative (it is an exact MI,
-    only the ln terms are rounded at 1e-9)."""
-
-    got = {
-        r["event_type"]: r["mi_component"]
-        for r in mutual_information_event_dow(spark, sf_dir).collect()
-    }
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select("event_type", (F.weekday("ts") + F.lit(1)).alias("dow"))
-        .collect()
-    )
-    cells = Counter((r["event_type"], r["dow"]) for r in rows)
-    nx = Counter()
-    ny = Counter()
-    for (x, y), c in cells.items():
-        nx[x] += c
-        ny[y] += c
-    n = sum(cells.values())
-
-    def ln9(v):
-        return round(math.log(v), 9)
-
-    expect = {}
-    for (x, y), c in cells.items():
-        t = (c / n) * (ln9(n) + ln9(c) - ln9(nx[x]) - ln9(ny[y]))
-        expect[x] = expect.get(x, 0.0) + t
-    assert set(got) == set(expect)
-    for x in expect:
-        assert abs(got[x] - expect[x]) < 1e-6, x
-    assert sum(got.values()) >= -1e-9
-
-
-def test_absorbing_expected_steps_numpy_parity(spark, sf_dir):
-    """Truncated-Neumann expected steps recomputed with numpy from the
-    same bigram stream; also pins the truncation semantics: every value
-    lies in [1, horizon] and the horizon-6 iterate dominates horizon-5
-    (the recursion is monotone toward the true expectation)."""
-
-    got = {
-        r["event_type"]: r["expected_steps_h6"]
-        for r in absorbing_expected_steps_to_purchase(spark, sf_dir).collect()
-    }
-    h5 = {
-        r["event_type"]: r["expected_steps_h6"]
-        for r in absorbing_expected_steps_to_purchase(
-            spark, sf_dir, horizon=5
-        ).collect()
-    }
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    rows = (
-        ev.select("event_type", F.lead("event_type").over(w).alias("nxt"))
-        .filter(F.col("nxt").isNotNull())
-        .groupBy("event_type", "nxt")
-        .count()
-        .collect()
-    )
-
-    c = {(r["event_type"], r["nxt"]): r["count"] for r in rows}
-    tot = Counter()
-    for (x, _), n in c.items():
-        tot[x] += n
-    trans = sorted({x for x, _ in c} - {"purchase"})
-    idx = {x: i for i, x in enumerate(trans)}
-    Q = np.zeros((len(trans), len(trans)))
-    for (x, y), n in c.items():
-        if x in idx and y in idx:
-            Q[idx[x], idx[y]] = n / tot[x]
-    t = np.zeros(len(trans))
-    for _ in range(6):
-        t = np.round(1.0 + Q @ t, 9)
-    assert set(got) == set(trans)
-    for x in trans:
-        assert abs(got[x] - t[idx[x]]) < 1e-6, x
-        assert 1.0 <= got[x] <= 6.0
-        assert got[x] >= h5[x] - 1e-9
-
-
-def test_fellegi_sunter_equals_brute_force_enumeration(spark, sf_dir):
-    """The candidate-union + closed-form-u design must return EXACTLY the
-    positive-weight pairs of the naive full blocked enumeration (a pair
-    disagreeing on every field has strictly negative weight, so the union
-    of per-field agreement joins loses nothing) — asserted pairwise
-    including n_agree and the rounded weight."""
-
-    got = {
-        (r["a_partkey"], r["b_partkey"]): (r["n_agree"], r["weight"])
-        for r in fellegi_sunter_part_linkage(spark, sf_dir).collect()
-    }
-
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").collect()
-    rows = [(r["p_partkey"], r["p_name"], r["p_brand"], r["p_type"], r["p_size"]) for r in part]
-
-    pairs = [
-        (a, b)
-        for a, b in itertools.combinations(sorted(rows), 2)
-        if a[4] == b[4]
-    ]
-    flags = [
-        (a[0], b[0], int(_levenshtein(a[1], b[1]) <= 1), int(a[2] == b[2]), int(a[3] == b[3]))
-        for a, b in pairs
-    ]
-    n = len(flags)
-    c = [sum(f[2] for f in flags), sum(f[3] for f in flags), sum(f[4] for f in flags)]
-
-    def ln9(v):
-        return round(math.log(v), 9)
-
-    lm, l1m = math.log(0.9), math.log(0.1)
-    expect = {}
-    for ak, bk, *ag in flags:
-        wsum = 0.0
-        for i, a_i in enumerate(ag):
-            if a_i:
-                wsum += lm + ln9(n) - ln9(c[i])
-            else:
-                wsum += l1m + ln9(n) - ln9(n - c[i])
-        w = round(wsum, 6)
-        if w > 0:
-            expect[(ak, bk)] = (sum(ag), w)
-    assert set(got) == set(expect)
-    for k in expect:
-        assert got[k][0] == expect[k][0]
-        assert abs(got[k][1] - expect[k][1]) < 1e-6
-
-
-def test_mann_kendall_matches_direct_computation(spark, sf_dir):
-    """S, n_pairs, tie-corrected Var(S), and the continuity-corrected Z
-    recomputed directly from the collected daily series."""
-
-    row = mann_kendall_daily_trend(spark, sf_dir).collect()[0]
-    daily = sorted(
-        (r["day"], r["v"])
-        for r in spark.read.parquet(f"{sf_dir}/events.parquet")
-        .groupBy(F.to_date("ts").alias("day"))
-        .agg(F.round(F.sum(F.col("value").cast("decimal(27,12)")), 12).cast("double").alias("v"))
-        .collect()
-    )
-    vs = [v for _, v in daily]
-    n = len(vs)
-    s = sum(
-        (vs[j] > vs[i]) - (vs[j] < vs[i])
-        for i in range(n)
-        for j in range(i + 1, n)
-    )
-    tie_term = sum(
-        t * (t - 1) * (2 * t + 5) for t in Counter(vs).values()
-    )
-    var = (n * (n - 1) * (2 * n + 5) - tie_term) / 18.0
-    z = 0.0 if s == 0 else (s - (1 if s > 0 else -1)) / math.sqrt(var)
-    assert row["n"] == n
-    assert row["n_pairs"] == n * (n - 1) // 2
-    assert row["s"] == s
-    assert abs(row["var_s"] - var) < 1e-6
-    assert abs(row["z"] - z) < 1e-6
-
-
-def test_kruskal_wallis_matches_direct_computation(spark):
-    """H and the tie-corrected H recomputed from the collected values with
-    plain midranks."""
-
-    rows = (
-        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .select("event_type", "value")
-        .collect()
-    )
-    by_g = {}
-    allv = []
-    for r in rows:
-        by_g.setdefault(r["event_type"], []).append(r["value"])
-        allv.append(r["value"])
-    n = len(allv)
-    # midrank per distinct value
-    cnt = Counter(allv)
-    pos = 1
-    rank = {}
-    for v in sorted(cnt):
-        t = cnt[v]
-        rank[v] = pos + (t - 1) / 2.0
-        pos += t
-    s = sum(
-        (sum(rank[v] for v in vs)) ** 2 / len(vs) for vs in by_g.values()
-    )
-    h = 12.0 / (n * (n + 1)) * s - 3.0 * (n + 1)
-    tie = sum(t**3 - t for t in cnt.values())
-    hc = h / (1.0 - tie / (n**3 - n))
-    row = kruskal_wallis_event_values(spark, SF_SMOKE).collect()[0]
-    assert row["k_groups"] == len(by_g)
-    assert row["n"] == n
-    assert row["df"] == len(by_g) - 1
-    assert abs(row["h"] - h) < 1e-4
-    assert abs(row["h_tie_corrected"] - hc) < 1e-4
-
-
-def test_cliffs_delta_matches_direct_and_is_deterministic(spark):
-    """Dominance counts against a brute-force O(n1*n2) recount, plus the
-    run-twice pin for the hazard this operator caught live: a stitched
-    cumulative whose grain carries extra measures loses range-exchange
-    reuse and re-samples chunk boundaries inconsistently (nondeterministic
-    output). Structural regression here = flaky inequality below."""
-
-    xs, ys = _pv_values(spark, SF_SMOKE)
-    gt = sum(1 for x in xs for y in ys if x > y)
-    lt = sum(1 for x in xs for y in ys if x < y)
-    r1 = cliffs_delta_purchase_view(spark, SF_SMOKE).collect()[0]
-    r2 = cliffs_delta_purchase_view(spark, SF_SMOKE).collect()[0]
-    assert (r1["n_greater"], r1["n_less"]) == (r2["n_greater"], r2["n_less"])
-    assert r1["n_greater"] == gt and r1["n_less"] == lt
-    assert r1["n1"] == len(xs) and r1["n2"] == len(ys)
-    expected = (gt - lt) / (len(xs) * len(ys))
-    assert abs(r1["cliffs_delta"] - expected) < 1e-6
-
-
-def test_markov_removal_attribution_matches_python(spark):
-    """Removal effects recomputed with a plain-python chain mirror; shares
-    sum to 1; removing a channel can only lower reach."""
-
-    ev = sorted(
-        (
-            (r["user_id"], r["ts"], r["event_id"], r["event_type"])
-            for r in spark.read.parquet(f"{SF_SMOKE}/events.parquet").collect()
-        ),
-    )
-    by_user = defaultdict(list)
-    for u, ts, eid, et in sorted(ev, key=lambda r: (r[0], r[1], r[2])):
-        by_user[u].append(et)
-    counts = defaultdict(lambda: defaultdict(int))
-    firsts = defaultdict(int)
-    for u, seq in by_user.items():
-        firsts[seq[0]] += 1
-        for a, b in zip(seq, seq[1:]):
-            counts[a][b] += 1
-    p = {
-        a: {b: c / sum(nxt.values()) for b, c in nxt.items()}
-        for a, nxt in counts.items()
-    }
-    transient = sorted(t for t in p if t != "purchase")
-
-    def reach(removed, horizon=6):
-        t = {y: 0.0 for y in transient}
-        for _ in range(horizon):
-            nt = {}
-            for x in transient:
-                if x == removed:
-                    nt[x] = 0.0
-                    continue
-                ap = p.get(x, {}).get("purchase", 0.0)
-                s = sum(
-                    p.get(x, {}).get(y, 0.0) * t[y]
-                    for y in transient
-                    if y != "purchase"
-                )
-                nt[x] = round(ap + s, 9)
-            t = nt
-        n = sum(firsts.values())
-        total = 0.0
-        for x, c in firsts.items():
-            r = 1.0 if x == "purchase" else t.get(x, 0.0)
-            total += (c / n) * r
-        return total
-
-    p_full = reach(None)
-    rows = {
-        r["channel"]: r
-        for r in markov_removal_attribution_events(spark, SF_SMOKE).collect()
-    }
-    assert set(rows) == set(transient)
-    res = {c: 1.0 - reach(c) / p_full for c in transient}
-    tot_re = sum(res.values())
-    for c, r in rows.items():
-        assert abs(r["reach_full"] - p_full) < 1e-5
-        assert abs(r["reach_removed"] - reach(c)) < 1e-5
-        assert abs(r["removal_effect"] - res[c]) < 1e-5
-        assert r["removal_effect"] >= -1e-9  # removal can only lower reach
-        assert abs(r["attribution_share"] - res[c] / tot_re) < 1e-5
-    assert abs(sum(r["attribution_share"] for r in rows.values()) - 1.0) < 1e-4
-
-
-def test_shapley_attribution_matches_permutation_mirror(spark):
-    """Exact Shapley values recomputed by brute-force permutation
-    averaging (the definition) from per-user channel sets rebuilt in
-    plain python; efficiency Σφ = v(full) − v(∅) must hold."""
-
-    rows = (
-        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .select("user_id", "event_id", "event_type", "ts")
-        .collect()
-    )
-    by_user = {}
-    for r in rows:
-        by_user.setdefault(r["user_id"], []).append(r)
-    journeys = []  # (frozenset channels, converted)
-    for u, evs in by_user.items():
-        evs.sort(key=lambda r: (r["ts"], r["event_id"]))
-        chans, converted = set(), False
-        for r in evs:
-            if r["event_type"] == "purchase":
-                converted = True
-                break
-            chans.add(r["event_type"])
-        if not converted:  # non-converters: whole journey (no purchase seen)
-            chans = {r["event_type"] for r in evs if r["event_type"] != "purchase"}
-        journeys.append((frozenset(chans), converted))
-    channels = sorted({c for s, _ in journeys for c in s} | {
-        r["event_type"] for r in rows if r["event_type"] != "purchase"
-    })
-
-    def v(coal):
-        return sum(1 for s, conv in journeys if conv and s <= coal)
-
-    phi = dict.fromkeys(channels, 0.0)
-    perms = list(permutations(channels))
-    for perm in perms:
-        seen = set()
-        for c in perm:
-            phi[c] += v(seen | {c}) - v(seen)
-            seen.add(c)
-    phi = {c: val / len(perms) for c, val in phi.items()}
-    out = {r["channel"]: r for r in shapley_attribution_events(spark, SF_SMOKE).collect()}
-    assert set(out) == set(channels)
-    full = v(set(channels))
-    empty = v(set())
-    assert abs(sum(phi.values()) - (full - empty)) < 1e-9  # efficiency
-    for c in channels:
-        assert abs(out[c]["shapley_conversions"] - phi[c]) < 1e-5, c
-        assert out[c]["reachable_conversions"] == full
-        if full - empty > 0:
-            assert abs(out[c]["attribution_share"] - phi[c] / (full - empty)) < 1e-5
-
-
-def test_label_propagation_stabilizes_and_partitions_nodes(spark):
-    """Round-5 labeling must equal round-4 (the docstring's convergence
-    pin on the fixture); communities partition the node set; every
-    community is connected within the support->=2 edge set (label = some
-    member id)."""
-
-    r4 = {
-        r["p_partkey"]: r["community"]
-        for r in label_propagation_communities_parts(spark, SF_SMOKE).collect()
-    }
-    r5 = {
-        r["p_partkey"]: r["community"]
-        for r in label_propagation_communities_parts(
-            spark, SF_SMOKE, rounds=5
-        ).collect()
-    }
-    assert r4 == r5, "LPA has not stabilized by round 4 on the fixture"
-    assert len(r4) > 0
-    # each label is itself a node id of the graph (self-vote keeps labels
-    # inside the node universe)
-    assert set(r4.values()) <= set(r4.keys())
-    # sizes column agrees with the labeling
-
-    sizes = Counter(r4.values())
-    for r in label_propagation_communities_parts(spark, SF_SMOKE).collect():
-        assert r["community_size"] == sizes[r["community"]]
-
-
-def test_degree_assortativity_matches_networkx_style_mirror(spark):
-    """r recomputed from the edge list in python (both orientations);
-    must land in [-1, 1]."""
-
-    rows = (
-        spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-        .collect()
-    )
-    by_order = {}
-    for r in rows:
-        by_order.setdefault(r["l_orderkey"], []).append(r["l_partkey"])
-    pair_count = Counter()
-    for parts in by_order.values():
-        ps = sorted(set(parts))
-        for i in range(len(ps)):
-            for j in range(i + 1, len(ps)):
-                pair_count[(ps[i], ps[j])] += 1
-    edges = [p for p, c in pair_count.items() if c >= 2]
-    deg = Counter()
-    for a, b in edges:
-        deg[a] += 1
-        deg[b] += 1
-    xs, ys = [], []
-    for a, b in edges:
-        xs += [deg[a], deg[b]]
-        ys += [deg[b], deg[a]]
-    m2 = len(xs)
-    mu = sum(xs) / m2
-    num = sum(x * y for x, y in zip(xs, ys)) / m2 - mu * mu
-    den = sum(x * x for x in xs) / m2 - mu * mu
-
-    row = degree_assortativity_copurchase_parts(spark, SF_SMOKE).collect()[0]
-    assert row["n_edges"] == len(edges)
-    if den > 0:
-        assert abs(row["assortativity"] - num / den) < 1e-4
-        assert -1.0 - 1e-9 <= row["assortativity"] <= 1.0 + 1e-9
-    else:
-        assert row["assortativity"] is None
-
-
-def test_markov_entropy_rate_bounds(spark):
-    """H(rate) <= H(iid) (conditioning reduces entropy), both positive on
-    the fixture, and H(iid) matches a direct recount."""
-
-    types = Counter(
-        r["event_type"]
-        for r in spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .select("event_type")
-        .collect()
-    )
-    tot = sum(types.values())
-    h_iid = -sum(c / tot * round(math.log(c / tot), 9) for c in types.values())
-    row = markov_entropy_rate_event_types(spark, SF_SMOKE).collect()[0]
-    assert abs(row["iid_entropy_nats"] - h_iid) < 1e-5
-    assert 0.0 < row["entropy_rate_nats"] <= row["iid_entropy_nats"] + 1e-9
-    assert abs(
-        row["predictability_gain_nats"]
-        - (row["iid_entropy_nats"] - row["entropy_rate_nats"])
-    ) < 2e-6
-
-
-def test_hhi_identities(spark):
-    """Per-category shares sum to 100, HHI in (10000/n_brands, 10000],
-    and a direct recount agrees."""
-
-    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet").select(
-        "l_partkey", "l_extendedprice", "l_discount"
-    )
-    pt = spark.read.parquet(f"{SF_SMOKE}/part.parquet").select(
-        "p_partkey", "p_brand", F.split("p_type", " ").getItem(0).alias("cat")
-    )
-    rows = li.join(pt, li.l_partkey == pt.p_partkey).collect()
-    rev = defaultdict(float)
-    for r in rows:
-        rev[(r["cat"], r["p_brand"])] += float(r["l_extendedprice"]) * (
-            1.0 - float(r["l_discount"])
-        )
-    cats = defaultdict(dict)
-    for (c, b), v in rev.items():
-        cats[c][b] = v
-    out = {r["category"]: r for r in hhi_brand_concentration_by_category(spark, SF_SMOKE).collect()}
-    assert set(out) == set(cats)
-    for c, brands in cats.items():
-        tot = sum(brands.values())
-        hhi = sum((v / tot * 100.0) ** 2 for v in brands.values())
-        r = out[c]
-        assert r["n_brands"] == len(brands)
-        assert abs(r["hhi"] - hhi) < 0.1
-        assert 10000.0 / len(brands) - 1e-6 <= r["hhi"] <= 10000.0 + 1e-6
-        assert r["doj_band"] in ("unconcentrated", "moderate", "high")
-
-
-def test_bowker_symmetry_mirror(spark):
-    rows = (
-        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .select("user_id", "event_id", "event_type", "ts")
-        .collect()
-    )
-    by_user = defaultdict(list)
-    for r in rows:
-        by_user[r["user_id"]].append(r)
-    trans = defaultdict(int)
-    for evs in by_user.values():
-        evs.sort(key=lambda r: (r["ts"], r["event_id"]))
-        for a, b in zip(evs, evs[1:]):
-            trans[(a["event_type"], b["event_type"])] += 1
-    pairs = {}
-    for (i, j), n in trans.items():
-        if i < j:
-            pairs.setdefault((i, j), [0, 0])[0] = n
-        elif i > j:
-            pairs.setdefault((j, i), [0, 0])[1] = n
-    chi2 = sum(
-        (nij - nji) ** 2 / (nij + nji) for nij, nji in pairs.values() if nij + nji
-    )
-    df = sum(1 for nij, nji in pairs.values() if nij + nji)
-    row = bowker_symmetry_event_transitions(spark, SF_SMOKE).collect()[0]
-    assert row["df"] == df
-    assert abs(row["chi2"] - chi2) < 1e-4
-    worst_gap = max(abs(nij - nji) for nij, nji in pairs.values())
-    assert row["worst_pair_gap"] == worst_gap
-
-
-def test_shapley_channel_bound_survives_python_O():
-    """The 2^C coalition-lattice bound is a ValueError, not an assert —
-    `python -O` strips asserts, and a stripped bound would let a wide
-    channel taxonomy trigger an exponential lattice enumeration."""
-
-    src = inspect.getsource(analytics_checks.shapley_attribution_events)
-    tree = ast.parse(src)
-    raises = [
-        n
-        for n in ast.walk(tree)
-        if isinstance(n, ast.Raise)
-        and isinstance(n.exc, ast.Call)
-        and getattr(n.exc.func, "id", "") == "ValueError"
-    ]
-    assert raises, "shapley lattice bound must raise ValueError"
-    asserts = [
-        n
-        for n in ast.walk(tree)
-        if isinstance(n, ast.Assert) and "n_ch" in ast.dump(n)
-    ]
-    assert not asserts, "lattice bound still uses a strippable assert"
-
-
-def _avg_ranks(vals):
-    """value -> average rank over the pooled list (ties averaged)."""
-    s = sorted(vals)
-    r = {}
-    i = 0
-    while i < len(s):
-        j = i
-        while j < len(s) and s[j] == s[i]:
-            j += 1
-        r[s[i]] = (i + 1 + j) / 2.0
-        i = j
-    return r
-
-
-def test_dunn_matches_python_mirror(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select("event_type", "value")
-        .collect()
-    )
-    vals = [r["value"] for r in rows]
-    ranks = _avg_ranks(vals)
-    n = len(vals)
-    groups = {}
-    for r in rows:
-        groups.setdefault(r["event_type"], []).append(r["value"])
-
-    ties = Counter(vals)
-    tie_term = sum(t**3 - t for t in ties.values())
-    sigma2 = (n * (n + 1) - tie_term / (n - 1)) / 12.0
-    got = {
-        (r["type_a"], r["type_b"]): r
-        for r in dunn_posthoc_event_values(spark, sf_dir).collect()
-    }
-    k = len(groups)
-    assert len(got) == k * (k - 1) // 2
-    for (a, b), row in got.items():
-        ra = sum(ranks[v] for v in groups[a]) / len(groups[a])
-        rb = sum(ranks[v] for v in groups[b]) / len(groups[b])
-        z = (ra - rb) / (
-            sigma2 * (1 / len(groups[a]) + 1 / len(groups[b]))
-        ) ** 0.5
-        assert abs(row["z_dunn"] - z) < 1e-4, (a, b, row["z_dunn"], z)
-        assert row["n_comparisons"] == k * (k - 1) // 2
-
-
-def test_moods_median_matches_python_mirror(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select("event_type", "value")
-        .collect()
-    )
-    vals = sorted(r["value"] for r in rows)
-    n = len(vals)
-    # exact interpolated median, rounded at 6 (the operator contract)
-    if n % 2:
-        gm = vals[n // 2]
-    else:
-        gm = (vals[n // 2 - 1] + vals[n // 2]) / 2.0
-    gm = round(gm, 6)
-    groups = {}
-    for r in rows:
-        groups.setdefault(r["event_type"], []).append(r["value"])
-    n_above = sum(1 for v in vals if v > gm)
-    chi2 = 0.0
-    for g, vs in groups.items():
-        ng = len(vs)
-        oa = sum(1 for v in vs if v > gm)
-        ea = ng * n_above / n
-        eb = ng * (n - n_above) / n
-        chi2 += (oa - ea) ** 2 / ea + ((ng - oa) - eb) ** 2 / eb
-    row = moods_median_test_event_values(spark, sf_dir).collect()[0]
-    assert row["k_groups"] == len(groups) and row["n"] == n
-    assert row["n_above"] == n_above
-    assert abs(row["chi2"] - chi2) < 1e-4
-    assert row["df"] == len(groups) - 1
-
-
-def test_friedman_matches_python_mirror(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select("user_id", "event_type", "value")
-        .collect()
-    )
-
-    acc = defaultdict(list)
-    for r in rows:
-        acc[(r["user_id"], r["event_type"])].append(r["value"])
-    means = {k: round(sum(v) / len(v), 9) for k, v in acc.items()}
-    types = sorted({t for _, t in means})
-    k = len(types)
-    by_user = defaultdict(dict)
-    for (u, t), m in means.items():
-        by_user[u][t] = m
-    blocks = {u: d for u, d in by_user.items() if len(d) == k}
-    nb = len(blocks)
-    r2_sum = defaultdict(int)
-    a2 = 0
-    for u, d in blocks.items():
-        ranks = _avg_ranks(list(d.values()))
-        for t, m in d.items():
-            r2 = int(2 * ranks[m])
-            r2_sum[t] += r2
-            a2 += r2 * r2
-    sr2 = sum(v * v for v in r2_sum.values())
-    num = (k - 1) * (sr2 - nb * nb * k * (k + 1) ** 2)
-    den = a2 - nb * k * (k + 1) ** 2
-    chi2 = num / den
-    row = friedman_test_event_type_values(spark, sf_dir).collect()[0]
-    assert row["n_blocks"] == nb and row["k_types"] == k
-    assert abs(row["chi2"] - chi2) < 1e-4
-    # no-ties sanity: reduces to the classic 12/(nk(k+1)) form when a2
-    # equals the no-tie constant
-    if a2 == nb * sum((2 * i) ** 2 for i in range(1, k + 1)):
-        rj = {t: v / 2 for t, v in r2_sum.items()}
-        classic = 12.0 / (nb * k * (k + 1)) * sum(
-            v * v for v in rj.values()
-        ) - 3 * nb * (k + 1)
-        assert abs(chi2 - classic) < 1e-6
-
-
-def test_cochrans_q_matches_python_mirror(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select("user_id", "event_type", "value")
-        .collect()
-    )
-
-    acc = defaultdict(list)
-    for r in rows:
-        acc[(r["user_id"], r["event_type"])].append(r["value"])
-    means = {kk: round(sum(v) / len(v), 9) for kk, v in acc.items()}
-    vs = sorted(means.values())
-    nv = len(vs)
-    gmed = vs[nv // 2] if nv % 2 else (vs[nv // 2 - 1] + vs[nv // 2]) / 2.0
-    gmed = round(gmed, 6)
-    x = defaultdict(dict)
-    for (u, t), m in means.items():
-        x[u][t] = 1 if m > gmed else 0
-    k = len({t for _, t in means})
-    blocks = {u: d for u, d in x.items() if len(d) == k}
-    c_j = defaultdict(int)
-    sr2 = 0
-    n_tot = 0
-    for u, d in blocks.items():
-        ru = sum(d.values())
-        sr2 += ru * ru
-        n_tot += ru
-        for t, v in d.items():
-            c_j[t] += v
-    sc2 = sum(v * v for v in c_j.values())
-    q = k * (k - 1) * (sc2 - n_tot * n_tot / k) / (k * n_tot - sr2)
-    row = cochrans_q_event_types_users(spark, sf_dir).collect()[0]
-    assert row["n_blocks"] == len(blocks) and row["k_types"] == k
-    assert row["n_tot"] == n_tot
-    assert abs(row["q_stat"] - q) < 1e-4
-
-
-def test_jonckheere_matches_python_mirror_and_is_deterministic(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
-        .selectExpr("o_orderpriority AS g", "CAST(o_totalprice AS DOUBLE) AS v")
-        .collect()
-    )
-    order = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-    groups = defaultdict(list)
-    for r in rows:
-        groups[r["g"]].append(r["v"])
-    # J via per-pair dominance over sorted lists (O(n log n) per pair)
-
-    j_stat = 0.0
-    for a in range(len(order)):
-        for b in range(a + 1, len(order)):
-            xs = sorted(groups[order[a]])
-            for yv in groups[order[b]]:
-                lt = bisect.bisect_left(xs, yv)
-                eq = bisect.bisect_right(xs, yv) - lt
-                j_stat += lt + 0.5 * eq
-    n = len(rows)
-    ns = [len(groups[g]) for g in order]
-    e_j = (n * n - sum(m * m for m in ns)) / 4.0
-    tvs = Counter(r["v"] for r in rows).values()
-    var = (
-        (
-            n * (n - 1) * (2 * n + 5)
-            - sum(m * (m - 1) * (2 * m + 5) for m in ns)
-            - sum(t * (t - 1) * (2 * t + 5) for t in tvs)
-        )
-        / 72.0
-        + sum(m * (m - 1) * (m - 2) for m in ns)
-        * sum(t * (t - 1) * (t - 2) for t in tvs)
-        / (36.0 * n * (n - 1) * (n - 2))
-        + sum(m * (m - 1) for m in ns)
-        * sum(t * (t - 1) for t in tvs)
-        / (8.0 * n * (n - 1))
-    )
-    row = jonckheere_terpstra_priority_price(spark, sf_dir).collect()[0]
-    assert row["n"] == n
-    assert abs(row["jt_stat"] - j_stat) < 0.75, (row["jt_stat"], j_stat)
-    assert abs(row["jt_expected"] - e_j) < 1e-6
-    assert abs(row["jt_variance"] - var) < max(1e-3, 1e-9 * var)
-    dev = j_stat - e_j
-    z = (dev - (1 if dev > 0 else -1 if dev < 0 else 0) * 0.5) / var**0.5
-    assert abs(row["z"] - z) < 1e-4
-    # run-twice determinism: the stitched five-way cumulative must not
-    # ride a partitioning accident (the cliffs_delta hazard, reproduced
-    # live on this operator before the window-output pin)
-    again = jonckheere_terpstra_priority_price(spark, sf_dir).collect()[0]
-    assert row == again
-
-
-def test_brunner_munzel_matches_scipy_formulation(spark, sf_dir):
-    """Mirror of the scipy.stats.brunnermunzel construction (combined
-    ranks, within-group ranks, separate rank variances, Welch-like df)
-    recomputed in python on the collected values."""
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter("event_type IN ('purchase', 'view')")
-        .select("event_type", "value")
-        .collect()
-    )
-    x = [r["value"] for r in rows if r["event_type"] == "purchase"]
-    y = [r["value"] for r in rows if r["event_type"] == "view"]
-    nx, ny = len(x), len(y)
-    allv = x + y
-    rc = _avg_ranks(allv)
-    rcx = _avg_ranks(x)
-    rcy = _avg_ranks(y)
-    mx = sum(rc[v] for v in x) / nx
-    my = sum(rc[v] for v in y) / ny
-    sx = sum((rc[v] - rcx[v] - mx + (nx + 1) / 2) ** 2 for v in x) / (nx - 1)
-    sy = sum((rc[v] - rcy[v] - my + (ny + 1) / 2) ** 2 for v in y) / (ny - 1)
-    w = nx * ny * (my - mx) / ((nx + ny) * (nx * sx + ny * sy) ** 0.5)
-    df = (nx * sx + ny * sy) ** 2 / (
-        (nx * sx) ** 2 / (nx - 1) + (ny * sy) ** 2 / (ny - 1)
-    )
-    phat = (my - (ny + 1) / 2) / nx
-    row = brunner_munzel_purchase_view(spark, sf_dir).collect()[0]
-    assert row["n1"] == nx and row["n2"] == ny
-    assert abs(row["p_hat"] - phat) < 1e-5
-    assert abs(row["w_stat"] - w) < 1e-4
-    assert abs(row["df"] - df) < max(1e-2, 1e-5 * df)
-    # the estimand ties back to Mann-Whitney: p_hat in [0, 1]
-    assert 0.0 <= row["p_hat"] <= 1.0
-
-
-def test_cramer_von_mises_matches_python_mirror(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter("event_type IN ('purchase', 'view')")
-        .select("event_type", "value")
-        .collect()
-    )
-    x = Counter(r["value"] for r in rows if r["event_type"] == "purchase")
-    y = Counter(r["value"] for r in rows if r["event_type"] == "view")
-    n1, n2 = sum(x.values()), sum(y.values())
-    vals = sorted(set(x) | set(y))
-    c1 = c2 = 0
-    s = 0.0
-    for v in vals:
-        c1 += x.get(v, 0)
-        c2 += y.get(v, 0)
-        gap = c1 / n1 - c2 / n2
-        s += (x.get(v, 0) + y.get(v, 0)) * gap * gap
-    t_ref = n1 * n2 / (n1 + n2) ** 2 * s
-    row = cramer_von_mises_purchase_view(spark, sf_dir).collect()[0]
-    assert row["n1"] == n1 and row["n2"] == n2
-    assert abs(row["cvm_t"] - t_ref) < 1e-5
-    # run-twice determinism on the stitched cumulative
-    assert row == cramer_von_mises_purchase_view(spark, sf_dir).collect()[0]
-
-
-def test_anderson_darling_matches_python_mirror(spark, sf_dir):
-    """Pettitt-1976 two-sample A² recomputed brute-force over the pooled
-    distinct values."""
-
-    xs, ys = _pv_values(spark, sf_dir)
-    n1, n2 = len(xs), len(ys)
-    n = n1 + n2
-    s = 0.0
-    for v in sorted(set(xs) | set(ys)):
-        c1 = sum(1 for x in xs if x == v)
-        c2 = sum(1 for y in ys if y == v)
-        cum1 = sum(1 for x in xs if x <= v)
-        cum2 = sum(1 for y in ys if y <= v)
-        if cum1 + cum2 == n:
-            continue
-        h = (cum1 + cum2) / n
-        gap = cum1 / n1 - cum2 / n2
-        s += (c1 + c2) / (h * (1 - h)) * gap * gap
-    a2 = n1 * n2 / (n * n) * s
-    row = anderson_darling_purchase_view(spark, sf_dir).collect()[0]
-    assert row["n1"] == n1 and row["n2"] == n2
-    assert abs(row["ad_a2"] - a2) < 1e-4
-    assert row["significant"] == (round(a2, 6) > 2.492)
-
-
-def test_wasserstein_matches_python_mirror(spark, sf_dir):
-    """W1 via the quantile formulation (numpy-style) must equal the
-    stitched ECDF-segment fold."""
-
-    xs, ys = _pv_values(spark, sf_dir)
-    n1, n2 = len(xs), len(ys)
-    pooled = sorted(set(xs) | set(ys))
-    w1 = 0.0
-    for a, b in zip(pooled, pooled[1:]):
-        f1 = sum(1 for x in xs if x <= a) / n1
-        f2 = sum(1 for y in ys if y <= a) / n2
-        w1 += abs(f1 - f2) * (b - a)
-    row = wasserstein_purchase_view(spark, sf_dir).collect()[0]
-    assert row["n1"] == n1 and row["n2"] == n2
-    assert abs(row["w1_dollars"] - w1) < 1e-4
-    assert row["w1_dollars"] >= 0.0
-
-
-def test_energy_distance_matches_bruteforce_pairs(spark, sf_dir):
-    """O(n²) pairwise |Δ| expectations (the definition) must equal the
-    prefix-sum collapse, and the statistic must obey 0 ≤ E and
-    E² = 2E|XY| − E|XX| − E|YY|."""
-
-    xs, ys = _pv_values(spark, sf_dir)
-    n1, n2 = len(xs), len(ys)
-    exy = sum(abs(x - y) for x in xs for y in ys) / (n1 * n2)
-    exx = sum(abs(a - b) for a in xs for b in xs) / (n1 * n1)
-    eyy = sum(abs(a - b) for a in ys for b in ys) / (n2 * n2)
-
-    e = math.sqrt(max(2 * exy - exx - eyy, 0.0))
-    row = energy_distance_purchase_view(spark, sf_dir).collect()[0]
-    assert row["n1"] == n1 and row["n2"] == n2
-    assert abs(row["e_xy_dollars"] - exy) < 1e-4
-    assert abs(row["e_xx_dollars"] - exx) < 1e-4
-    assert abs(row["e_yy_dollars"] - eyy) < 1e-4
-    assert abs(row["energy_distance"] - e) < 1e-4
-
-
-def test_goodman_kruskal_matches_bruteforce_pairs(spark, sf_dir):
-    """All four ordinal measures recomputed from O(n²) explicit pair
-    classification on the raw orders."""
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
-        .selectExpr(
-            "CAST(SUBSTRING(o_orderpriority, 1, 1) AS INT) AS x",
-            "CAST(FLOOR(o_totalprice / 25000.0) AS INT) AS y",
-        )
-        .collect()
-    )
-    pts = [(r["x"], r["y"]) for r in rows]
-    n = len(pts)
-    conc = disc = tx = ty = 0
-    for i in range(n):
-        for j in range(i + 1, n):
-            dx = pts[j][0] - pts[i][0]
-            dy = pts[j][1] - pts[i][1]
-            if dx == 0:
-                tx += 1
-            if dy == 0:
-                ty += 1
-            if dx != 0 and dy != 0:
-                if dx * dy > 0:
-                    conc += 1
-                else:
-                    disc += 1
-    t0 = n * (n - 1) / 2
-    row = goodman_kruskal_priority_price_orders(spark, sf_dir).collect()[0]
-    assert row["n"] == n
-    assert row["concordant"] == conc
-    assert row["discordant"] == disc
-    assert row["ties_x"] == tx
-    assert row["ties_y"] == ty
-    assert abs(row["gamma"] - (conc - disc) / (conc + disc)) < 1e-6
-    assert abs(row["somers_d_yx"] - (conc - disc) / (t0 - tx)) < 1e-6
-    assert abs(row["somers_d_xy"] - (conc - disc) / (t0 - ty)) < 1e-6
-    assert (
-        abs(row["tau_b"] - (conc - disc) / math.sqrt((t0 - tx) * (t0 - ty)))
-        < 1e-6
-    )
-
-
-def test_wilcoxon_signed_rank_matches_python_mirror(spark, sf_dir):
-    """W⁺ and z recomputed with explicit average ranks over the paired
-    daily cent differences."""
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type").isin("purchase", "view"))
-        .selectExpr("CAST(ts AS DATE) AS day", "event_type", "value")
-        .collect()
-    )
-    acc = defaultdict(lambda: [Decimal(0), Decimal(0)])
-    for r in rows:
-        q = Decimal(str(r["value"])).quantize(Decimal("0.01"))
-        acc[r["day"]][0 if r["event_type"] == "purchase" else 1] += q
-    ds = [int((p - v) * 100) for p, v in acc.values() if p != v]
-    n = len(ds)
-    by_abs = defaultdict(lambda: [0, 0])
-    for d in ds:
-        by_abs[abs(d)][0 if d > 0 else 1] += 1
-    w_plus = 0.0
-    seen = 0
-    tie_term = 0
-    for a in sorted(by_abs):
-        tp, tn = by_abs[a]
-        t = tp + tn
-        avg_rank = seen + (t + 1) / 2
-        w_plus += tp * avg_rank
-        seen += t
-        tie_term += t**3 - t
-    mean = n * (n + 1) / 4
-    var = n * (n + 1) * (2 * n + 1) / 24 - tie_term / 48
-    z = (w_plus - mean) / math.sqrt(var)
-    row = wilcoxon_signed_rank_purchase_view_daily(spark, sf_dir).collect()[0]
-    assert row["n_days_nonzero"] == n
-    assert abs(row["w_plus"] - w_plus) < 1e-9
-    assert abs(row["z_score"] - z) < 1e-5
-    assert row["significant"] == (abs(round(z, 6)) > 1.959964)
-
-
-def test_cochran_armitage_matches_python_mirror(spark, sf_dir):
-    """z recomputed from the 5-row (score, n, r) table, plus invariance:
-    the statistic must be exactly 0 when the response is constant."""
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
-        .selectExpr(
-            "CAST(SUBSTRING(o_orderpriority, 1, 1) AS INT) AS s",
-            "CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS f",
-        )
-        .collect()
-    )
-    per = defaultdict(lambda: [0, 0])
-    for r in rows:
-        per[r["s"]][0] += 1
-        per[r["s"]][1] += r["f"]
-    n = sum(v[0] for v in per.values())
-    rr = sum(v[1] for v in per.values())
-    sx = sum(s * v[0] for s, v in per.items())
-    sxx = sum(s * s * v[0] for s, v in per.items())
-    t = sum(s * v[1] for s, v in per.items())
-    p = rr / n
-    z = (t - rr * sx / n) / math.sqrt(p * (1 - p) * (sxx - sx * sx / n))
-    row = cochran_armitage_trend_priority_orders(spark, sf_dir).collect()[0]
-    assert row["n"] == n
-    assert row["fulfilled"] == rr
-    assert abs(row["overall_rate"] - p) < 1e-6
-    assert abs(row["z_trend"] - z) < 1e-5
-    assert row["significant"] == (abs(round(z, 6)) > 1.959964)
-
-
-def test_theils_u_matches_python_mirror(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("event_type", "CAST(weekday(ts) + 1 AS INT) AS isodow")
-        .collect()
-    )
-    xy = Counter((r["event_type"], r["isodow"]) for r in rows)
-    xs = Counter(k[0] for k in xy.elements())
-    ys = Counter(k[1] for k in xy.elements())
-    n = len(rows)
-
-    def ent(counter):
-        return sum(
-            (c / n) * (math.log(n) - math.log(c)) for c in counter.values()
-        )
-
-    hx, hy, hxy = ent(xs), ent(ys), ent(xy)
-    i = hx + hy - hxy
-    row = theils_u_event_type_dow(spark, sf_dir).collect()[0]
-    assert row["n"] == n
-    assert abs(row["h_type"] - hx) < 1e-5
-    assert abs(row["h_dow"] - hy) < 1e-5
-    assert abs(row["h_joint"] - hxy) < 1e-5
-    assert abs(row["u_type_given_dow"] - i / hx) < 1e-4
-    assert abs(row["u_dow_given_type"] - i / hy) < 1e-4
-    assert abs(row["u_symmetric"] - 2 * i / (hx + hy)) < 1e-4
-    assert 0.0 - 1e-9 <= row["u_type_given_dow"] <= 1.0 + 1e-9
-
-
-def test_local_clustering_matches_python_mirror(spark, sf_dir):
-    """c_v recomputed from an explicit adjacency-set graph build."""
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-        .collect()
-    )
-    per_order = defaultdict(set)
-    for r in rows:
-        per_order[r["l_orderkey"]].add(r["l_partkey"])
-    support = defaultdict(int)
-    for parts in per_order.values():
-        for a, b in combinations(sorted(parts), 2):
-            support[(a, b)] += 1
-    adj = defaultdict(set)
-    for (a, b), s in support.items():
-        if s >= 2:
-            adj[a].add(b)
-            adj[b].add(a)
-    cc = {}
-    for v, nb in adj.items():
-        d = len(nb)
-        if d < 2:
-            continue
-        t = sum(
-            1 for a, b in combinations(sorted(nb), 2) if b in adj[a]
-        )
-        cc[v] = (d, t, round(2.0 * t / (d * (d - 1)), 6))
-    avg = round(sum(c for _, _, c in cc.values()) / len(cc), 6)
-    expect = sorted(cc.items(), key=lambda kv: (-kv[1][2], kv[0]))[:15]
-    got = local_clustering_topk_parts(spark, sf_dir).collect()
-    assert len(got) == min(15, len(cc))
-    for row, (node, (d, t, c)) in zip(got, expect):
-        assert row["part"] == node
-        assert row["degree"] == d
-        assert row["triangles"] == t
-        assert abs(row["local_cc"] - c) < 1e-9
-        assert abs(row["avg_local_cc"] - avg) < 1e-5
-
-
-def test_seasonal_mann_kendall_matches_python_mirror(spark, sf_dir):
-    per_g = defaultdict(list)
-    for d, v in daily_sums(spark, sf_dir).items():
-        per_g[d.isoweekday()].append(v)
-    s_tot = pairs = n = 0
-    var_tot = 0.0
-    for g, xs in per_g.items():
-        ng = len(xs)
-        n += ng
-        s = 0
-        for i in range(ng):
-            for j in range(i + 1, ng):
-                pairs += 1
-                s += (xs[j] > xs[i]) - (xs[j] < xs[i])
-        s_tot += s
-        ties = defaultdict(int)
-        for v in xs:
-            ties[v] += 1
-        tt = sum(t * (t - 1) * (2 * t + 5) for t in ties.values())
-        var_tot += round((ng * (ng - 1) * (2 * ng + 5) - tt) / 18.0, 9)
-
-    if s_tot > 0:
-        z = (s_tot - 1) / math.sqrt(var_tot)
-    elif s_tot < 0:
-        z = (s_tot + 1) / math.sqrt(var_tot)
-    else:
-        z = 0.0
-    row = seasonal_mann_kendall_daily(spark, sf_dir).collect()[0]
-    assert row["n"] == n
-    assert row["n_seasons"] == len(per_g)
-    assert row["n_pairs"] == pairs
-    assert row["s_total"] == s_tot
-    assert abs(row["var_total"] - var_tot) < 1e-4
-    assert abs(row["z"] - z) < 1e-6
-
-
-def test_kendalls_w_matches_python_mirror(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr(
-            "CAST(weekday(ts) + 1 AS INT) AS g", "event_type", "value"
-        )
-        .collect()
-    )
-    acc = defaultdict(Decimal)
-    for r in rows:
-        acc[(r["g"], r["event_type"])] += Decimal(str(r["value"]))
-    cells = {k: round(float(v), 9) for k, v in acc.items()}
-    judges = sorted({g for g, _ in cells})
-    items = sorted({e for _, e in cells})
-    m, k = len(judges), len(items)
-    r2 = defaultdict(int)
-    tt = 0
-    for g in judges:
-        vals = [(cells[(g, e)], e) for e in items if (g, e) in cells]
-        by_v = defaultdict(list)
-        for v, e in vals:
-            by_v[v].append(e)
-        seen = 0
-        for v in sorted(by_v):
-            t = len(by_v[v])
-            dr = 2 * seen + t + 1
-            for e in by_v[v]:
-                r2[e] += dr
-            seen += t
-            tt += t**3 - t
-    sd2 = sum((r2[e] - m * (k + 1)) ** 2 for e in items)
-    w = 3.0 * sd2 / (m * m * (k**3 - k) - m * tt)
-    chi2 = round(m * (k - 1) * round(w, 6), 6)
-    row = kendalls_w_weekday_event_types(spark, sf_dir).collect()[0]
-    assert row["n_judges"] == m
-    assert row["n_items"] == k
-    assert abs(row["kendalls_w"] - w) < 1e-6
-    assert abs(row["chi2"] - chi2) < 1e-6
-    assert 0.0 <= row["kendalls_w"] <= 1.0 + 1e-9
-
-
-def test_ansari_bradley_matches_python_mirror(spark, sf_dir):
-    """AB scores recomputed naively (per-position min(rank, N+1-rank)
-    with tie averaging) and the conditional moments from the observed
-    score vector."""
-
-    xs, ys = _pv_values(spark, sf_dir)
-    pooled = sorted([(v, 1) for v in xs] + [(v, 2) for v in ys])
-    n = len(pooled)
-    base = [min(p, n + 1 - p) for p in range(1, n + 1)]
-    by_v = defaultdict(list)
-    for pos, (v, grp) in enumerate(pooled):
-        by_v[v].append((pos, grp))
-    scores = {}
-    for v, members in by_v.items():
-        avg = sum(base[pos] for pos, _ in members) / len(members)
-        scores[v] = avg
-    w = sum(scores[v] for v in xs)
-    all_scores = [scores[v] for v, _ in pooled]
-    s_tot = sum(all_scores)
-    ss_tot = sum(s * s for s in all_scores)
-    n1, n2 = len(xs), len(ys)
-    sbar = s_tot / n
-    ew = n1 * sbar
-    var = n1 * n2 * (ss_tot - n * sbar * sbar) / (n * (n - 1))
-    z = (w - ew) / math.sqrt(var)
-    row = ansari_bradley_purchase_view(spark, sf_dir).collect()[0]
-    assert row["n1"] == n1 and row["n2"] == n2
-    assert abs(row["ab_w"] - w) < 1e-3
-    assert abs(row["expected_w"] - ew) < 1e-3
-    assert abs(row["z_score"] - z) < 1e-4
-
-
-def test_canonical_correlation_matches_numpy(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("CAST(ts AS DATE) AS day", "event_type", "value")
-        .collect()
-    )
-    acc = defaultdict(lambda: [Decimal(0), Decimal(0), 0, 0])
-    for r in rows:
-        e = acc[r["day"]]
-        if r["event_type"] == "purchase":
-            e[0] += Decimal(str(r["value"]))
-        elif r["event_type"] == "view":
-            e[1] += Decimal(str(r["value"]))
-        elif r["event_type"] == "click":
-            e[2] += 1
-        elif r["event_type"] == "error":
-            e[3] += 1
-    m = np.array(
-        [[float(a), float(b), c, d] for a, b, c, d in acc.values()]
-    )
-    n = len(m)
-    mc = m - m.mean(axis=0)
-    S = mc.T @ mc
-    A, B, C = S[:2, :2], S[2:, 2:], S[:2, 2:]
-    M = np.linalg.inv(A) @ C @ np.linalg.inv(B) @ C.T
-    lams = sorted(np.linalg.eigvals(M).real, reverse=True)
-    row = canonical_correlation_daily(spark, sf_dir).collect()[0]
-    assert row["n_days"] == n
-
-    assert abs(row["rho1"] - math.sqrt(max(lams[0], 0))) < 1e-4
-    assert abs(row["rho2"] - math.sqrt(max(lams[1], 0))) < 1e-4
-    wilks = (1 - lams[0]) * (1 - lams[1])
-    assert abs(row["wilks_lambda"] - wilks) < 1e-4
-    chi2 = -(n - 1 - 2.5) * math.log(wilks)
-    assert abs(row["bartlett_chi2"] - chi2) < 1e-2
-    assert 0 <= row["rho2"] <= row["rho1"] <= 1.0 + 1e-9
-
-
-def test_quade_matches_python_mirror(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr(
-            "CAST(weekday(ts) + 1 AS INT) AS g", "event_type", "value"
-        )
-        .collect()
-    )
-    acc = defaultdict(lambda: [Decimal(0), 0])
-    for r in rows:
-        e = acc[(r["g"], r["event_type"])]
-        e[0] += Decimal(str(r["value"]))
-        e[1] += 1
-    cells = {k: round(float(v[0]) / v[1], 9) for k, v in acc.items()}
-    blocks = sorted({g for g, _ in cells})
-    items = sorted({t for _, t in cells})
-    n, k = len(blocks), len(items)
-
-    def dranks(vals):
-        """value -> doubled average rank."""
-        cnt = Counter(vals)
-        out = {}
-        seen = 0
-        for v in sorted(cnt):
-            t = cnt[v]
-            out[v] = 2 * seen + t + 1
-            seen += t
-        return out
-
-    rngs = {}
-    dr = {}
-    for g in blocks:
-        vals = [cells[(g, t)] for t in items]
-        rk = dranks(vals)
-        for t in items:
-            dr[(g, t)] = rk[cells[(g, t)]]
-        rngs[g] = max(vals) - min(vals)
-    dq = dranks(list(rngs.values()))
-    s4 = {
-        (g, t): dq[rngs[g]] * (dr[(g, t)] - (k + 1))
-        for g in blocks
-        for t in items
-    }
-    sa = sum(v * v for v in s4.values())
-    sb = sum(
-        sum(s4[(g, t)] for g in blocks) ** 2 for t in items
-    )
-    a_minus_b = sa - sb / n
-    f = (n - 1) * (sb / n) / a_minus_b if a_minus_b > 0 else None
-    row = quade_test_event_type_values(spark, sf_dir).collect()[0]
-    assert row["n_blocks"] == n and row["k_treatments"] == k
-    assert row["df1"] == k - 1 and row["df2"] == (n - 1) * (k - 1)
-    if f is None:
-        assert row["f_stat"] is None and row["significant"] is True
-    else:
-        assert abs(row["f_stat"] - f) < 1e-4
-        assert row["significant"] == (round(f, 6) > 2.776289)

@@ -5,23 +5,23 @@ planted-pathology verdicts)."""
 from __future__ import annotations
 
 import hashlib
-import math
 
 from pyspark.sql import functions as F
 
+from data_ingestion_pipeline_spark.operators.bpe import bpe_merges_documents
 from data_ingestion_pipeline_spark.operators.corpus_quality import (
     DUP5_MAX,
     TOP2_MAX,
     WINNOW_K,
     WINNOW_W,
-    bigram_perplexity_documents,
-    cohens_kappa_quality_flags_documents,
     dsir_importance_documents,
     gopher_repetition_documents,
     winnowing_fingerprints_documents,
     winnowing_near_copy_pairs_documents,
 )
 from tests.conftest import SF_SMOKE, write_sf
+from tests.test_round7_ops import _py_bpe
+
 
 DOCS = "doc_id long, text string"
 
@@ -139,73 +139,20 @@ def test_dsir_importance_separates_target_language(spark):
     )
 
 
-def test_bigram_perplexity_hand_computed(spark, tmp_path):
-    """Two-document planted corpus with a hand-derivable add-one bigram
-    model: doc 10 = "a b a b", doc 11 = "a b c". Model: c(a,b)=3, c(b,a)=1,
-    c(b,c)=1; contexts c(a,.)=3, c(b,.)=2; V=3. NLLs follow the exact
-    ln-term rounding policy the operator declares."""
+def test_bpe_greedy_leftmost_overlap_semantics(spark, tmp_path):
+    """The island/parity rewrite must implement greedy LEFTMOST
+    non-overlapping merges — pinned against the reference on
+    pathological repeat-runs ('aaaa' merging a|a → two merges, 'aaa' →
+    one merge plus a trailing 'a')."""
 
-    docs = spark.createDataFrame(
-        [(10, "a b a b", "s"), (11, "a b c", "s")],
-        "doc_id long, text string, source string",
-    )
-    sf = write_sf(tmp_path, documents=docs)
-    got = {r.doc_id: r for r in bigram_perplexity_documents(spark, sf).collect()}
-
-    def r9ln(x):
-        return round(math.log(x), 9)
-
-    nll_ab = r9ln(3 + 3) - r9ln(3 + 1)  # -ln P(b|a) = ln((cu+V)/(cb+1))
-    nll_ba = r9ln(2 + 3) - r9ln(1 + 1)
-    nll_bc = r9ln(2 + 3) - r9ln(1 + 1)
-    d10 = round((2 * nll_ab + nll_ba) / 3, 6)
-    d11 = round((nll_ab + nll_bc) / 2, 6)
-    assert got[10].n_bigrams == 3 and got[11].n_bigrams == 2
-    assert got[10].avg_nll == d10
-    assert got[11].avg_nll == d11
-    assert got[10].ppl == round(math.exp(d10), 4)
-    assert got[11].ppl == round(math.exp(d11), 4)
-    # the repeated-transition doc is more fluent under the corpus model
-    assert got[10].ppl < got[11].ppl
-
-
-def test_cohens_kappa_matches_python_mirror(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "n_chars", "text")
-        .collect()
-    )
-    nc = [r["n_chars"] for r in rows]
-    nt = [len([t for t in r["text"].strip().split() if t]) for r in rows]
-
-    def med(vs):
-        vs = sorted(vs)
-        n = len(vs)
-        return round(
-            vs[n // 2] if n % 2 else (vs[n // 2 - 1] + vs[n // 2]) / 2.0, 6
-        )
-
-    mc, mt = med(nc), med(nt)
-    n11 = n10 = n01 = n00 = 0
-    for c, t in zip(nc, nt):
-        a, b = c > mc, t > mt
-        if a and b:
-            n11 += 1
-        elif a:
-            n10 += 1
-        elif b:
-            n01 += 1
-        else:
-            n00 += 1
-    n = len(rows)
-    po = (n11 + n00) / n
-    pa, pb = (n11 + n10) / n, (n11 + n01) / n
-    pe = pa * pb + (1 - pa) * (1 - pb)
-    kappa = (po - pe) / (1 - pe)
-    row = cohens_kappa_quality_flags_documents(spark, sf_dir).collect()[0]
-    assert (row["n11"], row["n10"], row["n01"], row["n00"]) == (
-        n11, n10, n01, n00,
-    )
-    assert abs(row["kappa"] - kappa) < 1e-5
-    # the two length-flavored raters must agree beyond chance on this corpus
-    assert row["kappa"] > 0
+    rows = [
+        (1, "aaaa aaaa aaaa"),   # dominant pair a|a, even run
+        (2, "aaa aaa"),          # odd run: leftmost merge, trailing a
+        (3, "xy xy xy"),         # runner-up pair
+    ]
+    sf = write_sf(tmp_path, documents=spark.createDataFrame(rows, "doc_id long, text string"))
+    out = bpe_merges_documents(spark, sf).orderBy("merge_rank").collect()
+    ref_merges, _ = _py_bpe({"aaaa": 3, "aaa": 2, "xy": 3}, 5)
+    assert [(r.merge_rank, r.pair, r.pair_count) for r in out] == [
+        (i + 1, f"{a}|{b}", c) for i, (a, b, c) in enumerate(ref_merges)
+    ]

@@ -12,7 +12,6 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from data_ingestion_pipeline_spark.operators import evolution_checks as ev
 from data_ingestion_pipeline_spark.operators.evolution_checks import (
     bucketed_colocated_join,
     compacted_sorted_orders,
@@ -29,7 +28,6 @@ from data_ingestion_pipeline_spark.plans.quality import (
     violations,
 )
 from data_ingestion_pipeline_spark.plans.table import ManagedTable
-from data_ingestion_pipeline_spark.sources.catalog import load_table
 from tests.conftest import SF_SMOKE, executed_plan
 
 
@@ -167,37 +165,3 @@ def test_layout_checks_rebuild_on_every_call(spark, monkeypatch):
         compacted_sorted_orders_table(spark, SF_SMOKE)
         zorder_orders_path(spark, SF_SMOKE)
     assert calls == {"sorted_overwrite": 2, "zorder_frame": 2}
-
-
-def test_check_rules_dotted_rule_names(spark):
-    df = spark.createDataFrame([(1, 2.0), (2, None)], "x long, a double")
-    out = {
-        r.rule: r.n_violations
-        for r in check_rules(
-            df,
-            {"x.notnull": F.col("x").isNotNull(), "a.notnull": F.col("a").isNotNull()},
-        ).collect()
-    }
-    assert out == {"x.notnull": 0, "a.notnull": 1}
-
-
-def test_dpp_ship_year_join_plans_dynamic_pruning(spark):
-    """The DPP demo must actually exercise DYNAMIC partition pruning: the
-    fact scan carries a dynamicpruningexpression partition filter (the
-    year set is join-produced, not foldable), and the surviving years are
-    exactly the ship-window years — static recompute agrees."""
-
-    df = ev.dpp_ship_year_join_orders(spark, SF_SMOKE)
-    assert "dynamicpruningexpression" in executed_plan(df)
-    rows = {r["o_year"]: r["n_orders"] for r in df.collect()}
-    assert set(rows) == {1997, 1998, 1999}
-
-    orders = load_table(spark, SF_SMOKE, "orders")
-    static = {
-        r["y"]: r["n"]
-        for r in orders.groupBy(F.year("o_orderdate").alias("y"))
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("y").isin(1997, 1998, 1999))
-        .collect()
-    }
-    assert rows == static

@@ -5,18 +5,13 @@ parity, span excision, language-ID rules, multimodal plumbing."""
 from __future__ import annotations
 
 import hashlib
-import math
 import random
-import re
-from collections import Counter, defaultdict
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from data_ingestion_pipeline_spark.dedup.clustering import (
     connected_components,
-    connected_components_star,
     dedup_groups,
 )
 from data_ingestion_pipeline_spark.dedup.embedding import (
@@ -42,45 +37,20 @@ from data_ingestion_pipeline_spark.multimodal.binary_ops import (
     decode_image_features,
     sample_video_frames,
 )
-from data_ingestion_pipeline_spark.operators import llm_data
-from data_ingestion_pipeline_spark.operators import llm_data as ll
 from data_ingestion_pipeline_spark.operators.llm_data import (
     EMB_DIM,
-    _ann_query_batch,
     _near_dup_embeddings,
-    ann_ivf_nprobe_sweep_embeddings,
-    ann_ivfpq_sample_adc_topk_embeddings,
-    ann_pq_sample_adc_topk_embeddings,
-    exact_substring_excision,
-    leakage_safe_split_documents,
-    minhash_md5_replay_near_dup_documents,
-    near_dup_threshold_sweep_documents,
-    simhash_md5_replay_near_dup_documents,
 )
-from data_ingestion_pipeline_spark.similarity.brute_force import (
-    topk_cosine_batch,
-    topk_per_query,
-)
-from data_ingestion_pipeline_spark.similarity.ivf import (
-    ivf_build_index,
-    ivf_topk,
-    sample_centroids,
-    select_probe_cells,
-)
+from data_ingestion_pipeline_spark.similarity.brute_force import topk_cosine_batch
+from data_ingestion_pipeline_spark.similarity.ivf import ivf_topk
 from data_ingestion_pipeline_spark.similarity.ivfpq import (
     ivfpq_encode,
     ivfpq_topk,
     train_ivfpq,
 )
-from data_ingestion_pipeline_spark.similarity.knn import knn_graph
-from data_ingestion_pipeline_spark.similarity.lsh import (
-    ann_topk,
-    ann_topk_multitable,
-    band_buckets,
-)
-from data_ingestion_pipeline_spark.similarity.pq import train_codebooks
+from data_ingestion_pipeline_spark.similarity.lsh import ann_topk
 from data_ingestion_pipeline_spark.sources.catalog import load_table
-from tests.conftest import SF_SMOKE, write_sf
+from tests.conftest import SF_SMOKE
 
 
 WORDS = (
@@ -421,858 +391,3 @@ def test_audio_chunking_plumbing(spark):
 
     with pytest.raises(Exception, match="NotImplementedError|not present"):
         chunk_audio(df, strict=True).collect()
-
-
-def test_knn_graph_matches_numpy_brute_force(spark):
-    out = llm_data.knn_graph_embeddings(spark, SF_SMOKE).collect()
-    emb = load_table(spark, SF_SMOKE, "embeddings").collect()
-    ids = np.array([r.vec_id for r in emb])
-    m = np.stack([np.array(r.embedding, dtype="float64") for r in emb])
-    scores = np.round(
-        (m @ m.T) / np.outer(np.linalg.norm(m, axis=1), np.linalg.norm(m, axis=1)), 6
-    )
-    np.fill_diagonal(scores, -np.inf)
-    got = {}
-    for r in out:
-        got.setdefault(r.src_id, []).append((r.rnk, r.nbr_id, r.score))
-    assert len(got) == len(ids)
-    for i, src in enumerate(ids):
-        # expected top-5 with (score desc, nbr_id asc) tie-break
-        order = sorted(
-            range(len(ids)), key=lambda j: (-scores[i, j], ids[j])
-        )[:5]
-        expected = [(rk + 1, ids[j], scores[i, j]) for rk, j in enumerate(order)]
-        assert sorted(got[src]) == expected, f"src {src}"
-
-
-def test_pack_documents_respects_budget_and_order(spark):
-    rows = llm_data.pack_documents_context_windows(spark, SF_SMOKE).collect()
-    by_source: dict[str, list] = {}
-    for r in rows:
-        by_source.setdefault(r.source, []).append(r)
-    budget = 2048
-    for source, docs in by_source.items():
-        docs.sort(key=lambda r: r.doc_id)
-        running = 0
-        for r in docs:
-            # a doc's pack is determined by its start offset in doc_id order
-            assert r.pack_id == running // budget, (source, r.doc_id)
-            running += r.n_tokens
-        # pack ids are non-decreasing and start at 0
-        assert docs[0].pack_id == 0
-
-
-def test_corpus_mixture_rates_and_determinism(spark):
-    once = llm_data.corpus_mixture_documents(spark, SF_SMOKE)
-    kept = once.collect()
-    again = llm_data.corpus_mixture_documents(spark, SF_SMOKE).collect()
-    assert sorted(r.doc_id for r in kept) == sorted(r.doc_id for r in again)
-    total = load_table(spark, SF_SMOKE, "documents").count()
-    # global keep-rate should land near the tier-weighted mean (~0.43 for
-    # uniform sources); md5-byte sampling on 500 docs is tight enough for
-    # a coarse band
-    assert 0.25 * total < len(kept) < 0.65 * total
-    # every kept row respects its own tier byte
-    for r in kept:
-        src_num = int("".join(ch for ch in r.source if ch.isdigit()))
-        expected = {0: 230, 1: 128, 2: 64, 3: 26}[src_num % 4]
-        assert r.rate_byte == expected
-
-
-def test_dedup_survivor_policy_keeps_longest(spark):
-    out = {
-        r.fingerprint: (r.survivor_id, r.n_tokens)
-        for r in llm_data.dedup_survivor_quality_documents(spark, SF_SMOKE).collect()
-    }
-    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text").collect()
-    aug = [(r.doc_id, r.text) for r in docs] + [
-        (r.doc_id + 100000, r.text) for r in docs if r.doc_id % 10 == 0
-    ]
-
-    groups: dict[str, list] = {}
-    for doc_id, text in aug:
-        canon = re.sub(r"\s+", " ", text.strip()).lower()
-        fp = hashlib.md5(canon.encode()).hexdigest()
-        n_tok = len(text.strip().split())
-        groups.setdefault(fp, []).append((doc_id, n_tok))
-    assert set(groups) == set(out)
-    for fp, members in groups.items():
-        best = sorted(members, key=lambda m: (-m[1], m[0]))[0]
-        assert out[fp] == (best[0], best[1]), fp
-
-
-def test_minhash_verified_equals_exact_jaccard(spark):
-    """The recall-complete banding must reproduce the exact J>=0.7 pair set
-    (this is the property that justifies giving it a SQL oracle)."""
-
-    aug = llm_data._near_dup_corpus(load_table(spark, SF_SMOKE, "documents"))
-    exact = {
-        (r.id_a, r.id_b)
-        for r in jaccard_pairs(aug, "text", "doc_id", n=3, threshold=0.7).collect()
-    }
-    verified = {
-        (r.id_a, r.id_b)
-        for r in llm_data.minhash_verified_near_dup_documents(
-            spark, SF_SMOKE
-        ).collect()
-    }
-    assert verified == exact
-    assert exact, "fixture must plant at least one J>=0.7 pair"
-
-
-def test_embedding_lsh_verified_equals_exact_cosine(spark):
-    """Recall-complete hyperplane banding must reproduce the exact ≥0.8
-    cosine pair set (the property justifying its SQL oracle)."""
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    aug = llm_data._near_dup_embeddings(emb)
-    exact = {
-        (r.id_a, r.id_b)
-        for r in cosine_pairs_blas(aug, "vec_id", "embedding", threshold=0.8).collect()
-    }
-    verified = {
-        (r.id_a, r.id_b)
-        for r in llm_data.embedding_lsh_verified_near_dup(spark, SF_SMOKE).collect()
-    }
-    assert verified == exact
-    assert exact, "fixture must plant at least one >=0.8 pair"
-
-
-def test_pq_topk_recall_vs_brute_force(spark):
-    """ADC over 16×256 codebooks recovers most of the exact top-20
-    (measured 0.7-0.8 across sf0.001-0.1; pinned with margin). The approx
-    scores must also be sane: rank-1 is the query itself."""
-    pq = llm_data.ann_pq_topk_embeddings(spark, SF_SMOKE).collect()
-    exact = {r.vec_id for r in llm_data.cosine_topk_embeddings(spark, SF_SMOKE).collect()}
-    got = {r.vec_id for r in pq}
-    assert len(got & exact) / 20 >= 0.5
-    best = max(pq, key=lambda r: r.approx_score)
-    assert best.vec_id == 0
-
-
-def test_decontamination_catches_all_planted_leaks(spark):
-    out = llm_data.decontaminate_documents(spark, SF_SMOKE)
-    rows = {r["doc_id"]: r for r in out.collect()}
-    docs = load_table(spark, SF_SMOKE, "documents")
-    bench_ids = [r["doc_id"] for r in docs.filter("doc_id % 97 = 0").collect()]
-    for bid in bench_ids:
-        leaked_id = bid + 2000000
-        assert leaked_id in rows, f"planted leak {leaked_id} not flagged"
-        # every window of an 80%-prefix copy comes from the benchmark doc
-        assert rows[leaked_id]["contamination"] == 1.0
-
-
-def test_multitable_lsh_recall_and_score_exactness(spark):
-    """OR-amplified LSH (16×4) recovers most of the exact top-10 and the
-    scores of returned candidates are exact cosines (same expression as
-    brute force — bucketing only selects, never rescores)."""
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    q = emb.filter(F.col("vec_id").isin(0, 1, 2)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    ann = ann_topk_multitable(emb, q, k=10, n_tables=16, planes_per_table=4)
-    brute = topk_cosine_batch(emb, q, k=10)
-    brute_sets: dict[int, set] = {}
-    brute_scores = {}
-    for r in brute.collect():
-        brute_sets.setdefault(r.query_id, set()).add(r.vec_id)
-        brute_scores[(r.query_id, r.vec_id)] = r.score
-    ann_sets: dict[int, set] = {}
-    for r in ann.collect():
-        ann_sets.setdefault(r.query_id, set()).add(r.vec_id)
-        if (r.query_id, r.vec_id) in brute_scores:
-            assert abs(brute_scores[(r.query_id, r.vec_id)] - r.score) < 1e-9
-        if r.rank == 1:
-            # the query collides with itself in every table
-            assert r.vec_id == r.query_id
-    for qid, bset in brute_sets.items():
-        assert len(ann_sets[qid] & bset) >= 5, (qid, ann_sets[qid], bset)
-
-
-def test_ann_recall_gates_pass_on_fixture(spark):
-    """The three driver-facing recall gates must emit recall_ok=TRUE for
-    every query point — this is the same predicate the DuckDB oracle pins
-    to literal TRUE."""
-    for fn, n_rows in (
-        (llm_data.ann_lsh_recall_embeddings, 3),
-        (llm_data.ann_ivf_recall_embeddings, 3),
-        (llm_data.ann_pq_recall_embeddings, 1),
-    ):
-        rows = fn(spark, SF_SMOKE).collect()
-        assert len(rows) == n_rows, fn.__name__
-        assert all(r.recall_ok for r in rows), (fn.__name__, rows)
-
-
-def test_dup_span_profile_short_documents(spark):
-    """Documents shorter than the 8-token window emit one partial window
-    instead of throwing INVALID_ARRAY_INDEX under ANSI mode; identical
-    short docs mark the later one as a duplicate span."""
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "alpha beta gamma"), (3, "solo")],
-        "doc_id long, text string",
-    )
-    out = {r.doc_id: (r.n_spans, r.n_dup_spans) for r in
-           llm_data.dup_span_profile(docs).collect()}
-    assert out[1] == (1, 0)
-    assert out[2] == (1, 1)  # same partial window, later occurrence
-    assert out[3] == (1, 0)
-
-
-def test_star_contraction_closes_long_chain_in_log_rounds(spark):
-    """A 1024-node chain has diameter 1023: label propagation cannot close
-    it in 15 rounds, star contraction must (O(log n) alternations)."""
-
-    n = 1024
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
-    ).repartition(8)
-    got = connected_components_star(chain, max_iter=15).collect()
-    assert len(got) == n
-    assert all(r.cluster_id == 0 for r in got)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=15)
-
-
-def test_star_contraction_matches_label_propagation(spark):
-    """On a mixed graph (cliques + a chain + isolated pairs) both
-    algorithms must produce identical labels."""
-
-    edges = (
-        [(i, j) for i in range(5) for j in range(i + 1, 5)]        # clique 0-4
-        + [(10 + i, 11 + i) for i in range(20)]                     # chain 10-30
-        + [(100, 101), (200, 201)]                                  # pairs
-        + [(41, 40), (42, 41), (40, 43)]                            # shuffled ids
-    )
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-    a = {(r.node, r.cluster_id) for r in connected_components(df).collect()}
-    b = {(r.node, r.cluster_id) for r in connected_components_star(df).collect()}
-    assert a == b
-
-
-def test_hybrid_rrf_fuses_both_rankers(spark):
-    rows = llm_data.hybrid_search_rrf_documents(spark, SF_SMOKE).collect()
-    assert len(rows) == llm_data.HYBRID_TOP_K
-    assert [r.fused_rank for r in rows] != []
-    # fused order is by rrf desc with doc_id tie-break
-    scores = [(r.rrf_score, -r.doc_id) for r in rows]
-    assert scores == sorted(scores, reverse=True)
-    # a doc ranked #1 by both rankers would score 2/(60+1); every score must
-    # be positive and bounded by that
-    for r in rows:
-        assert 0.0 < r.rrf_score <= 2.0 / 61.0 + 1e-12
-        assert r.bm25_rank is not None or r.ql_rank is not None
-
-
-def test_oversample_hits_target_within_hash_noise(spark):
-    rows = llm_data.oversample_minority_documents(spark, SF_SMOKE).collect()
-    target = rows[0].target
-    for r in rows:
-        assert r.n_after >= r.n_before
-        # majority language is already at target; minorities land within
-        # hash noise (few %) of it
-        assert abs(r.n_after - target) / target < 0.15
-
-
-def test_mmr_rerank_diversifies_vs_plain_topk(spark):
-    """MMR invariants on the fixture: 10 distinct picks; the first pick
-    is the global relevance argmax; and the MMR selection's mean pairwise
-    cosine must not exceed the plain top-10's (diversity is the point)."""
-
-    rows = sorted(
-        llm_data.mmr_rerank_topk_embeddings(spark, SF_SMOKE).collect(),
-        key=lambda r: r.rank,
-    )
-    assert len(rows) == 10
-    assert len({r.vec_id for r in rows}) == 10
-    assert rows[0].relevance == max(r.relevance for r in rows)
-    # mmr_score is a max over fewer constraints early: monotone non-incr
-    for a, b in zip(rows, rows[1:]):
-        assert a.mmr_score >= b.mmr_score - 1e-9
-
-    emb = {
-        r.vec_id: r.embedding
-        for r in spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").collect()
-    }
-    qv = emb[0]
-
-    def cos(u, v):
-        du = sum(a * b for a, b in zip(u, v))
-        nu = math.sqrt(sum(a * a for a in u)) * math.sqrt(sum(b * b for b in v))
-        return du / nu
-
-    plain = sorted(emb, key=lambda i: (-cos(emb[i], qv), i))[:10]
-
-    def mean_pair(ids):
-        sims = [
-            cos(emb[a], emb[b]) for a in ids for b in ids if a < b
-        ]
-        return sum(sims) / len(sims)
-
-    assert mean_pair([r.vec_id for r in rows]) <= mean_pair(plain) + 1e-9
-
-
-def test_temperature_mixture_compresses_toward_uniform(spark):
-    """α<1 must move every share toward uniform: languages under the
-    natural mean gain share, those above lose it; shares sum to 1; the
-    budget is conserved."""
-
-    rows = llm_data.mixture_temperature_allocation(spark, SF_SMOKE).collect()
-    unif = 1.0 / len(rows)
-    assert abs(sum(r.raw_share for r in rows) - 1.0) < 1e-3
-    assert abs(sum(r.temp_share for r in rows) - 1.0) < 1e-3
-    assert abs(sum(r.expected_docs for r in rows) - llm_data._MIX_BUDGET) < 1.0
-    for r in rows:
-        if r.raw_share < unif - 1e-9:
-            assert r.raw_share < r.temp_share < unif + 1e-6
-        elif r.raw_share > unif + 1e-9:
-            assert unif - 1e-6 < r.temp_share < r.raw_share
-
-
-def test_length_bucket_padding_dominates_global(spark):
-    """Bucket padding can never waste more than global-max padding, and
-    both fractions live in [0, 1); token mass is conserved vs a direct
-    count."""
-
-    rows = llm_data.length_bucket_padding_report(spark, SF_SMOKE).collect()
-    assert rows
-    for r in rows:
-        assert 0.0 <= r.bucket_pad_waste <= r.global_pad_waste < 1.0
-        assert r.len_lo <= r.pad_to <= r.len_hi
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").collect()
-    want_tokens = sum(len(d.text.split()) for d in docs if d.text.strip())
-    assert sum(r.total_tokens for r in rows) == want_tokens
-
-
-def test_curriculum_schedule_is_total_monotone(spark):
-    """Phases are a permutation 1..|sources|; difficulty is non-decreasing
-    along the schedule; cumulative shares end at exactly 1."""
-
-    rows = sorted(
-        llm_data.curriculum_schedule_documents(spark, SF_SMOKE).collect(),
-        key=lambda r: r.phase,
-    )
-    assert [r.phase for r in rows] == list(range(1, len(rows) + 1))
-    for a, b in zip(rows, rows[1:]):
-        assert a.mean_len <= b.mean_len + 1e-9
-        assert a.cum_doc_share <= b.cum_doc_share + 1e-9
-    assert abs(rows[-1].cum_doc_share - 1.0) < 1e-6
-    assert abs(rows[-1].cum_token_share - 1.0) < 1e-6
-
-
-def test_self_similarity_grid_complete_and_bounded(spark):
-    """All 780 pairs of the 40-doc sample are present (zero-overlap pairs
-    included); every statistic is a valid Jaccard in [0, 1]."""
-
-    row = llm_data.self_similarity_sample_documents(spark, SF_SMOKE).collect()[0]
-    n = llm_data._SELFSIM_SAMPLE
-    assert row.n_pairs == n * (n - 1) // 2
-    assert 0.0 <= row.mean_jaccard <= row.max_jaccard <= 1.0
-    assert 0.0 <= row.frac_overlapping <= 1.0
-
-
-def test_cross_source_matrix_surfaces_planted_mirror(spark):
-    """Every planted 80%-prefix copy pairs with its original at J≈0.8, so
-    each original source with a planted doc must appear against 'mirror';
-    pairs are upper-triangular; means bounded by maxes."""
-
-    rows = llm_data.cross_source_overlap_matrix(spark, SF_SMOKE).collect()
-    assert rows
-    mirror_pairs = [r for r in rows if r.source_b == "mirror" or r.source_a == "mirror"]
-    assert mirror_pairs, "planted mirror leakage must surface"
-    for r in rows:
-        assert r.source_a <= r.source_b
-        assert 0.3 <= r.mean_jaccard <= r.max_jaccard <= 1.0
-        assert r.n_pairs >= 1
-    # planted copies exist: every 20th doc_id — count them directly
-    n_planted = (
-        spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-        .filter(F.col("doc_id") % 20 == 0)
-        .count()
-    )
-    assert sum(r.n_pairs for r in mirror_pairs) >= n_planted
-
-
-@pytest.fixture(scope="module")
-def excised(spark):
-    a = "a b c d e f g h x y z"  # 11 tokens, the span source
-    rows = [
-        (1, a),
-        # novel 8-token prefix + doc 1's first 8 tokens copied verbatim
-        (2, "p q r s t u v w a b c d e f g h"),
-        (3, a),  # exact copy — must excise to nothing
-        (4, "only five short tokens here"),  # <8 tokens, unique, intact
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    return {r.doc_id: r for r in exact_substring_excision(df).collect()}
-
-
-def test_excision_first_occurrence_intact(excised):
-    r = excised[1]
-    assert r.n_excised == 0
-    assert r.kept_frac == 1.0
-    assert r.rewritten_md5 == hashlib.md5(b"a b c d e f g h x y z").hexdigest()
-
-
-def test_excision_removes_copied_span_only(excised):
-    # doc 2: the copied 8-token suffix goes, the novel prefix stays
-    r = excised[2]
-    assert r.n_tokens == 16
-    assert r.n_excised == 8
-    assert r.rewritten_md5 == hashlib.md5(b"p q r s t u v w").hexdigest()
-
-
-def test_excision_exact_copy_removed_entirely(excised):
-    r = excised[3]
-    assert r.n_excised == r.n_tokens == 11
-    assert r.kept_frac == 0.0
-    assert r.rewritten_md5 == hashlib.md5(b"").hexdigest()
-
-
-def test_excision_short_unique_doc_intact(excised):
-    r = excised[4]
-    assert r.n_excised == 0
-    assert r.rewritten_md5 == hashlib.md5(b"only five short tokens here").hexdigest()
-
-
-def test_excision_short_exact_copies_stay_intact(spark):
-    """Docs shorter than k=8 tokens contribute no windows: exact copies of
-    a 5-token doc must BOTH survive untouched (sub-k spans are outside the
-    >=k-token excision contract)."""
-
-    rows = [(1, "tiny doc of five tokens"), (2, "tiny doc of five tokens")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in exact_substring_excision(df).collect()}
-    assert out[1].n_excised == 0 and out[2].n_excised == 0
-    assert out[1].kept_frac == 1.0 and out[2].kept_frac == 1.0
-
-
-def test_knn_local_topk_breaks_ties_by_nbr_id(spark):
-    """Duplicate embeddings tie at 6 decimals: the block-local top-k must
-    keep the SMALLEST nbr_ids among the tied candidates (the global
-    window's and the oracle's order), not an arbitrary argpartition pick."""
-
-    # one query vector + 8 identical neighbors (all score 1.0): k=3 must
-    # select nbr_ids 2,3,4 deterministically
-    rows = [(i, [1.0, 0.0]) for i in range(1, 10)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = [
-        r
-        for r in knn_graph(df, k=3, n_blocks=2).collect()
-        if r.src_id == 1
-    ]
-    assert sorted(r.nbr_id for r in out) == [2, 3, 4]
-    assert all(r.score == 1.0 for r in out)
-
-
-def test_strided_sample_empty_stride_fallback(spark):
-    """An id space that misses every stride multiple (all-odd ids, even
-    stride) must fall back to the smallest ids instead of returning an
-    empty sample that would crash the codebook Lloyd."""
-
-    rows = [(2 * i + 1, [float(i), 1.0]) for i in range(64)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    c = sample_centroids(df, 16)  # stride 4; no odd id % 4 == 0
-    assert len(c) == 16
-    # dense 0-based space: behavior unchanged (every 4th id)
-    dense = spark.createDataFrame(
-        [(i, [float(i)]) for i in range(64)], "vec_id long, embedding array<double>"
-    )
-    c2 = sample_centroids(dense, 16)
-    assert len(c2) == 16 and c2[0] == [0.0] and c2[1] == [4.0]
-
-
-def test_star_contraction_keeps_self_pair_singletons(spark):
-    """A node that appears only in self-pairs must get a (node, node) row
-    from BOTH component implementations — the shared output contract."""
-
-    pairs = spark.createDataFrame(
-        [(5, 5), (1, 2), (2, 3)], "id_a long, id_b long"
-    )
-    want = [(1, 1), (2, 1), (3, 1), (5, 5)]
-    a = sorted((r.node, r.cluster_id) for r in connected_components(pairs).collect())
-    b = sorted(
-        (r.node, r.cluster_id) for r in connected_components_star(pairs).collect()
-    )
-    assert a == want and b == want
-
-
-def test_ivfpq_adc_table_is_exact_inner_product_decomposition(spark):
-    """With 1 subspace and enough codes to represent every residual
-    exactly, ADC must reproduce q·v EXACTLY (q·c + q·r̂ with r̂ = r): the
-    residual-query table form this replaced was off by −c·r̂ per
-    candidate."""
-
-    rng = np.random.default_rng(3)
-    vecs = rng.normal(size=(32, 4)).round(3)
-    rows = [(i, [float(x) for x in vecs[i]]) for i in range(len(vecs))]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents, books = train_ivfpq(
-        df, n_centroids=2, n_subspaces=1, n_codes=256, sample_size=32
-    )
-    enc = {r.vec_id: r for r in ivfpq_encode(df, cents, books).collect()}
-    q = rng.normal(size=4)
-    books = np.asarray(books)
-    for i in range(len(vecs)):
-        li = enc[i].list_id
-        code = enc[i].codes[0]
-        v_hat = np.asarray(cents)[li] + books[0][code]
-        adc = float(np.asarray(cents)[li] @ q + books[0][code] @ q)
-        assert abs(adc - float(v_hat @ q)) < 1e-12
-
-
-@pytest.mark.parametrize(
-    "n_bands,planes,collisions,candidates",
-    [
-        # embedding_lsh_near_dup's scale-tuned config
-        (4, 6, 10808, 10392),
-        # embedding_lsh_verified_near_dup / pair_recall's recall-complete config
-        (64, 12, 4544, 3359),
-    ],
-)
-def test_lsh_candidate_volume_pinned(spark, n_bands, planes, collisions, candidates):
-    """The LSH family's bench cost is proportional to band-collision volume
-    (B x sum bucket^2) and the distinct candidate-pair count. Both are
-    deterministic for the seeded planes + fixed fixture, so pin them: a
-    commit that widens banding (band count, plane count, seed, bucketing
-    math) moves these numbers and must justify the cost shift explicitly.
-    The r7 bench drift in this family (+20-40%) was box contention, NOT a
-    count change — band_buckets/lsh_cosine_pairs are untouched since r6
-    (git 516ddad..b0303bd shows only the exact-path block_grid refactor)."""
-
-    aug = _near_dup_embeddings(load_table(spark, SF_SMOKE, "embeddings"))
-    vecs = aug.select(
-        F.col("vec_id").alias("_id"),
-        as_double_array(F.col("embedding")).alias("_v"),
-    )
-    bands = vecs.select(
-        "_id", band_buckets(F.col("_v"), 64, n_bands, planes).alias("_bkts")
-    ).select("_id", F.posexplode("_bkts").alias("band", "bucket"))
-    occ = bands.groupBy("band", "bucket").count()
-    got_coll = int(
-        occ.select(
-            F.sum(F.col("count") * (F.col("count") - 1) / 2).alias("c")
-        ).collect()[0]["c"]
-    )
-    left = bands.select("band", "bucket", F.col("_id").alias("id_a"))
-    right = bands.select("band", "bucket", F.col("_id").alias("id_b"))
-    got_cand = (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .count()
-    )
-    assert got_coll == collisions, f"band-collision volume moved: {got_coll}"
-    assert got_cand == candidates, f"candidate-pair count moved: {got_cand}"
-
-
-def test_excision_occ_encoding_wide_docs_and_guard(spark):
-    """The corpus-order encoding is doc_id<<32 | pos (was doc_id*1e6+pos,
-    which silently corrupted first-occurrence-wins for docs with >=1e6
-    tokens or colliding id ranges). Pin: (a) first-wins ordering holds for
-    a pos that would have overflowed the old multiplier, (b) an
-    out-of-range doc_id fails loudly instead of corrupting a destructive
-    rewrite."""
-
-    # (a) doc 2 duplicates doc 1's 8-token span: doc 1 (earlier corpus
-    # position) keeps, doc 2 excises — regardless of id magnitude below 2^31
-    span = " ".join(f"w{i}" for i in range(8))
-    docs = spark.createDataFrame(
-        [(1, span + " tailone tailtwo"), ((1 << 31) - 1, span + " novel suffix here")],
-        "doc_id long, text string",
-    )
-    rows = {r.doc_id: r for r in exact_substring_excision(docs).collect()}
-    assert rows[1].n_excised == 0
-    assert rows[(1 << 31) - 1].n_excised == 8
-
-    # (b) doc_id at 2^31 raises instead of silently wrapping
-    bad = spark.createDataFrame(
-        [(1 << 31, span), (1, span)], "doc_id long, text string"
-    )
-    with pytest.raises(Exception) as ei:
-        exact_substring_excision(bad).collect()
-    assert "encoding range" in str(ei.value)
-
-
-def test_matryoshka_full_width_slice_is_identity(spark):
-    """Truncation eval contracts: overlap counts live in [0, 10] with one
-    row per (dim, probe); and slicing to the FULL width must reproduce the
-    full top-10 exactly (overlap = 10 for every probe) — the strongest
-    exactness pin available without trusting any approximate band."""
-
-    out = ll.matryoshka_truncation_recall_embeddings(spark, SF_SMOKE).collect()
-    assert len(out) == 9
-    assert {(r["trunc_dim"], r["query_id"]) for r in out} == {
-        (d, q) for d in (8, 16, 32) for q in (0, 1, 2)
-    }
-    assert all(0 <= r["overlap_at_10"] <= 10 for r in out)
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    q = _ann_query_batch(emb)
-    full = topk_cosine_batch(emb, q, k=10)
-    emb64 = emb.select("vec_id", F.slice("embedding", 1, 64).alias("embedding"))
-    q64 = q.select("query_id", F.slice("qvec", 1, 64).alias("qvec"))
-    sliced = topk_cosine_batch(emb64, q64, k=10, dim=64)
-    full_set = {(r["query_id"], r["vec_id"]) for r in full.collect()}
-    sliced_set = {(r["query_id"], r["vec_id"]) for r in sliced.collect()}
-    assert full_set == sliced_set
-
-
-def test_pq_sample_codebooks_are_the_strided_sample(spark, sf_dir):
-    """train_codebooks(n_iters=0) must return the strided sample's
-    subvectors verbatim (first-K init, zero Lloyd steps) — the property
-    the ann_pq_sample_adc oracle's cent CTE replays; and the ADC query's
-    top hit for the vec_id=0 query is vec 0 itself on these fixtures."""
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    books = train_codebooks(emb, n_subspaces=8, n_codes=16, sample_size=16, n_iters=0)
-    n = emb.count()
-    stride = max(n // 16, 1)
-    rows = (
-        emb.filter((emb.vec_id % stride == 0) & (emb.vec_id < stride * 16))
-        .orderBy("vec_id")
-        .collect()
-    )
-    sample = np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
-    assert sample.shape[0] == 16
-    for s in range(8):
-        assert np.array_equal(books[s], sample[:, s * 8 : (s + 1) * 8])
-
-    top = ann_pq_sample_adc_topk_embeddings(spark, sf_dir).collect()
-    assert len(top) == 20
-    assert top[0]["vec_id"] == 0  # ADC self-match leads on these fixtures
-
-
-def test_md5_replay_dedup_siblings_structural(spark, sf_dir):
-    """Structural gates for the two md5-replay dedup siblings (their value
-    correctness is hash-checked by the DuckDB oracles; this pins the
-    planted-duplicate semantics): the minhash replay at B=8/R=4 recovers
-    EVERY planted 80%-prefix pair at sf0.001 (J≈0.8 >> the (1/B)^(1/R)
-    ≈0.59 crossover), all its jaccards clear the 0.5 verify cut, and the
-    simhash replay returns only pairs within the pigeonhole's hamming<=3
-    contract (planted pairs mostly exceed hamming 3 under 20% token churn
-    -- a property of SimHash, so only SOME planted pairs appear)."""
-
-    mh = minhash_md5_replay_near_dup_documents(spark, sf_dir).collect()
-    planted = {(r["id_a"], r["id_b"]) for r in mh if r["id_b"] == r["id_a"] + 1000000}
-    n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
-        "doc_id % 20 = 0"
-    ).count()
-    assert len(planted) == n_docs  # 25/25 at sf0.001, measured on landing
-    assert all(r["jaccard"] >= 0.5 for r in mh)
-
-    sh = simhash_md5_replay_near_dup_documents(spark, sf_dir).collect()
-    assert sh and all(0 <= r["hamming"] <= 3 for r in sh)
-    assert any(r["id_b"] == r["id_a"] + 1000000 for r in sh)
-
-
-def test_ivfpq_sample_adc_self_query_and_rank_shape(spark):
-    rows = (
-        ann_ivfpq_sample_adc_topk_embeddings(spark, SF_SMOKE)
-        .orderBy("rank")
-        .collect()
-    )
-    assert len(rows) == 10
-    assert [r["rank"] for r in rows] == list(range(1, 11))
-    # the query vector (vec 0) is its own nearest neighbor at cosine 1.0 —
-    # it sits in a probed cell by construction (its own cell has the
-    # maximal q-dot) and survives the shortlist
-    assert rows[0]["vec_id"] == 0 and rows[0]["score"] == pytest.approx(1.0)
-    scores = [r["score"] for r in rows]
-    assert scores == sorted(scores, reverse=True)
-    assert all(r["query_id"] == 0 for r in rows)
-
-
-def test_leakage_safe_split_never_straddles_clusters(spark):
-    """THE property: every planted near-dup pair (doc, doc+1000000) lands
-    in one split; the split distribution stays roughly 80/10/10; the
-    whole augmented corpus is covered."""
-
-    rows = leakage_safe_split_documents(spark, SF_SMOKE).collect()
-    n_docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").count()
-    n_planted = (
-        spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-        .filter(F.col("doc_id") % 20 == 0)
-        .count()
-    )
-    assert len(rows) == n_docs + n_planted  # full coverage incl. copies
-    split_of = {r["doc_id"]: r["split"] for r in rows}
-    root_of = {r["doc_id"]: r["cluster_root"] for r in rows}
-    # planted copies share their source's cluster and therefore its split
-    for r in rows:
-        if r["doc_id"] >= 1000000:
-            src = r["doc_id"] - 1000000
-            assert root_of[src] == r["cluster_root"], (src, r)
-            assert split_of[src] == r["split"]
-    # same-cluster -> same-split globally (the leakage-safety invariant)
-    by_root = {}
-    for r in rows:
-        by_root.setdefault(r["cluster_root"], set()).add(r["split"])
-    assert all(len(s) == 1 for s in by_root.values())
-
-    dist = Counter(r["split"] for r in rows)
-    assert dist["train"] > dist["val"] and dist["train"] > dist["test"]
-
-
-def _sparse_ids(emb):
-    return emb.withColumn("vec_id", F.col("vec_id") * 2)
-
-
-def _short_corpus(emb):
-    return emb.filter(F.col("vec_id") < 10)
-
-
-@pytest.mark.parametrize(
-    "query, violate",
-    [
-        (ann_ivfpq_sample_adc_topk_embeddings, _sparse_ids),
-        (ann_pq_sample_adc_topk_embeddings, _sparse_ids),
-        (ann_pq_sample_adc_topk_embeddings, _short_corpus),
-    ],
-    ids=["ivfpq-sparse_ids", "pq-sparse_ids", "pq-short_corpus"],
-)
-def test_sample_adc_rejects_broken_stride_precondition(spark, tmp_path, query, violate):
-    """The oracles' stride CTEs assume dense 0-based vec_ids and >= 16
-    rows (fewer than n_codes=16 vectors would make train_codebooks TILE
-    the sample, which the SQL replay does not). Both sample-ADC operators
-    must fail loudly on data that violates it instead of silently
-    diverging from the replay."""
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    sf = write_sf(tmp_path, embeddings=violate(emb))
-    with pytest.raises(AssertionError, match="dense 0-based"):
-        query(spark, sf)
-
-
-def test_near_dup_threshold_sweep_matches_python_mirror(spark, sf_dir):
-    """Pairs and keep-first drops recomputed with brute-force python
-    shingle sets; the curve must be monotone nonincreasing in τ."""
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
-    corpus = {}
-    for r in docs:
-        toks = r["text"].strip().split()
-        corpus[r["doc_id"]] = toks
-        if r["doc_id"] % 20 == 0:
-            keep = max(-(-len(toks) * 4 // 5), 1)
-            corpus[r["doc_id"] + 1000000] = toks[:keep]
-    sets = {
-        d: {
-            " ".join(t[i : i + 3])
-            for i in range(max(len(t) - 2, 1))
-        }
-        for d, t in corpus.items()
-    }
-    ids = sorted(sets)
-    pairs = []
-    inv = defaultdict(set)
-    for d, ss in sets.items():
-        for sh in ss:
-            inv[sh].add(d)
-    cand = set()
-    for ds in inv.values():
-        ds = sorted(ds)
-        for i in range(len(ds)):
-            for j in range(i + 1, len(ds)):
-                cand.add((ds[i], ds[j]))
-    for a, b in cand:
-        inter = len(sets[a] & sets[b])
-        jac = round(inter / (len(sets[a]) + len(sets[b]) - inter), 6)
-        if jac >= 0.3:
-            pairs.append((a, b, jac))
-    got = near_dup_threshold_sweep_documents(spark, sf_dir).collect()
-    assert len(got) == 7
-    prev_pairs = None
-    for row in got:
-        tau = row["threshold"]
-        keep = [(a, b) for a, b, j in pairs if j >= tau]
-        dropped = {b for _, b in keep}
-        assert row["n_pairs"] == len(keep)
-        assert row["docs_dropped"] == len(dropped)
-        assert row["n_docs"] == len(corpus)
-        assert abs(row["drop_fraction"] - len(dropped) / len(corpus)) < 1e-6
-        if prev_pairs is not None:
-            assert row["n_pairs"] <= prev_pairs
-        prev_pairs = row["n_pairs"]
-
-
-def test_ann_ivf_nprobe_sweep_structure_and_full_probe_exactness(
-    spark, sf_dir
-):
-    """All gates must hold, and independently: probing all 16 cells must
-    reproduce the exhaustive top-10 row set exactly."""
-
-    got = ann_ivf_nprobe_sweep_embeddings(spark, sf_dir).collect()
-    assert [r["nprobe"] for r in got] == [1, 2, 4, 8, 16]
-    for r in got:
-        assert r["recall_ok"] is True
-        assert r["sweep_sound"] is True
-        assert abs(r["cell_fraction"] - r["nprobe"] / 16.0) < 1e-9
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = _ann_query_batch(emb)
-    full = {
-        (r["query_id"], r["vec_id"])
-        for r in ivf_topk(emb, q, k=10, n_centroids=16, nprobe=16).select(
-            "query_id", "vec_id"
-        ).collect()
-    }
-    brute = {
-        (r["query_id"], r["vec_id"])
-        for r in topk_cosine_batch(emb, q, k=10)
-        .select("query_id", "vec_id")
-        .collect()
-    }
-    assert full == brute
-
-
-def test_ann_ivf_sweep_prefix_filter_matches_per_depth_ivf_topk(spark, sf_dir):
-    """The sweep scores ONCE at full probe with a per-query
-    probe-rank column and derives each depth as the prefix filter
-    rank < nprobe. Pin its load-bearing contracts: (a) select_probe_cells
-    at depth d is exactly the first d entries of the full-probe order, and
-    (b) the prefix-filtered top-k is row-identical to an independent
-    ivf_topk(nprobe=d) call for every swept depth."""
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q = _ann_query_batch(emb)
-    index = ivf_build_index(emb, q, n_centroids=16)
-    centroids, assigned, qrows = index
-    cents = np.array(centroids)
-    pairs = []
-    for r in qrows:
-        qv = np.asarray(r["_qv"], dtype="float64")
-        full = select_probe_cells(cents, qv, len(centroids))
-        for d in (1, 2, 4, 8, 16):
-            assert select_probe_cells(cents, qv, d) == full[:d]
-        pairs.extend(
-            (li, int(r["query_id"]), [float(x) for x in qv], rank)
-            for rank, li in enumerate(full)
-        )
-    probes = spark.createDataFrame(
-        pairs, "list_id int, query_id long, _qv array<double>, prank int"
-    )
-    scored = assigned.join(F.broadcast(probes), ["list_id"]).select(
-        "query_id",
-        "vec_id",
-        cosine(F.col("_v"), F.col("_qv")).alias("score"),
-        "prank",
-    )
-    for nprobe in (1, 2, 4, 8, 16):
-        direct = sorted(
-            map(
-                tuple,
-                ivf_topk(
-                    emb, q, k=10, n_centroids=16, nprobe=nprobe, index=index
-                ).collect(),
-            )
-        )
-        prefix = sorted(
-            map(
-                tuple,
-                topk_per_query(
-                    scored.filter(F.col("prank") < nprobe).drop("prank"),
-                    10,
-                    "vec_id",
-                ).collect(),
-            )
-        )
-        assert direct == prefix

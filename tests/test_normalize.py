@@ -6,18 +6,29 @@ from __future__ import annotations
 import datetime
 
 import pytest
-from pyspark.sql import types as T
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 from data_ingestion_pipeline_spark import schemas
 from data_ingestion_pipeline_spark.functions.normalize import (
     camel_to_snake,
     parse_iso8601,
 )
+from data_ingestion_pipeline_spark.functions.partitioning import salted_join
+from data_ingestion_pipeline_spark.operators.relational import (
+    approx_distinct_users_daily,
+    approx_price_quantiles_by_priority,
+    distinct_users_daily,
+    frequent_users_sketch,
+    latest_event_per_user,
+    price_quantiles_by_priority,
+)
+from data_ingestion_pipeline_spark.sources.catalog import load_table
 from data_ingestion_pipeline_spark.sources.csv_reader import (
-    csv_source,
     read_inventory_csv,
     read_orders_csv,
 )
+from tests.conftest import SF_SMOKE
 from tests.fixtures import write_fixture_csvs
 
 
@@ -83,27 +94,73 @@ def test_inventory_normalized(spark, csvs):
     assert all("#prod" in r.product_id for r in df.select("product_id").collect())
 
 
-def test_csv_reader_drops_malformed_consistently(spark, tmp_path):
-    """CSV DROPMALFORMED under column pruning was projection-dependent:
-    count() kept malformed rows and a narrow projection leaked them as
-    all-NULL data (both observed). The reader's all-columns marker filter
-    forces full-row parsing, so every projection sees one dropped-row set
-    — mirrors the JSONL pin."""
+def test_salted_join_matches_plain_join(spark):
 
-    p = tmp_path / "c"
-    p.mkdir()
-    (p / "x.csv").write_text("a,b,c\n1,x,0.5\nBADROW_ONE_FIELD\n2,y,1.5\n")
-    schema = T.StructType(
-        [
-            T.StructField("a", T.LongType()),
-            T.StructField("b", T.StringType()),
-            T.StructField("c", T.DoubleType()),
-        ]
+    # skewed big side: key 1 holds 90% of rows
+    big = spark.range(0, 10000).selectExpr(
+        "CASE WHEN id % 10 < 9 THEN 1 ELSE id END AS k", "id AS payload"
     )
-    df = csv_source(spark.read, str(p), schema)
-    assert df.count() == 2
-    assert sorted((r.a, r.b) for r in df.select("a", "b").collect()) == [
-        (1, "x"),
-        (2, "y"),
-    ]
-    assert sorted(r.b for r in df.select("b").collect()) == ["x", "y"]
+    small = spark.createDataFrame(
+        [(1, "hot"), (17, "cold"), (999999, "unmatched")], "k long, label string"
+    )
+    for how in ("inner", "left"):
+        plain = big.join(small, ["k"], how).orderBy("payload").collect()
+        salted = salted_join(big, small, ["k"], how, salt=8).orderBy("payload").collect()
+        assert [tuple(r) for r in plain] == [tuple(r) for r in salted], how
+
+
+def test_approx_distinct_within_rsd(spark):
+    exact = {r.day: r.n_users for r in distinct_users_daily(spark, SF_SMOKE).collect()}
+    gated = {
+        r.day: (r.n_users, r.within_bound)
+        for r in approx_distinct_users_daily(spark, SF_SMOKE).collect()
+    }
+    assert set(exact) == set(gated)
+    for day, n in exact.items():
+        got_n, ok = gated[day]
+        assert got_n == n  # the exact column IS the exact count
+        assert ok, (day, n)  # and the sketch estimate is within bound
+
+
+def test_approx_quantiles_within_rank_error(spark):
+    exact = {
+        r.o_orderpriority: (r.p25, r.p50, r.p75, r.p95)
+        for r in price_quantiles_by_priority(spark, SF_SMOKE).collect()
+    }
+    gated = {
+        r.o_orderpriority: (r.within_p25, r.within_p50, r.within_p75, r.within_p95)
+        for r in approx_price_quantiles_by_priority(spark, SF_SMOKE).collect()
+    }
+    assert set(exact) == set(gated)
+    # GK with accuracy 10k: every sketch value must sit inside the exact
+    # p±1% rank bracket the query computes in-plan
+    for prio, oks in gated.items():
+        assert all(oks), (prio, oks)
+
+
+def test_latest_event_struct_max_matches_window(spark):
+    agg = latest_event_per_user(spark, SF_SMOKE)
+    events = load_table(spark, SF_SMOKE, "events")
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
+    )
+    via_window = (
+        events.withColumn("rn", F.row_number().over(w))
+        .filter("rn = 1")
+        .select(
+            "user_id",
+            F.col("ts").alias("last_ts"),
+            F.col("event_id").alias("last_event_id"),
+            F.col("event_type").alias("last_event_type"),
+            F.round("value", 2).alias("last_value"),
+        )
+    )
+    a = sorted(tuple(r) for r in agg.collect())
+    b = sorted(tuple(r) for r in via_window.collect())
+    assert a == b
+
+
+def test_frequent_users_sketch_contains_planted_heavy_hitter(spark):
+    items = [r.frequent_user_id for r in frequent_users_sketch(spark, SF_SMOKE).collect()]
+    assert 0 in items  # the planted ~14% user must be reported
+    assert len(items) < 50  # and the sketch doesn't degenerate to everyone

@@ -7,9 +7,7 @@ pin the load-bearing plan features at fixture scale.
 
 from __future__ import annotations
 
-import gc
 import re
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,7 +15,6 @@ from pyspark.sql import functions as F
 import __spark_entry__ as entrymod
 from data_ingestion_pipeline_spark import registry
 from data_ingestion_pipeline_spark.operators import llm_data
-from data_ingestion_pipeline_spark.operators import tpch_queries as t
 from data_ingestion_pipeline_spark.operators.llm_data import (
     _ann_query_batch,
     ann_ivfpq_topk_embeddings,
@@ -32,7 +29,43 @@ from data_ingestion_pipeline_spark.similarity.brute_force import topk_cosine_bat
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 from tests.conftest import SF_SMOKE, executed_plan
 
+
 QUERIES = entrymod.queries()
+
+
+def _unpartitioned_window_count(plan: str) -> int:
+    """Count WindowExec nodes whose partition spec is empty.
+
+    Physical-plan text renders ``Window [funcs], [partSpec], [orderSpec]``
+    (3 top-level bracket groups) when both are present. With 2 groups the
+    second is EITHER a partition spec (unordered window — fine) or an
+    order spec (unpartitioned window — the single-partition scale-killer);
+    order specs are recognizable by their ASC/DESC direction markers.
+    """
+
+    n = 0
+    for line in plan.splitlines():
+        m = re.search(r"\bWindow \[", line)
+        if not m:
+            continue
+        depth, groups, buf = 0, [], ""
+        for ch in line[m.start():]:
+            if ch == "[":
+                if depth == 0:
+                    buf = ""
+                depth += 1
+            elif ch == "]":
+                depth -= 1
+                if depth == 0:
+                    groups.append(buf)
+            elif depth > 0:
+                buf += ch
+        if len(groups) < 2 or (
+            len(groups) == 2
+            and (" ASC" in groups[1] or " DESC" in groups[1])
+        ):
+            n += 1
+    return n
 
 
 @pytest.mark.parametrize(
@@ -319,41 +352,6 @@ def test_fuzzy_block_join_spreads_on_block_key(spark):
 def test_pagerank_self_join_copartitioned(spark):
     plan = executed_plan(QUERIES["pagerank_copurchase_parts"](spark, SF_SMOKE))
     assert "Scan ExistingRDD" in plan  # checkpointed loop-invariant edges
-
-
-def _unpartitioned_window_count(plan: str) -> int:
-    """Count WindowExec nodes whose partition spec is empty.
-
-    Physical-plan text renders ``Window [funcs], [partSpec], [orderSpec]``
-    (3 top-level bracket groups) when both are present. With 2 groups the
-    second is EITHER a partition spec (unordered window — fine) or an
-    order spec (unpartitioned window — the single-partition scale-killer);
-    order specs are recognizable by their ASC/DESC direction markers.
-    """
-
-    n = 0
-    for line in plan.splitlines():
-        m = re.search(r"\bWindow \[", line)
-        if not m:
-            continue
-        depth, groups, buf = 0, [], ""
-        for ch in line[m.start():]:
-            if ch == "[":
-                if depth == 0:
-                    buf = ""
-                depth += 1
-            elif ch == "]":
-                depth -= 1
-                if depth == 0:
-                    groups.append(buf)
-            elif depth > 0:
-                buf += ch
-        if len(groups) < 2 or (
-            len(groups) == 2
-            and (" ASC" in groups[1] or " DESC" in groups[1])
-        ):
-            n += 1
-    return n
 
 
 @pytest.mark.parametrize(
@@ -720,155 +718,3 @@ def test_duplicated_subtree_pins_hold(spark):
             f"(expected <= {max_scans}) — a batch-6 pin was dropped"
         )
         assert "Scan ExistingRDD" in plan, f"{name} lost its pin"
-
-
-@pytest.mark.parametrize(
-    "name",
-    [
-        "ks_test_purchase_view",
-        "pareto_frontier_parts",
-        "compaction_plan_orders",
-        "seasonal_decompose_daily",
-        "calibration_report_documents",
-        "multimodal_audio_chunks",
-        "t_closeness_report_events",
-        "hybrid_search_rrf_documents",
-        "mann_kendall_daily_trend",
-        "ks_by_event_type_bh",
-        "psi_value_drift_halves",
-        "durbin_watson_daily_trend",
-        "holt_linear_daily_forecast",
-        "countmin_event_types",
-        "pca_power_iteration_embeddings",
-        "fellegi_sunter_linkage_parts",
-        "oversample_minority_documents",
-        "merge_on_read_delete_events",
-        "poisson_bootstrap_ci_orders",
-        "isotonic_calibration_documents",
-        "holt_winters_seasonal_daily",
-        "mixture_temperature_allocation",
-        "embedding_int8_quantization_report",
-        "length_bucket_padding_report",
-        "curriculum_schedule_documents",
-        "self_similarity_sample_documents",
-        "kfold_cv_stump_documents",
-        "cross_source_overlap_matrix",
-        "misra_gries_heavy_hitters_events",
-    ],
-)
-def test_windows_are_partitioned_and_no_cartesian(spark, name):
-
-    plan = executed_plan(QUERIES[name](spark, SF_SMOKE))
-    assert _unpartitioned_window_count(plan) == 0, (
-        f"{name} has a partition-less window (single-partition sort)"
-    )
-    assert "CartesianProduct" not in plan
-
-
-@pytest.mark.parametrize(
-    "name, key",
-    [
-        ("ks_test_purchase_view", "rangepartitioning(value"),
-        ("pareto_frontier_parts", "rangepartitioning(price"),
-        ("compaction_plan_orders", "rangepartitioning(day"),
-    ],
-)
-def test_chunk_stitch_queries_range_partition(spark, name, key):
-    """The chunk-stitch pattern's load-bearing feature: the corpus-scale
-    cumulative pass rides a range partitioning, not a global sort."""
-    plan = executed_plan(QUERIES[name](spark, SF_SMOKE))
-    assert key in plan, f"{name} lost its range-partitioned chunk pass"
-
-
-def test_poisson_bootstrap_plan_two_phase_no_sort(spark):
-    """Plan shape: explode feeds a partial-aggregated groupBy (map-side
-    combine before the exchange); no unpartitioned window, no cartesian,
-    no global sort of the fact table."""
-
-    plan = executed_plan(QUERIES["poisson_bootstrap_ci_orders"](spark, SF_SMOKE))
-    assert _unpartitioned_window_count(plan) == 0
-    assert "CartesianProduct" not in plan
-    assert "HashAggregate" in plan
-
-
-def test_tpch_completion_tier_plan_shapes(spark):
-    """These TPC-H queries must plan the shapes their docstrings
-    claim: Q4's EXISTS as a left-semi (no row multiplication), Q19's
-    disjunctive predicate inside a broadcast hash join (never a
-    cartesian), Q18's head as a bounded TakeOrdered (never a global
-    sort), Q6 zero-join with all three predicates pushed to the scan."""
-
-    q4 = executed_plan(t.tpch_q4_shaped_priority_check(spark, SF_SMOKE))
-    assert "LeftSemi" in q4
-
-    q19 = executed_plan(t.tpch_q19_shaped_discounted_revenue(spark, SF_SMOKE))
-    assert "BroadcastHashJoin" in q19
-    assert "CartesianProduct" not in q19
-
-    q18 = executed_plan(t.tpch_q18_large_volume_customers(spark, SF_SMOKE))
-    assert "TakeOrderedAndProject" in q18
-
-    q6 = executed_plan(t.tpch_q6_forecast_revenue(spark, SF_SMOKE))
-    assert "Join" not in q6
-    assert "PushedFilters: [IsNotNull(l_shipdate)" in q6 or "GreaterThanOrEqual(l_shipdate" in q6
-
-
-@pytest.mark.parametrize(
-    "qname",
-    [
-        "good_turing_unseen_mass_documents",
-        "canonical_entities_parts",
-        "heaps_law_fit_documents",
-        "rfm_segments_customers_approx",
-        "tpch_q15_top_supplier",
-    ],
-)
-def test_pinned_operators_leave_no_catalog_cache(spark, qname, sf_dir):
-    """The operators that pin a shared subtree must not leave CacheManager
-    entries behind — a long-lived library session calling them repeatedly
-    previously accumulated cached partitions until someone called
-    clearCache(). The pins are lazy localCheckpoints: RDD-level blocks,
-    reclaimed by the ContextCleaner when the result DataFrame is
-    garbage-collected. Leftovers are attributed by RDD id: every
-    persistent RDD created after the query started must be gone, whatever
-    an earlier test's blocks are still draining."""
-    sc = spark.sparkContext
-    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
-    cache_mgr.clearCache()
-    first_id = sc.parallelize([0]).id()  # RDD ids only grow
-
-    def leftovers():
-        return {
-            int(i): r.rdd().getCreationSite()
-            for i, r in sc._jsc.getPersistentRDDs().items()
-            if int(i) > first_id
-        }
-
-    df = QUERIES[qname](spark, sf_dir)
-    assert df.count() >= 0  # materialize through the pinned subtree
-    assert cache_mgr.isEmpty(), f"{qname} left a CacheManager entry behind"
-    assert leftovers(), f"{qname} no longer pins a subtree"
-
-    # Dropping the result lets the ContextCleaner unpersist the blocks
-    # (async — poll). Spark also retains RECENT executions (and through
-    # them the checkpoint RDDs) until later queries displace them, and a
-    # single displacing query is not always enough (observed: one
-    # displacement + 60 s of System.gc() polling still left all 6 of
-    # canonical_entities' pins; displacing every few poll iterations
-    # drained them within 2-16 s). So the no-op displacement runs INSIDE
-    # the loop.
-    del df
-    deadline = time.monotonic() + 60.0
-    it = 0
-    while leftovers() and time.monotonic() < deadline:
-        gc.collect()
-        sc._jvm.System.gc()
-        if it % 5 == 0:
-            spark.range(1).count()
-        it += 1
-        time.sleep(0.5)
-    left = leftovers()
-    assert not left, (
-        f"{qname}'s checkpoint blocks were not GC-reclaimed; persistent RDDs "
-        f"(id: callSite) left: {left}"
-    )

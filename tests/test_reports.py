@@ -10,15 +10,9 @@ from __future__ import annotations
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 from data_ingestion_pipeline_spark.operators import reports, sql_surface
-from data_ingestion_pipeline_spark.operators.sql_surface import (
-    recursive_orderkey_hierarchy,
-    session_variable_brand_report,
-)
-from data_ingestion_pipeline_spark.sources.catalog import load_table
 from tests.conftest import SF_SMOKE
 
 
@@ -103,30 +97,3 @@ def test_sql_surface_matches_dataframe_builders(spark):
         a = sorted(map(tuple, via_sql.collect()))
         b = sorted(map(tuple, via_df.collect()))
         assert a == b, f"{report}: SQL and DataFrame surfaces diverge"
-
-
-def test_recursive_hierarchy_matches_closed_form(spark):
-    """The recursive digit-chain walk equals the closed form: root = leading
-    digit, chain_len = number of digits − 1."""
-
-    got = {r["root_digit"]: r for r in recursive_orderkey_hierarchy(spark, SF_SMOKE).collect()}
-    orders = load_table(spark, SF_SMOKE, "orders")
-    closed = (
-        orders.select(
-            F.substring(F.col("o_orderkey").cast("string"), 1, 1).cast("bigint").alias("root_digit"),
-            (F.length(F.col("o_orderkey").cast("string")) - 1).alias("chain_len"),
-        )
-        .groupBy("root_digit")
-        .agg(F.count("*").cast("bigint").alias("n_orders"), F.max("chain_len").cast("int").alias("max_chain_len"))
-    )
-    for r in closed.collect():
-        g = got[r["root_digit"]]
-        assert g["n_orders"] == r["n_orders"]
-        assert g["max_chain_len"] == r["max_chain_len"]
-
-
-def test_session_variable_routes_agree(spark):
-    rows = {r.route: r for r in session_variable_brand_report(spark, SF_SMOKE).collect()}
-    assert set(rows) == {"variable", "immediate"}
-    assert rows["variable"].n_lines == rows["immediate"].n_lines
-    assert rows["variable"].total_revenue == rows["immediate"].total_revenue

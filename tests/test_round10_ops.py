@@ -5,17 +5,110 @@ hash cannot see — self-query identity, rank contiguity, plan shape."""
 
 from __future__ import annotations
 
+import hashlib
+import math
+import re
+from collections import Counter, defaultdict
+from decimal import Decimal
+from itertools import permutations
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from data_ingestion_pipeline_spark.operators.analytics_checks import (
+    bowker_symmetry_event_transitions,
+    cliffs_delta_purchase_view,
+    degree_assortativity_copurchase_parts,
+    hhi_brand_concentration_by_category,
+    kruskal_wallis_event_values,
+    label_propagation_communities_parts,
+    markov_entropy_rate_event_types,
+    markov_removal_attribution_events,
+    shapley_attribution_events,
+)
+from data_ingestion_pipeline_spark.operators.inference_stats import (
+    cmh_test_arm_purchase_by_cohort,
+    cox_ph_retention_arms,
+    fisher_exact_region_priority_orders,
+    huber_regression_price_quantity,
+    lad_regression_price_quantity,
+    mcnemar_weekday_weekend_purchase,
+    nelson_aalen_hazard_retention,
+    partial_corr_purchase_view_daily,
+    poisson_dispersion_daily,
+    poisson_glm_daily_trend,
+    qini_uplift_curve_users,
+    theil_atkinson_customer_spend,
+    tost_equivalence_ab_value,
+)
+from data_ingestion_pipeline_spark.operators.llm_data import (
+    ann_ivfpq_sample_adc_topk_embeddings,
+    leakage_safe_split_documents,
+)
+from data_ingestion_pipeline_spark.operators.mlprep_checks import (
+    als_rank1_part_factors,
+    chao1_trigram_richness_documents,
+    jl_projection_distortion_embeddings,
+)
+from data_ingestion_pipeline_spark.operators.timeseries_checks import (
+    binseg_changepoint_daily,
+    jarque_bera_daily_values,
+    ljung_box_daily_values,
+    newey_west_daily_trend,
+    periodogram_daily_events,
+    runs_test_daily_values,
+)
+from tests.conftest import SF_ORACLE, SF_SMOKE, daily_values
+from tests.test_round11_ops import (
+    _assert_sample_adc_rejects,
+    _pv_values,
+    _retention_durations,
+    _sparse_ids,
+)
+
+
+def _price_quantity_by_flag(spark):
+    """(l_quantity, l_extendedprice) points per l_returnflag."""
+    by_flag = {}
+    for r in (
+        spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
+        .select("l_returnflag", "l_quantity", "l_extendedprice")
+        .collect()
+    ):
+        by_flag.setdefault(r["l_returnflag"], []).append(
+            (float(r["l_quantity"]), float(r["l_extendedprice"]))
+        )
+    return by_flag
+
+
+def _ols_fit(pts):
+    """Closed-form OLS (b0, b1), each rounded at 9 like the operators."""
+    n = len(pts)
+    sx = sum(x for x, _ in pts)
+    sy = sum(y for _, y in pts)
+    sxy = sum(x * y for x, y in pts)
+    sxx = sum(x * x for x, _ in pts)
+    b1 = round((n * sxy - sx * sy) / (n * sxx - sx * sx), 9)
+    return round((sy - b1 * sx) / n, 9), b1
+
+
+def _irls_step(pts, b0, b1, weight):
+    """One weighted least-squares refit with weights ``weight(residual)``."""
+    sw = swx = swxx = swy = swxy = 0.0
+    for x, y in pts:
+        w = weight(y - round(b0 + b1 * x, 9))
+        sw += w
+        swx += w * x
+        swxx += w * x * x
+        swy += w * y
+        swxy += w * x * y
+    det = sw * swxx - swx * swx
+    b1n = round((sw * swxy - swx * swy) / det, 9)
+    return round((swy - b1n * swx) / sw, 9), b1n
 
 
 def test_ivfpq_sample_adc_self_query_and_rank_shape(spark):
-    from data_ingestion_pipeline_spark.operators.llm_data import (
-        ann_ivfpq_sample_adc_topk_embeddings,
-    )
-
     rows = (
         ann_ivfpq_sample_adc_topk_embeddings(spark, SF_SMOKE)
         .orderBy("rank")
@@ -32,47 +125,15 @@ def test_ivfpq_sample_adc_self_query_and_rank_shape(spark):
     assert all(r["query_id"] == 0 for r in rows)
 
 
-def test_ivfpq_sample_adc_rejects_sparse_ids(spark):
-    """The oracle's stride CTEs assume dense 0-based vec_ids; the operator
-    must fail loudly on data that violates it instead of silently
-    diverging from the replay."""
-    import os
-    import tempfile
-
-    from data_ingestion_pipeline_spark.operators.llm_data import (
-        ann_ivfpq_sample_adc_topk_embeddings,
+def test_ivfpq_sample_adc_rejects_sparse_ids(spark, tmp_path):
+    _assert_sample_adc_rejects(
+        spark, tmp_path, ann_ivfpq_sample_adc_topk_embeddings, _sparse_ids
     )
-
-    with tempfile.TemporaryDirectory() as d:
-        (
-            spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-            .withColumn("vec_id", F.col("vec_id") * 2)
-            .write.parquet(os.path.join(d, "embeddings.parquet"))
-        )
-        with pytest.raises(AssertionError, match="dense 0-based"):
-            ann_ivfpq_sample_adc_topk_embeddings(spark, d)
-
-
-def _collected_pv(spark):
-    rows = (
-        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .filter(F.col("event_type").isin("purchase", "view"))
-        .select("event_type", "value")
-        .collect()
-    )
-    xs = [r["value"] for r in rows if r["event_type"] == "purchase"]
-    ys = [r["value"] for r in rows if r["event_type"] == "view"]
-    return xs, ys
 
 
 def test_kruskal_wallis_matches_direct_computation(spark):
     """H and the tie-corrected H recomputed from the collected values with
     plain midranks."""
-    from collections import Counter
-
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        kruskal_wallis_event_values,
-    )
 
     rows = (
         spark.read.parquet(f"{SF_SMOKE}/events.parquet")
@@ -113,11 +174,8 @@ def test_cliffs_delta_matches_direct_and_is_deterministic(spark):
     cumulative whose grain carries extra measures loses range-exchange
     reuse and re-samples chunk boundaries inconsistently (nondeterministic
     output). Structural regression here = flaky inequality below."""
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        cliffs_delta_purchase_view,
-    )
 
-    xs, ys = _collected_pv(spark)
+    xs, ys = _pv_values(spark, SF_SMOKE)
     gt = sum(1 for x in xs for y in ys if x > y)
     lt = sum(1 for x in xs for y in ys if x < y)
     r1 = cliffs_delta_purchase_view(spark, SF_SMOKE).collect()[0]
@@ -130,10 +188,6 @@ def test_cliffs_delta_matches_direct_and_is_deterministic(spark):
 
 
 def test_mcnemar_matches_direct_computation(spark):
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        mcnemar_weekday_weekend_purchase,
-    )
-
     rows = (
         spark.read.parquet(f"{SF_SMOKE}/events.parquet")
         .select("user_id", "event_type", F.weekday("ts").alias("wd"))
@@ -160,9 +214,6 @@ def test_leakage_safe_split_never_straddles_clusters(spark):
     """THE property: every planted near-dup pair (doc, doc+1000000) lands
     in one split; the split distribution stays roughly 80/10/10; the
     whole augmented corpus is covered."""
-    from data_ingestion_pipeline_spark.operators.llm_data import (
-        leakage_safe_split_documents,
-    )
 
     rows = leakage_safe_split_documents(spark, SF_SMOKE).collect()
     n_docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet").count()
@@ -185,7 +236,6 @@ def test_leakage_safe_split_never_straddles_clusters(spark):
     for r in rows:
         by_root.setdefault(r["cluster_root"], set()).add(r["split"])
     assert all(len(s) == 1 for s in by_root.values())
-    from collections import Counter
 
     dist = Counter(r["split"] for r in rows)
     assert dist["train"] > dist["val"] and dist["train"] > dist["test"]
@@ -194,11 +244,6 @@ def test_leakage_safe_split_never_straddles_clusters(spark):
 def test_markov_removal_attribution_matches_python(spark):
     """Removal effects recomputed with a plain-python chain mirror; shares
     sum to 1; removing a channel can only lower reach."""
-    from collections import defaultdict
-
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        markov_removal_attribution_events,
-    )
 
     ev = sorted(
         (
@@ -264,12 +309,6 @@ def test_markov_removal_attribution_matches_python(spark):
 def test_poisson_glm_matches_python_irls(spark):
     """IRLS recomputed in plain python; the fitted rate ratio multiplies
     out the fixture's daily counts."""
-    import math
-    from collections import Counter
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        poisson_glm_daily_trend,
-    )
 
     days = Counter(
         r["d"]
@@ -307,11 +346,6 @@ def test_poisson_glm_matches_python_irls(spark):
 def test_als_rank1_matches_python_and_descends(spark):
     """Factors against a plain-python ALS mirror, and the rank-1 fit's SSE
     must be non-increasing across iterations (the ALS guarantee)."""
-    from collections import defaultdict
-
-    from data_ingestion_pipeline_spark.operators.mlprep_checks import (
-        als_rank1_part_factors,
-    )
 
     li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet").select(
         "l_orderkey", "l_partkey", "l_quantity"
@@ -370,38 +404,10 @@ def test_cox_ph_matches_python_newton(spark):
     NOT asserted there — both engines take the same four steps); the
     sf0.01 fixture additionally pins convergence: a fifth Newton step
     from the published β must be a no-op at 6dp."""
-    import hashlib
-    import math
-    from collections import defaultdict
-    from datetime import timedelta
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        cox_ph_retention_arms,
-    )
 
     def mirror(sf_dir):
-        rows = (
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-            .select("user_id", "ts")
-            .collect()
-        )
-        first, last = {}, {}
-        for r in rows:
-            u, ts = r["user_id"], r["ts"]
-            if u not in first or ts < first[u]:
-                first[u] = ts
-            if u not in last or ts > last[u]:
-                last[u] = ts
-        end_ts = max(last.values())
-
-        def trunc(ts):
-            return ts.replace(minute=0, second=0, microsecond=0)
-
         grain = defaultdict(lambda: [0, 0, 0, 0])  # d_a, d_b, exit_a, exit_b
-        for u in first:
-            t = int((trunc(last[u]) - trunc(first[u])).total_seconds() // 3600)
-            is_a = int(hashlib.md5(str(u).encode()).hexdigest()[:6], 16) % 2 == 0
-            churned = last[u] < end_ts - timedelta(days=1)
+        for t, churned, is_a in _retention_durations(spark, sf_dir):
             g = grain[t]
             if churned and is_a:
                 g[0] += 1
@@ -437,7 +443,7 @@ def test_cox_ph_matches_python_newton(spark):
         n_events = sum(d_a + d_b for d_a, d_b, _, _ in risk)
         return b, si, n_events, fold
 
-    for sf_dir, check_converged in [(SF_SMOKE, False), ("/root/testdata/sf0.01", True)]:
+    for sf_dir, check_converged in [(SF_SMOKE, False), (SF_ORACLE, True)]:
         b, si, n_events, fold = mirror(sf_dir)
         row = cox_ph_retention_arms(spark, sf_dir).collect()[0]
         assert row["n_events"] == n_events
@@ -454,12 +460,6 @@ def test_shapley_attribution_matches_permutation_mirror(spark):
     """Exact Shapley values recomputed by brute-force permutation
     averaging (the definition) from per-user channel sets rebuilt in
     plain python; efficiency Σφ = v(full) − v(∅) must hold."""
-    import hashlib  # noqa: F401  (parity with sibling mirrors)
-    from itertools import permutations
-
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        shapley_attribution_events,
-    )
 
     rows = (
         spark.read.parquet(f"{SF_SMOKE}/events.parquet")
@@ -513,9 +513,6 @@ def test_label_propagation_stabilizes_and_partitions_nodes(spark):
     pin on the fixture); communities partition the node set; every
     community is connected within the support->=2 edge set (label = some
     member id)."""
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        label_propagation_communities_parts,
-    )
 
     r4 = {
         r["p_partkey"]: r["community"]
@@ -533,24 +530,18 @@ def test_label_propagation_stabilizes_and_partitions_nodes(spark):
     # inside the node universe)
     assert set(r4.values()) <= set(r4.keys())
     # sizes column agrees with the labeling
-    from collections import Counter
 
     sizes = Counter(r4.values())
     for r in label_propagation_communities_parts(spark, SF_SMOKE).collect():
         assert r["community_size"] == sizes[r["community"]]
 
 
-@pytest.mark.parametrize("sf_dir", [SF_SMOKE, "/root/testdata/sf0.01"])
+@pytest.mark.parametrize("sf_dir", [SF_SMOKE, SF_ORACLE])
 def test_cmh_matches_python_mirror(spark, sf_dir):
     """CMH continuity-corrected chi2 and the MH pooled OR recomputed in
     plain python from user-grain tuples; the degenerate smoke fixture
     (all users convert) pins the NULL guards, sf0.01 pins the live
     statistic."""
-    import hashlib
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        cmh_test_arm_purchase_by_cohort,
-    )
 
     rows = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -607,9 +598,6 @@ def test_qini_curve_shape_and_terminal_identities(spark):
     total-treated-conversions minus scaled control conversions, and the
     terminal cumulative uplift equals the unconditioned ATE difference
     of conversion rates."""
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        qini_uplift_curve_users,
-    )
 
     rows = sorted(
         qini_uplift_curve_users(spark, SF_SMOKE).collect(),
@@ -633,22 +621,8 @@ def test_huber_irls_matches_python_mirror(spark):
     """Huber IRLS recomputed in plain python (same round-at-9 contract,
     same exact-percentile scale), and a 4th step from the published fit
     must move the slope by <1e-4 (practical convergence on the fixture)."""
-    import math
 
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        huber_regression_price_quantity,
-    )
-
-    rows = (
-        spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
-        .select("l_returnflag", "l_quantity", "l_extendedprice")
-        .collect()
-    )
-    by_flag = {}
-    for r in rows:
-        by_flag.setdefault(r["l_returnflag"], []).append(
-            (float(r["l_quantity"]), float(r["l_extendedprice"]))
-        )
+    by_flag = _price_quantity_by_flag(spark)
 
     def pct_interp(vals, q=0.5):
         v = sorted(vals)
@@ -666,30 +640,16 @@ def test_huber_irls_matches_python_mirror(spark):
     assert any(r["pct_downweighted"] > 0.0 for r in out.values())
     for flag, pts in by_flag.items():
         n = len(pts)
-        sx = sum(x for x, _ in pts)
-        sy = sum(y for _, y in pts)
-        sxy = sum(x * y for x, y in pts)
-        sxx = sum(x * x for x, _ in pts)
-        b1 = round((n * sxy - sx * sy) / (n * sxx - sx * sx), 9)
-        b0 = round((sy - b1 * sx) / n, 9)
+        b0, b1 = _ols_fit(pts)
         rs = [y - round(b0 + b1 * x, 9) for x, y in pts]
         med = round(pct_interp(rs), 6)
         mad = round(pct_interp([abs(r - med) for r in rs]), 6)
         delta = round(1.345 * 1.4826 * mad, 6)
 
         def step(b0, b1):
-            sw = swx = swxx = swy = swxy = 0.0
-            for x, y in pts:
-                r = y - round(b0 + b1 * x, 9)
-                w = 1.0 if abs(r) <= delta else delta / abs(r)
-                sw += w
-                swx += w * x
-                swxx += w * x * x
-                swy += w * y
-                swxy += w * x * y
-            det = sw * swxx - swx * swx
-            b1n = round((sw * swxy - swx * swy) / det, 9)
-            return round((swy - b1n * swx) / sw, 9), b1n
+            return _irls_step(
+                pts, b0, b1, lambda r: 1.0 if abs(r) <= delta else delta / abs(r)
+            )
 
         for _ in range(3):
             b0, b1 = step(b0, b1)
@@ -707,11 +667,6 @@ def test_binseg_changepoint_matches_bruteforce(spark):
     """The split must equal a brute-force argmax over all interior
     splits recomputed in python, and the one-break model must never
     lose to the no-break model (gain >= 0)."""
-    from collections import Counter
-
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        binseg_changepoint_daily,
-    )
 
     days = Counter(
         r["d"]
@@ -746,13 +701,6 @@ def test_jl_projection_distortion_report(spark):
     deterministic +/-1 projection must sit near 1 (unbiasedness), most
     chain pairs inside the 50% band, and the report recomputed in numpy
     from the same md5 sign matrix must agree."""
-    import hashlib
-
-    import numpy as np
-
-    from data_ingestion_pipeline_spark.operators.mlprep_checks import (
-        jl_projection_distortion_embeddings,
-    )
 
     rows = (
         spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
@@ -791,12 +739,6 @@ def test_fisher_exact_matches_python_mirror(spark):
     rounded-ln decimal prefix fold (Decimal at scale 12 mirrors the
     engines' DECIMAL(27,12)), plus an lgamma-based sanity cross-check
     of the hypergeometric tail."""
-    import math
-    from decimal import Decimal
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        fisher_exact_region_priority_orders,
-    )
 
     o = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").select(
         "o_custkey", "o_orderpriority"
@@ -862,12 +804,6 @@ def test_fisher_exact_matches_python_mirror(spark):
 
 
 def test_poisson_dispersion_matches_direct(spark):
-    from collections import Counter
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        poisson_dispersion_daily,
-    )
-
     days = Counter(
         r["d"]
         for r in spark.read.parquet(f"{SF_SMOKE}/events.parquet")
@@ -883,7 +819,6 @@ def test_poisson_dispersion_matches_direct(spark):
     assert abs(row["mean_daily"] - mean) < 1e-6
     assert abs(row["dispersion_d"] - d_stat) < 1e-4
     assert abs(row["dispersion_ratio"] - d_stat / (n - 1)) < 1e-6
-    import math
 
     assert abs(row["z"] - (math.sqrt(2 * d_stat) - math.sqrt(2 * (n - 1) - 1))) < 1e-4
 
@@ -891,13 +826,6 @@ def test_poisson_dispersion_matches_direct(spark):
 def test_chao1_identities(spark):
     """Chao1 >= observed richness; coverage in (0,1]; f1/f2 recounted
     from a python trigram mirror."""
-    from collections import Counter
-
-    from data_ingestion_pipeline_spark.operators.mlprep_checks import (
-        chao1_trigram_richness_documents,
-    )
-
-    import re as _re
 
     texts = [
         r["text"]
@@ -905,7 +833,7 @@ def test_chao1_identities(spark):
     ]
     grams = Counter()
     for t in texts:
-        toks = _re.split(r"\s+", t.strip())
+        toks = re.split(r"\s+", t.strip())
         for i in range(max(len(toks) - 2, 1)):
             g = " ".join(toks[i : i + 3])
             if g:
@@ -925,7 +853,6 @@ def test_chao1_identities(spark):
 def test_degree_assortativity_matches_networkx_style_mirror(spark):
     """r recomputed from the edge list in python (both orientations);
     must land in [-1, 1]."""
-    from collections import Counter
 
     rows = (
         spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
@@ -955,9 +882,6 @@ def test_degree_assortativity_matches_networkx_style_mirror(spark):
     mu = sum(xs) / m2
     num = sum(x * y for x, y in zip(xs, ys)) / m2 - mu * mu
     den = sum(x * x for x in xs) / m2 - mu * mu
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        degree_assortativity_copurchase_parts,
-    )
 
     row = degree_assortativity_copurchase_parts(spark, SF_SMOKE).collect()[0]
     assert row["n_edges"] == len(edges)
@@ -973,38 +897,11 @@ def test_nelson_aalen_identities(spark):
     hazard is the running sum of d/n, variance of d/n^2, and exp(-H) at
     each event time must dominate the KM product-limit estimate (the
     standard Fleming-Harrington >= Kaplan-Meier inequality)."""
-    from datetime import timedelta
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        nelson_aalen_hazard_retention,
-    )
-
-    rows = (
-        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .select("user_id", "ts")
-        .collect()
-    )
-    first, last = {}, {}
-    for r in rows:
-        u, ts = r["user_id"], r["ts"]
-        if u not in first or ts < first[u]:
-            first[u] = ts
-        if u not in last or ts > last[u]:
-            last[u] = ts
-    end_ts = max(last.values())
-
-    def trunc(ts):
-        return ts.replace(minute=0, second=0, microsecond=0)
-
-    from collections import defaultdict
 
     grain = defaultdict(lambda: [0, 0])  # t -> d, exits
-    for u in first:
-        t = int((trunc(last[u]) - trunc(first[u])).total_seconds() // 3600)
-        g = grain[t]
-        if last[u] < end_ts - timedelta(days=1):
-            g[0] += 1
-        g[1] += 1
+    for t, churned, _ in _retention_durations(spark, SF_SMOKE):
+        grain[t][0] += churned
+        grain[t][1] += 1
     n_tot = sum(g[1] for g in grain.values())
     out = {
         r["t"]: r for r in nelson_aalen_hazard_retention(spark, SF_SMOKE).collect()
@@ -1023,8 +920,6 @@ def test_nelson_aalen_identities(spark):
             assert r["d"] == d and r["n"] == at_risk
             assert abs(r["cum_hazard"] - h) < 1e-5
             assert abs(r["hazard_var"] - v) < 1e-5
-            import math
-
             assert math.exp(-r["cum_hazard"]) >= km - 1e-9
             seen += 1
         at_risk -= exits
@@ -1034,12 +929,6 @@ def test_nelson_aalen_identities(spark):
 def test_markov_entropy_rate_bounds(spark):
     """H(rate) <= H(iid) (conditioning reduces entropy), both positive on
     the fixture, and H(iid) matches a direct recount."""
-    import math
-    from collections import Counter
-
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        markov_entropy_rate_event_types,
-    )
 
     types = Counter(
         r["event_type"]
@@ -1062,20 +951,8 @@ def test_lad_regression_matches_python_and_beats_ols_on_l1(spark):
     """LAD IRLS recomputed in plain python (same eps smoothing and
     round-at-9 contract), and the LAD fit's mean |residual| must not
     exceed the OLS fit's (the L1 objective it minimizes)."""
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        lad_regression_price_quantity,
-    )
 
-    rows = (
-        spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
-        .select("l_returnflag", "l_quantity", "l_extendedprice")
-        .collect()
-    )
-    by_flag = {}
-    for r in rows:
-        by_flag.setdefault(r["l_returnflag"], []).append(
-            (float(r["l_quantity"]), float(r["l_extendedprice"]))
-        )
+    by_flag = _price_quantity_by_flag(spark)
     out = {
         r["l_returnflag"]: r
         for r in lad_regression_price_quantity(spark, SF_SMOKE).collect()
@@ -1083,26 +960,10 @@ def test_lad_regression_matches_python_and_beats_ols_on_l1(spark):
     assert set(out) == set(by_flag)
     for flag, pts in by_flag.items():
         n = len(pts)
-        sx = sum(x for x, _ in pts)
-        sy = sum(y for _, y in pts)
-        sxy = sum(x * y for x, y in pts)
-        sxx = sum(x * x for x, _ in pts)
-        ob1 = round((n * sxy - sx * sy) / (n * sxx - sx * sx), 9)
-        ob0 = round((sy - ob1 * sx) / n, 9)
+        ob0, ob1 = _ols_fit(pts)
         b0, b1 = ob0, ob1
         for _ in range(3):
-            sw = swx = swxx = swy = swxy = 0.0
-            for x, y in pts:
-                r = y - round(b0 + b1 * x, 9)
-                w = 1.0 / max(abs(r), 1e-6)
-                sw += w
-                swx += w * x
-                swxx += w * x * x
-                swy += w * y
-                swxy += w * x * y
-            det = sw * swxx - swx * swx
-            b1 = round((sw * swxy - swx * swy) / det, 9)
-            b0 = round((swy - b1 * swx) / sw, 9)
+            b0, b1 = _irls_step(pts, b0, b1, lambda r: 1.0 / max(abs(r), 1e-6))
         r = out[flag]
         assert r["n"] == n
         # the mirror folds in python floats, the engines in exact decimal:
@@ -1119,13 +980,6 @@ def test_periodogram_parseval_and_weekly_peak(spark):
     """Spectral identities: power non-negative, shares sum to <= 1
     (Parseval partitions variance over ALL harmonics; we publish 14),
     and a numpy-FFT mirror agrees on every published harmonic."""
-    from collections import Counter
-
-    import numpy as np
-
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        periodogram_daily_events,
-    )
 
     days = Counter(
         r["d"]
@@ -1156,11 +1010,6 @@ def test_periodogram_parseval_and_weekly_peak(spark):
 def test_theil_atkinson_bounds_and_mirror(spark):
     """0 <= A1 < 1 and 0 <= T <= ln n; python mirror with the same
     rounded-ln fold."""
-    import math
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        theil_atkinson_customer_spend,
-    )
 
     spend = [
         float(r["x"])
@@ -1184,12 +1033,6 @@ def test_theil_atkinson_bounds_and_mirror(spark):
 
 
 def test_partial_corr_matches_direct(spark):
-    from collections import defaultdict
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        partial_corr_purchase_view_daily,
-    )
-
     cells = defaultdict(lambda: [0, 0, 0])
     for r in (
         spark.read.parquet(f"{SF_SMOKE}/events.parquet")
@@ -1202,7 +1045,6 @@ def test_partial_corr_matches_direct(spark):
         if r["event_type"] == "view":
             c[1] += 1
         c[2] += 1
-    import math
 
     xs = [c[0] for c in cells.values()]
     ys = [c[1] for c in cells.values()]
@@ -1229,13 +1071,6 @@ def test_partial_corr_matches_direct(spark):
 def test_tost_equivalence_mirror(spark):
     """TOST z's recomputed from user-grain means in python; the
     equivalence verdict must match the two-one-sided rule."""
-    import hashlib
-    import math
-    from collections import defaultdict
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        tost_equivalence_ab_value,
-    )
 
     per_user = defaultdict(lambda: [0.0, 0])
     for r in (
@@ -1271,24 +1106,8 @@ def test_tost_equivalence_mirror(spark):
 
 def test_jarque_bera_and_ljung_box_mirror(spark):
     """JB moments and the LB Q recomputed from the daily means."""
-    import math
-    from collections import defaultdict
 
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        jarque_bera_daily_values,
-        ljung_box_daily_values,
-    )
-
-    acc = defaultdict(lambda: [0.0, 0])
-    for r in (
-        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .select(F.to_date("ts").alias("d"), "value")
-        .collect()
-    ):
-        a = acc[r["d"]]
-        a[0] += r["value"]
-        a[1] += 1
-    ys = [s / c for _, (s, c) in sorted(acc.items())]
+    ys = [sum(v) / len(v) for v in daily_values(spark, SF_SMOKE).values()]
     n = len(ys)
     mu = sum(ys) / n
     m2 = sum((y - mu) ** 2 for y in ys) / n
@@ -1317,23 +1136,8 @@ def test_jarque_bera_and_ljung_box_mirror(spark):
 
 def test_runs_test_mirror(spark):
     """Run count, up/down split, and z recomputed from the daily means."""
-    import math
-    from collections import defaultdict
 
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        runs_test_daily_values,
-    )
-
-    acc = defaultdict(lambda: [0.0, 0])
-    for r in (
-        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .select(F.to_date("ts").alias("d"), "value")
-        .collect()
-    ):
-        a = acc[r["d"]]
-        a[0] += r["value"]
-        a[1] += 1
-    ys = [s / c for _, (s, c) in sorted(acc.items())]
+    ys = [sum(v) / len(v) for v in daily_values(spark, SF_SMOKE).values()]
     signs = [1 if b > a else -1 for a, b in zip(ys, ys[1:]) if b != a]
     n, n_up = len(signs), sum(1 for s in signs if s > 0)
     n_down = n - n_up
@@ -1352,23 +1156,8 @@ def test_runs_test_mirror(spark):
 def test_newey_west_reduces_to_ols_shape(spark):
     """HAC slope equals the closed-form OLS slope; the HAC se recomputed
     in python; t = slope/se identity holds."""
-    import math
-    from collections import defaultdict
 
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        newey_west_daily_trend,
-    )
-
-    acc = defaultdict(lambda: [0.0, 0])
-    for r in (
-        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .select(F.to_date("ts").alias("d"), "value")
-        .collect()
-    ):
-        a = acc[r["d"]]
-        a[0] += r["value"]
-        a[1] += 1
-    ys = [s / c for _, (s, c) in sorted(acc.items())]
+    ys = [sum(v) / len(v) for v in daily_values(spark, SF_SMOKE).values()]
     n = len(ys)
     xs = list(range(1, n + 1))
     sx, sy2 = sum(xs), sum(ys)
@@ -1396,11 +1185,6 @@ def test_newey_west_reduces_to_ols_shape(spark):
 def test_hhi_identities(spark):
     """Per-category shares sum to 100, HHI in (10000/n_brands, 10000],
     and a direct recount agrees."""
-    from collections import defaultdict
-
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        hhi_brand_concentration_by_category,
-    )
 
     li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet").select(
         "l_partkey", "l_extendedprice", "l_discount"
@@ -1430,12 +1214,6 @@ def test_hhi_identities(spark):
 
 
 def test_bowker_symmetry_mirror(spark):
-    from collections import defaultdict
-
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        bowker_symmetry_event_transitions,
-    )
-
     rows = (
         spark.read.parquet(f"{SF_SMOKE}/events.parquet")
         .select("user_id", "event_id", "event_type", "ts")

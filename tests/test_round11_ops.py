@@ -6,148 +6,290 @@ do)."""
 
 from __future__ import annotations
 
-import os
-import tempfile
+import ast
+import bisect
+import datetime
+import datetime as dt
+import hashlib
+import inspect
+import math
+from collections import Counter, defaultdict
+from decimal import Decimal
+from itertools import combinations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+import data_ingestion_pipeline_spark.operators.analytics_checks as A
+from data_ingestion_pipeline_spark.functions.vector import cosine
+from data_ingestion_pipeline_spark.operators import analytics_checks
+from data_ingestion_pipeline_spark.operators.analytics_checks import (
+    anderson_darling_purchase_view,
+    ansari_bradley_purchase_view,
+    brunner_munzel_purchase_view,
+    canonical_correlation_daily,
+    cochran_armitage_trend_priority_orders,
+    cochrans_q_event_types_users,
+    cramer_von_mises_purchase_view,
+    dunn_posthoc_event_values,
+    energy_distance_purchase_view,
+    friedman_test_event_type_values,
+    goodman_kruskal_priority_price_orders,
+    jonckheere_terpstra_priority_price,
+    kendalls_w_weekday_event_types,
+    local_clustering_topk_parts,
+    moods_median_test_event_values,
+    quade_test_event_type_values,
+    seasonal_mann_kendall_daily,
+    theils_u_event_type_dow,
+    wasserstein_purchase_view,
+    wilcoxon_signed_rank_purchase_view_daily,
+)
+from data_ingestion_pipeline_spark.operators.classifier import (
+    N_CALIB_BINS,
+    _train,
+    brier_decomposition_documents,
+    hosmer_lemeshow_documents,
+)
+from data_ingestion_pipeline_spark.operators.corpus_quality import (
+    cohens_kappa_quality_flags_documents,
+)
+from data_ingestion_pipeline_spark.operators.inference_stats import (
+    _LIFE_TABLE_W,
+    bartlett_test_event_values,
+    box_m_test_weekpart_daily,
+    breusch_pagan_price_quantity,
+    competing_risks_cif_retention,
+    cronbach_alpha_event_types_users,
+    fleming_harrington_test_retention_arms,
+    greenwood_km_ci_retention,
+    hodges_lehmann_purchase_view_daily,
+    hotelling_t2_weekpart_daily,
+    life_table_retention,
+    mahalanobis_outliers_lineitem,
+    mardia_normality_daily,
+    odds_ratio_ci_priority_status_orders,
+    randomization_test_ab_value,
+    rmst_user_retention,
+    eb_shrunk_purchase_rate_users,
+    welch_anova_event_values,
+    white_test_price_quantity,
+)
+from data_ingestion_pipeline_spark.operators.llm_data import (
+    _ann_query_batch,
+    ann_ivf_nprobe_sweep_embeddings,
+    ann_pq_sample_adc_topk_embeddings,
+    near_dup_threshold_sweep_documents,
+)
+from data_ingestion_pipeline_spark.operators.mlprep_checks import (
+    nmi_ivf_cells_labels_embeddings,
+    nn1_label_accuracy_embeddings,
+)
+from data_ingestion_pipeline_spark.operators.relational import (
+    _AMS_J,
+    _BLOOM_IDX_BITS,
+    _BLOOM_IDX_K,
+    _KMV_K,
+    _ZONE_BUCKETS,
+    ams_f2_user_activity_events,
+    binned_range_join_orders_bands,
+    bloom_index_probe_orders,
+    kmv_distinct_users_events,
+    zone_map_skip_report_orders,
+)
+from data_ingestion_pipeline_spark.operators.streaming_checks import (
+    streaming_interval_full_outer_events,
+)
+from data_ingestion_pipeline_spark.operators.timeseries_checks import (
+    _CROSTON_ALPHA,
+    _HURST_SIZES,
+    _SPEC_K,
+    _VR_Q,
+    _rhu,
+    adf_test_daily_values,
+    bartels_rank_test_daily_values,
+    breusch_godfrey_daily_trend,
+    ccf_purchase_view_daily,
+    chow_test_daily_midpoint,
+    cochrane_orcutt_daily_trend,
+    cox_stuart_trend_daily,
+    croston_intermittent_demand_part,
+    cusum_squares_daily,
+    dagostino_k2_daily_values,
+    esd_outliers_daily,
+    gmm2_em_daily_values,
+    granger_lag1_view_to_purchase_daily,
+    hurst_rs_daily_values,
+    pacf_daily_values,
+    permutation_entropy_daily_values,
+    pettitt_changepoint_daily,
+    siegel_slope_daily_trend,
+    spectral_entropy_daily_events,
+    theta_method_forecast_daily,
+    transfer_entropy_view_purchase_daily,
+    turning_points_daily,
+    variance_ratio_daily,
+)
+from data_ingestion_pipeline_spark.similarity.brute_force import (
+    topk_cosine_batch,
+    topk_per_query,
+)
+from data_ingestion_pipeline_spark.similarity.ivf import (
+    ivf_build_index,
+    ivf_topk,
+    select_probe_cells,
+)
+from tests.conftest import (
+    SF_SMOKE,
+    daily_pv_sums,
+    daily_sums,
+    daily_values,
+    run_oracle,
+    write_sf,
+)
+from tests.test_llm_data import corpus
 
 
-def test_eb_shrinkage_degenerate_variance_nulls_in_both_engines(spark):
-    """All-equal per-user rates make the moment fit's v = 0: the guarded
-    prior must yield NULL shrunk rates in Spark AND in the DuckDB oracle
-    (unguarded, Spark division gives NULL where DuckDB gives Infinity —
-    the engine divergence the round-9 advice flagged)."""
-    import duckdb
+def _pv_values(spark, sf_dir):
+    """Sorted purchase and view values of the events table."""
+    rows = (
+        spark.read.parquet(f"{sf_dir}/events.parquet")
+        .filter(F.col("event_type").isin("purchase", "view"))
+        .select("event_type", "value")
+        .collect()
+    )
+    xs = sorted(r["value"] for r in rows if r["event_type"] == "purchase")
+    ys = sorted(r["value"] for r in rows if r["event_type"] == "view")
+    return xs, ys
 
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        EB_SHRUNK_PURCHASE_RATE_USERS_ORACLE,
-        eb_shrunk_purchase_rate_users,
+
+def _avg_ranks(vals):
+    """value -> average rank over the pooled list (ties averaged)."""
+    s = sorted(vals)
+    r = {}
+    i = 0
+    while i < len(s):
+        j = i
+        while j < len(s) and s[j] == s[i]:
+            j += 1
+        r[s[i]] = (i + 1 + j) / 2.0
+        i = j
+    return r
+
+
+def _retention_durations(spark, sf_dir):
+    """Per user: (hours from first to last event, both hour-floored;
+    churned = last event over a day before the corpus end; md5 arm A)."""
+    rows = (
+        spark.read.parquet(f"{sf_dir}/events.parquet")
+        .select("user_id", "ts")
+        .collect()
+    )
+    first, last, end = {}, {}, None
+    for r in rows:
+        u, t = r["user_id"], r["ts"]
+        first[u] = min(first.get(u, t), t)
+        last[u] = max(last.get(u, t), t)
+        end = t if end is None else max(end, t)
+
+    def hour_floor(t):
+        return t.replace(minute=0, second=0, microsecond=0)
+
+    out = []
+    for u in first:
+        hrs = int(
+            (hour_floor(last[u]) - hour_floor(first[u])).total_seconds()
+            // 3600
+        )
+        churn = last[u] < end - datetime.timedelta(days=1)
+        arm_a = (
+            int(hashlib.md5(str(u).encode()).hexdigest()[:6], 16) % 2 == 0
+        )
+        out.append((hrs, churn, arm_a))
+    return out
+
+
+# every user: exactly 1 purchase + 1 view -> raw rate 0.5 for all
+_EQUAL_RATES = [
+    (2 * uid + j, f"2024-01-0{uid + 1} 00:00:00", uid, et, 1.0, "{}")
+    for uid in range(6)
+    for j, et in enumerate(("purchase", "view"))
+]
+
+
+# half the users at rate 0, half at 1, single-event users
+_OVERDISPERSED = [
+    (i, f"2024-01-01 0{i}:00:00", i, "purchase" if i % 2 == 0 else "view", 1.0, "{}")
+    for i in range(8)
+]
+
+
+def _assert_eb_shrinkage_nulls_in_both_engines(spark, tmp_path, rows, raw_rates):
+    """The moment fit's prior is unfittable on ``rows``, so the guard must
+    yield NULL shrunk rates in Spark AND in the DuckDB oracle."""
+    events = spark.createDataFrame(
+        rows, "event_id bigint, ts string, user_id bigint, "
+        "event_type string, value double, props string"
+    ).withColumn("ts", F.to_timestamp("ts"))
+    sf = write_sf(tmp_path, events=events)
+    got = eb_shrunk_purchase_rate_users(spark, sf).collect()
+    assert {r["user_id"]: r["raw_rate"] for r in got} == pytest.approx(raw_rates)
+    assert all(r["shrunk_rate"] is None for r in got), (
+        "a degenerate corpus must report 'prior unfittable' (NULL)"
+    )
+    oracle = run_oracle("eb_shrunk_purchase_rate_users", sf)
+    assert {uid: raw for uid, _, _, raw, _ in oracle} == pytest.approx(raw_rates)
+    assert all(shrunk is None for *_, shrunk in oracle)
+
+
+def test_eb_shrinkage_degenerate_variance_nulls_in_both_engines(spark, tmp_path):
+    """All-equal per-user rates make the moment fit's v = 0 (unguarded,
+    Spark division gives NULL where DuckDB gives Infinity)."""
+    _assert_eb_shrinkage_nulls_in_both_engines(
+        spark, tmp_path, _EQUAL_RATES, {uid: 0.5 for uid in range(6)}
     )
 
-    # every user: exactly 1 purchase + 1 view -> raw rate 0.5 for all
-    rows = []
-    eid = 0
-    for uid in range(6):
-        for et in ("purchase", "view"):
-            rows.append((eid, f"2024-01-0{uid + 1} 00:00:00", uid, et, 1.0, "{}"))
-            eid += 1
-    with tempfile.TemporaryDirectory() as d:
-        (
-            spark.createDataFrame(
-                rows, "event_id bigint, ts string, user_id bigint, "
-                "event_type string, value double, props string"
-            )
-            .withColumn("ts", F.to_timestamp("ts"))
-            .write.parquet(os.path.join(d, "events.parquet"))
-        )
-        got = eb_shrunk_purchase_rate_users(spark, d).collect()
-        assert len(got) == 6
-        for r in got:
-            assert r["raw_rate"] == pytest.approx(0.5)
-            assert r["shrunk_rate"] is None, (
-                "v=0 corpus must report 'prior unfittable' (NULL), got "
-                f"{r['shrunk_rate']}"
-            )
-        con = duckdb.connect()
-        con.execute(
-            "CREATE VIEW events AS SELECT * FROM "
-            f"'{os.path.join(d, 'events.parquet', '*.parquet')}'"
-        )
-        for _, _, _, raw, shrunk in con.execute(
-            EB_SHRUNK_PURCHASE_RATE_USERS_ORACLE
-        ).fetchall():
-            assert raw == pytest.approx(0.5)
-            assert shrunk is None
 
-
-def test_eb_shrinkage_overdispersed_corpus_nulls_in_both_engines(spark):
-    """Overdispersion (v >= m(1-m), concentration <= 0): the guard must
-    refuse the fit with NULLs rather than silently shrinking AWAY from
-    the prior interval. Fixture: half the users at rate 0, half at 1,
-    single-event users -> m=0.5, v=0.25 = m(1-m), conc_raw = 0."""
-    import duckdb
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        EB_SHRUNK_PURCHASE_RATE_USERS_ORACLE,
-        eb_shrunk_purchase_rate_users,
+def test_eb_shrinkage_overdispersed_corpus_nulls_in_both_engines(spark, tmp_path):
+    """Overdispersion: v >= m(1-m) (m=0.5, v=0.25, conc_raw = 0), where an
+    unguarded fit would shrink AWAY from the prior interval."""
+    _assert_eb_shrinkage_nulls_in_both_engines(
+        spark, tmp_path, _OVERDISPERSED, {i: 1.0 - i % 2 for i in range(8)}
     )
 
-    rows = [
-        (i, f"2024-01-01 0{i}:00:00", i, "purchase" if i % 2 == 0 else "view", 1.0, "{}")
-        for i in range(8)
-    ]
-    with tempfile.TemporaryDirectory() as d:
-        (
-            spark.createDataFrame(
-                rows, "event_id bigint, ts string, user_id bigint, "
-                "event_type string, value double, props string"
-            )
-            .withColumn("ts", F.to_timestamp("ts"))
-            .write.parquet(os.path.join(d, "events.parquet"))
-        )
-        got = eb_shrunk_purchase_rate_users(spark, d).collect()
-        assert len(got) == 8 and all(r["shrunk_rate"] is None for r in got)
-        con = duckdb.connect()
-        con.execute(
-            "CREATE VIEW events AS SELECT * FROM "
-            f"'{os.path.join(d, 'events.parquet', '*.parquet')}'"
-        )
-        assert all(
-            row[4] is None
-            for row in con.execute(
-                EB_SHRUNK_PURCHASE_RATE_USERS_ORACLE
-            ).fetchall()
-        )
+
+def _assert_sample_adc_rejects(spark, tmp_path, query, violate):
+    """The oracles' stride CTEs assume dense 0-based vec_ids and >= 16
+    rows (fewer than n_codes=16 vectors would make train_codebooks TILE
+    the sample, which the SQL replay does not). A sample-ADC operator
+    must fail loudly on embeddings ``violate`` breaks that way instead of
+    silently diverging from the replay."""
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    sf = write_sf(tmp_path, embeddings=violate(emb))
+    with pytest.raises(AssertionError, match="dense 0-based"):
+        query(spark, sf)
 
 
-def test_pq_sample_adc_rejects_sparse_ids(spark):
-    """The flat sample-ADC replay has the same stride-CTE precondition as
-    the IVF-PQ composition (dense 0-based vec_ids, >=16 rows): the
-    operator must fail loudly on sparse ids instead of silently
-    diverging from the oracle."""
-    from data_ingestion_pipeline_spark.operators.llm_data import (
-        ann_pq_sample_adc_topk_embeddings,
+def _sparse_ids(emb):
+    return emb.withColumn("vec_id", F.col("vec_id") * 2)
+
+
+def test_pq_sample_adc_rejects_sparse_ids(spark, tmp_path):
+    _assert_sample_adc_rejects(spark, tmp_path, ann_pq_sample_adc_topk_embeddings, _sparse_ids)
+
+
+def test_pq_sample_adc_rejects_short_corpus(spark, tmp_path):
+    _assert_sample_adc_rejects(
+        spark, tmp_path, ann_pq_sample_adc_topk_embeddings,
+        lambda emb: emb.filter(F.col("vec_id") < 10),
     )
-
-    with tempfile.TemporaryDirectory() as d:
-        (
-            spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-            .withColumn("vec_id", F.col("vec_id") * 2)
-            .write.parquet(os.path.join(d, "embeddings.parquet"))
-        )
-        with pytest.raises(AssertionError, match="dense 0-based"):
-            ann_pq_sample_adc_topk_embeddings(spark, d)
-
-
-def test_pq_sample_adc_rejects_short_corpus(spark):
-    """Fewer than n_codes=16 vectors would make train_codebooks TILE the
-    sample (which the SQL replay does not) — the precondition must trip
-    before the tiling path can diverge."""
-    from data_ingestion_pipeline_spark.operators.llm_data import (
-        ann_pq_sample_adc_topk_embeddings,
-    )
-
-    with tempfile.TemporaryDirectory() as d:
-        (
-            spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-            .filter(F.col("vec_id") < 10)
-            .write.parquet(os.path.join(d, "embeddings.parquet"))
-        )
-        with pytest.raises(AssertionError, match="dense 0-based"):
-            ann_pq_sample_adc_topk_embeddings(spark, d)
 
 
 def test_shapley_channel_bound_survives_python_O():
     """The 2^C coalition-lattice bound is a ValueError, not an assert —
     `python -O` strips asserts, and a stripped bound would let a wide
     channel taxonomy trigger an exponential lattice enumeration."""
-    import ast
-    import inspect
-
-    from data_ingestion_pipeline_spark.operators import analytics_checks
 
     src = inspect.getsource(analytics_checks.shapley_attribution_events)
     tree = ast.parse(src)
@@ -167,30 +309,7 @@ def test_shapley_channel_bound_survives_python_O():
     assert not asserts, "lattice bound still uses a strippable assert"
 
 
-# ---------------------------------------------------------------------------
-# round-11 k-sample tier: python mirrors
-# ---------------------------------------------------------------------------
-
-
-def _avg_ranks(vals):
-    """value -> average rank over the pooled list (ties averaged)."""
-    s = sorted(vals)
-    r = {}
-    i = 0
-    while i < len(s):
-        j = i
-        while j < len(s) and s[j] == s[i]:
-            j += 1
-        r[s[i]] = (i + 1 + j) / 2.0
-        i = j
-    return r
-
-
 def test_dunn_matches_python_mirror(spark, sf_dir):
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        dunn_posthoc_event_values,
-    )
-
     rows = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .select("event_type", "value")
@@ -202,7 +321,6 @@ def test_dunn_matches_python_mirror(spark, sf_dir):
     groups = {}
     for r in rows:
         groups.setdefault(r["event_type"], []).append(r["value"])
-    from collections import Counter
 
     ties = Counter(vals)
     tie_term = sum(t**3 - t for t in ties.values())
@@ -224,10 +342,6 @@ def test_dunn_matches_python_mirror(spark, sf_dir):
 
 
 def test_moods_median_matches_python_mirror(spark, sf_dir):
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        moods_median_test_event_values,
-    )
-
     rows = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .select("event_type", "value")
@@ -260,16 +374,11 @@ def test_moods_median_matches_python_mirror(spark, sf_dir):
 
 
 def test_friedman_matches_python_mirror(spark, sf_dir):
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        friedman_test_event_type_values,
-    )
-
     rows = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .select("user_id", "event_type", "value")
         .collect()
     )
-    from collections import defaultdict
 
     acc = defaultdict(list)
     for r in rows:
@@ -308,16 +417,11 @@ def test_friedman_matches_python_mirror(spark, sf_dir):
 
 
 def test_cochrans_q_matches_python_mirror(spark, sf_dir):
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        cochrans_q_event_types_users,
-    )
-
     rows = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .select("user_id", "event_type", "value")
         .collect()
     )
-    from collections import defaultdict
 
     acc = defaultdict(list)
     for r in rows:
@@ -349,26 +453,8 @@ def test_cochrans_q_matches_python_mirror(spark, sf_dir):
     assert abs(row["q_stat"] - q) < 1e-4
 
 
-# ---------------------------------------------------------------------------
-# round-11 batch 2: PACF / randomization / Hodges-Lehmann / transitivity
-# ---------------------------------------------------------------------------
-
-
 def test_pacf_matches_python_durbin_levinson(spark, sf_dir):
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        pacf_daily_values,
-    )
-    from collections import defaultdict
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("CAST(ts AS DATE) AS day", "value")
-        .collect()
-    )
-    acc = defaultdict(list)
-    for r in rows:
-        acc[r["day"]].append(r["value"])
-    series = [sum(v) / len(v) for _, v in sorted(acc.items())]
+    series = [sum(v) / len(v) for v in daily_values(spark, sf_dir).values()]
     n = len(series)
     mu = sum(series) / n
     c0 = sum((x - mu) ** 2 for x in series)
@@ -404,10 +490,6 @@ def test_pacf_matches_python_durbin_levinson(spark, sf_dir):
 
 
 def test_randomization_test_p_bounds_and_determinism(spark, sf_dir):
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        randomization_test_ab_value,
-    )
-
     a = randomization_test_ab_value(spark, sf_dir).collect()[0]
     b = randomization_test_ab_value(spark, sf_dir).collect()[0]
     assert a == b, "md5 draws must be deterministic across runs"
@@ -418,20 +500,7 @@ def test_randomization_test_p_bounds_and_determinism(spark, sf_dir):
 
 
 def test_hodges_lehmann_matches_python_mirror(spark, sf_dir):
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        hodges_lehmann_purchase_view_daily,
-    )
-    from collections import defaultdict
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter("event_type IN ('purchase', 'view')")
-        .selectExpr("CAST(ts AS DATE) AS day", "event_type", "value")
-        .collect()
-    )
-    acc = defaultdict(list)
-    for r in rows:
-        acc[(r["day"], r["event_type"])].append(r["value"])
+    acc = daily_values(spark, sf_dir, by_type=True)
     means = {k: round(sum(v) / len(v), 9) for k, v in acc.items()}
     px = [m for (d, t), m in means.items() if t == "purchase"]
     vx = [m for (d, t), m in means.items() if t == "view"]
@@ -450,24 +519,14 @@ def test_hodges_lehmann_matches_python_mirror(spark, sf_dir):
 
 
 def test_transitivity_matches_triangle_census_and_python_wedges(spark, sf_dir):
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        transitivity_copurchase_parts,
-        triangle_count_copurchase,
-    )
-
-    t = triangle_count_copurchase(spark, sf_dir).collect()[0]
-    c = transitivity_copurchase_parts(spark, sf_dir).collect()[0]
-    assert c["n_triangles"] == t["n_triangles"]
-    assert c["n_nodes"] == t["n_nodes"]
+    tri = analytics_checks.triangle_count_copurchase(spark, sf_dir).collect()[0]
+    c = analytics_checks.transitivity_copurchase_parts(spark, sf_dir).collect()[0]
+    assert c["n_triangles"] == tri["n_triangles"]
+    assert c["n_nodes"] == tri["n_nodes"]
     # wedges recomputed from the collected edge list
-    from collections import Counter
-    from pyspark.sql import functions as SF
-
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_partkey"
     ).distinct().collect()
-    from collections import defaultdict
-
     by_order = defaultdict(list)
     for r in li:
         by_order[r["l_orderkey"]].append(r["l_partkey"])
@@ -491,18 +550,7 @@ def test_transitivity_matches_triangle_census_and_python_wedges(spark, sf_dir):
         assert 0.0 <= c["transitivity"] <= 1.0
 
 
-# ---------------------------------------------------------------------------
-# round-11 batch 3: embedding-label readouts + rater agreement
-# ---------------------------------------------------------------------------
-
-
 def test_nn1_accuracy_matches_numpy_brute_force(spark):
-    import numpy as np
-
-    from data_ingestion_pipeline_spark.operators.mlprep_checks import (
-        nn1_label_accuracy_embeddings,
-    )
-
     rows = (
         spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
         .orderBy("vec_id")
@@ -536,10 +584,6 @@ def test_nn1_accuracy_matches_numpy_brute_force(spark):
 
 
 def test_nmi_bounds_and_marginal_consistency(spark, sf_dir):
-    from data_ingestion_pipeline_spark.operators.mlprep_checks import (
-        nmi_ivf_cells_labels_embeddings,
-    )
-
     row = nmi_ivf_cells_labels_embeddings(spark, sf_dir).collect()[0]
     assert row["n_cells"] <= 16 and row["n_labels"] >= 2
     assert row["mi"] >= -1e-6
@@ -550,10 +594,6 @@ def test_nmi_bounds_and_marginal_consistency(spark, sf_dir):
 
 
 def test_cohens_kappa_matches_python_mirror(spark, sf_dir):
-    from data_ingestion_pipeline_spark.operators.corpus_quality import (
-        cohens_kappa_quality_flags_documents,
-    )
-
     rows = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id", "n_chars", "text")
@@ -595,42 +635,10 @@ def test_cohens_kappa_matches_python_mirror(spark, sf_dir):
     assert row["kappa"] > 0
 
 
-# ---------------------------------------------------------------------------
-# round-11 batch 4: streaming full-outer + time-series regression diagnostics
-# ---------------------------------------------------------------------------
-
-
-def _daily_means(spark, sf_dir, types=None):
-    from collections import defaultdict
-
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    rows = df.selectExpr(
-        "CAST(ts AS DATE) AS day", "event_type", "value"
-    ).collect()
-    acc = defaultdict(list)
-    for r in rows:
-        if types is None or r["event_type"] in types:
-            key = r["day"] if types else (r["day"], r["event_type"])
-            acc[key].append(r["value"])
-    return acc
-
-
 def test_ccf_matches_python_mirror(spark, sf_dir):
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        ccf_purchase_view_daily,
-    )
-    from collections import defaultdict
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter("event_type IN ('purchase', 'view')")
-        .selectExpr("CAST(ts AS DATE) AS day", "event_type", "value")
-        .collect()
-    )
-    acc = defaultdict(list)
-    for r in rows:
-        acc[(r["day"], r["event_type"])].append(r["value"])
-    means = {k: sum(v) / len(v) for k, v in acc.items()}
+    means = {
+        k: sum(v) / len(v) for k, v in daily_values(spark, sf_dir, by_type=True).items()
+    }
     days = sorted({d for d, t in means} & {
         d for (d, t) in means if t == "purchase"
     } & {d for (d, t) in means if t == "view"})
@@ -659,23 +667,10 @@ def test_ccf_matches_python_mirror(spark, sf_dir):
 def test_granger_equals_restricted_vs_full_regression(spark, sf_dir):
     """The partial-correlation form must equal the textbook
     restricted-vs-full OLS F-test (numpy lstsq) on the same series."""
-    import numpy as np
 
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        granger_lag1_view_to_purchase_daily,
-    )
-    from collections import defaultdict
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter("event_type IN ('purchase', 'view')")
-        .selectExpr("CAST(ts AS DATE) AS day", "event_type", "value")
-        .collect()
-    )
-    acc = defaultdict(list)
-    for r in rows:
-        acc[(r["day"], r["event_type"])].append(r["value"])
-    means = {k: sum(v) / len(v) for k, v in acc.items()}
+    means = {
+        k: sum(v) / len(v) for k, v in daily_values(spark, sf_dir, by_type=True).items()
+    }
     days = [
         d for d in sorted({d for d, _ in means})
         if (d, "purchase") in means and (d, "view") in means
@@ -696,22 +691,7 @@ def test_granger_equals_restricted_vs_full_regression(spark, sf_dir):
 
 
 def test_chow_matches_numpy_segments(spark, sf_dir):
-    import numpy as np
-
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        chow_test_daily_midpoint,
-    )
-    from collections import defaultdict
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("CAST(ts AS DATE) AS day", "value")
-        .collect()
-    )
-    acc = defaultdict(list)
-    for r in rows:
-        acc[r["day"]].append(r["value"])
-    m = np.array([sum(v) / len(v) for _, v in sorted(acc.items())])
+    m = np.array([sum(v) / len(v) for v in daily_values(spark, sf_dir).values()])
     n = len(m)
     xi = np.arange(1, n + 1, dtype=float)
     cut = (n + 1) // 2
@@ -731,12 +711,6 @@ def test_chow_matches_numpy_segments(spark, sf_dir):
 
 
 def test_breusch_pagan_matches_numpy(spark, sf_dir):
-    import numpy as np
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        breusch_pagan_price_quantity,
-    )
-
     rows = (
         spark.read.parquet(f"{sf_dir}/lineitem.parquet")
         .selectExpr(
@@ -762,10 +736,6 @@ def test_breusch_pagan_matches_numpy(spark, sf_dir):
 
 
 def test_streaming_full_outer_has_both_null_directions(spark):
-    from data_ingestion_pipeline_spark.operators.streaming_checks import (
-        streaming_interval_full_outer_events,
-    )
-
     rows = streaming_interval_full_outer_events(spark, SF_SMOKE).collect()
     n_null_view = sum(1 for r in rows if r["view_id"] is None)
     n_null_purchase = sum(1 for r in rows if r["purchase_id"] is None)
@@ -781,11 +751,6 @@ def test_streaming_full_outer_has_both_null_directions(spark):
 
 
 def test_jonckheere_matches_python_mirror_and_is_deterministic(spark, sf_dir):
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        jonckheere_terpstra_priority_price,
-    )
-    from collections import Counter, defaultdict
-
     rows = (
         spark.read.parquet(f"{sf_dir}/orders.parquet")
         .selectExpr("o_orderpriority AS g", "CAST(o_totalprice AS DOUBLE) AS v")
@@ -796,7 +761,6 @@ def test_jonckheere_matches_python_mirror_and_is_deterministic(spark, sf_dir):
     for r in rows:
         groups[r["g"]].append(r["v"])
     # J via per-pair dominance over sorted lists (O(n log n) per pair)
-    import bisect
 
     j_stat = 0.0
     for a in range(len(order)):
@@ -840,11 +804,6 @@ def test_jonckheere_matches_python_mirror_and_is_deterministic(spark, sf_dir):
 
 
 def test_welch_anova_matches_python_mirror(spark, sf_dir):
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        welch_anova_event_values,
-    )
-    from collections import defaultdict
-
     rows = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .select("event_type", "value")
@@ -879,13 +838,6 @@ def test_welch_anova_matches_python_mirror(spark, sf_dir):
 
 
 def test_bartlett_matches_python_mirror(spark, sf_dir):
-    import math
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        bartlett_test_event_values,
-    )
-    from collections import defaultdict
-
     rows = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .select("event_type", "value")
@@ -919,9 +871,6 @@ def test_brunner_munzel_matches_scipy_formulation(spark, sf_dir):
     """Mirror of the scipy.stats.brunnermunzel construction (combined
     ranks, within-group ranks, separate rank variances, Welch-like df)
     recomputed in python on the collected values."""
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        brunner_munzel_purchase_view,
-    )
 
     rows = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -955,11 +904,6 @@ def test_brunner_munzel_matches_scipy_formulation(spark, sf_dir):
 
 
 def test_cramer_von_mises_matches_python_mirror(spark, sf_dir):
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        cramer_von_mises_purchase_view,
-    )
-    from collections import Counter
-
     rows = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .filter("event_type IN ('purchase', 'view')")
@@ -989,23 +933,8 @@ def test_gmm2_em_matches_python_mirror(spark, sf_dir):
     """Full python re-run of the 3-iteration EM (same init, same rounding
     ladder) plus structural checks: responsibilities-implied weight in
     (0,1), separation consistent with the published moments."""
-    import math
 
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        _rhu,
-        gmm2_em_daily_values,
-    )
-    from collections import defaultdict
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("CAST(ts AS DATE) AS day", "value")
-        .collect()
-    )
-    acc = defaultdict(list)
-    for r in rows:
-        acc[r["day"]].append(r["value"])
-    m = [sum(v) / len(v) for _, v in sorted(acc.items())]
+    m = [sum(v) / len(v) for v in daily_values(spark, sf_dir).values()]
     n = len(m)
 
     def pct(vs, q):
@@ -1068,22 +997,8 @@ def test_gmm2_em_matches_python_mirror(spark, sf_dir):
 
 
 def test_pettitt_matches_python_mirror(spark, sf_dir):
-    import math
-
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        pettitt_changepoint_daily,
-    )
-    from collections import defaultdict
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("CAST(ts AS DATE) AS day", "value")
-        .collect()
-    )
-    acc = defaultdict(list)
-    for r in rows:
-        acc[r["day"]].append(r["value"])
-    days = sorted(acc)
+    acc = daily_values(spark, sf_dir)
+    days = list(acc)
     m = [round(sum(acc[d]) / len(acc[d]), 9) for d in days]
     n = len(m)
     # brute-force U_t
@@ -1109,33 +1024,9 @@ def test_rmst_matches_python_km_integral(spark, sf_dir):
     """RMST recomputed from a python KM fit on the same durations, and
     structural bounds: 0 < RMST <= tau, and RMST equals tau only if no
     churn happens before tau."""
-    import datetime
-    import math
 
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        rmst_user_retention,
-    )
-    from collections import defaultdict
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("user_id", "ts")
-        .collect()
-    )
-    first, last, end = {}, {}, None
-    for r in rows:
-        u, t = r["user_id"], r["ts"]
-        first[u] = min(first.get(u, t), t)
-        last[u] = max(last.get(u, t), t)
-        end = t if end is None else max(end, t)
-    def hour_floor(t):
-        return t.replace(minute=0, second=0, microsecond=0)
     per = defaultdict(lambda: [0, 0])
-    for u in first:
-        hrs = int(
-            (hour_floor(last[u]) - hour_floor(first[u])).total_seconds() // 3600
-        )
-        churn = last[u] < end - datetime.timedelta(days=1)
+    for hrs, churn, _ in _retention_durations(spark, sf_dir):
         per[hrs][0 if churn else 1] += 1
     tot = sum(d + c for d, c in per.values())
     seen = 0
@@ -1165,24 +1056,9 @@ def test_rmst_matches_python_km_integral(spark, sf_dir):
     assert abs(row["rmst_days"] - round(row["rmst_hours"] / 24.0, 6)) < 1e-9
 
 
-def _pv_values(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type").isin("purchase", "view"))
-        .select("event_type", "value")
-        .collect()
-    )
-    xs = sorted(r["value"] for r in rows if r["event_type"] == "purchase")
-    ys = sorted(r["value"] for r in rows if r["event_type"] == "view")
-    return xs, ys
-
-
 def test_anderson_darling_matches_python_mirror(spark, sf_dir):
     """Pettitt-1976 two-sample A² recomputed brute-force over the pooled
     distinct values."""
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        anderson_darling_purchase_view,
-    )
 
     xs, ys = _pv_values(spark, sf_dir)
     n1, n2 = len(xs), len(ys)
@@ -1208,9 +1084,6 @@ def test_anderson_darling_matches_python_mirror(spark, sf_dir):
 def test_wasserstein_matches_python_mirror(spark, sf_dir):
     """W1 via the quantile formulation (numpy-style) must equal the
     stitched ECDF-segment fold."""
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        wasserstein_purchase_view,
-    )
 
     xs, ys = _pv_values(spark, sf_dir)
     n1, n2 = len(xs), len(ys)
@@ -1230,16 +1103,12 @@ def test_energy_distance_matches_bruteforce_pairs(spark, sf_dir):
     """O(n²) pairwise |Δ| expectations (the definition) must equal the
     prefix-sum collapse, and the statistic must obey 0 ≤ E and
     E² = 2E|XY| − E|XX| − E|YY|."""
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        energy_distance_purchase_view,
-    )
 
     xs, ys = _pv_values(spark, sf_dir)
     n1, n2 = len(xs), len(ys)
     exy = sum(abs(x - y) for x in xs for y in ys) / (n1 * n2)
     exx = sum(abs(a - b) for a in xs for b in xs) / (n1 * n1)
     eyy = sum(abs(a - b) for a in ys for b in ys) / (n2 * n2)
-    import math
 
     e = math.sqrt(max(2 * exy - exx - eyy, 0.0))
     row = energy_distance_purchase_view(spark, sf_dir).collect()[0]
@@ -1253,11 +1122,6 @@ def test_energy_distance_matches_bruteforce_pairs(spark, sf_dir):
 def test_goodman_kruskal_matches_bruteforce_pairs(spark, sf_dir):
     """All four ordinal measures recomputed from O(n²) explicit pair
     classification on the raw orders."""
-    import math
-
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        goodman_kruskal_priority_price_orders,
-    )
 
     rows = (
         spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -1302,13 +1166,6 @@ def test_goodman_kruskal_matches_bruteforce_pairs(spark, sf_dir):
 def test_wilcoxon_signed_rank_matches_python_mirror(spark, sf_dir):
     """W⁺ and z recomputed with explicit average ranks over the paired
     daily cent differences."""
-    import math
-    from collections import defaultdict
-    from decimal import Decimal
-
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        wilcoxon_signed_rank_purchase_view_daily,
-    )
 
     rows = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -1348,12 +1205,6 @@ def test_wilcoxon_signed_rank_matches_python_mirror(spark, sf_dir):
 def test_cochran_armitage_matches_python_mirror(spark, sf_dir):
     """z recomputed from the 5-row (score, n, r) table, plus invariance:
     the statistic must be exactly 0 when the response is constant."""
-    import math
-    from collections import defaultdict
-
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        cochran_armitage_trend_priority_orders,
-    )
 
     rows = (
         spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -1385,26 +1236,9 @@ def test_cochran_armitage_matches_python_mirror(spark, sf_dir):
 def test_adf_matches_numpy_lstsq(spark, sf_dir):
     """ADF regression re-solved with numpy's lstsq on the same design
     matrix; τ re-derived from the (X'X)⁻¹ diagonal."""
-    import math
 
-    import numpy as np
-
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        adf_test_daily_values,
-    )
-    from collections import defaultdict
-    from decimal import Decimal
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("CAST(ts AS DATE) AS day", "value")
-        .collect()
-    )
-    acc = defaultdict(Decimal)
-    for r in rows:
-        acc[r["day"]] += Decimal(str(r["value"]))
-    days = sorted(acc)
-    x = [float(acc[d]) for d in days]
+    acc = daily_sums(spark, sf_dir)
+    days, x = list(acc), list(acc.values())
     y = np.array([x[i] - x[i - 1] for i in range(2, len(x))])
     u = np.array([x[i - 1] for i in range(2, len(x))])
     v = np.array([x[i - 1] - x[i - 2] for i in range(2, len(x))])
@@ -1426,24 +1260,9 @@ def test_adf_matches_numpy_lstsq(spark, sf_dir):
 def test_breusch_godfrey_matches_numpy(spark, sf_dir):
     """BG LM recomputed with numpy: trend OLS (β rounded at 9 per the
     contract), zero-filled lagged residual, auxiliary R²."""
-    import numpy as np
 
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        breusch_godfrey_daily_trend,
-    )
-    from collections import defaultdict
-    from decimal import Decimal
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("CAST(ts AS DATE) AS day", "value")
-        .collect()
-    )
-    acc = defaultdict(Decimal)
-    for r in rows:
-        acc[r["day"]] += Decimal(str(r["value"]))
-    days = sorted(acc)
-    xv = np.array([float(acc[d]) for d in days])
+    acc = daily_sums(spark, sf_dir)
+    days, xv = list(acc), np.array(list(acc.values()))
     t = np.array([(d - days[0]).days for d in days], dtype=float)
     n = len(xv)
     b1 = (n * (t * xv).sum() - t.sum() * xv.sum()) / (
@@ -1468,11 +1287,6 @@ def test_breusch_godfrey_matches_numpy(spark, sf_dir):
 def test_white_test_matches_numpy(spark, sf_dir):
     """White LM recomputed with numpy on [1, x, x²] against the squared
     stage-1 residuals (stage-1 β rounded at 9 per the contract)."""
-    import numpy as np
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        white_test_price_quantity,
-    )
 
     rows = (
         spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -1508,12 +1322,6 @@ def test_white_test_matches_numpy(spark, sf_dir):
 
 def test_kmv_matches_python_md5_replay(spark, sf_dir):
     """Bottom-k sketch and estimate recomputed from hashlib md5."""
-    import hashlib
-
-    from data_ingestion_pipeline_spark.operators.relational import (
-        _KMV_K,
-        kmv_distinct_users_events,
-    )
 
     users = {
         r["user_id"]
@@ -1539,13 +1347,6 @@ def test_kmv_matches_python_md5_replay(spark, sf_dir):
 def test_ams_f2_matches_python_md5_replay(spark, sf_dir):
     """Counters, group means, and the median-of-means recomputed from
     hashlib md5 sign replay."""
-    import hashlib
-    from collections import Counter
-
-    from data_ingestion_pipeline_spark.operators.relational import (
-        _AMS_J,
-        ams_f2_user_activity_events,
-    )
 
     rows = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -1572,12 +1373,6 @@ def test_ams_f2_matches_python_md5_replay(spark, sf_dir):
 def test_binned_range_join_matches_naive_interval(spark, sf_dir):
     """The bin-bucketed rewrite must agree row-for-row with a naive
     python interval scan, including empty bands."""
-    from collections import defaultdict
-    from decimal import Decimal
-
-    from data_ingestion_pipeline_spark.operators.relational import (
-        binned_range_join_orders_bands,
-    )
 
     prices = [
         r["o_totalprice"]
@@ -1603,14 +1398,6 @@ def test_binned_range_join_matches_naive_interval(spark, sf_dir):
 def test_brier_decomposition_matches_python_mirror(spark, sf_dir):
     """Direct Brier and the Murphy components recomputed in python from
     the same trained weights; identity BS = REL − RES + UNC + gap."""
-    from collections import defaultdict
-
-    from data_ingestion_pipeline_spark.operators.classifier import (
-        N_CALIB_BINS,
-        _train,
-        brier_decomposition_documents,
-    )
-    import math
 
     hist = _train(spark, sf_dir)
     _, w0, w1, w2 = hist[-1]
@@ -1654,15 +1441,6 @@ def test_brier_decomposition_matches_python_mirror(spark, sf_dir):
 
 
 def test_hosmer_lemeshow_matches_python_mirror(spark, sf_dir):
-    from collections import defaultdict
-
-    from data_ingestion_pipeline_spark.operators.classifier import (
-        N_CALIB_BINS,
-        _train,
-        hosmer_lemeshow_documents,
-    )
-    import math
-
     hist = _train(spark, sf_dir)
     _, w0, w1, w2 = hist[-1]
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
@@ -1690,49 +1468,9 @@ def test_hosmer_lemeshow_matches_python_mirror(spark, sf_dir):
     assert row["miscalibrated"] == (round(hl, 6) > 15.507313)
 
 
-def _retention_durations(spark, sf_dir):
-    import datetime
-    import hashlib
-    from collections import defaultdict
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select("user_id", "ts")
-        .collect()
-    )
-    first, last, end = {}, {}, None
-    for r in rows:
-        u, t = r["user_id"], r["ts"]
-        first[u] = min(first.get(u, t), t)
-        last[u] = max(last.get(u, t), t)
-        end = t if end is None else max(end, t)
-
-    def hour_floor(t):
-        return t.replace(minute=0, second=0, microsecond=0)
-
-    out = []
-    for u in first:
-        hrs = int(
-            (hour_floor(last[u]) - hour_floor(first[u])).total_seconds()
-            // 3600
-        )
-        churn = last[u] < end - datetime.timedelta(days=1)
-        arm_a = (
-            int(hashlib.md5(str(u).encode()).hexdigest()[:6], 16) % 2 == 0
-        )
-        out.append((hrs, churn, arm_a))
-    return out
-
-
 def test_fleming_harrington_matches_python_mirror(spark, sf_dir):
     """G^1 weighted logrank recomputed brute-force: pooled KM left
     limit, weighted O−E sums, weighted hypergeometric variance."""
-    import math
-    from collections import defaultdict
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        fleming_harrington_test_retention_arms,
-    )
 
     per = defaultdict(lambda: [0, 0, 0, 0])  # d_a, d_b, exit_a, exit_b
     for hrs, churn, arm_a in _retention_durations(spark, sf_dir):
@@ -1781,13 +1519,6 @@ def test_fleming_harrington_matches_python_mirror(spark, sf_dir):
 
 
 def test_life_table_matches_python_mirror(spark, sf_dir):
-    from collections import defaultdict
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        _LIFE_TABLE_W,
-        life_table_retention,
-    )
-
     per = defaultdict(lambda: [0, 0])
     for hrs, churn, _ in _retention_durations(spark, sf_dir):
         per[hrs // _LIFE_TABLE_W][0 if churn else 1] += 1
@@ -1814,31 +1545,8 @@ def test_life_table_matches_python_mirror(spark, sf_dir):
         assert abs(r["cum_survival"] - s) < 1e-4
 
 
-def _daily_series(spark, sf_dir):
-    from collections import defaultdict
-    from decimal import Decimal
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("CAST(ts AS DATE) AS day", "value")
-        .collect()
-    )
-    acc = defaultdict(Decimal)
-    for r in rows:
-        acc[r["day"]] += Decimal(str(r["value"]))
-    days = sorted(acc)
-    return [float(acc[d]) for d in days]
-
-
 def test_permutation_entropy_matches_python_mirror(spark, sf_dir):
-    import math
-    from collections import Counter
-
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        permutation_entropy_daily_values,
-    )
-
-    x = _daily_series(spark, sf_dir)
+    x = list(daily_sums(spark, sf_dir).values())
     pats = Counter()
     for a, b, c in zip(x, x[1:], x[2:]):
         r0 = (b < a) + (c < a)
@@ -1856,13 +1564,7 @@ def test_permutation_entropy_matches_python_mirror(spark, sf_dir):
 
 
 def test_bartels_rank_matches_python_mirror(spark, sf_dir):
-    import math
-
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        bartels_rank_test_daily_values,
-    )
-
-    x = _daily_series(spark, sf_dir)
+    x = list(daily_sums(spark, sf_dir).values())
     n = len(x)
     sx = sorted(x)
     # doubled average ranks with ties
@@ -1883,13 +1585,7 @@ def test_bartels_rank_matches_python_mirror(spark, sf_dir):
 
 
 def test_cox_stuart_matches_python_mirror(spark, sf_dir):
-    import math
-
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        cox_stuart_trend_daily,
-    )
-
-    x = _daily_series(spark, sf_dir)
+    x = list(daily_sums(spark, sf_dir).values())
     n = len(x)
     c = math.ceil(n / 2)
     pairs = [(x[i], x[i + c]) for i in range(n - c)]
@@ -1904,13 +1600,6 @@ def test_cox_stuart_matches_python_mirror(spark, sf_dir):
 
 
 def test_theils_u_matches_python_mirror(spark, sf_dir):
-    import math
-    from collections import Counter
-
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        theils_u_event_type_dow,
-    )
-
     rows = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .selectExpr("event_type", "CAST(weekday(ts) + 1 AS INT) AS isodow")
@@ -1941,12 +1630,6 @@ def test_theils_u_matches_python_mirror(spark, sf_dir):
 
 def test_local_clustering_matches_python_mirror(spark, sf_dir):
     """c_v recomputed from an explicit adjacency-set graph build."""
-    from collections import defaultdict
-    from itertools import combinations
-
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        local_clustering_topk_parts,
-    )
 
     rows = (
         spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -1988,14 +1671,7 @@ def test_local_clustering_matches_python_mirror(spark, sf_dir):
 
 
 def test_hurst_rs_matches_python_mirror(spark, sf_dir):
-    import math
-
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        _HURST_SIZES,
-        hurst_rs_daily_values,
-    )
-
-    x = _daily_series(spark, sf_dir)
+    x = list(daily_sums(spark, sf_dir).values())
     n = len(x)
     pts = []
     for s in _HURST_SIZES:
@@ -2035,23 +1711,8 @@ def test_hurst_rs_matches_python_mirror(spark, sf_dir):
 def test_esd_outliers_matches_python_mirror(spark, sf_dir):
     """Three remove-and-retest passes replayed in python, including the
     shrinking-σ masking behavior."""
-    import math
-    from collections import defaultdict
-    from decimal import Decimal
 
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        esd_outliers_daily,
-    )
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("CAST(ts AS DATE) AS day", "value")
-        .collect()
-    )
-    acc = defaultdict(Decimal)
-    for r in rows:
-        acc[r["day"]] += Decimal(str(r["value"]))
-    cur = {d: float(v) for d, v in acc.items()}
+    cur = daily_sums(spark, sf_dir)
     expect = []
     for it in range(1, 4):
         n = len(cur)
@@ -2074,28 +1735,9 @@ def test_esd_outliers_matches_python_mirror(spark, sf_dir):
 
 
 def test_transfer_entropy_matches_python_mirror(spark, sf_dir):
-    import math
-    from collections import Counter, defaultdict
-    from decimal import Decimal
-
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        transfer_entropy_view_purchase_daily,
-    )
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type").isin("purchase", "view"))
-        .selectExpr("CAST(ts AS DATE) AS day", "event_type", "value")
-        .collect()
-    )
-    acc = defaultdict(lambda: [Decimal(0), Decimal(0)])
-    for r in rows:
-        acc[r["day"]][0 if r["event_type"] == "purchase" else 1] += Decimal(
-            str(r["value"])
-        )
-    days = sorted(acc)
-    p = [float(acc[d][0]) for d in days]
-    v = [float(acc[d][1]) for d in days]
+    pv = daily_pv_sums(spark, sf_dir)
+    p = [ps for ps, _ in pv.values()]
+    v = [vs for _, vs in pv.values()]
     mp = round(sum(p) / len(p), 9)
     mv = round(sum(v) / len(v), 9)
     y = [1 if a > mp else 0 for a in p]
@@ -2139,14 +1781,6 @@ def test_transfer_entropy_matches_python_mirror(spark, sf_dir):
 
 
 def test_croston_matches_python_mirror(spark, sf_dir):
-    from collections import defaultdict
-    from decimal import Decimal
-
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        _CROSTON_ALPHA,
-        croston_intermittent_demand_part,
-    )
-
     rows = spark.read.parquet(f"{sf_dir}/lineitem.parquet").collect()
     d0 = min(r["l_shipdate"].date() for r in rows)
     acc = defaultdict(Decimal)
@@ -2171,11 +1805,7 @@ def test_croston_matches_python_mirror(spark, sf_dir):
 
 
 def test_theta_method_matches_python_mirror(spark, sf_dir):
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        theta_method_forecast_daily,
-    )
-
-    x = _daily_series(spark, sf_dir)
+    x = list(daily_sums(spark, sf_dir).values())
     # NB: t here is the positional index; events cover every calendar
     # day in the fixtures so it equals the datediff index
     n = len(x)
@@ -2200,14 +1830,6 @@ def test_theta_method_matches_python_mirror(spark, sf_dir):
 
 
 def test_spectral_entropy_matches_python_mirror(spark, sf_dir):
-    import math
-    from collections import Counter
-
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        _SPEC_K,
-        spectral_entropy_daily_events,
-    )
-
     rows = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .selectExpr("CAST(ts AS DATE) AS day")
@@ -2241,24 +1863,9 @@ def test_spectral_entropy_matches_python_mirror(spark, sf_dir):
 
 
 def test_seasonal_mann_kendall_matches_python_mirror(spark, sf_dir):
-    from collections import defaultdict
-    from decimal import Decimal
-
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        seasonal_mann_kendall_daily,
-    )
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("CAST(ts AS DATE) AS day", "value")
-        .collect()
-    )
-    acc = defaultdict(Decimal)
-    for r in rows:
-        acc[r["day"]] += Decimal(str(r["value"]))
     per_g = defaultdict(list)
-    for d in sorted(acc):
-        per_g[d.isoweekday()].append(float(acc[d]))
+    for d, v in daily_sums(spark, sf_dir).items():
+        per_g[d.isoweekday()].append(v)
     s_tot = pairs = n = 0
     var_tot = 0.0
     for g, xs in per_g.items():
@@ -2275,7 +1882,6 @@ def test_seasonal_mann_kendall_matches_python_mirror(spark, sf_dir):
             ties[v] += 1
         tt = sum(t * (t - 1) * (2 * t + 5) for t in ties.values())
         var_tot += round((ng * (ng - 1) * (2 * ng + 5) - tt) / 18.0, 9)
-    import math
 
     if s_tot > 0:
         z = (s_tot - 1) / math.sqrt(var_tot)
@@ -2293,13 +1899,6 @@ def test_seasonal_mann_kendall_matches_python_mirror(spark, sf_dir):
 
 
 def test_kendalls_w_matches_python_mirror(spark, sf_dir):
-    from collections import defaultdict
-    from decimal import Decimal
-
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        kendalls_w_weekday_event_types,
-    )
-
     rows = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .selectExpr(
@@ -2343,13 +1942,8 @@ def test_kendalls_w_matches_python_mirror(spark, sf_dir):
 def test_dagostino_k2_matches_scipy_formula(spark, sf_dir):
     """Z1/Z2/K² recomputed with the published transform chain (scipy's
     normaltest algebra) from the same rounded moments."""
-    import math
 
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        dagostino_k2_daily_values,
-    )
-
-    x = _daily_series(spark, sf_dir)
+    x = list(daily_sums(spark, sf_dir).values())
     n = len(x)
     mu = round(sum(x) / n, 9)
     m2 = round(sum(v * v for v in x) / n - mu * mu, 9)
@@ -2407,12 +2001,6 @@ def test_dagostino_k2_matches_scipy_formula(spark, sf_dir):
 def test_zone_map_skip_matches_python_mirror(spark, sf_dir):
     """Both layouts' zone maps and the 12-window probe replayed in
     python; date_range must dominate hash_scatter."""
-    from collections import defaultdict
-
-    from data_ingestion_pipeline_spark.operators.relational import (
-        _ZONE_BUCKETS,
-        zone_map_skip_report_orders,
-    )
 
     rows = (
         spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -2461,12 +2049,6 @@ def test_ansari_bradley_matches_python_mirror(spark, sf_dir):
     """AB scores recomputed naively (per-position min(rank, N+1-rank)
     with tie averaging) and the conditional moments from the observed
     score vector."""
-    import math
-    from collections import defaultdict
-
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        ansari_bradley_purchase_view,
-    )
 
     xs, ys = _pv_values(spark, sf_dir)
     pooled = sorted([(v, 1) for v in xs] + [(v, 2) for v in ys])
@@ -2498,16 +2080,11 @@ def test_ansari_bradley_matches_python_mirror(spark, sf_dir):
 def test_competing_risks_cif_matches_python_mirror(spark, sf_dir):
     """Aalen–Johansen CIFs recomputed in python, plus the identity
     CIF1 + CIF2 = 1 − KM at every published time."""
-    import datetime
-    from collections import defaultdict
 
     rows = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .select("user_id", "ts", "event_type")
         .collect()
-    )
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        competing_risks_cif_retention,
     )
 
     per = {}
@@ -2580,15 +2157,6 @@ def test_competing_risks_cif_matches_python_mirror(spark, sf_dir):
 def test_bloom_index_probe_matches_python_mirror(spark, sf_dir):
     """Bitset replayed with hashlib; bloom_pass must superset
     true_buckets (no false negatives) for every probe."""
-    import hashlib
-    from collections import defaultdict
-
-    from data_ingestion_pipeline_spark.operators.relational import (
-        _BLOOM_IDX_BITS,
-        _BLOOM_IDX_K,
-        _ZONE_BUCKETS,
-        bloom_index_probe_orders,
-    )
 
     rows = (
         spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -2628,11 +2196,6 @@ def test_bloom_index_probe_matches_python_mirror(spark, sf_dir):
 def test_near_dup_threshold_sweep_matches_python_mirror(spark, sf_dir):
     """Pairs and keep-first drops recomputed with brute-force python
     shingle sets; the curve must be monotone nonincreasing in τ."""
-    from collections import defaultdict
-
-    from data_ingestion_pipeline_spark.operators.llm_data import (
-        near_dup_threshold_sweep_documents,
-    )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").collect()
     corpus = {}
@@ -2687,14 +2250,6 @@ def test_ann_ivf_nprobe_sweep_structure_and_full_probe_exactness(
 ):
     """All gates must hold, and independently: probing all 16 cells must
     reproduce the exhaustive top-10 row set exactly."""
-    from data_ingestion_pipeline_spark.operators.llm_data import (
-        _ann_query_batch,
-        ann_ivf_nprobe_sweep_embeddings,
-    )
-    from data_ingestion_pipeline_spark.similarity.brute_force import (
-        topk_cosine_batch,
-    )
-    from data_ingestion_pipeline_spark.similarity.ivf import ivf_topk
 
     got = ann_ivf_nprobe_sweep_embeddings(spark, sf_dir).collect()
     assert [r["nprobe"] for r in got] == [1, 2, 4, 8, 16]
@@ -2720,22 +2275,12 @@ def test_ann_ivf_nprobe_sweep_structure_and_full_probe_exactness(
 
 
 def test_ann_ivf_sweep_prefix_filter_matches_per_depth_ivf_topk(spark, sf_dir):
-    """The r11 sweep optimization scores ONCE at full probe with a per-query
+    """The sweep scores ONCE at full probe with a per-query
     probe-rank column and derives each depth as the prefix filter
     rank < nprobe. Pin its load-bearing contracts: (a) select_probe_cells
     at depth d is exactly the first d entries of the full-probe order, and
     (b) the prefix-filtered top-k is row-identical to an independent
     ivf_topk(nprobe=d) call for every swept depth."""
-    import numpy as np
-
-    from data_ingestion_pipeline_spark.functions.vector import cosine
-    from data_ingestion_pipeline_spark.operators.llm_data import _ann_query_batch
-    from data_ingestion_pipeline_spark.similarity.brute_force import topk_per_query
-    from data_ingestion_pipeline_spark.similarity.ivf import (
-        ivf_build_index,
-        ivf_topk,
-        select_probe_cells,
-    )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = _ann_query_batch(emb)
@@ -2784,28 +2329,9 @@ def test_ann_ivf_sweep_prefix_filter_matches_per_depth_ivf_topk(spark, sf_dir):
 
 
 def test_hotelling_t2_matches_numpy(spark, sf_dir):
-    import numpy as np
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        hotelling_t2_weekpart_daily,
-    )
-    from collections import defaultdict
-    from decimal import Decimal
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type").isin("purchase", "view"))
-        .selectExpr("CAST(ts AS DATE) AS day", "event_type", "value")
-        .collect()
-    )
-    acc = defaultdict(lambda: [Decimal(0), Decimal(0)])
-    for r in rows:
-        acc[r["day"]][0 if r["event_type"] == "purchase" else 1] += Decimal(
-            str(r["value"])
-        )
     wk = {0: [], 1: []}
-    for d, (p, v) in acc.items():
-        wk[1 if d.isoweekday() >= 6 else 0].append((float(p), float(v)))
+    for d, pv in daily_pv_sums(spark, sf_dir).items():
+        wk[1 if d.isoweekday() >= 6 else 0].append(pv)
     a = np.array(wk[0])
     b = np.array(wk[1])
     n1, n2 = len(a), len(b)
@@ -2824,12 +2350,6 @@ def test_hotelling_t2_matches_numpy(spark, sf_dir):
 
 
 def test_mahalanobis_outliers_matches_numpy(spark, sf_dir):
-    import numpy as np
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        mahalanobis_outliers_lineitem,
-    )
-
     rows = (
         spark.read.parquet(f"{sf_dir}/lineitem.parquet")
         .selectExpr(
@@ -2858,13 +2378,6 @@ def test_mahalanobis_outliers_matches_numpy(spark, sf_dir):
 
 
 def test_cronbach_alpha_matches_python_mirror(spark, sf_dir):
-    from collections import defaultdict
-    from decimal import Decimal
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        cronbach_alpha_event_types_users,
-    )
-
     rows = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .select("user_id", "event_type", "value")
@@ -2908,12 +2421,6 @@ def test_cronbach_alpha_matches_python_mirror(spark, sf_dir):
 
 
 def test_odds_ratio_ci_matches_python_mirror(spark, sf_dir):
-    import math
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        odds_ratio_ci_priority_status_orders,
-    )
-
     rows = (
         spark.read.parquet(f"{sf_dir}/orders.parquet")
         .selectExpr(
@@ -2939,14 +2446,6 @@ def test_odds_ratio_ci_matches_python_mirror(spark, sf_dir):
 
 
 def test_canonical_correlation_matches_numpy(spark, sf_dir):
-    import numpy as np
-
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        canonical_correlation_daily,
-    )
-    from collections import defaultdict
-    from decimal import Decimal
-
     rows = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .selectExpr("CAST(ts AS DATE) AS day", "event_type", "value")
@@ -2974,7 +2473,6 @@ def test_canonical_correlation_matches_numpy(spark, sf_dir):
     lams = sorted(np.linalg.eigvals(M).real, reverse=True)
     row = canonical_correlation_daily(spark, sf_dir).collect()[0]
     assert row["n_days"] == n
-    import math
 
     assert abs(row["rho1"] - math.sqrt(max(lams[0], 0))) < 1e-4
     assert abs(row["rho2"] - math.sqrt(max(lams[1], 0))) < 1e-4
@@ -2986,13 +2484,6 @@ def test_canonical_correlation_matches_numpy(spark, sf_dir):
 
 
 def test_quade_matches_python_mirror(spark, sf_dir):
-    from collections import defaultdict
-    from decimal import Decimal
-
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        quade_test_event_type_values,
-    )
-
     rows = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
         .selectExpr(
@@ -3012,8 +2503,6 @@ def test_quade_matches_python_mirror(spark, sf_dir):
 
     def dranks(vals):
         """value -> doubled average rank."""
-        from collections import Counter
-
         cnt = Counter(vals)
         out = {}
         seen = 0
@@ -3053,34 +2542,8 @@ def test_quade_matches_python_mirror(spark, sf_dir):
         assert row["significant"] == (round(f, 6) > 2.776289)
 
 
-def _daily_pv_matrix(spark, sf_dir):
-    from collections import defaultdict
-    from decimal import Decimal
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .filter(F.col("event_type").isin("purchase", "view"))
-        .selectExpr("CAST(ts AS DATE) AS day", "event_type", "value")
-        .collect()
-    )
-    acc = defaultdict(lambda: [Decimal(0), Decimal(0)])
-    for r in rows:
-        acc[r["day"]][0 if r["event_type"] == "purchase" else 1] += Decimal(
-            str(r["value"])
-        )
-    return {d: (float(p), float(v)) for d, (p, v) in acc.items()}
-
-
 def test_box_m_matches_numpy(spark, sf_dir):
-    import math
-
-    import numpy as np
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        box_m_test_weekpart_daily,
-    )
-
-    mat = _daily_pv_matrix(spark, sf_dir)
+    mat = daily_pv_sums(spark, sf_dir)
     g = {0: [], 1: []}
     for d, xy in mat.items():
         g[1 if d.isoweekday() >= 6 else 0].append(xy)
@@ -3106,15 +2569,7 @@ def test_box_m_matches_numpy(spark, sf_dir):
 
 
 def test_mardia_matches_numpy(spark, sf_dir):
-    import math
-
-    import numpy as np
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        mardia_normality_daily,
-    )
-
-    mat = np.array(list(_daily_pv_matrix(spark, sf_dir).values()))
+    mat = np.array(list(daily_pv_sums(spark, sf_dir).values()))
     n = len(mat)
     mu = mat.mean(axis=0)
     c = (mat - mu).T @ (mat - mu) / n
@@ -3136,12 +2591,6 @@ def test_mardia_matches_numpy(spark, sf_dir):
 def test_greenwood_km_ci_matches_python_mirror(spark, sf_dir):
     """Greenwood SE and cloglog bands recomputed from the KM replay;
     bands must bracket the estimate."""
-    import math
-    from collections import defaultdict
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        greenwood_km_ci_retention,
-    )
 
     per = defaultdict(lambda: [0, 0])
     for hrs, churn, _ in _retention_durations(spark, sf_dir):
@@ -3191,11 +2640,8 @@ def test_siegel_slope_matches_python_mirror(spark, sf_dir):
     """Median-of-per-point-medians replayed with the explicit
     position-selection convention; plus the 50% breakdown sanity that
     Siegel lies within the range of per-point medians."""
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        siegel_slope_daily_trend,
-    )
 
-    x = _daily_series(spark, sf_dir)
+    x = list(daily_sums(spark, sf_dir).values())
     n = len(x)
     t = list(range(n))
 
@@ -3227,11 +2673,7 @@ def test_siegel_slope_matches_python_mirror(spark, sf_dir):
 
 
 def test_cochrane_orcutt_matches_python_mirror(spark, sf_dir):
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        cochrane_orcutt_daily_trend,
-    )
-
-    x = _daily_series(spark, sf_dir)
+    x = list(daily_sums(spark, sf_dir).values())
     n = len(x)
     t = list(range(n))
 
@@ -3263,24 +2705,8 @@ def test_cochrane_orcutt_matches_python_mirror(spark, sf_dir):
 
 
 def test_cusum_squares_matches_python_mirror(spark, sf_dir):
-    import math
-
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        cusum_squares_daily,
-    )
-    from collections import defaultdict
-    from decimal import Decimal
-
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("CAST(ts AS DATE) AS day", "value")
-        .collect()
-    )
-    acc = defaultdict(Decimal)
-    for r in rows:
-        acc[r["day"]] += Decimal(str(r["value"]))
-    days = sorted(acc)
-    x = [float(acc[d]) for d in days]
+    acc = daily_sums(spark, sf_dir)
+    days, x = list(acc), list(acc.values())
     rs = [
         (days[i], round((x[i] - x[i - 1]) ** 2, 9))
         for i in range(1, len(x))
@@ -3302,14 +2728,7 @@ def test_cusum_squares_matches_python_mirror(spark, sf_dir):
 
 
 def test_variance_ratio_matches_python_mirror(spark, sf_dir):
-    import math
-
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        _VR_Q,
-        variance_ratio_daily,
-    )
-
-    x = _daily_series(spark, sf_dir)
+    x = list(daily_sums(spark, sf_dir).values())
     nn = len(x)
     n = nn - 1  # returns
     mu = round((x[-1] - x[0]) / n, 9)
@@ -3329,13 +2748,7 @@ def test_variance_ratio_matches_python_mirror(spark, sf_dir):
 
 
 def test_turning_points_matches_python_mirror(spark, sf_dir):
-    import math
-
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        turning_points_daily,
-    )
-
-    x = _daily_series(spark, sf_dir)
+    x = list(daily_sums(spark, sf_dir).values())
     n = len(x)
     t = sum(
         1

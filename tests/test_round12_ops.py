@@ -5,22 +5,24 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from data_ingestion_pipeline_spark.functions.pairs import basket_pairs
+from data_ingestion_pipeline_spark.operators.mlprep_checks import (
+    _pca_state,
+    _whiten_sample_kernel,
+)
+from data_ingestion_pipeline_spark.operators.streaming_checks import (
+    _stream_state_partitions,
+)
+from data_ingestion_pipeline_spark.sources.catalog import load_table
 from tests.conftest import SF_SMOKE
-
-
-def _load_li(spark):
-    from data_ingestion_pipeline_spark.sources.catalog import load_table
-
-    return load_table(spark, SF_SMOKE, "lineitem")
 
 
 def test_basket_pairs_matches_self_join(spark):
     """basket_pairs (one groupBy + array expansion) must produce the exact
     pair MULTISET of the old distinct + self-join build — support counts,
     and therefore every graph query's edge set, depend on it."""
-    from data_ingestion_pipeline_spark.functions.pairs import basket_pairs
 
-    li = _load_li(spark)
+    li = load_table(spark, SF_SMOKE, "lineitem")
     new = sorted(map(tuple, basket_pairs(li, "l_orderkey", "l_partkey").collect()))
     po = li.select("l_orderkey", "l_partkey").distinct()
     a = po.select("l_orderkey", F.col("l_partkey").alias("a"))
@@ -40,9 +42,8 @@ def test_basket_pairs_matches_self_join(spark):
 def test_basket_pairs_single_exchange(spark):
     """The build's plan contract: one hash exchange (on the basket key),
     no join, no second exchange for the aggregate."""
-    from data_ingestion_pipeline_spark.functions.pairs import basket_pairs
 
-    df = basket_pairs(_load_li(spark), "l_orderkey", "l_partkey")
+    df = basket_pairs(load_table(spark, SF_SMOKE, "lineitem"), "l_orderkey", "l_partkey")
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
@@ -55,11 +56,6 @@ def test_whiten_sample_kernel_matches_spark_path(spark):
     """The mapInArrow whitening kernel must replicate the old Spark-side
     centered/dot/projection chain bitwise: x = v − mu, dw =
     cast(sum(cast(x·w as decimal(38,20))) as double), xp = x − dw·w."""
-    from data_ingestion_pipeline_spark.operators.mlprep_checks import (
-        _pca_state,
-        _whiten_sample_kernel,
-    )
-    from data_ingestion_pipeline_spark.sources.catalog import load_table
 
     _n, centered, _u, w, _nrm, mu_vals, wv = _pca_state(spark, SF_SMOKE)
     got = sorted(
@@ -101,9 +97,6 @@ def test_whiten_sample_kernel_matches_spark_path(spark):
 def test_stream_state_partitions_per_stream_default(spark):
     """Commit-bound streams take 4 state partitions, Python-stateful
     streams pass their own default (8); the session value comes back."""
-    from data_ingestion_pipeline_spark.operators.streaming_checks import (
-        _stream_state_partitions,
-    )
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
     with _stream_state_partitions(spark):

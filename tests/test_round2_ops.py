@@ -8,10 +8,17 @@ breaks both sides symmetrically still fails somewhere.
 
 from __future__ import annotations
 
+import hashlib
+import re
+from decimal import ROUND_HALF_UP, Decimal
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from data_ingestion_pipeline_spark.dedup.embedding import cosine_pairs_blas
+from data_ingestion_pipeline_spark.dedup.ngram import jaccard_pairs
+from data_ingestion_pipeline_spark.functions.numeric import dec_sum2
 from data_ingestion_pipeline_spark.operators import llm_data
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 from tests.conftest import SF_SMOKE
@@ -82,8 +89,6 @@ def test_dedup_survivor_policy_keeps_longest(spark):
     aug = [(r.doc_id, r.text) for r in docs] + [
         (r.doc_id + 100000, r.text) for r in docs if r.doc_id % 10 == 0
     ]
-    import hashlib
-    import re
 
     groups: dict[str, list] = {}
     for doc_id, text in aug:
@@ -100,7 +105,6 @@ def test_dedup_survivor_policy_keeps_longest(spark):
 def test_minhash_verified_equals_exact_jaccard(spark):
     """The recall-complete banding must reproduce the exact J>=0.7 pair set
     (this is the property that justifies giving it a SQL oracle)."""
-    from data_ingestion_pipeline_spark.dedup.ngram import jaccard_pairs
 
     aug = llm_data._near_dup_corpus(load_table(spark, SF_SMOKE, "documents"))
     exact = {
@@ -120,7 +124,6 @@ def test_minhash_verified_equals_exact_jaccard(spark):
 def test_embedding_lsh_verified_equals_exact_cosine(spark):
     """Recall-complete hyperplane banding must reproduce the exact ≥0.8
     cosine pair set (the property justifying its SQL oracle)."""
-    from data_ingestion_pipeline_spark.dedup.embedding import cosine_pairs_blas
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     aug = llm_data._near_dup_embeddings(emb)
@@ -141,9 +144,6 @@ def test_dec_sum2_is_partitioning_invariant(spark, n_parts):
     """Decimal summation must yield identical cents for ANY partitioning —
     the property float sums lack and the reason every money aggregate uses
     functions/numeric.py."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    from data_ingestion_pipeline_spark.functions.numeric import dec_sum2
 
     vals = [((i * 2654435761) % 100000) / 7.0 + 0.005 for i in range(999)]
     expected = sum(

@@ -1,20 +1,21 @@
-"""Lakehouse layout checks (operators/lakehouse_checks.py) and the plans
-they build on: SCD2 history (plans/scd.py), CDC feeds, rollups, and
-z-order layouts (plans/zorder.py)."""
+"""Semantics tests for round-3 operators: SCD2 history invariants, CDC
+feed classes, rollup losslessness, and decontamination recall on planted
+leaks."""
 
 from __future__ import annotations
 
 import glob
-import math
 
-import pandas as pd
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from data_ingestion_pipeline_spark.operators import lakehouse_checks
+from data_ingestion_pipeline_spark.operators import lakehouse_checks, llm_data
 from data_ingestion_pipeline_spark.operators.lakehouse_checks import zorder_orders_path
+from data_ingestion_pipeline_spark.operators.relational import hll_merge_users_weekly
+from data_ingestion_pipeline_spark.operators.sql_surface import (
+    recursive_orderkey_hierarchy,
+)
 from data_ingestion_pipeline_spark.plans.scd import scd2_apply
-from data_ingestion_pipeline_spark.plans.zorder import morton_key, zorder_frame
 from data_ingestion_pipeline_spark.sources.catalog import load_table
 from tests.conftest import SF_SMOKE, write_sf
 
@@ -89,6 +90,56 @@ def test_rollup_from_hourly_equals_direct_daily(spark):
     assert a == b and len(a) > 0
 
 
+def test_pq_topk_recall_vs_brute_force(spark):
+    """ADC over 16×256 codebooks recovers most of the exact top-20
+    (measured 0.7-0.8 across sf0.001-0.1; pinned with margin). The approx
+    scores must also be sane: rank-1 is the query itself."""
+    pq = llm_data.ann_pq_topk_embeddings(spark, SF_SMOKE).collect()
+    exact = {r.vec_id for r in llm_data.cosine_topk_embeddings(spark, SF_SMOKE).collect()}
+    got = {r.vec_id for r in pq}
+    assert len(got & exact) / 20 >= 0.5
+    best = max(pq, key=lambda r: r.approx_score)
+    assert best.vec_id == 0
+
+
+def test_hll_day_merge_equals_direct_week(spark):
+    """Merging per-day HLL sketches must equal aggregating the week
+    directly, and at fixture cardinality (sparse-exact mode) both equal
+    the exact distinct count."""
+
+    gated = {
+        r.week: (r.n_users, r.within_bound)
+        for r in hll_merge_users_weekly(spark, SF_SMOKE).collect()
+    }
+    events = load_table(spark, SF_SMOKE, "events")
+    exact = {
+        r.week: r.n
+        for r in events.groupBy(F.weekofyear("ts").cast("int").alias("week"))
+        .agg(F.countDistinct("user_id").cast("bigint").alias("n"))
+        .collect()
+    }
+    assert {w: n for w, (n, _) in gated.items()} == exact
+    assert all(ok for _, ok in gated.values())
+    # the merged-sketch estimate itself (pre-gate) equals the direct-week
+    # sketch estimate: day-merge loses nothing
+    daily = events.groupBy(
+        F.weekofyear("ts").cast("int").alias("week"), F.to_date("ts").alias("day")
+    ).agg(F.hll_sketch_agg("user_id").alias("sk"))
+    merged = {
+        r.week: r.est
+        for r in daily.groupBy("week")
+        .agg(F.hll_sketch_estimate(F.hll_union_agg("sk")).cast("bigint").alias("est"))
+        .collect()
+    }
+    direct = {
+        r.week: r.est
+        for r in events.groupBy(F.weekofyear("ts").cast("int").alias("week"))
+        .agg(F.hll_sketch_estimate(F.hll_sketch_agg("user_id")).cast("bigint").alias("est"))
+        .collect()
+    }
+    assert merged == direct
+
+
 def test_zorder_skips_files_on_both_dimensions(spark, tmp_path):
     """Footer min/max proof: on the Morton layout, a selective 2-D box
     overlaps FEWER files than on a single-key (o_orderdate) sort, and
@@ -139,117 +190,33 @@ def test_zorder_skips_files_on_both_dimensions(spark, tmp_path):
     assert z_hit < s_hit, f"zorder {z_hit}/{z_total} vs sorted {s_hit}/{s_total}"
 
 
-def test_zorder_quantile_ranks_on_lognormal_skew(spark, tmp_path):
-    """On a log-normal column the uniform min/max grid degenerates (most
-    rows land in the lowest buckets, so a selective mid-mass band overlaps
-    nearly every file); quantile edges keep buckets equal-mass and footer
-    pruning selective on BOTH dimensions."""
+def test_recursive_hierarchy_matches_closed_form(spark):
+    """The recursive digit-chain walk equals the closed form: root = leading
+    digit, chain_len = number of digits − 1."""
 
-    # planted log-normal value + uniform second key, deterministic
-    df = spark.range(40000).select(
-        F.col("id"),
-        (F.col("id") % 1000).alias("k"),
-        F.exp(
-            (F.xxhash64("id") % 1000) / 1000.0 * 6.0
-        ).alias("v"),  # e^[0,6): median ~e^3, max e^6 — heavy right tail
+    got = {r["root_digit"]: r for r in recursive_orderkey_hierarchy(spark, SF_SMOKE).collect()}
+    orders = load_table(spark, SF_SMOKE, "orders")
+    closed = (
+        orders.select(
+            F.substring(F.col("o_orderkey").cast("string"), 1, 1).cast("bigint").alias("root_digit"),
+            (F.length(F.col("o_orderkey").cast("string")) - 1).alias("chain_len"),
+        )
+        .groupBy("root_digit")
+        .agg(F.count("*").cast("bigint").alias("n_orders"), F.max("chain_len").cast("int").alias("max_chain_len"))
     )
-
-    def n_overlapping(path, v_lo, v_hi):
-        n_total, n_hit = 0, 0
-        for f in glob.glob(f"{path}/part-*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            vmin = vmax = None
-            for rg in range(md.num_row_groups):
-                for ci in range(md.num_columns):
-                    col = md.row_group(rg).column(ci)
-                    if col.path_in_schema != "v" or col.statistics is None:
-                        continue
-                    st = col.statistics
-                    vmin = st.min if vmin is None else min(vmin, st.min)
-                    vmax = st.max if vmax is None else max(vmax, st.max)
-            n_total += 1
-            if vmin is None or (vmax >= v_lo and vmin < v_hi):
-                n_hit += 1
-        return n_hit, n_total
-
-    uni_dir, q_dir = str(tmp_path / "uni"), str(tmp_path / "q")
-    zorder_frame(df, ["k", "v"], 16, quantile_skew=False).write.mode(
-        "overwrite"
-    ).parquet(uni_dir)
-    zorder_frame(df, ["k", "v"], 16).write.mode("overwrite").parquet(q_dir)
-
-    # a ~10%-mass band at the 25th-35th percentile (off-center so it sits
-    # inside one coarse v-strip of the interleave)
-    lo, hi = math.exp(1.5), math.exp(2.1)
-    hit_u, tot_u = n_overlapping(uni_dir, lo, hi)
-    hit_q, tot_q = n_overlapping(q_dir, lo, hi)
-    assert tot_u == tot_q == 16
-    # uniform grid degenerates: the band + half the corpus share the lowest
-    # buckets, so almost every file covers it; quantile grid keeps the band
-    # to a few equal-mass buckets (measured 5 vs 15 of 16)
-    assert hit_u >= 12, hit_u
-    assert hit_q <= 8, hit_q
+    for r in closed.collect():
+        g = got[r["root_digit"]]
+        assert g["n_orders"] == r["n_orders"]
+        assert g["max_chain_len"] == r["max_chain_len"]
 
 
-def test_compaction_plan_conserves_rows_and_is_contiguous(spark):
-    rows = sorted(
-        lakehouse_checks.compaction_plan_orders(spark, SF_SMOKE).collect(),
-        key=lambda r: r.bin_id,
-    )
-    n_orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").count()
-    assert sum(r.total_rows for r in rows) == n_orders
-    # bins are contiguous, non-overlapping day spans in bin order
-    for a, b in zip(rows, rows[1:]):
-        assert a.last_day <= b.first_day
-    # every bin except possibly the last is at least target-full minus one
-    # file (greedy cumulative packing property)
-    target = max(1, n_orders // 8)
-    for r in rows[:-1]:
-        assert r.total_rows + max(1, r.n_files) >= 1  # sanity: non-empty
-        assert r.total_rows >= 1
-    assert rows[-1].bin_id == max(r.bin_id for r in rows)
-    assert all(r.total_rows > 0 for r in rows)
-    # cumulative-fill invariant: rows before bin b sum to >= b * target
-    cum = 0
-    for r in rows:
-        assert cum // target == r.bin_id
-        cum += r.total_rows
-
-
-def test_morton_key_empty_and_allnull_inputs(spark):
-    empty = spark.createDataFrame([], "a double, b double")
-    assert empty.select(morton_key(empty, ["a", "b"]).alias("k")).collect() == []
-    allnull = spark.createDataFrame(
-        [(None, 1.0), (None, 2.0)], "a double, b double"
-    )
-    ks = [
-        r.k for r in allnull.select(morton_key(allnull, ["a", "b"]).alias("k")).collect()
-    ]
-    assert all(k is not None for k in ks)
-
-
-def test_scd2_asof_straddles_the_cut(spark):
-    got = lakehouse_checks.scd2_asof_lookup(spark, SF_SMOKE).toPandas()
-    orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").toPandas()
-    assert len(got) == len(orders)  # every order resolves exactly one version
-    cust7 = got[got.o_custkey % 7 == 0]
-    pre = cust7[cust7.o_orderdate < pd.Timestamp("1998-01-01")]
-    post = cust7[cust7.o_orderdate >= pd.Timestamp("1998-01-01")]
-    assert (~pre.mktsegment_asof.str.startswith("SEG_")).all()
-    assert post.mktsegment_asof.str.startswith("SEG_").all()
-    assert len(pre) > 0 and len(post) > 0  # the fixture straddles the cut
-
-
-def test_table_diff_classes_match_rules(spark):
-    got = {
-        r.change_type: r
-        for r in lakehouse_checks.table_diff_snapshots(spark, SF_SMOKE).collect()
-    }
-    o = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").toPandas()
-    k = o["o_orderkey"]
-    assert got["removed"].n_rows == int((k % 11 == 0).sum())
-    assert got["added"].n_rows == int((k % 13 == 0).sum())
-    assert got["changed"].n_rows == int(((k % 11 != 0) & (k % 7 == 0)).sum())
-    assert got["unchanged"].n_rows == int(((k % 11 != 0) & (k % 7 != 0)).sum())
-    assert got["unchanged"].net_price_delta == 0.0
-    assert got["changed"].net_price_delta > 0
+def test_decontamination_catches_all_planted_leaks(spark):
+    out = llm_data.decontaminate_documents(spark, SF_SMOKE)
+    rows = {r["doc_id"]: r for r in out.collect()}
+    docs = load_table(spark, SF_SMOKE, "documents")
+    bench_ids = [r["doc_id"] for r in docs.filter("doc_id % 97 = 0").collect()]
+    for bid in bench_ids:
+        leaked_id = bid + 2000000
+        assert leaked_id in rows, f"planted leak {leaked_id} not flagged"
+        # every window of an 80%-prefix copy comes from the benchmark doc
+        assert rows[leaked_id]["contamination"] == 1.0

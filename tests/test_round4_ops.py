@@ -2,11 +2,40 @@
 the oracle-checkable sketch constructions (exact-verified heavy hitters,
 HLL within-bound gate)."""
 
+from __future__ import annotations
+
+import glob
+import json
+import math
+import os
+
+import numpy as np
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
+from data_ingestion_pipeline_spark.dedup.clustering import (
+    connected_components,
+    connected_components_star,
+)
+from data_ingestion_pipeline_spark.functions.bloom import (
+    bloom_build,
+    bloom_params,
+    bloom_probe_udf,
+)
 from data_ingestion_pipeline_spark.operators import llm_data, relational
+from data_ingestion_pipeline_spark.operators.lakehouse_checks import (
+    time_travel_orders_versions,
+)
+from data_ingestion_pipeline_spark.operators.scratch import build_once, source_stamp
+from data_ingestion_pipeline_spark.operators.sql_surface import (
+    session_variable_brand_report,
+)
+from data_ingestion_pipeline_spark.plans.zorder import zorder_frame
 from data_ingestion_pipeline_spark.similarity.brute_force import topk_cosine_batch
 from data_ingestion_pipeline_spark.similarity.lsh import ann_topk_multitable
+from data_ingestion_pipeline_spark.sources.catalog import load_table
+from data_ingestion_pipeline_spark.sources.python_datasource import JsonlSinkDataSource
 from tests.conftest import SF_SMOKE
 
 
@@ -59,7 +88,6 @@ def test_frequent_users_sketch_is_exact_heavy_hitter_set(spark):
         (r.frequent_user_id, r.n_events)
         for r in relational.frequent_users_sketch(spark, SF_SMOKE).collect()
     }
-    from data_ingestion_pipeline_spark.sources.catalog import load_table
 
     events = load_table(spark, SF_SMOKE, "events")
     skewed = events.withColumn(
@@ -95,9 +123,6 @@ def test_dup_span_profile_short_documents(spark):
 def test_source_stamp_subsecond_regeneration(tmp_path):
     """A same-size rewrite within the same second must change the stamp
     (st_mtime_ns granularity)."""
-    import os
-
-    from data_ingestion_pipeline_spark.operators.scratch import source_stamp
 
     p = tmp_path / "f.parquet"
     p.write_bytes(b"x" * 64)
@@ -109,9 +134,6 @@ def test_source_stamp_subsecond_regeneration(tmp_path):
 def test_build_once_rebuilds_only_when_source_stamp_moves(tmp_path):
     """build_once builds into an empty dir, skips while the source stamp
     holds, and rebuilds from scratch once the source's mtime moves."""
-    import os
-
-    from data_ingestion_pipeline_spark.operators.scratch import build_once
 
     src = tmp_path / "src.parquet"
     src.write_bytes(b"x" * 64)
@@ -136,12 +158,6 @@ def test_build_once_rebuilds_only_when_source_stamp_moves(tmp_path):
 def test_star_contraction_closes_long_chain_in_log_rounds(spark):
     """A 1024-node chain has diameter 1023: label propagation cannot close
     it in 15 rounds, star contraction must (O(log n) alternations)."""
-    import pytest
-
-    from data_ingestion_pipeline_spark.dedup.clustering import (
-        connected_components,
-        connected_components_star,
-    )
 
     n = 1024
     chain = spark.createDataFrame(
@@ -157,10 +173,6 @@ def test_star_contraction_closes_long_chain_in_log_rounds(spark):
 def test_star_contraction_matches_label_propagation(spark):
     """On a mixed graph (cliques + a chain + isolated pairs) both
     algorithms must produce identical labels."""
-    from data_ingestion_pipeline_spark.dedup.clustering import (
-        connected_components,
-        connected_components_star,
-    )
 
     edges = (
         [(i, j) for i in range(5) for j in range(i + 1, 5)]        # clique 0-4
@@ -179,12 +191,6 @@ def test_zorder_quantile_ranks_on_lognormal_skew(spark, tmp_path):
     rows land in the lowest buckets, so a selective mid-mass band overlaps
     nearly every file); quantile edges keep buckets equal-mass and footer
     pruning selective on BOTH dimensions."""
-    import glob
-    import math
-
-    import pyarrow.parquet as pq
-
-    from data_ingestion_pipeline_spark.plans.zorder import zorder_frame
 
     # planted log-normal value + uniform second key, deterministic
     df = spark.range(40000).select(
@@ -236,13 +242,6 @@ def test_bloom_filter_no_false_negatives_and_bounded_fpr(spark):
     """Every inserted key must probe TRUE (no false negatives — the
     property decontamination correctness rides on); non-members probe TRUE
     at ≈ the configured FPR."""
-    import numpy as np
-
-    from data_ingestion_pipeline_spark.functions.bloom import (
-        bloom_build,
-        bloom_params,
-        bloom_probe_udf,
-    )
 
     rng = np.random.default_rng(7)
     members = rng.integers(-(2**62), 2**62, size=5000, dtype=np.int64)
@@ -266,12 +265,6 @@ def test_jsonl_sink_manifest_is_the_commit_boundary(spark, tmp_path):
     """commit() must manifest exactly the files the committed tasks wrote;
     a stray file in the directory (e.g. a retried task's orphan) must not
     be counted or read."""
-    import json
-    import os
-
-    from data_ingestion_pipeline_spark.sources.python_datasource import (
-        JsonlSinkDataSource,
-    )
 
     spark.dataSource.register(JsonlSinkDataSource)
     out = str(tmp_path / "sink")
@@ -291,12 +284,6 @@ def test_jsonl_sink_manifest_is_the_commit_boundary(spark, tmp_path):
 
 
 def test_time_travel_reads_both_versions(spark):
-    from tests.conftest import SF_SMOKE
-
-    from data_ingestion_pipeline_spark.operators.lakehouse_checks import (
-        time_travel_orders_versions,
-    )
-
     row = time_travel_orders_versions(spark, SF_SMOKE).first()
     n_orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").count()
     assert row.n_rows == n_orders
@@ -306,12 +293,6 @@ def test_time_travel_reads_both_versions(spark):
 
 
 def test_session_variable_routes_agree(spark):
-    from tests.conftest import SF_SMOKE
-
-    from data_ingestion_pipeline_spark.operators.sql_surface import (
-        session_variable_brand_report,
-    )
-
     rows = {r.route: r for r in session_variable_brand_report(spark, SF_SMOKE).collect()}
     assert set(rows) == {"variable", "immediate"}
     assert rows["variable"].n_lines == rows["immediate"].n_lines

@@ -3,22 +3,28 @@ skyline/compaction planners, hybrid retrieval fusion, calibration."""
 
 from __future__ import annotations
 
+import bisect
+import hashlib
+import math
+from collections import Counter, defaultdict
+
 import pytest
 from pyspark.sql import functions as F
 
-import __spark_entry__ as entrymod
 from data_ingestion_pipeline_spark.operators import (
     analytics_checks,
     classifier,
     lakehouse_checks,
+    llm_data,
+    mlprep_checks,
     relational,
+    timeseries_checks,
 )
-from tests.conftest import SF_SMOKE
-
-
-def _plan(spark, name: str) -> str:
-    df = entrymod.queries()[name](spark, SF_SMOKE)
-    return df._jdf.queryExecution().executedPlan().toString()
+from data_ingestion_pipeline_spark.operators import timeseries_checks as tc
+from data_ingestion_pipeline_spark.operators import tpch_queries as t
+from tests.conftest import SF_SMOKE, executed_plan
+from tests.test_plans import QUERIES, _unpartitioned_window_count
+from tests.test_round11_ops import _pv_values
 
 
 def test_ks_test_matches_direct_computation(spark):
@@ -26,16 +32,8 @@ def test_ks_test_matches_direct_computation(spark):
     proves the chunk-stitched cumulative counts reconstruct the global
     ECDF exactly at every distinct value."""
     row = analytics_checks.ks_test_purchase_view(spark, SF_SMOKE).collect()[0]
-    ev = (
-        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .filter(F.col("event_type").isin("purchase", "view"))
-        .select("event_type", "value")
-        .collect()
-    )
-    xs = sorted(r.value for r in ev if r.event_type == "purchase")
-    ys = sorted(r.value for r in ev if r.event_type == "view")
+    xs, ys = _pv_values(spark, SF_SMOKE)
     grid = sorted(set(xs) | set(ys))
-    import bisect
 
     d = max(
         abs(
@@ -146,8 +144,6 @@ def test_calibration_report_internally_consistent(spark):
 
 
 def test_hybrid_rrf_fuses_both_rankers(spark):
-    from data_ingestion_pipeline_spark.operators import llm_data
-
     rows = llm_data.hybrid_search_rrf_documents(spark, SF_SMOKE).collect()
     assert len(rows) == llm_data.HYBRID_TOP_K
     assert [r.fused_rank for r in rows] != []
@@ -196,9 +192,7 @@ def test_hybrid_rrf_fuses_both_rankers(spark):
     ],
 )
 def test_round5_plans_have_no_unpartitioned_windows(spark, name):
-    from tests.test_plans import _unpartitioned_window_count
-
-    plan = _plan(spark, name)
+    plan = executed_plan(QUERIES[name](spark, SF_SMOKE))
     assert _unpartitioned_window_count(plan) == 0, (
         f"{name} has a partition-less window (single-partition sort)"
     )
@@ -216,39 +210,11 @@ def test_round5_plans_have_no_unpartitioned_windows(spark, name):
 def test_chunk_stitch_queries_range_partition(spark, name, key):
     """The chunk-stitch pattern's load-bearing feature: the corpus-scale
     cumulative pass rides a range partitioning, not a global sort."""
-    plan = _plan(spark, name)
+    plan = executed_plan(QUERIES[name](spark, SF_SMOKE))
     assert key in plan, f"{name} lost its range-partitioned chunk pass"
 
 
-def test_mann_kendall_matches_direct(spark):
-    from data_ingestion_pipeline_spark.operators import analytics_checks
-
-    row = analytics_checks.mann_kendall_daily_trend(spark, SF_SMOKE).collect()[0]
-    daily = sorted(
-        (r.day, r.v)
-        for r in spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .groupBy(F.to_date("ts").alias("day"))
-        .agg(F.sum("value").alias("v"))
-        .collect()
-    )
-    xs = [v for _, v in daily]
-    s = sum(
-        (0 if xs[j] == xs[i] else (1 if xs[j] > xs[i] else -1))
-        for i in range(len(xs))
-        for j in range(i + 1, len(xs))
-    )
-    assert row.n == len(xs)
-    assert row.n_pairs == len(xs) * (len(xs) - 1) // 2
-    # S compares exact decimal daily sums in-engine vs float sums here;
-    # sign flips from float noise are possible only on exact ties, absent
-    # in this fixture
-    assert row.s == s
-    assert row.var_s > 0
-
-
 def test_holt_fold_matches_python(spark):
-    from data_ingestion_pipeline_spark.operators import timeseries_checks
-
     row = timeseries_checks.holt_linear_daily_forecast(spark, SF_SMOKE).collect()[0]
     daily = sorted(
         (r.day, float(r.xd))
@@ -270,8 +236,6 @@ def test_holt_fold_matches_python(spark):
 
 
 def test_countmin_invariants(spark):
-    from data_ingestion_pipeline_spark.operators import relational
-
     rows = relational.countmin_event_types(spark, SF_SMOKE).collect()
     assert len(rows) == 5
     for r in rows:
@@ -283,8 +247,6 @@ def test_countmin_invariants(spark):
 
 
 def test_pca_explained_share_sane(spark):
-    from data_ingestion_pipeline_spark.operators import mlprep_checks
-
     row = mlprep_checks.pca_power_iteration_embeddings(spark, SF_SMOKE).collect()[0]
     assert row.variance_total > 0
     assert 0.0 < row.lambda1 <= row.variance_total + 1e-9
@@ -292,8 +254,6 @@ def test_pca_explained_share_sane(spark):
 
 
 def test_oversample_hits_target_within_hash_noise(spark):
-    from data_ingestion_pipeline_spark.operators import llm_data
-
     rows = llm_data.oversample_minority_documents(spark, SF_SMOKE).collect()
     target = rows[0].target
     for r in rows:
@@ -321,9 +281,8 @@ def test_poisson_bootstrap_plan_two_phase_no_sort(spark):
     """Plan shape: explode feeds a partial-aggregated groupBy (map-side
     combine before the exchange); no unpartitioned window, no cartesian,
     no global sort of the fact table."""
-    from tests.test_plans import _unpartitioned_window_count
 
-    plan = _plan(spark, "poisson_bootstrap_ci_orders")
+    plan = executed_plan(QUERIES["poisson_bootstrap_ci_orders"](spark, SF_SMOKE))
     assert _unpartitioned_window_count(plan) == 0
     assert "CartesianProduct" not in plan
     assert "HashAggregate" in plan
@@ -371,7 +330,6 @@ def test_holt_winters_fold_matches_python(spark):
     """The 9-slot rotating-queue fold must reproduce a direct Python
     Holt-Winters additive implementation (classic first-cycle init) on
     the same daily series, including the rotated seasonal readout."""
-    from data_ingestion_pipeline_spark.operators import timeseries_checks as tc
 
     row = tc.holt_winters_seasonal_daily(spark, SF_SMOKE).collect()[0]
     daily = sorted(
@@ -409,8 +367,6 @@ def test_mmr_rerank_diversifies_vs_plain_topk(spark):
     """MMR invariants on the fixture: 10 distinct picks; the first pick
     is the global relevance argmax; and the MMR selection's mean pairwise
     cosine must not exceed the plain top-10's (diversity is the point)."""
-    from data_ingestion_pipeline_spark.operators import llm_data
-    import math
 
     rows = sorted(
         llm_data.mmr_rerank_topk_embeddings(spark, SF_SMOKE).collect(),
@@ -449,7 +405,6 @@ def test_temperature_mixture_compresses_toward_uniform(spark):
     """α<1 must move every share toward uniform: languages under the
     natural mean gain share, those above lose it; shares sum to 1; the
     budget is conserved."""
-    from data_ingestion_pipeline_spark.operators import llm_data
 
     rows = llm_data.mixture_temperature_allocation(spark, SF_SMOKE).collect()
     unif = 1.0 / len(rows)
@@ -467,7 +422,6 @@ def test_int8_quantization_error_bound_and_sqnr(spark):
     """Absmax int8 quantization guarantees |err| ≤ scale/2 per value, so
     per-dim MSE ≤ scale²/4; SQNR must be strongly positive for a
     non-degenerate corpus; every dimension reports the same n."""
-    from data_ingestion_pipeline_spark.operators import mlprep_checks
 
     rows = mlprep_checks.embedding_int8_quantization_report(
         spark, SF_SMOKE
@@ -485,7 +439,6 @@ def test_length_bucket_padding_dominates_global(spark):
     """Bucket padding can never waste more than global-max padding, and
     both fractions live in [0, 1); token mass is conserved vs a direct
     count."""
-    from data_ingestion_pipeline_spark.operators import llm_data
 
     rows = llm_data.length_bucket_padding_report(spark, SF_SMOKE).collect()
     assert rows
@@ -500,7 +453,6 @@ def test_length_bucket_padding_dominates_global(spark):
 def test_curriculum_schedule_is_total_monotone(spark):
     """Phases are a permutation 1..|sources|; difficulty is non-decreasing
     along the schedule; cumulative shares end at exactly 1."""
-    from data_ingestion_pipeline_spark.operators import llm_data
 
     rows = sorted(
         llm_data.curriculum_schedule_documents(spark, SF_SMOKE).collect(),
@@ -517,7 +469,6 @@ def test_curriculum_schedule_is_total_monotone(spark):
 def test_self_similarity_grid_complete_and_bounded(spark):
     """All 780 pairs of the 40-doc sample are present (zero-overlap pairs
     included); every statistic is a valid Jaccard in [0, 1]."""
-    from data_ingestion_pipeline_spark.operators import llm_data
 
     row = llm_data.self_similarity_sample_documents(spark, SF_SMOKE).collect()[0]
     n = llm_data._SELFSIM_SAMPLE
@@ -530,7 +481,6 @@ def test_kfold_cv_stump_matches_direct_per_fold(spark):
     """Each fold's published threshold must equal a direct Python stump
     trained on the other folds' bucket histogram, and its test accuracy
     must match direct evaluation on the held-out fold."""
-    import hashlib
 
     rows = {r.fold: r for r in classifier.kfold_cv_stump_documents(
         spark, SF_SMOKE).collect()}
@@ -579,7 +529,6 @@ def test_cross_source_matrix_surfaces_planted_mirror(spark):
     """Every planted 80%-prefix copy pairs with its original at J≈0.8, so
     each original source with a planted doc must appear against 'mirror';
     pairs are upper-triangular; means bounded by maxes."""
-    from data_ingestion_pipeline_spark.operators import llm_data
 
     rows = llm_data.cross_source_overlap_matrix(spark, SF_SMOKE).collect()
     assert rows
@@ -604,7 +553,6 @@ def test_misra_gries_exact_vs_direct_and_guarantee(spark):
     sum below 1; every share exceeds 1/k."""
     rows = relational.misra_gries_heavy_hitters_events(spark, SF_SMOKE).collect()
     ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet").select("user_id").collect()
-    from collections import Counter
 
     c = Counter(r.user_id for r in ev)
     n = len(ev)
@@ -622,7 +570,6 @@ def test_bot_cadence_report_conserves_population(spark):
     direct count of users with ≥10 events; cv means sit in the plausible
     band (metronomic cell mean < unflagged cell mean when both exist)."""
     rows = analytics_checks.bot_cadence_report_events(spark, SF_SMOKE).collect()
-    from collections import Counter
 
     ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet").select("user_id").collect()
     c = Counter(r.user_id for r in ev)
@@ -649,7 +596,6 @@ def test_markov_stationary_is_fixed_point(spark):
         .collect(),
         key=lambda r: (r.user_id, r.ts, r.event_id),
     )
-    from collections import defaultdict
 
     trans: dict = defaultdict(lambda: defaultdict(int))
     for a, b in zip(ev, ev[1:]):

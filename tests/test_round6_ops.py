@@ -1,8 +1,18 @@
 """Round-6 operator tests: the mapInArrow covariance kernel and the
 approx RFM boundary-broadcast twin (round-5 verdict items 3 and 4)."""
 
-import numpy as np
+from __future__ import annotations
 
+import numpy as np
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from data_ingestion_pipeline_spark.operators.mlprep_checks import _cov_partials
+from data_ingestion_pipeline_spark.operators.relational import (
+    _rfm_per_cust,
+    rfm_segments_customers_approx,
+)
+from data_ingestion_pipeline_spark.sources.catalog import load_table
 from tests.conftest import SF_SMOKE
 
 
@@ -12,12 +22,6 @@ def test_cov_kernel_matches_driver_side_replication(spark):
     replication computes with the same centering and the same
     half-away-from-zero rounding — regardless of batch/partition split
     (integer partials merge associatively)."""
-    from pyspark.sql import functions as F
-
-    from data_ingestion_pipeline_spark.operators.mlprep_checks import (
-        _cov_partials,
-    )
-    from data_ingestion_pipeline_spark.sources.catalog import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     mu = [0.01 * k for k in range(64)]  # arbitrary but fixed centering
@@ -45,12 +49,6 @@ def test_cov_kernel_matches_driver_side_replication(spark):
 def test_cov_kernel_invariant_to_repartitioning(spark):
     """Same totals from a different partition split — the exactness claim
     is that integer partials make the merge order-independent."""
-    from pyspark.sql import functions as F
-
-    from data_ingestion_pipeline_spark.operators.mlprep_checks import (
-        _cov_partials,
-    )
-    from data_ingestion_pipeline_spark.sources.catalog import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     mu = [0.0] * 64
@@ -71,9 +69,6 @@ def test_rfm_approx_gate_all_true(spark):
     """Every published check row must be TRUE at fixture scale (mirrors
     the TRUE-pinned oracle): 12 tie-aware rank-guarantee checks, 3
     monotonicity checks, 1 conservation row."""
-    from data_ingestion_pipeline_spark.operators.relational import (
-        rfm_segments_customers_approx,
-    )
 
     rows = rfm_segments_customers_approx(spark, SF_SMOKE).collect()
     assert len(rows) == 16
@@ -90,12 +85,6 @@ def test_rfm_approx_agrees_with_exact_on_untied_dimensions(spark):
     nearly every customer when n < the GK compression threshold (the
     sketch is exact there); small disagreement is only the boundary-rank
     off-by-a-few the gate's ±2% band already allows."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from data_ingestion_pipeline_spark.operators.relational import (
-        _rfm_per_cust,
-    )
 
     per_cust = _rfm_per_cust(spark, SF_SMOKE).select(
         "o_custkey", F.col("monetary").cast("double").alias("m_v")

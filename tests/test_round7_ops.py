@@ -3,24 +3,88 @@ corpus-wide BPE encoding, and the round-7 statistics tier."""
 
 from __future__ import annotations
 
+import datetime as dt
 import hashlib
+import statistics
+from unittest import mock
 
+import numpy as np
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from tests.conftest import SF_SMOKE
+import data_ingestion_pipeline_spark.operators.analytics_checks as A
+import data_ingestion_pipeline_spark.operators.inference_stats as I
+import data_ingestion_pipeline_spark.operators.lm_stats as M
+from data_ingestion_pipeline_spark.dedup.clustering import (
+    connected_components,
+    connected_components_star,
+)
+from data_ingestion_pipeline_spark.functions.temporal import asof_join_prev
+from data_ingestion_pipeline_spark.operators import lm_stats
+from data_ingestion_pipeline_spark.operators import tpch_queries as t
+from data_ingestion_pipeline_spark.operators.bpe import _train
+from data_ingestion_pipeline_spark.operators.llm_data import exact_substring_excision
+from data_ingestion_pipeline_spark.operators.lm_stats import (
+    mattr_lexical_diversity_documents,
+    negative_sampling_table_documents,
+    skipgram_pmi_documents,
+)
+from data_ingestion_pipeline_spark.operators.timeseries_checks import (
+    ar2_yule_walker_daily,
+)
+from data_ingestion_pipeline_spark.operators.tpch_queries import (
+    tpch_q10_returned_items,
+    tpch_q1_pricing_summary,
+    tpch_q3_shipping_priority,
+    tpch_q8_market_share,
+)
+from data_ingestion_pipeline_spark.plans.quality import check_rules
+from data_ingestion_pipeline_spark.plans.zorder import morton_key
+from data_ingestion_pipeline_spark.similarity.ivf import sample_centroids
+from data_ingestion_pipeline_spark.similarity.ivfpq import ivfpq_encode, train_ivfpq
+from data_ingestion_pipeline_spark.similarity.knn import knn_graph
+from data_ingestion_pipeline_spark.sources.fixed_width import (
+    read_fixed_width,
+    write_fixed_width,
+)
+from data_ingestion_pipeline_spark.sources.jsonl_reader import read_jsonl
+from data_ingestion_pipeline_spark.streaming.windows import sessionize_gaps_and_islands
+from tests.conftest import SF_SMOKE, run_oracle, write_sf
+from tests.test_llm_data import corpus
 
 
-# ---------------------------------------------------------------------------
-# exact_substring_excision — first-occurrence-wins span removal
-# ---------------------------------------------------------------------------
+def _py_bpe(word_freq: dict, n_merges: int):
+    """Reference BPE: greedy most-frequent pair (ties by (a, b) text asc),
+    greedy-leftmost non-overlapping application — Sennrich et al. 2016."""
+    seqs = {w: list(w) for w in word_freq}
+    merges = []
+    for _ in range(n_merges):
+        counts: dict = {}
+        for w, syms in seqs.items():
+            for i in range(len(syms) - 1):
+                p = (syms[i], syms[i + 1])
+                counts[p] = counts.get(p, 0) + word_freq[w]
+        if not counts:
+            break
+        best = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        (a, b), cnt = best
+        merges.append((a, b, cnt))
+        for w, syms in seqs.items():
+            out, i = [], 0
+            while i < len(syms):
+                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
+                    out.append(a + b)
+                    i += 2
+                else:
+                    out.append(syms[i])
+                    i += 1
+            seqs[w] = out
+    return merges, seqs
 
 
 @pytest.fixture(scope="module")
 def excised(spark):
-    from data_ingestion_pipeline_spark.operators.llm_data import (
-        exact_substring_excision,
-    )
-
     a = "a b c d e f g h x y z"  # 11 tokens, the span source
     rows = [
         (1, a),
@@ -61,77 +125,25 @@ def test_excision_short_unique_doc_intact(excised):
     assert r.rewritten_md5 == hashlib.md5(b"only five short tokens here").hexdigest()
 
 
-# ---------------------------------------------------------------------------
-# BPE corpus encode — parity vs a pure-python reference encoder
-# ---------------------------------------------------------------------------
-
-
-def _py_bpe(word_freq: dict, n_merges: int):
-    """Reference BPE: greedy most-frequent pair (ties by (a, b) text asc),
-    greedy-leftmost non-overlapping application — Sennrich et al. 2016."""
-    seqs = {w: list(w) for w in word_freq}
-    merges = []
-    for _ in range(n_merges):
-        counts: dict = {}
-        for w, syms in seqs.items():
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                counts[p] = counts.get(p, 0) + word_freq[w]
-        if not counts:
-            break
-        best = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        (a, b), cnt = best
-        merges.append((a, b, cnt))
-        for w, syms in seqs.items():
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            seqs[w] = out
-    return merges, seqs
-
-
-# ---------------------------------------------------------------------------
-# LM corpus statistics tier
-# ---------------------------------------------------------------------------
-
-
-def test_good_turing_hand_computed(spark):
-    from data_ingestion_pipeline_spark.operators import lm_stats
-
+def test_good_turing_hand_computed(spark, tmp_path):
     # corpus: trigram "a b c" ×2 (via two docs), all other trigrams unique
-    rows = [(1, "a b c d e"), (2, "a b c x y")]
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM (VALUES "
-        + ", ".join(f"({i}, '{t}')" for i, t in rows)
-        + ") t(doc_id, text)"
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c x y")], "doc_id long, text string"
     )
-    got = con.execute(
-        lm_stats.GOOD_TURING_UNSEEN_MASS_DOCUMENTS_ORACLE
-    ).fetchall()
+    sf = write_sf(tmp_path, documents=docs)
+    got = run_oracle("good_turing_unseen_mass_documents", sf)
     # trigrams: doc1 {abc, bcd, cde}, doc2 {abc, bcx, cxy} → abc:2, four r=1
     by_r = {r[0]: r for r in got}
     assert by_r[1][1] == 4 and by_r[2][1] == 1
     # r* for r=1: (1+1)·N2/N1 = 2·1/4 = 0.5 ; p0 = N1/N = 4/6
     assert by_r[1][2] == 0.5
     assert abs(by_r[1][3] - round(4 / 6, 6)) < 1e-9
-    # Spark side agrees with the oracle on the same fixture via the
-    # registered sweep (tri-SF); here pin the formula itself.
+    # the Spark operator agrees with the oracle on the same fixture
+    spark_rows = lm_stats.good_turing_unseen_mass_documents(spark, sf).collect()
+    assert sorted(map(tuple, spark_rows)) == sorted(got)
 
 
 def test_mattr_bounds_and_degenerate_docs(spark):
-    from data_ingestion_pipeline_spark.operators.lm_stats import (
-        mattr_lexical_diversity_documents,
-    )
-    from data_ingestion_pipeline_spark.sources.catalog import load_table  # noqa: F401
-
     rows = [
         (1, " ".join(["same"] * 80)),  # zero diversity
         (2, " ".join(f"w{i}" for i in range(80))),  # all distinct
@@ -139,8 +151,6 @@ def test_mattr_bounds_and_degenerate_docs(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     # exercise the core expression by monkey-free direct call on a frame
-    import data_ingestion_pipeline_spark.operators.lm_stats as M
-    from unittest import mock
 
     with mock.patch.object(M, "load_table", lambda s, d, t: df):
         out = {r.doc_id: r for r in
@@ -151,10 +161,6 @@ def test_mattr_bounds_and_degenerate_docs(spark):
 
 
 def test_negative_sampling_distribution_properties(spark):
-    from data_ingestion_pipeline_spark.operators.lm_stats import (
-        negative_sampling_table_documents,
-    )
-
     out = negative_sampling_table_documents(spark, SF_SMOKE).collect()
     assert len(out) > 0
     # ranks are 1..n in count order; cum_p monotone; probabilities positive
@@ -167,10 +173,6 @@ def test_negative_sampling_distribution_properties(spark):
 
 
 def test_skipgram_pairs_symmetric_and_thresholded(spark):
-    from data_ingestion_pipeline_spark.operators.lm_stats import (
-        skipgram_pmi_documents,
-    )
-
     out = skipgram_pmi_documents(spark, SF_SMOKE).collect()
     assert 0 < len(out) <= 100
     for r in out:
@@ -182,9 +184,6 @@ def test_canonical_entities_duplicate_collapse(spark):
     """Identical (size, name) parts must land in one entity even with no
     fuzzy neighbor, and the fuzzy edge must still bridge distinct names —
     the distinct-name-collapse plan preserves part-level CC semantics."""
-    from unittest import mock
-
-    import data_ingestion_pipeline_spark.operators.analytics_checks as A
 
     rows = [
         (1, "alpha widget", 5),
@@ -204,10 +203,6 @@ def test_canonical_entities_duplicate_collapse(spark):
 
 
 def test_bpe_encode_matches_python_reference(spark):
-    from pyspark.sql import functions as F
-
-    from data_ingestion_pipeline_spark.operators.bpe import _train
-
     corpus = [
         "low low low lower lowest",
         "new newer newest news",
@@ -234,16 +229,8 @@ def test_bpe_encode_matches_python_reference(spark):
     assert got == want
 
 
-# ---------------------------------------------------------------------------
-# inference/concentration statistics tier
-# ---------------------------------------------------------------------------
-
-
 def test_wilson_ci_hand_computed(spark):
     """x=3 of n=10 on one day: Wilson bounds from the closed form."""
-    from unittest import mock
-
-    import data_ingestion_pipeline_spark.operators.inference_stats as I
 
     rows = [("2024-01-01 00:00:0%d" % i,
              "purchase" if i < 3 else "view") for i in range(10)]
@@ -266,9 +253,6 @@ def test_wilson_ci_hand_computed(spark):
 def test_anova_two_group_equals_t_squared(spark):
     """For k=2 groups, F must equal the pooled-variance t² (classic
     identity), and eta_sq = SSB/(SSB+SSW) in [0, 1]."""
-    from unittest import mock
-
-    import data_ingestion_pipeline_spark.operators.inference_stats as I
 
     ga = [1.0, 2.0, 3.0, 4.0]
     gb = [6.0, 7.0, 8.0, 9.0]
@@ -276,7 +260,6 @@ def test_anova_two_group_equals_t_squared(spark):
     df = spark.createDataFrame(rows, "event_type string, value double")
     with mock.patch.object(I, "load_table", lambda s, d, t: df):
         r = I.oneway_anova_event_values(spark, "unused").collect()[0]
-    import statistics
 
     na, nb = len(ga), len(gb)
     sp2 = (
@@ -291,10 +274,6 @@ def test_anova_two_group_equals_t_squared(spark):
 
 
 def test_gini_uniform_spend_is_zero(spark):
-    from unittest import mock
-
-    import data_ingestion_pipeline_spark.operators.inference_stats as I
-
     rows = [(c, 100.0) for c in range(1, 21)]
     df = spark.createDataFrame(rows, "o_custkey long, o_totalprice double")
     with mock.patch.object(I, "load_table", lambda s, d, t: df):
@@ -309,9 +288,6 @@ def test_gini_uniform_spend_is_zero(spark):
 def test_cooks_distance_flags_planted_outlier(spark):
     """Points on y=2x plus one gross outlier: the outlier must rank
     first, and every leverage must obey 1/n <= h <= 1."""
-    from unittest import mock
-
-    import data_ingestion_pipeline_spark.operators.inference_stats as I
 
     rows = [(1, i, float(i), 2.0 * i) for i in range(1, 30)]
     rows.append((1, 30, 30.0, 500.0))  # outlier at the high-leverage end
@@ -332,9 +308,6 @@ def test_cooks_distance_flags_planted_outlier(spark):
 def test_hill_alpha_recovers_pareto_exponent(spark):
     """Deterministic Pareto(α=2) quantile sample: x_i = (i/N)^(-1/2);
     the Hill estimate over the top 100 must land near 2."""
-    from unittest import mock
-
-    import data_ingestion_pipeline_spark.operators.inference_stats as I
 
     N = 2000
     rows = [(i, (i / N) ** -0.5) for i in range(1, N + 1)]
@@ -350,9 +323,6 @@ def test_ar2_phi_identities_from_rho(spark):
     """φ must satisfy the Yule–Walker correlation identities against the
     published ρ, and the AR(2) fit of a linear-trend daily series must
     produce ρ1 near 1 (strong serial dependence)."""
-    from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-        ar2_yule_walker_daily,
-    )
 
     r = ar2_yule_walker_daily(spark, SF_SMOKE).collect()[0]
     r1, r2 = r.rho1, r.rho2
@@ -362,17 +332,9 @@ def test_ar2_phi_identities_from_rho(spark):
     assert r.n_days > 10
 
 
-# ---------------------------------------------------------------------------
-# Tukey HSD / Brown–Forsythe — post-hoc & assumption checks
-# ---------------------------------------------------------------------------
-
-
 def test_tukey_two_groups_q_is_sqrt2_t(spark):
     """With k=2 equal-size groups, q = √2·t (pooled t) — the classic
     studentized-range identity."""
-    from unittest import mock
-
-    import data_ingestion_pipeline_spark.operators.inference_stats as I
 
     ga = [1.0, 2.0, 3.0, 4.0]
     gb = [6.0, 7.0, 8.0, 9.0]
@@ -383,7 +345,6 @@ def test_tukey_two_groups_q_is_sqrt2_t(spark):
     assert len(out) == 1
     r = out[0]
     assert (r.type_a, r.type_b) == ("a", "b")
-    import statistics
 
     sp2 = (3 * statistics.variance(ga) + 3 * statistics.variance(gb)) / 6
     t = abs(statistics.mean(ga) - statistics.mean(gb)) / (
@@ -398,9 +359,6 @@ def test_tukey_two_groups_q_is_sqrt2_t(spark):
 def test_levene_bf_equal_spread_groups(spark):
     """Two groups that are shifted copies (identical spread around their
     medians) must give BF F ≈ 0; the output degrees line up."""
-    from unittest import mock
-
-    import data_ingestion_pipeline_spark.operators.inference_stats as I
 
     ga = [1.0, 2.0, 3.0, 4.0, 5.0]
     gb = [v + 100.0 for v in ga]  # pure location shift
@@ -413,16 +371,7 @@ def test_levene_bf_equal_spread_groups(spark):
     assert abs(r.eta_sq) < 1e-9
 
 
-# ---------------------------------------------------------------------------
-# TPC-H classic tier
-# ---------------------------------------------------------------------------
-
-
 def test_tpch_q1_group_grid_and_bounds(spark):
-    from data_ingestion_pipeline_spark.operators.tpch_queries import (
-        tpch_q1_pricing_summary,
-    )
-
     out = tpch_q1_pricing_summary(spark, SF_SMOKE).collect()
     assert {(r.l_returnflag, r.l_linestatus) for r in out} <= {
         (f, s) for f in "ANR" for s in "FO"
@@ -436,10 +385,6 @@ def test_tpch_q1_group_grid_and_bounds(spark):
 
 
 def test_tpch_q3_head_is_sorted_and_bounded(spark):
-    from data_ingestion_pipeline_spark.operators.tpch_queries import (
-        tpch_q3_shipping_priority,
-    )
-
     out = tpch_q3_shipping_priority(spark, SF_SMOKE).collect()
     assert 0 < len(out) <= 10
     revs = [r.revenue for r in out]
@@ -450,9 +395,6 @@ def test_tpch_q5_counts_only_local_suppliers(spark):
     """Hand fixture: two lineitems on one ASIA order — one supplied from
     the customer's own nation (counted), one from a different nation
     (dropped). The local-supplier constraint is the whole point of Q5."""
-    from unittest import mock
-
-    import data_ingestion_pipeline_spark.operators.tpch_queries as T
 
     tables = {
         "region": spark.createDataFrame(
@@ -489,18 +431,14 @@ def test_tpch_q5_counts_only_local_suppliers(spark):
             "l_discount double, l_tax double",
         ),
     }
-    with mock.patch.object(T, "load_table", lambda s, d, t: tables[t]):
-        out = T.tpch_q5_local_supplier_volume(spark, "unused").collect()
+    with mock.patch.object(t, "load_table", lambda s, d, name: tables[name]):
+        out = t.tpch_q5_local_supplier_volume(spark, "unused").collect()
     assert len(out) == 1
     assert out[0].n_name == "N_A"
     assert out[0].revenue == 90.0  # 100 * (1 - 0.1); remote line excluded
 
 
 def test_tpch_q8_share_bounds(spark):
-    from data_ingestion_pipeline_spark.operators.tpch_queries import (
-        tpch_q8_market_share,
-    )
-
     out = tpch_q8_market_share(spark, SF_SMOKE).collect()
     assert len(out) >= 1
     for r in out:
@@ -510,10 +448,6 @@ def test_tpch_q8_share_bounds(spark):
 
 
 def test_tpch_q10_top20_descending(spark):
-    from data_ingestion_pipeline_spark.operators.tpch_queries import (
-        tpch_q10_returned_items,
-    )
-
     out = tpch_q10_returned_items(spark, SF_SMOKE).collect()
     assert 0 < len(out) <= 20
     revs = [r.revenue for r in out]
@@ -525,9 +459,6 @@ def test_excision_short_exact_copies_stay_intact(spark):
     """Docs shorter than k=8 tokens contribute no windows: exact copies of
     a 5-token doc must BOTH survive untouched (sub-k spans are outside the
     >=k-token excision contract)."""
-    from data_ingestion_pipeline_spark.operators.llm_data import (
-        exact_substring_excision,
-    )
 
     rows = [(1, "tiny doc of five tokens"), (2, "tiny doc of five tokens")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -540,7 +471,6 @@ def test_knn_local_topk_breaks_ties_by_nbr_id(spark):
     """Duplicate embeddings tie at 6 decimals: the block-local top-k must
     keep the SMALLEST nbr_ids among the tied candidates (the global
     window's and the oracle's order), not an arbitrary argpartition pick."""
-    from data_ingestion_pipeline_spark.similarity.knn import knn_graph
 
     # one query vector + 8 identical neighbors (all score 1.0): k=3 must
     # select nbr_ids 2,3,4 deterministically
@@ -559,7 +489,6 @@ def test_strided_sample_empty_stride_fallback(spark):
     """An id space that misses every stride multiple (all-odd ids, even
     stride) must fall back to the smallest ids instead of returning an
     empty sample that would crash the codebook Lloyd."""
-    from data_ingestion_pipeline_spark.similarity.ivf import sample_centroids
 
     rows = [(2 * i + 1, [float(i), 1.0]) for i in range(64)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
@@ -576,10 +505,6 @@ def test_strided_sample_empty_stride_fallback(spark):
 def test_star_contraction_keeps_self_pair_singletons(spark):
     """A node that appears only in self-pairs must get a (node, node) row
     from BOTH component implementations — the shared output contract."""
-    from data_ingestion_pipeline_spark.dedup.clustering import (
-        connected_components,
-        connected_components_star,
-    )
 
     pairs = spark.createDataFrame(
         [(5, 5), (1, 2), (2, 3)], "id_a long, id_b long"
@@ -597,12 +522,6 @@ def test_ivfpq_adc_table_is_exact_inner_product_decomposition(spark):
     exactly, ADC must reproduce q·v EXACTLY (q·c + q·r̂ with r̂ = r): the
     residual-query table form this replaced was off by −c·r̂ per
     candidate."""
-    import numpy as np
-
-    from data_ingestion_pipeline_spark.similarity.ivfpq import (
-        ivfpq_encode,
-        train_ivfpq,
-    )
 
     rng = np.random.default_rng(3)
     vecs = rng.normal(size=(32, 4)).round(3)
@@ -627,11 +546,6 @@ def test_sessionize_subsecond_gap_splits_sessions(spark):
     to whole seconds read it as 300 and merged the sessions (diverging
     from both the >gap contract and session_window); the double cast
     keeps the fraction."""
-    import datetime as dt
-
-    from data_ingestion_pipeline_spark.streaming.windows import (
-        sessionize_gaps_and_islands,
-    )
 
     t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
     rows = [
@@ -646,10 +560,6 @@ def test_sessionize_subsecond_gap_splits_sessions(spark):
 
 
 def test_check_rules_dotted_rule_names(spark):
-    from pyspark.sql import functions as F
-
-    from data_ingestion_pipeline_spark.plans.quality import check_rules
-
     df = spark.createDataFrame([(1, 2.0), (2, None)], "x long, a double")
     out = {
         r.rule: r.n_violations
@@ -662,8 +572,6 @@ def test_check_rules_dotted_rule_names(spark):
 
 
 def test_morton_key_empty_and_allnull_inputs(spark):
-    from data_ingestion_pipeline_spark.plans.zorder import morton_key
-
     empty = spark.createDataFrame([], "a double, b double")
     assert empty.select(morton_key(empty, ["a", "b"]).alias("k")).collect() == []
     allnull = spark.createDataFrame(
@@ -679,10 +587,6 @@ def test_fixed_width_null_field_roundtrips(spark, tmp_path):
     """A NULL field must write as an all-blank field and read back NULL —
     concat's null-propagation previously blanked the ENTIRE record,
     silently losing every other field of that row."""
-    from data_ingestion_pipeline_spark.sources.fixed_width import (
-        read_fixed_width,
-        write_fixed_width,
-    )
 
     spec = [("k", "bigint", 6), ("name", "string", 8), ("v", "double2", 10)]
     rows = [(1, "alpha", 2.5), (2, None, 7.25), (3, "gamma", None)]
@@ -694,12 +598,8 @@ def test_fixed_width_null_field_roundtrips(spark, tmp_path):
 
 
 def test_fixed_width_date8_width_validated(spark):
-    import pytest as _pytest
-
-    from data_ingestion_pipeline_spark.sources.fixed_width import write_fixed_width
-
     df = spark.createDataFrame([(1,)], "k long")
-    with _pytest.raises(ValueError, match="date8 requires width 8"):
+    with pytest.raises(ValueError, match="date8 requires width 8"):
         write_fixed_width(df, "/tmp/unused", [("k", "date8", 10)])
 
 
@@ -707,9 +607,6 @@ def test_jsonl_reader_drops_malformed_and_counts(spark, tmp_path):
     """Malformed lines are dropped at the reader, and a bare count() works
     (the PERMISSIVE + corrupt-column filter form raised
     QUERY_ONLY_CORRUPT_RECORD_COLUMN on corrupt-only queries)."""
-    from pyspark.sql import types as T
-
-    from data_ingestion_pipeline_spark.sources.jsonl_reader import read_jsonl
 
     p = tmp_path / "j"
     p.mkdir()
@@ -728,9 +625,6 @@ def test_asof_prev_carries_genuine_null_values(spark):
     """A right row whose VALUE is NULL is still the as-of match — the
     ignorenulls-on-value form fell through to a stale older value; and a
     null-timestamp right row must never match."""
-    import datetime as dt
-
-    from data_ingestion_pipeline_spark.functions.temporal import asof_join_prev
 
     t = lambda m: dt.datetime(2024, 1, 1, 0, m)  # noqa: E731
     left = spark.createDataFrame([(7, t(30))], "user_id long, ts timestamp")

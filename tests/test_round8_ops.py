@@ -4,21 +4,64 @@ fallback plumbing."""
 
 from __future__ import annotations
 
+import struct
+
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from data_ingestion_pipeline_spark.functions.vector import as_double_array
+from data_ingestion_pipeline_spark.multimodal.codecs import (
+    decode_bmp,
+    decode_wav_pcm16,
+    encode_bmp,
+    encode_wav_pcm16,
+)
+from data_ingestion_pipeline_spark.operators import evolution_checks as ev
+from data_ingestion_pipeline_spark.operators import llm_data as ll
+from data_ingestion_pipeline_spark.operators import temporal_checks as tc
+from data_ingestion_pipeline_spark.operators import tpch_queries as t
+from data_ingestion_pipeline_spark.operators.analytics_checks import (
+    item_item_cosine_topk_parts,
+    srm_check_events,
+)
+from data_ingestion_pipeline_spark.operators.inference_stats import (
+    kaplan_meier_user_retention,
+    logrank_test_retention_arms,
+    msprt_always_valid_ab_daily,
+)
+from data_ingestion_pipeline_spark.operators.llm_data import (
+    _ann_query_batch,
+    _near_dup_embeddings,
+    exact_substring_excision,
+)
+from data_ingestion_pipeline_spark.operators.mlprep_checks import (
+    simplified_silhouette_embeddings,
+)
+from data_ingestion_pipeline_spark.operators.pii import (
+    _PII_RULES,
+    _pii_corpus,
+    pii_detect_documents,
+    pii_redact_documents,
+)
+from data_ingestion_pipeline_spark.operators.streaming_checks import (
+    stateful_event_type_counts_pandas_events,
+)
+from data_ingestion_pipeline_spark.similarity.brute_force import topk_cosine_batch
+from data_ingestion_pipeline_spark.similarity.lsh import band_buckets
 from data_ingestion_pipeline_spark.sources.catalog import load_table
-from tests.conftest import SF_SMOKE
+from data_ingestion_pipeline_spark.sources.csv_reader import csv_source
+from data_ingestion_pipeline_spark.streaming.stateful import _update_type_counts
+from tests.conftest import SF_ORACLE, SF_SMOKE, executed_plan
 
 
 def test_stateful_counts_pandas_twin_matches_closed_form(spark):
-    """The applyInPandasWithState twin (round-7 verdict ask #3) must fold the
+    """The applyInPandasWithState twin must fold the
     planted two-batch replay into exactly 2x the base per-(user,type) counts
     — same contract the transformWithStateInPandas original carries where
     protobuf exists."""
-    from data_ingestion_pipeline_spark.operators.streaming_checks import (
-        stateful_event_type_counts_pandas_events,
-    )
 
     out = stateful_event_type_counts_pandas_events(spark, SF_SMOKE)
     direct = (
@@ -32,11 +75,6 @@ def test_stateful_counts_pandas_twin_matches_closed_form(spark):
 def test_stateful_counts_twin_state_roundtrip_is_exact():
     """The parallel-array map emulation must round-trip counts through the
     state tuple without loss or reorder nondeterminism."""
-    import pandas as pd
-
-    from data_ingestion_pipeline_spark.streaming.stateful import (
-        _update_type_counts,
-    )
 
     class FakeState:
         def __init__(self):
@@ -63,11 +101,6 @@ def test_stateful_counts_twin_state_roundtrip_is_exact():
     assert list(out2["n_events"]) == [1, 1, 3]
 
 
-# ---------------------------------------------------------------------------
-# LSH-gate cost pin (round-7 verdict ask #2)
-# ---------------------------------------------------------------------------
-
-
 @pytest.mark.parametrize(
     "n_bands,planes,collisions,candidates",
     [
@@ -86,11 +119,6 @@ def test_lsh_candidate_volume_pinned(spark, n_bands, planes, collisions, candida
     The r7 bench drift in this family (+20-40%) was box contention, NOT a
     count change — band_buckets/lsh_cosine_pairs are untouched since r6
     (git 516ddad..b0303bd shows only the exact-path block_grid refactor)."""
-    from data_ingestion_pipeline_spark.functions.vector import as_double_array
-    from data_ingestion_pipeline_spark.operators.llm_data import (
-        _near_dup_embeddings,
-    )
-    from data_ingestion_pipeline_spark.similarity.lsh import band_buckets
 
     aug = _near_dup_embeddings(load_table(spark, SF_SMOKE, "embeddings"))
     vecs = aug.select(
@@ -125,9 +153,6 @@ def test_csv_reader_drops_malformed_consistently(spark, tmp_path):
     all-NULL data (both observed). The reader's all-columns marker filter
     forces full-row parsing, so every projection sees one dropped-row set
     — mirrors the JSONL pin."""
-    from pyspark.sql import types as T
-
-    from data_ingestion_pipeline_spark.sources.csv_reader import csv_source
 
     p = tmp_path / "c"
     p.mkdir()
@@ -155,9 +180,6 @@ def test_excision_occ_encoding_wide_docs_and_guard(spark):
     a pos that would have overflowed the old multiplier, (b) an
     out-of-range doc_id fails loudly instead of corrupting a destructive
     rewrite."""
-    from data_ingestion_pipeline_spark.operators.llm_data import (
-        exact_substring_excision,
-    )
 
     # (a) doc 2 duplicates doc 1's 8-token span: doc 1 (earlier corpus
     # position) keeps, doc 2 excises — regardless of id magnitude below 2^31
@@ -179,29 +201,24 @@ def test_excision_occ_encoding_wide_docs_and_guard(spark):
     assert "encoding range" in str(ei.value)
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_tpch_completion_tier_plan_shapes(spark):
-    """The round-8 TPC-H additions must plan the shapes their docstrings
+    """These TPC-H queries must plan the shapes their docstrings
     claim: Q4's EXISTS as a left-semi (no row multiplication), Q19's
     disjunctive predicate inside a broadcast hash join (never a
     cartesian), Q18's head as a bounded TakeOrdered (never a global
     sort), Q6 zero-join with all three predicates pushed to the scan."""
-    from data_ingestion_pipeline_spark.operators import tpch_queries as t
 
-    q4 = _plan(t.tpch_q4_shaped_priority_check(spark, SF_SMOKE))
+    q4 = executed_plan(t.tpch_q4_shaped_priority_check(spark, SF_SMOKE))
     assert "LeftSemi" in q4
 
-    q19 = _plan(t.tpch_q19_shaped_discounted_revenue(spark, SF_SMOKE))
+    q19 = executed_plan(t.tpch_q19_shaped_discounted_revenue(spark, SF_SMOKE))
     assert "BroadcastHashJoin" in q19
     assert "CartesianProduct" not in q19
 
-    q18 = _plan(t.tpch_q18_large_volume_customers(spark, SF_SMOKE))
+    q18 = executed_plan(t.tpch_q18_large_volume_customers(spark, SF_SMOKE))
     assert "TakeOrderedAndProject" in q18
 
-    q6 = _plan(t.tpch_q6_forecast_revenue(spark, SF_SMOKE))
+    q6 = executed_plan(t.tpch_q6_forecast_revenue(spark, SF_SMOKE))
     assert "Join" not in q6
     assert "PushedFilters: [IsNotNull(l_shipdate)" in q6 or "GreaterThanOrEqual(l_shipdate" in q6
 
@@ -210,7 +227,6 @@ def test_tpch_q15_ties_and_q22_threshold(spark):
     """Q15 returns EVERY supplier at the max (tie contract) and its
     total_revenue equals the max of the supplier-grain aggregate; Q22's
     population is exactly the above-positive-average, dormant set."""
-    from data_ingestion_pipeline_spark.operators import tpch_queries as t
 
     top = t.tpch_q15_top_supplier(spark, SF_SMOKE).collect()
     assert len(top) >= 1
@@ -241,12 +257,6 @@ def test_pii_detect_and_redact_structural(spark):
     (residue 0 for every plant key) carries all four classes and lands in
     the high bucket; a clean doc stays clean; redaction leaves ZERO
     residual matches and preserves non-PII text."""
-    from data_ingestion_pipeline_spark.operators.pii import (
-        _PII_RULES,
-        _pii_corpus,
-        pii_detect_documents,
-        pii_redact_documents,
-    )
 
     det = {r.doc_id: r for r in pii_detect_documents(spark, SF_SMOKE).collect()}
     d0 = det[0]
@@ -282,12 +292,9 @@ def test_km_curve_contracts(spark):
     """Kaplan-Meier invariants: survival non-increasing over t, within
     (0,1], at-risk strictly decreasing, and the at-risk count at the
     first event time equals the full cohort minus earlier censors."""
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        kaplan_meier_user_retention,
-    )
 
     rows = (
-        kaplan_meier_user_retention(spark, "/root/testdata/sf0.01")
+        kaplan_meier_user_retention(spark, SF_ORACLE)
         .orderBy("t_hours")
         .collect()
     )
@@ -303,9 +310,6 @@ def test_item_item_topk_contracts(spark):
     """Item-item neighbors: ranked 1..<=10 per item without gaps, cosine
     non-increasing within an item, and cosine(i,j) consistent with the
     symmetric entry when both directions survive the top-k cut."""
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        item_item_cosine_topk_parts,
-    )
 
     rows = item_item_cosine_topk_parts(spark, SF_SMOKE).collect()
     assert rows
@@ -326,17 +330,11 @@ def test_silhouette_bounds_and_srm_sanity(spark):
     """Silhouette means lie in [-1, 1]; the md5 50/50 split on this
     corpus must NOT trigger SRM (a deterministic fair hash cannot
     mismatch its own declared ratio beyond chance)."""
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        srm_check_events,
-    )
-    from data_ingestion_pipeline_spark.operators.mlprep_checks import (
-        simplified_silhouette_embeddings,
-    )
 
     sil = simplified_silhouette_embeddings(spark, SF_SMOKE).collect()
     assert sil and all(-1.0 <= r.mean_silhouette <= 1.0 for r in sil)
 
-    srm = srm_check_events(spark, "/root/testdata/sf0.01").collect()[0]
+    srm = srm_check_events(spark, SF_ORACLE).collect()[0]
     assert srm.n_a + srm.n_b == 150
     assert not srm.srm_flag
 
@@ -345,13 +343,8 @@ def test_logrank_msprt_contracts(spark):
     """Cross-surface contracts: log-rank observed events split the KM
     curve's total churns between the arms; mSPRT's p is non-increasing
     over days and in (0,1]."""
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        kaplan_meier_user_retention,
-        logrank_test_retention_arms,
-        msprt_always_valid_ab_daily,
-    )
 
-    sf = "/root/testdata/sf0.01"
+    sf = SF_ORACLE
     lr = logrank_test_retention_arms(spark, sf).collect()[0]
     km_total = sum(
         r.d_events for r in kaplan_meier_user_retention(spark, sf).collect()
@@ -370,10 +363,9 @@ def test_dpp_ship_year_join_plans_dynamic_pruning(spark):
     fact scan carries a dynamicpruningexpression partition filter (the
     year set is join-produced, not foldable), and the surviving years are
     exactly the ship-window years — static recompute agrees."""
-    from data_ingestion_pipeline_spark.operators import evolution_checks as ev
 
     df = ev.dpp_ship_year_join_orders(spark, SF_SMOKE)
-    assert "dynamicpruningexpression" in _plan(df)
+    assert "dynamicpruningexpression" in executed_plan(df)
     rows = {r["o_year"]: r["n_orders"] for r in df.collect()}
     assert set(rows) == {1997, 1998, 1999}
 
@@ -393,7 +385,6 @@ def test_growth_accounting_identities(spark):
     resurrected per day; retained(d) = dau(d-1) - churned(d) on contiguous
     days (every fixture day has actives); total new across days = distinct
     users; day 1 churns nobody."""
-    from data_ingestion_pipeline_spark.operators import temporal_checks as tc
 
     rows = sorted(
         tc.growth_accounting_daily_users(spark, SF_SMOKE).collect(),
@@ -417,11 +408,6 @@ def test_matryoshka_full_width_slice_is_identity(spark):
     row per (dim, probe); and slicing to the FULL width must reproduce the
     full top-10 exactly (overlap = 10 for every probe) — the strongest
     exactness pin available without trusting any approximate band."""
-    from data_ingestion_pipeline_spark.operators import llm_data as ll
-    from data_ingestion_pipeline_spark.operators.llm_data import _ann_query_batch
-    from data_ingestion_pipeline_spark.similarity.brute_force import (
-        topk_cosine_batch,
-    )
 
     out = ll.matryoshka_truncation_recall_embeddings(spark, SF_SMOKE).collect()
     assert len(out) == 9
@@ -446,16 +432,6 @@ def test_codecs_roundtrip_and_format_conformance():
     the odd-width padded-row case and the top-down negative-height BMP
     variant) and emit spec-conformant headers; the WAV decoder must walk
     past interleaved metadata chunks."""
-    import struct
-
-    import numpy as np
-
-    from data_ingestion_pipeline_spark.multimodal.codecs import (
-        decode_bmp,
-        decode_wav_pcm16,
-        encode_bmp,
-        encode_wav_pcm16,
-    )
 
     rng = np.random.RandomState(7)
     for h, w in [(8, 13), (1, 1), (5, 4), (3, 7)]:

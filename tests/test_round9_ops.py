@@ -8,14 +8,52 @@ and equality_delete left a renamed sidecar attached when the final lock
 acquisition timed out (half-applied delete visible to readers).
 """
 
+from __future__ import annotations
+
+import fcntl
+import gc
+import hashlib
+import itertools
+import math
 import os
 import threading
 import time
+from collections import Counter
 
+import numpy as np
 import pytest
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from data_ingestion_pipeline_spark.operators import tpch_queries as t
+from data_ingestion_pipeline_spark.operators.analytics_checks import (
+    absorbing_expected_steps_to_purchase,
+    fellegi_sunter_part_linkage,
+    hits_authorities_parts,
+    kcore_peel_copurchase_parts,
+    mann_kendall_daily_trend,
+    mutual_information_event_dow,
+)
+from data_ingestion_pipeline_spark.operators.corpus_quality import (
+    bigram_perplexity_documents,
+)
+from data_ingestion_pipeline_spark.operators.inference_stats import (
+    eb_shrunk_purchase_rate_users,
+    jackknife_ratio_metric_ab,
+)
+from data_ingestion_pipeline_spark.operators.llm_data import (
+    ann_pq_sample_adc_topk_embeddings,
+    minhash_md5_replay_near_dup_documents,
+    simhash_md5_replay_near_dup_documents,
+)
+from data_ingestion_pipeline_spark.operators.mlprep_checks import (
+    textrank_terms_documents,
+)
 from data_ingestion_pipeline_spark.plans.table import ManagedTable
+from data_ingestion_pipeline_spark.similarity.pq import train_codebooks
+from tests.conftest import write_sf
+from tests.test_analytics import _levenshtein
+from tests.test_plans import QUERIES
 
 
 def _mk(spark, tmp_path, name="t"):
@@ -76,7 +114,6 @@ def test_ptr_lock_inode_check_bounces_orphaned_acquisition(spark, tmp_path):
 
     # a real acquisition must succeed despite the orphan holding a flock on
     # the dead inode (fresh path -> fresh inode -> no contention)
-    import fcntl
 
     fcntl.flock(orphan, fcntl.LOCK_EX | fcntl.LOCK_NB)
     fd = t._ptr_locked()
@@ -97,71 +134,62 @@ def test_ptr_lock_inode_check_bounces_orphaned_acquisition(spark, tmp_path):
     ],
 )
 def test_pinned_operators_leave_no_catalog_cache(spark, qname, sf_dir):
-    """Round-8 verdict ask #4: the four operators that pin a shared subtree
-    must not leave CacheManager entries behind — a long-lived library
-    session calling them repeatedly previously accumulated cached
-    partitions until someone called clearCache(). The pins are now lazy
-    localCheckpoints: RDD-level blocks, reclaimed by the ContextCleaner
-    when the result DataFrame is garbage-collected."""
-    import gc
-    import time as _time
-
-    from data_ingestion_pipeline_spark import registry
-
-    def _drain_to_floor(deadline_s: float) -> int:
-        """Poll the async ContextCleaner until getPersistentRDDs stops
-        shrinking (or hits 0); returns the floor reached."""
-        sc = spark.sparkContext
-        floor = sc._jsc.sc().getPersistentRDDs().size()
-        deadline = _time.monotonic() + deadline_s
-        while floor > 0 and _time.monotonic() < deadline:
-            gc.collect()
-            sc._jvm.System.gc()
-            _time.sleep(0.5)
-            floor = min(floor, sc._jsc.sc().getPersistentRDDs().size())
-        return floor
-
+    """The operators that pin a shared subtree must not leave CacheManager
+    entries behind — a long-lived library session calling them repeatedly
+    previously accumulated cached partitions until someone called
+    clearCache(). The pins are lazy localCheckpoints: RDD-level blocks,
+    reclaimed by the ContextCleaner when the result DataFrame is
+    garbage-collected. Leftovers are attributed by RDD id: no RDD created
+    after the query started may keep stored blocks, whatever an earlier
+    test's blocks are still draining."""
+    sc = spark.sparkContext
     cache_mgr = spark._jsparkSession.sharedState().cacheManager()
     cache_mgr.clearCache()
-    assert cache_mgr.isEmpty()
-    # baseline-relative, not absolute zero: the shared session may still be
-    # draining a PREVIOUS test's checkpoint blocks (the cleaner is async)
-    before = _drain_to_floor(15.0)
+    first_id = sc.parallelize([0]).id()  # RDD ids only grow
 
-    df = registry._REGISTRY[qname][0](spark, sf_dir)
+    def leftovers():
+        # RDDInfo snapshots, not the RDDs: a py4j proxy of an RDD (or of the
+        # getPersistentRDDs map) keeps it strongly reachable until py4j's
+        # finalizer thread releases it up to a second later, so polling
+        # through such proxies would itself keep the pins alive.
+        return {
+            info.id(): info.callSite()
+            for info in sc._jsc.sc().getRDDStorageInfo()
+            if info.id() > first_id
+        }
+
+    df = QUERIES[qname](spark, sf_dir)
     assert df.count() >= 0  # materialize through the pinned subtree
     assert cache_mgr.isEmpty(), f"{qname} left a CacheManager entry behind"
+    assert leftovers(), f"{qname} no longer pins a subtree"
 
-    # the checkpoint blocks themselves are GC-owned: dropping the result
-    # reference lets the ContextCleaner unpersist them (async — poll).
-    # One wrinkle, found empirically: Spark retains RECENT executions (and
-    # through them the checkpoint RDDs) until later queries displace them —
-    # steady-state retention is bounded, but a SINGLE displacing query is
-    # not always enough (observed: one displacement + 60 s of System.gc()
-    # polling still left all 6 of canonical_entities' pins; displacing
-    # every few poll iterations drained the same pins within 2-16 s across
-    # repeated trials). So the no-op displacement runs INSIDE the loop.
+    # Dropping the result lets the ContextCleaner unpersist the blocks
+    # (async — poll). Spark also retains RECENT executions (and through
+    # them the checkpoint RDDs) until later queries displace them, and a
+    # single displacing query is not always enough (observed: one
+    # displacement + 60 s of System.gc() polling still left all 6 of
+    # canonical_entities' pins; displacing every few poll iterations
+    # drained them within 2-16 s). So the no-op displacement runs INSIDE
+    # the loop.
     del df
-    deadline = _time.monotonic() + 60.0
+    deadline = time.monotonic() + 60.0
     it = 0
-    while _time.monotonic() < deadline:
+    while leftovers() and time.monotonic() < deadline:
         gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        if spark.sparkContext._jsc.sc().getPersistentRDDs().size() <= before:
-            break
+        sc._jvm.System.gc()
         if it % 5 == 0:
             spark.range(1).count()
         it += 1
-        _time.sleep(0.5)
-    after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    assert after <= before, (
-        f"{qname}'s checkpoint blocks were not GC-reclaimed "
-        f"({before} persistent RDDs before, {after} after)"
+        time.sleep(0.5)
+    left = leftovers()
+    assert not left, (
+        f"{qname}'s checkpoint blocks were not GC-reclaimed; RDDs with stored "
+        f"blocks (id: callSite) left: {left}"
     )
 
 
 def test_equality_delete_rolls_back_sidecar_on_lock_timeout(spark, tmp_path):
-    """ADVICE round-8 #2: if the post-rename lock acquisition fails, the
+    """If the post-rename lock acquisition fails, the
     already-attached sidecar must be detached before the error propagates —
     otherwise readers of the unchanged version see a half-applied delete."""
     t = _mk(spark, tmp_path)
@@ -183,21 +211,13 @@ def test_bigram_perplexity_hand_computed(spark, tmp_path):
     model: doc 10 = "a b a b", doc 11 = "a b c". Model: c(a,b)=3, c(b,a)=1,
     c(b,c)=1; contexts c(a,.)=3, c(b,.)=2; V=3. NLLs follow the exact
     ln-term rounding policy the operator declares."""
-    import math
 
-    from data_ingestion_pipeline_spark.operators.corpus_quality import (
-        bigram_perplexity_documents,
-    )
-
-    spark.createDataFrame(
+    docs = spark.createDataFrame(
         [(10, "a b a b", "s"), (11, "a b c", "s")],
         "doc_id long, text string, source string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-
-    got = {
-        r.doc_id: r
-        for r in bigram_perplexity_documents(spark, str(tmp_path)).collect()
-    }
+    )
+    sf = write_sf(tmp_path, documents=docs)
+    got = {r.doc_id: r for r in bigram_perplexity_documents(spark, sf).collect()}
 
     def r9ln(x):
         return round(math.log(x), 9)
@@ -215,17 +235,13 @@ def test_bigram_perplexity_hand_computed(spark, tmp_path):
     # the repeated-transition doc is more fluent under the corpus model
     assert got[10].ppl < got[11].ppl
 
+
 def test_hits_one_iteration_is_normalized_indegree(spark, sf_dir):
     """With h0 = 1, the first authority vector is the L2-normalized
     in-degree of each part in the distinct (customer, part) edge set —
     computable directly, so the iterative machinery is pinned against a
     closed form (the same style of gate pagerank's oracle unrolling gets
     from its r1 = 0.15/n + 0.85·indeg/outdeg closed form)."""
-    import math
-
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        hits_authorities_parts,
-    )
 
     got = {
         r["p_partkey"]: r["authority"]
@@ -260,12 +276,6 @@ def test_pq_sample_codebooks_are_the_strided_sample(spark, sf_dir):
     subvectors verbatim (first-K init, zero Lloyd steps) — the property
     the ann_pq_sample_adc oracle's cent CTE replays; and the ADC query's
     top hit for the vec_id=0 query is vec 0 itself on these fixtures."""
-    import numpy as np
-
-    from data_ingestion_pipeline_spark.operators.llm_data import (
-        ann_pq_sample_adc_topk_embeddings,
-    )
-    from data_ingestion_pipeline_spark.similarity.pq import train_codebooks
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     books = train_codebooks(emb, n_subspaces=8, n_codes=16, sample_size=16, n_iters=0)
@@ -285,14 +295,12 @@ def test_pq_sample_codebooks_are_the_strided_sample(spark, sf_dir):
     assert len(top) == 20
     assert top[0]["vec_id"] == 0  # ADC self-match leads on these fixtures
 
+
 def test_kcore_round6_is_the_fixpoint(spark, sf_dir):
     """The docstring's exactness claim: at rounds=6 the peel has stabilized
     on the fixtures, so round 7 returns the identical relation (the output
     IS the k-core, not a truncation), every survivor's degree is >= k, and
     k matches the max(E//N, 2) policy computed independently."""
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        kcore_peel_copurchase_parts,
-    )
 
     r6 = {
         (r["p_partkey"], r["core_degree"])
@@ -325,6 +333,7 @@ def test_kcore_round6_is_the_fixpoint(spark, sf_dir):
     k = max(m // max(n, 1), 2)
     assert min(d for _, d in r6) >= k
 
+
 def test_md5_replay_dedup_siblings_structural(spark, sf_dir):
     """Structural gates for the two md5-replay dedup siblings (their value
     correctness is hash-checked by the DuckDB oracles; this pins the
@@ -334,10 +343,6 @@ def test_md5_replay_dedup_siblings_structural(spark, sf_dir):
     simhash replay returns only pairs within the pigeonhole's hamming<=3
     contract (planted pairs mostly exceed hamming 3 under 20% token churn
     -- a property of SimHash, so only SOME planted pairs appear)."""
-    from data_ingestion_pipeline_spark.operators.llm_data import (
-        minhash_md5_replay_near_dup_documents,
-        simhash_md5_replay_near_dup_documents,
-    )
 
     mh = minhash_md5_replay_near_dup_documents(spark, sf_dir).collect()
     planted = {(r["id_a"], r["id_b"]) for r in mh if r["id_b"] == r["id_a"] + 1000000}
@@ -351,14 +356,12 @@ def test_md5_replay_dedup_siblings_structural(spark, sf_dir):
     assert sh and all(0 <= r["hamming"] <= 3 for r in sh)
     assert any(r["id_b"] == r["id_a"] + 1000000 for r in sh)
 
+
 def test_textrank_one_iteration_closed_form(spark, sf_dir):
     """With WS0 = 1, the first TextRank iterate is the closed form
     0.15 + 0.85 * sum_u w_uv / S(u) — computed directly here from the
     same adjacency counts, pinning the weighted-propagation machinery
     (the HITS normalized-indegree gate's analog for the weighted loop)."""
-    from data_ingestion_pipeline_spark.operators.mlprep_checks import (
-        textrank_terms_documents,
-    )
 
     got = {
         r["term"]: r["textrank"]
@@ -379,7 +382,6 @@ def test_textrank_one_iteration_closed_form(spark, sf_dir):
         .filter(F.col("w1") != F.col("w2"))
         .collect()
     )
-    from collections import Counter
 
     w = Counter()
     for r in rows:
@@ -398,17 +400,12 @@ def test_textrank_one_iteration_closed_form(spark, sf_dir):
         assert abs(got[v] - expect) < 1e-6, v
     assert all(s >= 0.15 for s in got.values())
 
+
 def test_mutual_information_matches_direct_computation(spark, sf_dir):
     """MI components recomputed directly from the contingency table with
     python floats under the same integer-ln-rounded policy; the total MI
     (sum of per-type components) must be non-negative (it is an exact MI,
     only the ln terms are rounded at 1e-9)."""
-    import math
-    from collections import Counter
-
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        mutual_information_event_dow,
-    )
 
     got = {
         r["event_type"]: r["mi_component"]
@@ -439,16 +436,12 @@ def test_mutual_information_matches_direct_computation(spark, sf_dir):
         assert abs(got[x] - expect[x]) < 1e-6, x
     assert sum(got.values()) >= -1e-9
 
+
 def test_absorbing_expected_steps_numpy_parity(spark, sf_dir):
     """Truncated-Neumann expected steps recomputed with numpy from the
     same bigram stream; also pins the truncation semantics: every value
     lies in [1, horizon] and the horizon-6 iterate dominates horizon-5
     (the recursion is monotone toward the true expectation)."""
-    import numpy as np
-
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        absorbing_expected_steps_to_purchase,
-    )
 
     got = {
         r["event_type"]: r["expected_steps_h6"]
@@ -462,7 +455,6 @@ def test_absorbing_expected_steps_numpy_parity(spark, sf_dir):
     }
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    from pyspark.sql import Window as W
 
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     rows = (
@@ -472,7 +464,6 @@ def test_absorbing_expected_steps_numpy_parity(spark, sf_dir):
         .count()
         .collect()
     )
-    from collections import Counter
 
     c = {(r["event_type"], r["nxt"]): r["count"] for r in rows}
     tot = Counter()
@@ -493,17 +484,13 @@ def test_absorbing_expected_steps_numpy_parity(spark, sf_dir):
         assert 1.0 <= got[x] <= 6.0
         assert got[x] >= h5[x] - 1e-9
 
+
 def test_fellegi_sunter_equals_brute_force_enumeration(spark, sf_dir):
     """The candidate-union + closed-form-u design must return EXACTLY the
     positive-weight pairs of the naive full blocked enumeration (a pair
     disagreeing on every field has strictly negative weight, so the union
     of per-field agreement joins loses nothing) — asserted pairwise
     including n_agree and the rounded weight."""
-    import math
-
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        fellegi_sunter_part_linkage,
-    )
 
     got = {
         (r["a_partkey"], r["b_partkey"]): (r["n_agree"], r["weight"])
@@ -512,18 +499,6 @@ def test_fellegi_sunter_equals_brute_force_enumeration(spark, sf_dir):
 
     part = spark.read.parquet(f"{sf_dir}/part.parquet").collect()
     rows = [(r["p_partkey"], r["p_name"], r["p_brand"], r["p_type"], r["p_size"]) for r in part]
-    import itertools
-
-    def lev(s, t):
-        if len(s) < len(t):
-            s, t = t, s
-        prev = list(range(len(t) + 1))
-        for i, cs in enumerate(s):
-            cur = [i + 1]
-            for j, ct in enumerate(t):
-                cur.append(min(prev[j + 1] + 1, cur[j] + 1, prev[j] + (cs != ct)))
-            prev = cur
-        return prev[-1]
 
     pairs = [
         (a, b)
@@ -531,7 +506,7 @@ def test_fellegi_sunter_equals_brute_force_enumeration(spark, sf_dir):
         if a[4] == b[4]
     ]
     flags = [
-        (a[0], b[0], int(lev(a[1], b[1]) <= 1), int(a[2] == b[2]), int(a[3] == b[3]))
+        (a[0], b[0], int(_levenshtein(a[1], b[1]) <= 1), int(a[2] == b[2]), int(a[3] == b[3]))
         for a, b in pairs
     ]
     n = len(flags)
@@ -557,18 +532,13 @@ def test_fellegi_sunter_equals_brute_force_enumeration(spark, sf_dir):
         assert got[k][0] == expect[k][0]
         assert abs(got[k][1] - expect[k][1]) < 1e-6
 
+
 def test_jackknife_ratio_matches_direct_replicates(spark, sf_dir):
     """SE recomputed from explicitly materialized leave-one-user-out
     replicates in python (the definitional centered form, not the
     computational one the operator uses) — pins both the replicate
     algebra and that the guard/cancellation shortcuts cost nothing at
     fixture scale."""
-    import hashlib
-    import math
-
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        jackknife_ratio_metric_ab,
-    )
 
     got = {
         r["arm"]: (r["n_users"], r["ratio_metric"], r["jackknife_se"])
@@ -597,15 +567,13 @@ def test_jackknife_ratio_matches_direct_replicates(spark, sf_dir):
         assert abs(got[a][1] - sx / sy) < 1e-4
         assert abs(got[a][2] - se) < 1e-6, (a, got[a][2], se)
 
+
 def test_eb_shrinkage_pulls_toward_prior_mean(spark, sf_dir):
     """Structural contract of beta-binomial shrinkage: every shrunken rate
     lies strictly between its raw rate and the fitted prior mean (or
     equals both when they coincide), users with MORE events shrink LESS
     (monotone weights n/(n+c0)), and the moment fit itself is re-derived
     in python."""
-    from data_ingestion_pipeline_spark.operators.inference_stats import (
-        eb_shrunk_purchase_rate_users,
-    )
 
     rows = eb_shrunk_purchase_rate_users(spark, sf_dir).collect()
     ps = [r["n_purchases"] / r["n_events"] for r in rows]
@@ -621,7 +589,6 @@ def test_eb_shrinkage_pulls_toward_prior_mean(spark, sf_dir):
         expect = (r["n_purchases"] + m * c0) / (r["n_events"] + c0)
         assert abs(sh - expect) < 1e-5
     # shrink factor |shrunk - raw| scaled by |raw - m| decreases with n
-    import math
     pairs = sorted(
         (r["n_events"], abs(r["shrunk_rate"] - r["raw_rate"]) / max(abs(r["raw_rate"] - m), 1e-9))
         for r in rows if abs(r["raw_rate"] - m) > 1e-3
@@ -631,17 +598,10 @@ def test_eb_shrinkage_pulls_toward_prior_mean(spark, sf_dir):
     high_n = sum(f for _, f in pairs[-third:]) / third
     assert high_n <= low_n + 1e-6
 
+
 def test_mann_kendall_matches_direct_computation(spark, sf_dir):
     """S, n_pairs, tie-corrected Var(S), and the continuity-corrected Z
-    recomputed directly from the collected daily series — the round-10
-    merged Mann-Kendall query (the weaker no-ties round-9 twin was
-    retired; this pins the SURVIVING query end to end)."""
-    import math
-    from collections import Counter
-
-    from data_ingestion_pipeline_spark.operators.analytics_checks import (
-        mann_kendall_daily_trend,
-    )
+    recomputed directly from the collected daily series."""
 
     row = mann_kendall_daily_trend(spark, sf_dir).collect()[0]
     daily = sorted(

@@ -8,17 +8,13 @@ import datetime as dt
 import os
 import shutil
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from data_ingestion_pipeline_spark import registry
 from data_ingestion_pipeline_spark.operators.streaming_checks import (
-    _stream_state_partitions,
     stateful_event_type_counts_events,
-    stateful_event_type_counts_pandas_events,
     streaming_chained_window_rollup_events,
-    streaming_interval_full_outer_events,
     streaming_interval_join_events,
 )
 from data_ingestion_pipeline_spark.pipeline import ingest_orders
@@ -30,7 +26,6 @@ from data_ingestion_pipeline_spark.streaming.ingest import (
 )
 from data_ingestion_pipeline_spark.streaming.joins import purchases_with_recent_views
 from data_ingestion_pipeline_spark.streaming.stateful import (
-    _update_type_counts,
     transform_with_state_available,
 )
 from data_ingestion_pipeline_spark.streaming.windows import (
@@ -47,6 +42,12 @@ def _write_orders_csv(path, rows):
         f.write(ORDERS_HEADER + "\n")
         for r in rows:
             f.write(r + "\n")
+
+
+def _mk_events(spark, rows):
+    return spark.createDataFrame(
+        rows, "event_id long, ts timestamp, user_id long, value double"
+    )
 
 
 def test_stream_ingest_foreachbatch_merge(spark, tmp_path):
@@ -119,12 +120,6 @@ def test_stream_and_batch_drop_the_same_malformed_rows(spark, tmp_path):
     for table in (batch_table, stream_table):
         got = [(r.order_id, r.product_id, r.quantity) for r in table.read().collect()]
         assert got == [("o1", "p1", 2)]
-
-
-def _mk_events(spark, rows):
-    return spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, value double"
-    )
 
 
 def test_streaming_dedup_drops_replayed_ids(spark, tmp_path):
@@ -235,92 +230,3 @@ def test_transform_with_state_gated_on_protobuf(spark):
         .agg((2 * F.count("*")).cast("bigint").alias("n_events"))
     )
     assert {tuple(r) for r in out.collect()} == {tuple(r) for r in direct.collect()}
-
-
-def test_sessionize_subsecond_gap_splits_sessions(spark):
-    """A 300.5 s gap exceeds the 5-minute threshold: truncating timestamps
-    to whole seconds read it as 300 and merged the sessions (diverging
-    from both the >gap contract and session_window); the double cast
-    keeps the fraction."""
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    rows = [
-        (1, t0, 7, 1.0),
-        (2, t0 + dt.timedelta(seconds=300, milliseconds=500), 7, 1.0),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, value double"
-    )
-    out = sessionize_gaps_and_islands(df, gap_minutes=5).collect()
-    assert len(out) == 2  # two sessions, not one
-
-
-def test_stateful_counts_pandas_twin_matches_closed_form(spark):
-    """The applyInPandasWithState twin must fold the
-    planted two-batch replay into exactly 2x the base per-(user,type) counts
-    — same contract the transformWithStateInPandas original carries where
-    protobuf exists."""
-
-    out = stateful_event_type_counts_pandas_events(spark, SF_SMOKE)
-    direct = (
-        load_table(spark, SF_SMOKE, "events")
-        .groupBy("user_id", "event_type")
-        .agg((2 * F.count("*")).cast("bigint").alias("n_events"))
-    )
-    assert {tuple(r) for r in out.collect()} == {tuple(r) for r in direct.collect()}
-
-
-def test_stateful_counts_twin_state_roundtrip_is_exact():
-    """The parallel-array map emulation must round-trip counts through the
-    state tuple without loss or reorder nondeterminism."""
-
-    class FakeState:
-        def __init__(self):
-            self.exists = False
-            self._v = None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self.exists = True
-            self._v = v
-
-    st = FakeState()
-    b1 = pd.DataFrame({"event_type": ["view", "view", "purchase", None]})
-    out1 = list(_update_type_counts((7,), [b1], st))[0]
-    # null event_type dropped (value_counts policy, same as the MapState twin)
-    assert list(out1["event_type"]) == ["purchase", "view"]
-    assert list(out1["n_events"]) == [1, 2]
-    b2 = pd.DataFrame({"event_type": ["view", "click"]})
-    out2 = list(_update_type_counts((7,), [b2], st))[0]
-    assert list(out2["event_type"]) == ["click", "purchase", "view"]
-    assert list(out2["n_events"]) == [1, 1, 3]
-
-
-def test_streaming_full_outer_has_both_null_directions(spark):
-    rows = streaming_interval_full_outer_events(spark, SF_SMOKE).collect()
-    n_null_view = sum(1 for r in rows if r["view_id"] is None)
-    n_null_purchase = sum(1 for r in rows if r["purchase_id"] is None)
-    n_matched = sum(
-        1 for r in rows if r["view_id"] is not None and r["purchase_id"] is not None
-    )
-    # the full-outer contract: all three row classes present, and every
-    # matched pair sits inside the band
-    assert n_matched > 0 and n_null_view > 0 and n_null_purchase > 0
-    for r in rows:
-        if r["secs_before"] is not None:
-            assert 0 <= r["secs_before"] <= 3600
-
-
-def test_stream_state_partitions_per_stream_default(spark):
-    """Commit-bound streams take 4 state partitions, Python-stateful
-    streams pass their own default (8); the session value comes back."""
-
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    with _stream_state_partitions(spark):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
-    with _stream_state_partitions(spark, default="8"):
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == old

@@ -4,9 +4,7 @@ merge-on-read deletes, time travel, and the snapshot commit protocol
 
 from __future__ import annotations
 
-import fcntl
 import os
-import threading
 import time
 from unittest import mock
 
@@ -14,9 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from data_ingestion_pipeline_spark.operators.lakehouse_checks import (
-    time_travel_orders_versions,
-)
 from data_ingestion_pipeline_spark.plans.merge import merge_upsert
 from data_ingestion_pipeline_spark.plans.schema_evolution import sync_table_schema
 from data_ingestion_pipeline_spark.plans.table import ConcurrentWriteError, ManagedTable
@@ -280,97 +275,3 @@ def test_occ_review_fixes(spark, tmp_path):
         assert committed[0] is read[0], f"{name} must commit the snapshot it read"
         assert read[0].version == t.current_version(), name
         assert read[0].sidecars == t._delete_sidecars(t.current_version()), name
-
-
-def test_time_travel_reads_both_versions(spark):
-    row = time_travel_orders_versions(spark, SF_SMOKE).first()
-    n_orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").count()
-    assert row.n_rows == n_orders
-    assert row.n_versions_retained == 2
-    assert row.n_changed > 0
-    assert abs(row.net_delta - 100.0 * row.n_changed) < 1.0
-
-
-def _mk(spark, tmp_path, name="t"):
-    t = ManagedTable(spark, str(tmp_path / name))
-    t.overwrite(spark.range(5).select(F.col("id").alias("k"), F.lit(1).alias("n")))
-    return t
-
-
-def test_ptr_lock_mutual_exclusion_and_crash_release(spark, tmp_path):
-    """The flock lock (a) excludes a second acquirer while held, (b) admits
-    it immediately after release, and (c) treats a crashed writer's leftover
-    lockFILE (present but not flocked — the fd died with the process) as
-    free, with no mtime-staleness window at all."""
-    t = _mk(spark, tmp_path)
-
-    fd = t._ptr_locked()
-    got: list[float] = []
-
-    def contender():
-        fd2 = t._ptr_locked()  # must block until the holder releases
-        got.append(time.monotonic())
-        t._ptr_unlock(fd2)
-
-    th = threading.Thread(target=contender)
-    th.start()
-    time.sleep(0.3)
-    assert not got, "second acquirer entered the critical section while held"
-    released = time.monotonic()
-    t._ptr_unlock(fd)
-    th.join(timeout=10)
-    assert got and got[0] >= released
-
-    # (c) crashed writer: a bare lockfile nobody flocks — acquirable at once
-    # (under the old design this required a 60 s mtime backdate)
-    lock = os.path.join(t.root, ".ptr_lock")
-    with open(lock, "w"):
-        pass
-    start = time.monotonic()
-    fd3 = t._ptr_locked()
-    assert time.monotonic() - start < 5.0
-    t._ptr_unlock(fd3)
-    assert not os.path.exists(lock)
-
-
-def test_ptr_lock_inode_check_bounces_orphaned_acquisition(spark, tmp_path):
-    """A waiter that acquires flock on an inode the holder has already
-    unlinked (path now names a different writer's fresh lock) must NOT
-    enter the critical section: the path-vs-fd inode verification retries
-    instead. Simulated directly: flock an orphan fd whose path was
-    re-created by another writer, then assert _ptr_locked excludes against
-    the PATH's current inode, not the orphan."""
-    t = _mk(spark, tmp_path)
-    lock = os.path.join(t.root, ".ptr_lock")
-
-    # orphan: open + unlink, so this fd's inode is unreachable via the path
-    orphan = os.open(lock, os.O_CREAT | os.O_WRONLY)
-    os.unlink(lock)
-
-    # a real acquisition must succeed despite the orphan holding a flock on
-    # the dead inode (fresh path -> fresh inode -> no contention)
-
-    fcntl.flock(orphan, fcntl.LOCK_EX | fcntl.LOCK_NB)
-    fd = t._ptr_locked()
-    assert os.fstat(fd).st_ino == os.stat(lock).st_ino
-    assert os.fstat(fd).st_ino != os.fstat(orphan).st_ino
-    t._ptr_unlock(fd)
-    os.close(orphan)
-
-
-def test_equality_delete_rolls_back_sidecar_on_lock_timeout(spark, tmp_path):
-    """If the post-rename lock acquisition fails, the
-    already-attached sidecar must be detached before the error propagates —
-    otherwise readers of the unchanged version see a half-applied delete."""
-    t = _mk(spark, tmp_path)
-    v = t.current_version()
-    assert t._delete_sidecars(v) == []
-
-    def boom():
-        raise RuntimeError("pointer lock held past 30s — live contention?")
-
-    t._ptr_locked = boom
-    with pytest.raises(RuntimeError):
-        t.equality_delete(spark.range(2).withColumnRenamed("id", "k"), ["k"])
-    assert t._delete_sidecars(v) == [], "half-applied delete left attached"
-    assert t.read().count() == 5

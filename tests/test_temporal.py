@@ -4,16 +4,12 @@ inclusive range bounds, bin-boundary coverage; and the temporal checks
 
 from __future__ import annotations
 
-import datetime as dt
 from datetime import datetime
 
 from data_ingestion_pipeline_spark.functions.temporal import (
     asof_join_prev,
     range_join_binned,
 )
-from data_ingestion_pipeline_spark.operators import temporal_checks as tc
-from data_ingestion_pipeline_spark.sources.catalog import load_table
-from tests.conftest import SF_SMOKE
 
 
 def _ts(s):
@@ -61,42 +57,3 @@ def test_range_join_inclusive_bounds_across_bins(spark):
         left, right, "k", "ts", "ts", lower_s=1, upper_s=3600, bin_s=7
     )
     assert sorted(r.r_id for r in out_small.collect()) == [100, 101]
-
-
-def test_asof_prev_carries_genuine_null_values(spark):
-    """A right row whose VALUE is NULL is still the as-of match — the
-    ignorenulls-on-value form fell through to a stale older value; and a
-    null-timestamp right row must never match."""
-
-    t = lambda m: dt.datetime(2024, 1, 1, 0, m)  # noqa: E731
-    left = spark.createDataFrame([(7, t(30))], "user_id long, ts timestamp")
-    right = spark.createDataFrame(
-        [(7, t(10), 5.0), (7, t(20), None), (7, None, 99.0)],
-        "user_id long, ts timestamp, value double",
-    )
-    out = asof_join_prev(left, right, "user_id", "ts", ["value"]).collect()
-    assert len(out) == 1
-    assert out[0].prev_value is None  # the t(20) NULL row wins, not 5.0
-
-
-def test_growth_accounting_identities(spark):
-    """Growth accounting is a closed ledger: dau = new + retained +
-    resurrected per day; retained(d) = dau(d-1) - churned(d) on contiguous
-    days (every fixture day has actives); total new across days = distinct
-    users; day 1 churns nobody."""
-
-    rows = sorted(
-        tc.growth_accounting_daily_users(spark, SF_SMOKE).collect(),
-        key=lambda r: r["day"],
-    )
-    assert rows, "no days"
-    for r in rows:
-        assert r["dau"] == r["new_users"] + r["retained_users"] + r["resurrected_users"]
-    assert rows[0]["churned_users"] == 0
-    for prev, cur in zip(rows, rows[1:]):
-        assert (cur["day"] - prev["day"]).days == 1, "fixture days contiguous"
-        assert cur["retained_users"] == prev["dau"] - cur["churned_users"]
-
-    events = load_table(spark, SF_SMOKE, "events")
-    n_users = events.select("user_id").distinct().count()
-    assert sum(r["new_users"] for r in rows) == n_users

@@ -12,66 +12,12 @@ import hashlib
 import math
 import re
 from collections import Counter, defaultdict, deque
-from decimal import Decimal
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
 from data_ingestion_pipeline_spark.operators import mlprep_checks, timeseries_checks
-from data_ingestion_pipeline_spark.operators import timeseries_checks as tc
-from data_ingestion_pipeline_spark.operators.analytics_checks import srm_check_events
-from data_ingestion_pipeline_spark.operators.mlprep_checks import (
-    _cov_partials,
-    _pca_state,
-    _whiten_sample_kernel,
-    als_rank1_part_factors,
-    chao1_trigram_richness_documents,
-    jl_projection_distortion_embeddings,
-    nmi_ivf_cells_labels_embeddings,
-    nn1_label_accuracy_embeddings,
-    simplified_silhouette_embeddings,
-    textrank_terms_documents,
-)
-from data_ingestion_pipeline_spark.operators.timeseries_checks import (
-    _CROSTON_ALPHA,
-    _HURST_SIZES,
-    _SPEC_K,
-    _VR_Q,
-    _rhu,
-    adf_test_daily_values,
-    ar2_yule_walker_daily,
-    bartels_rank_test_daily_values,
-    binseg_changepoint_daily,
-    breusch_godfrey_daily_trend,
-    ccf_purchase_view_daily,
-    chow_test_daily_midpoint,
-    cochrane_orcutt_daily_trend,
-    cox_stuart_trend_daily,
-    croston_intermittent_demand_part,
-    cusum_squares_daily,
-    dagostino_k2_daily_values,
-    esd_outliers_daily,
-    gmm2_em_daily_values,
-    granger_lag1_view_to_purchase_daily,
-    hurst_rs_daily_values,
-    jarque_bera_daily_values,
-    ljung_box_daily_values,
-    newey_west_daily_trend,
-    pacf_daily_values,
-    periodogram_daily_events,
-    permutation_entropy_daily_values,
-    pettitt_changepoint_daily,
-    runs_test_daily_values,
-    siegel_slope_daily_trend,
-    spectral_entropy_daily_events,
-    theta_method_forecast_daily,
-    transfer_entropy_view_purchase_daily,
-    turning_points_daily,
-    variance_ratio_daily,
-)
-from data_ingestion_pipeline_spark.sources.catalog import load_table
-from tests.conftest import SF_ORACLE, SF_SMOKE, daily_pv_sums, daily_sums, daily_values
+from tests.conftest import SF_SMOKE
 
 
 def _daily_pd(spark, by_type: bool) -> pd.DataFrame:
@@ -383,1234 +329,3 @@ def test_kmeans_lloyd_matches_numpy_iterations(spark):
         assert got[cids[j]].n_vectors == int(mask.sum())
         assert abs(got[cids[j]].inertia - float(mind[mask].mean())) < 1e-4
     assert sum(r.n_vectors for r in got.values()) == len(vecs)
-
-
-def test_holt_fold_matches_python(spark):
-    row = timeseries_checks.holt_linear_daily_forecast(spark, SF_SMOKE).collect()[0]
-    daily = sorted(
-        (r.day, float(r.xd))
-        for r in spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .groupBy(F.to_date("ts").alias("day"))
-        .agg(F.sum(F.col("value").cast("decimal(27,12)")).alias("xd"))
-        .collect()
-    )
-    xs = [v for _, v in daily]
-    level, trend = xs[0], 0.0
-    for x in xs[1:]:
-        lnew = 0.5 * x + 0.5 * (level + trend)
-        trend = 0.3 * (lnew - level) + 0.7 * trend
-        level = lnew
-    assert row.n_days == len(xs)
-    assert abs(row.level - level) < 1e-5
-    assert abs(row.trend - trend) < 1e-5
-    assert abs(row.forecast_7d - (level + 7 * trend)) < 1e-4
-
-
-def test_pca_explained_share_sane(spark):
-    row = mlprep_checks.pca_power_iteration_embeddings(spark, SF_SMOKE).collect()[0]
-    assert row.variance_total > 0
-    assert 0.0 < row.lambda1 <= row.variance_total + 1e-9
-    assert 1.0 / 64.0 <= row.explained_share <= 1.0
-
-
-def test_holt_winters_fold_matches_python(spark):
-    """The 9-slot rotating-queue fold must reproduce a direct Python
-    Holt-Winters additive implementation (classic first-cycle init) on
-    the same daily series, including the rotated seasonal readout."""
-
-    row = tc.holt_winters_seasonal_daily(spark, SF_SMOKE).collect()[0]
-    daily = sorted(
-        (r.day, float(r.xd))
-        for r in spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .groupBy(F.to_date("ts").alias("day"))
-        .agg(F.sum(F.col("value").cast("decimal(27,12)")).alias("xd"))
-        .collect()
-    )
-    xs = [v for _, v in daily]
-    m, a, b, g = 7, tc._HW_ALPHA, tc._HW_BETA, tc._HW_GAMMA
-    level = sum(xs[:m]) / m
-    trend = 0.0
-    season = [x - level for x in xs[:m]]  # seasonal of days 1..7
-    for t, x in enumerate(xs[m:]):
-        s_old = season[t % m]
-        lnew = a * (x - s_old) + (1 - a) * (level + trend)
-        trend = b * (lnew - level) + (1 - b) * trend
-        season[t % m] = g * (x - lnew) + (1 - g) * s_old
-        level = lnew
-    n = len(xs)
-    assert row.n_days == n
-    assert abs(row.level - level) < 1e-5
-    assert abs(row.trend - trend) < 1e-5
-    # seasonal slot for day n+1 and n+7
-    assert abs(row.s_next - season[(n - m) % m]) < 1e-5
-    assert abs(row.forecast_1d - (level + trend + season[(n - m) % m])) < 1e-4
-    assert (
-        abs(row.forecast_7d - (level + 7 * trend + season[(n - m + 6) % m]))
-        < 1e-4
-    )
-
-
-def test_int8_quantization_error_bound_and_sqnr(spark):
-    """Absmax int8 quantization guarantees |err| ≤ scale/2 per value, so
-    per-dim MSE ≤ scale²/4; SQNR must be strongly positive for a
-    non-degenerate corpus; every dimension reports the same n."""
-
-    rows = mlprep_checks.embedding_int8_quantization_report(
-        spark, SF_SMOKE
-    ).collect()
-    assert len(rows) == 64
-    ns = {r.n for r in rows}
-    assert len(ns) == 1
-    for r in rows:
-        assert r.scale > 0
-        assert 0.0 <= r.mse <= (r.scale * r.scale) / 4.0 + 1e-12
-        assert r.sqnr_db > 20.0  # int8 on unit-ish floats is ~30+ dB
-
-
-def test_cov_kernel_matches_driver_side_replication(spark):
-    """The mapInArrow X^T·X partial kernel must produce, after the
-    DECIMAL(38,0) merge, exactly the integer total a driver-side numpy
-    replication computes with the same centering and the same
-    half-away-from-zero rounding — regardless of batch/partition split
-    (integer partials merge associatively)."""
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    mu = [0.01 * k for k in range(64)]  # arbitrary but fixed centering
-    merged = (
-        _cov_partials(emb, mu)
-        .groupBy("i", "j")
-        .agg(F.sum(F.col("ps").cast("decimal(38,0)")).alias("total"))
-        .collect()
-    )
-    got = {(r.i, r.j): int(r.total) for r in merged}
-
-    x = np.array(
-        [r.embedding for r in emb.select("embedding").collect()],
-        dtype=np.float64,
-    ) - np.asarray(mu)
-    iu_i, iu_j = np.triu_indices(64)
-    t = (x[:, :, None] * x[:, None, :])[:, iu_i, iu_j] * 1e13
-    want_vec = np.trunc(t + np.copysign(0.5, t)).astype(np.int64).sum(axis=0)
-    want = {
-        (int(i), int(j)): int(v) for i, j, v in zip(iu_i, iu_j, want_vec)
-    }
-    assert got == want
-
-
-def test_cov_kernel_invariant_to_repartitioning(spark):
-    """Same totals from a different partition split — the exactness claim
-    is that integer partials make the merge order-independent."""
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    mu = [0.0] * 64
-
-    def totals(df):
-        rows = (
-            _cov_partials(df, mu)
-            .groupBy("i", "j")
-            .agg(F.sum(F.col("ps").cast("decimal(38,0)")).alias("total"))
-            .collect()
-        )
-        return {(r.i, r.j): int(r.total) for r in rows}
-
-    assert totals(emb) == totals(emb.repartition(7))
-
-
-def test_ar2_phi_identities_from_rho(spark):
-    """φ must satisfy the Yule–Walker correlation identities against the
-    published ρ, and the AR(2) fit of a linear-trend daily series must
-    produce ρ1 near 1 (strong serial dependence)."""
-
-    r = ar2_yule_walker_daily(spark, SF_SMOKE).collect()[0]
-    r1, r2 = r.rho1, r.rho2
-    assert abs(r.phi1 - round(r1 * (1 - r2) / (1 - r1 * r1), 6)) <= 1e-6
-    assert abs(r.phi2 - round((r2 - r1 * r1) / (1 - r1 * r1), 6)) <= 1e-6
-    assert -1.0 <= r1 <= 1.0 and -1.0 <= r2 <= 1.0
-    assert r.n_days > 10
-
-
-def test_silhouette_bounds_and_srm_sanity(spark):
-    """Silhouette means lie in [-1, 1]; the md5 50/50 split on this
-    corpus must NOT trigger SRM (a deterministic fair hash cannot
-    mismatch its own declared ratio beyond chance)."""
-
-    sil = simplified_silhouette_embeddings(spark, SF_SMOKE).collect()
-    assert sil and all(-1.0 <= r.mean_silhouette <= 1.0 for r in sil)
-
-    srm = srm_check_events(spark, SF_ORACLE).collect()[0]
-    assert srm.n_a + srm.n_b == 150
-    assert not srm.srm_flag
-
-
-def test_textrank_one_iteration_closed_form(spark, sf_dir):
-    """With WS0 = 1, the first TextRank iterate is the closed form
-    0.15 + 0.85 * sum_u w_uv / S(u) — computed directly here from the
-    same adjacency counts, pinning the weighted-propagation machinery
-    (the HITS normalized-indegree gate's analog for the weighted loop)."""
-
-    got = {
-        r["term"]: r["textrank"]
-        for r in textrank_terms_documents(spark, sf_dir, iters=1).collect()
-    }
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    t = F.split(F.trim(F.col("text")), r"\s+")
-    n = F.size(t)
-    prs = F.zip_with(
-        F.slice(t, 1, n - 1),
-        F.slice(t, 2, n - 1),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-    )
-    rows = (
-        docs.select(F.explode(prs).alias("p"))
-        .select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        .filter(F.col("w1") != F.col("w2"))
-        .collect()
-    )
-
-    w = Counter()
-    for r in rows:
-        a, b = sorted((r["w1"], r["w2"]))
-        w[(a, b)] += 1
-    adj = {}
-    for (a, b), c in w.items():
-        adj.setdefault(a, {})[b] = c
-        adj.setdefault(b, {})[a] = c
-    strength = {u: sum(vs.values()) for u, vs in adj.items()}
-    assert set(got) == set(strength)
-    for v in strength:
-        expect = 0.15 + 0.85 * sum(
-            w[tuple(sorted((u, v)))] / strength[u] for u in adj[v]
-        )
-        assert abs(got[v] - expect) < 1e-6, v
-    assert all(s >= 0.15 for s in got.values())
-
-
-def test_als_rank1_matches_python_and_descends(spark):
-    """Factors against a plain-python ALS mirror, and the rank-1 fit's SSE
-    must be non-increasing across iterations (the ALS guarantee)."""
-
-    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey", "l_quantity"
-    )
-    orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet").select(
-        "o_orderkey", "o_custkey"
-    )
-    rows = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .groupBy("o_custkey", "l_partkey")
-        .agg(F.sum(F.col("l_quantity").cast("bigint")).alias("r"))
-        .collect()
-    )
-    ratings = [(r["o_custkey"], r["l_partkey"], float(r["r"])) for r in rows]
-    u = {c: 1.0 for c, _, _ in ratings}
-    v = {}
-
-    def sse(u, v):
-        return sum(
-            (r - u.get(c, 0.0) * v.get(p, 0.0)) ** 2 for c, p, r in ratings
-        )
-
-    errs = []
-    for _ in range(4):
-        num, den = defaultdict(float), defaultdict(float)
-        for c, p, r in ratings:
-            num[p] += r * u[c]
-            den[p] += u[c] * u[c]
-        v = {p: round(num[p] / den[p], 9) for p in num}
-        num, den = defaultdict(float), defaultdict(float)
-        for c, p, r in ratings:
-            num[c] += r * v[p]
-            den[c] += v[p] * v[p]
-        u = {c: round(num[c] / den[c], 9) for c in num}
-        errs.append(sse(u, v))
-    assert all(b <= a + 1e-6 for a, b in zip(errs, errs[1:])), errs
-    got = {
-        r["p_partkey"]: (r["n_raters"], r["v_factor"])
-        for r in als_rank1_part_factors(spark, SF_SMOKE).collect()
-    }
-    assert set(got) == set(v)
-    raters = defaultdict(int)
-    for c, p, _ in ratings:
-        raters[p] += 1
-    for p, (n, vf) in got.items():
-        assert n == raters[p]
-        assert abs(vf - v[p]) < 1e-5, (p, vf, v[p])
-
-
-def test_binseg_changepoint_matches_bruteforce(spark):
-    """The split must equal a brute-force argmax over all interior
-    splits recomputed in python, and the one-break model must never
-    lose to the no-break model (gain >= 0)."""
-
-    days = Counter(
-        r["d"]
-        for r in spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .select(F.to_date("ts").alias("d"))
-        .collect()
-    )
-    ys = [c for _, c in sorted(days.items())]
-    dd = len(ys)
-    sd = sum(ys)
-    best = None
-    run = 0
-    for k in range(1, dd):
-        run += ys[k - 1]
-        g = run**2 / k + (sd - run) ** 2 / (dd - k) - sd**2 / dd
-        if best is None or g > best[1] + 1e-12:
-            best = (k, g)
-    row = binseg_changepoint_daily(spark, SF_SMOKE).collect()[0]
-    assert row["n_days"] == dd
-    assert row["split_pos"] == best[0]
-    assert abs(row["gain"] - best[1]) < 1e-4
-    assert row["gain"] >= 0.0
-    assert row["split_day"] == sorted(days)[best[0] - 1]
-    left = ys[: best[0]]
-    right = ys[best[0] :]
-    assert abs(row["left_mean"] - sum(left) / len(left)) < 1e-6
-    assert abs(row["right_mean"] - sum(right) / len(right)) < 1e-6
-
-
-def test_jl_projection_distortion_report(spark):
-    """JL lemma sanity at m=16: the mean distance-ratio of the
-    deterministic +/-1 projection must sit near 1 (unbiasedness), most
-    chain pairs inside the 50% band, and the report recomputed in numpy
-    from the same md5 sign matrix must agree."""
-
-    rows = (
-        spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in rows}
-    m = 16
-    signs = np.zeros((64, m))
-    for i in range(64):
-        for j in range(m):
-            h = int(hashlib.md5(f"{i}_{j}".encode()).hexdigest()[:6], 16)
-            signs[i, j] = 1.0 if h % 2 == 0 else -1.0
-    ratios = []
-    for a in sorted(vecs):
-        if a + 1 not in vecs:
-            continue
-        dx = vecs[a + 1] - vecs[a]
-        dx2 = round(float((dx * dx).sum()), 9)
-        ya = np.round(vecs[a] @ signs / np.sqrt(m), 9)
-        yb = np.round(vecs[a + 1] @ signs / np.sqrt(m), 9)
-        dy2 = round(float(((yb - ya) ** 2).sum()), 9)
-        if dx2 > 0:
-            ratios.append(round(dy2 / dx2, 9))
-    row = jl_projection_distortion_embeddings(spark, SF_SMOKE).collect()[0]
-    assert row["n_pairs"] == len(ratios)
-    assert abs(row["mean_ratio"] - sum(ratios) / len(ratios)) < 1e-4
-    assert abs(row["min_ratio"] - min(ratios)) < 1e-4
-    assert abs(row["max_ratio"] - max(ratios)) < 1e-4
-    assert 0.5 < row["mean_ratio"] < 1.5  # unbiased estimator, m=16 noise
-    assert row["share_within_50pct"] >= 0.6
-
-
-def test_chao1_identities(spark):
-    """Chao1 >= observed richness; coverage in (0,1]; f1/f2 recounted
-    from a python trigram mirror."""
-
-    texts = [
-        r["text"]
-        for r in spark.read.parquet(f"{SF_SMOKE}/documents.parquet").collect()
-    ]
-    grams = Counter()
-    for t in texts:
-        toks = re.split(r"\s+", t.strip())
-        for i in range(max(len(toks) - 2, 1)):
-            g = " ".join(toks[i : i + 3])
-            if g:
-                grams[g] += 1
-    f1 = sum(1 for v in grams.values() if v == 1)
-    f2 = sum(1 for v in grams.values() if v == 2)
-    row = chao1_trigram_richness_documents(spark, SF_SMOKE).collect()[0]
-    assert row["v_obs"] == len(grams)
-    assert row["n_grams"] == sum(grams.values())
-    assert row["f1"] == f1 and row["f2"] == f2
-    assert row["chao1_estimate"] >= row["v_obs"]
-    expected = len(grams) + f1 * (f1 - 1) / (2 * (f2 + 1))
-    assert abs(row["chao1_estimate"] - expected) < 1e-4
-    assert 0.0 < row["good_coverage"] <= 1.0
-
-
-def test_periodogram_parseval_and_weekly_peak(spark):
-    """Spectral identities: power non-negative, shares sum to <= 1
-    (Parseval partitions variance over ALL harmonics; we publish 14),
-    and a numpy-FFT mirror agrees on every published harmonic."""
-
-    days = Counter(
-        r["d"]
-        for r in spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .select(F.to_date("ts").alias("d"))
-        .collect()
-    )
-    ys = np.array([c for _, c in sorted(days.items())], dtype=np.float64)
-    n = len(ys)
-    yc = ys - ys.mean()
-    rows = {r["k"]: r for r in periodogram_daily_events(spark, SF_SMOKE).collect()}
-    assert set(rows) == set(range(1, min(14, n // 2) + 1))
-    ss = float((yc * yc).sum())
-    share_sum = 0.0
-    for k, r in rows.items():
-        ang = 2.0 * np.pi * k * np.arange(n) / n
-        a = float((yc * np.round(np.cos(ang), 9)).sum())
-        b = float((yc * np.round(np.sin(ang), 9)).sum())
-        p = (a * a + b * b) * 2.0 / n
-        assert r["power"] >= 0.0
-        assert abs(r["power"] - p) < 1e-3
-        assert abs(r["period_days"] - n / k) < 1e-6
-        assert abs(r["power_share"] - p / (2.0 * ss)) < 1e-6
-        share_sum += r["power_share"]
-    assert share_sum <= 1.0 + 1e-9
-
-
-def test_jarque_bera_and_ljung_box_mirror(spark):
-    """JB moments and the LB Q recomputed from the daily means."""
-
-    ys = [sum(v) / len(v) for v in daily_values(spark, SF_SMOKE).values()]
-    n = len(ys)
-    mu = sum(ys) / n
-    m2 = sum((y - mu) ** 2 for y in ys) / n
-    m3 = sum((y - mu) ** 3 for y in ys) / n
-    m4 = sum((y - mu) ** 4 for y in ys) / n
-    skew = m3 / m2**1.5
-    kurt = m4 / m2**2 - 3.0
-    jb = n / 6.0 * (skew**2 + kurt**2 / 4.0)
-    row = jarque_bera_daily_values(spark, SF_SMOKE).collect()[0]
-    assert row["n_days"] == n
-    assert abs(row["skewness"] - skew) < 1e-4
-    assert abs(row["excess_kurtosis"] - kurt) < 1e-4
-    assert abs(row["jarque_bera"] - jb) < 1e-3
-    denom = sum((y - mu) ** 2 for y in ys)
-    st = 0.0
-    for k in range(1, 8):
-        ck = sum((ys[i] - mu) * (ys[i + k] - mu) for i in range(n - k))
-        rk = round(ck / denom, 9)
-        st += rk * rk / (n - k)
-    q = n * (n + 2.0) * st
-    row = ljung_box_daily_values(spark, SF_SMOKE).collect()[0]
-    assert row["n_days"] == n
-    assert abs(row["ljung_box_q"] - q) < 1e-3
-    assert row["autocorrelated"] == (q > 14.067140)
-
-
-def test_runs_test_mirror(spark):
-    """Run count, up/down split, and z recomputed from the daily means."""
-
-    ys = [sum(v) / len(v) for v in daily_values(spark, SF_SMOKE).values()]
-    signs = [1 if b > a else -1 for a, b in zip(ys, ys[1:]) if b != a]
-    n, n_up = len(signs), sum(1 for s in signs if s > 0)
-    n_down = n - n_up
-    runs = 1 + sum(1 for a, b in zip(signs, signs[1:]) if a != b)
-    er = 2.0 * n_up * n_down / n + 1.0
-    vr = (er - 1.0) * (er - 2.0) / (n - 1.0)
-    row = runs_test_daily_values(spark, SF_SMOKE).collect()[0]
-    assert (row["n_changes"], row["n_up"], row["n_down"], row["n_runs"]) == (
-        n, n_up, n_down, runs,
-    )
-    assert abs(row["expected_runs"] - er) < 1e-6
-    if vr > 0 and n_up and n_down:
-        assert abs(row["z"] - (runs - er) / math.sqrt(vr)) < 1e-5
-
-
-def test_newey_west_reduces_to_ols_shape(spark):
-    """HAC slope equals the closed-form OLS slope; the HAC se recomputed
-    in python; t = slope/se identity holds."""
-
-    ys = [sum(v) / len(v) for v in daily_values(spark, SF_SMOKE).values()]
-    n = len(ys)
-    xs = list(range(1, n + 1))
-    sx, sy2 = sum(xs), sum(ys)
-    sxy = sum(x * y for x, y in zip(xs, ys))
-    sxx = sum(x * x for x in xs)
-    b1 = round((n * sxy - sx * sy2) / (n * sxx - sx * sx), 9)
-    b0 = round((sy2 - b1 * sx) / n, 9)
-    xbar = sx / n
-    gs = [(x - xbar) * round(y - (b0 + b1 * x), 9) for x, y in zip(xs, ys)]
-    c0 = sum(g * g for g in gs)
-    ctail = 0.0
-    for k in range(1, 8):
-        ck = sum(gs[i] * gs[i + k] for i in range(n - k))
-        ctail += 2.0 * (1.0 - k / 8.0) * ck
-    s_lr = (c0 + ctail) / n
-    sxx_c = sxx - sx * sx / n
-    se = math.sqrt(n * s_lr) / sxx_c
-    row = newey_west_daily_trend(spark, SF_SMOKE).collect()[0]
-    assert row["n_days"] == n
-    assert abs(row["slope_per_day"] - b1) < 1e-5
-    assert abs(row["hac_se"] - se) < 1e-4
-    assert abs(row["t_hac"] - b1 / se) < 1e-3
-
-
-def test_pacf_matches_python_durbin_levinson(spark, sf_dir):
-    series = [sum(v) / len(v) for v in daily_values(spark, sf_dir).values()]
-    n = len(series)
-    mu = sum(series) / n
-    c0 = sum((x - mu) ** 2 for x in series)
-    r = {
-        k: round(
-            sum(
-                (series[t] - mu) * (series[t + k] - mu)
-                for t in range(n - k)
-            )
-            / c0,
-            9,
-        )
-        for k in range(1, 5)
-    }
-    phi = {(1, 1): round(r[1], 9)}
-    for k in range(2, 5):
-        num = r[k] - sum(phi[(k - 1, j)] * r[k - j] for j in range(1, k))
-        den = 1.0 - sum(phi[(k - 1, j)] * r[j] for j in range(1, k))
-        phi[(k, k)] = round(num / den, 9)
-        for j in range(1, k):
-            phi[(k, j)] = round(
-                phi[(k - 1, j)] - phi[(k, k)] * phi[(k - 1, k - j)], 9
-            )
-    got = {
-        row["lag"]: row for row in pacf_daily_values(spark, sf_dir).collect()
-    }
-    assert sorted(got) == [1, 2, 3, 4]
-    for k in range(1, 5):
-        assert abs(got[k]["pacf"] - phi[(k, k)]) < 1e-4, (k, got[k]["pacf"], phi[(k, k)])
-        assert got[k]["n_days"] == n
-    # lag-1 PACF equals the plain lag-1 autocorrelation by definition
-    assert abs(got[1]["pacf"] - round(r[1], 6)) < 1e-6
-
-
-def test_nn1_accuracy_matches_numpy_brute_force(spark):
-    rows = (
-        spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-        .orderBy("vec_id")
-        .collect()
-    )
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    y = np.array([r["label"] for r in rows])
-    ids = np.array([r["vec_id"] for r in rows])
-    Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-    S = np.round(Xn @ Xn.T, 6)
-    np.fill_diagonal(S, -np.inf)
-    correct = {}
-    total = {}
-    for i in range(len(rows)):
-        # (score desc, id asc) tie-break — the knn_graph contract
-        best = max(
-            range(len(rows)),
-            key=lambda j: (S[i, j], -ids[j]) if j != i else (-np.inf, 0),
-        )
-        total[y[i]] = total.get(y[i], 0) + 1
-        if y[best] == y[i]:
-            correct[y[i]] = correct.get(y[i], 0) + 1
-    got = {
-        r["label"]: r
-        for r in nn1_label_accuracy_embeddings(spark, SF_SMOKE).collect()
-    }
-    assert set(got) == set(total)
-    for lab in total:
-        assert got[lab]["n_vecs"] == total[lab]
-        assert got[lab]["n_correct"] == correct.get(lab, 0), lab
-
-
-def test_nmi_bounds_and_marginal_consistency(spark, sf_dir):
-    row = nmi_ivf_cells_labels_embeddings(spark, sf_dir).collect()[0]
-    assert row["n_cells"] <= 16 and row["n_labels"] >= 2
-    assert row["mi"] >= -1e-6
-    assert row["h_cell"] > 0 and row["h_label"] > 0
-    assert 0.0 <= row["nmi"] <= 1.0 + 1e-9
-    # MI can never exceed either marginal entropy
-    assert row["mi"] <= min(row["h_cell"], row["h_label"]) + 1e-6
-
-
-def test_ccf_matches_python_mirror(spark, sf_dir):
-    means = {
-        k: sum(v) / len(v) for k, v in daily_values(spark, sf_dir, by_type=True).items()
-    }
-    days = sorted({d for d, t in means} & {
-        d for (d, t) in means if t == "purchase"
-    } & {d for (d, t) in means if t == "view"})
-    days = [
-        d for d in sorted({d for d, _ in means})
-        if (d, "purchase") in means and (d, "view") in means
-    ]
-    x = [means[(d, "purchase")] for d in days]
-    y = [means[(d, "view")] for d in days]
-    n = len(days)
-    mx, my = sum(x) / n, sum(y) / n
-    den = (
-        sum((a - mx) ** 2 for a in x) * sum((b - my) ** 2 for b in y)
-    ) ** 0.5
-    got = {r["lag"]: r["ccf"] for r in ccf_purchase_view_daily(spark, sf_dir).collect()}
-    assert sorted(got) == list(range(-3, 4))
-    for k in range(-3, 4):
-        num = sum(
-            (x[t] - mx) * (y[t + k] - my)
-            for t in range(n)
-            if 0 <= t + k < n
-        )
-        assert abs(got[k] - num / den) < 1e-4, (k, got[k], num / den)
-
-
-def test_granger_equals_restricted_vs_full_regression(spark, sf_dir):
-    """The partial-correlation form must equal the textbook
-    restricted-vs-full OLS F-test (numpy lstsq) on the same series."""
-
-    means = {
-        k: sum(v) / len(v) for k, v in daily_values(spark, sf_dir, by_type=True).items()
-    }
-    days = [
-        d for d in sorted({d for d, _ in means})
-        if (d, "purchase") in means and (d, "view") in means
-    ]
-    y = np.array([means[(d, "purchase")] for d in days])
-    x = np.array([means[(d, "view")] for d in days])
-    yt, yl, xl = y[1:], y[:-1], x[:-1]
-    n = len(yt)
-    Xf = np.column_stack([np.ones(n), yl, xl])
-    Xr = np.column_stack([np.ones(n), yl])
-    rf = yt - Xf @ np.linalg.lstsq(Xf, yt, rcond=None)[0]
-    rr = yt - Xr @ np.linalg.lstsq(Xr, yt, rcond=None)[0]
-    ssr_f, ssr_r = rf @ rf, rr @ rr
-    f_ref = (ssr_r - ssr_f) / (ssr_f / (n - 3))
-    row = granger_lag1_view_to_purchase_daily(spark, sf_dir).collect()[0]
-    assert row["n_days"] == n
-    assert abs(row["f_stat"] - f_ref) < max(1e-3, 1e-3 * abs(f_ref))
-
-
-def test_chow_matches_numpy_segments(spark, sf_dir):
-    m = np.array([sum(v) / len(v) for v in daily_values(spark, sf_dir).values()])
-    n = len(m)
-    xi = np.arange(1, n + 1, dtype=float)
-    cut = (n + 1) // 2
-
-    def ssr(x, y):
-        X = np.column_stack([np.ones(len(x)), x])
-        r = y - X @ np.linalg.lstsq(X, y, rcond=None)[0]
-        return r @ r
-
-    s1 = ssr(xi[:cut], m[:cut])
-    s2 = ssr(xi[cut:], m[cut:])
-    sp = ssr(xi, m)
-    f_ref = ((sp - s1 - s2) / 2.0) / ((s1 + s2) / (n - 4))
-    row = chow_test_daily_midpoint(spark, sf_dir).collect()[0]
-    assert row["n_days"] == n
-    assert abs(row["f_stat"] - f_ref) < max(1e-3, 1e-3 * abs(f_ref))
-
-
-def test_gmm2_em_matches_python_mirror(spark, sf_dir):
-    """Full python re-run of the 3-iteration EM (same init, same rounding
-    ladder) plus structural checks: responsibilities-implied weight in
-    (0,1), separation consistent with the published moments."""
-
-    m = [sum(v) / len(v) for v in daily_values(spark, sf_dir).values()]
-    n = len(m)
-
-    def pct(vs, q):
-        vs = sorted(vs)
-        pos = (len(vs) - 1) * q
-        lo = int(pos)
-        frac = pos - lo
-        hi = min(lo + 1, len(vs) - 1)
-        return round(vs[lo] + frac * (vs[hi] - vs[lo]), 6)
-
-    mu1, mu2 = pct(m, 0.25), pct(m, 0.75)
-    v1 = v2 = _rhu((sum(x * x for x in m) - sum(m) ** 2 / n) / n, 9)
-    w1 = 0.5
-    for _ in range(3):
-        a = _rhu((1 - w1) / w1 * math.sqrt(v1) / math.sqrt(v2), 9)
-        rs = [
-            _rhu(
-                1.0
-                / (
-                    1.0
-                    + a
-                    * math.exp(
-                        _rhu(
-                            (x - mu1) ** 2 / (2 * v1)
-                            - (x - mu2) ** 2 / (2 * v2),
-                            9,
-                        )
-                    )
-                ),
-                9,
-            )
-            for x in m
-        ]
-        n1 = sum(rs)
-        mu1 = _rhu(sum(r * x for r, x in zip(rs, m)) / n1, 9)
-        mu2 = _rhu(sum((1 - r) * x for r, x in zip(rs, m)) / (n - n1), 9)
-        v1 = _rhu(
-            max(sum(r * x * x for r, x in zip(rs, m)) / n1 - mu1 * mu1, 1e-12),
-            9,
-        )
-        v2 = _rhu(
-            max(
-                sum((1 - r) * x * x for r, x in zip(rs, m)) / (n - n1)
-                - mu2 * mu2,
-                1e-12,
-            ),
-            9,
-        )
-        w1 = _rhu(n1 / n, 9)
-    row = gmm2_em_daily_values(spark, sf_dir).collect()[0]
-    assert row["n_days"] == n
-    assert abs(row["w1"] - w1) < 1e-5
-    assert abs(row["mu1"] - mu1) < max(1e-4, 1e-6 * abs(mu1))
-    assert abs(row["mu2"] - mu2) < max(1e-4, 1e-6 * abs(mu2))
-    assert 0.0 < row["w1"] < 1.0
-    sep = abs(row["mu1"] - row["mu2"]) / math.sqrt(
-        (row["var1"] + row["var2"]) / 2.0
-    )
-    assert abs(row["separation"] - sep) < 1e-4
-
-
-def test_pettitt_matches_python_mirror(spark, sf_dir):
-    acc = daily_values(spark, sf_dir)
-    days = list(acc)
-    m = [round(sum(acc[d]) / len(acc[d]), 9) for d in days]
-    n = len(m)
-    # brute-force U_t
-    best_k, best_u, best_day = -1, None, None
-    u = 0
-    for t in range(n):
-        u += sum(
-            (1 if m[t] > m[j] else -1 if m[t] < m[j] else 0)
-            for j in range(n)
-        )
-        if abs(u) > best_k:
-            best_k, best_u, best_day = abs(u), u, days[t]
-    p = min(2 * math.exp(-6 * best_k**2 / (n**3 + n**2)), 1.0)
-    row = pettitt_changepoint_daily(spark, sf_dir).collect()[0]
-    assert row["n_days"] == n
-    assert row["k_stat"] == best_k
-    assert row["u_at_change"] == best_u
-    assert row["change_day"] == best_day
-    assert abs(row["p_approx"] - p) < 1e-4
-
-
-def test_adf_matches_numpy_lstsq(spark, sf_dir):
-    """ADF regression re-solved with numpy's lstsq on the same design
-    matrix; τ re-derived from the (X'X)⁻¹ diagonal."""
-
-    acc = daily_sums(spark, sf_dir)
-    days, x = list(acc), list(acc.values())
-    y = np.array([x[i] - x[i - 1] for i in range(2, len(x))])
-    u = np.array([x[i - 1] for i in range(2, len(x))])
-    v = np.array([x[i - 1] - x[i - 2] for i in range(2, len(x))])
-    X = np.column_stack([np.ones_like(u), u, v])
-    beta, _, _, _ = np.linalg.lstsq(X, y, rcond=None)
-    resid = y - X @ beta
-    n = len(y)
-    s2 = float(resid @ resid) / (n - 3)
-    cov = s2 * np.linalg.inv(X.T @ X)
-    tau = beta[1] / math.sqrt(cov[1, 1])
-    row = adf_test_daily_values(spark, sf_dir).collect()[0]
-    assert row["n_obs"] == n
-    assert abs(row["rho_coef"] - beta[1]) < 1e-6
-    assert abs(row["lag_diff_coef"] - beta[2]) < 1e-6
-    assert abs(row["adf_tau"] - tau) < 1e-4
-    assert row["stationary"] == (row["adf_tau"] < -2.86)
-
-
-def test_breusch_godfrey_matches_numpy(spark, sf_dir):
-    """BG LM recomputed with numpy: trend OLS (β rounded at 9 per the
-    contract), zero-filled lagged residual, auxiliary R²."""
-
-    acc = daily_sums(spark, sf_dir)
-    days, xv = list(acc), np.array(list(acc.values()))
-    t = np.array([(d - days[0]).days for d in days], dtype=float)
-    n = len(xv)
-    b1 = (n * (t * xv).sum() - t.sum() * xv.sum()) / (
-        n * (t * t).sum() - t.sum() ** 2
-    )
-    b1 = round(b1, 9)
-    b0 = round((xv.sum() - b1 * t.sum()) / n, 9)
-    e = xv - (b0 + b1 * t)
-    ep = np.concatenate([[0.0], e[:-1]])
-    X = np.column_stack([np.ones_like(t), t, ep])
-    beta, _, _, _ = np.linalg.lstsq(X, e, rcond=None)
-    fitted = X @ beta
-    r2 = ((fitted - e.mean()) ** 2).sum() / ((e - e.mean()) ** 2).sum()
-    lm = n * r2
-    row = breusch_godfrey_daily_trend(spark, sf_dir).collect()[0]
-    assert row["n_days"] == n
-    assert abs(row["resid_lag_coef"] - beta[2]) < 1e-5
-    assert abs(row["bg_lm_stat"] - lm) < 1e-2
-    assert row["serial_correlation"] == (row["bg_lm_stat"] > 3.841459)
-
-
-def test_permutation_entropy_matches_python_mirror(spark, sf_dir):
-    x = list(daily_sums(spark, sf_dir).values())
-    pats = Counter()
-    for a, b, c in zip(x, x[1:], x[2:]):
-        r0 = (b < a) + (c < a)
-        r1 = (a <= b) + (c < b)
-        r2 = (a <= c) + (b <= c)
-        pats[r0 * 100 + r1 * 10 + r2] += 1
-    n = sum(pats.values())
-    h = sum(-(c / n) * math.log(c / n) for c in pats.values())
-    row = permutation_entropy_daily_values(spark, sf_dir).collect()[0]
-    assert row["n_triples"] == n
-    assert row["n_patterns"] == len(pats)
-    assert abs(row["perm_entropy"] - h) < 1e-5
-    assert abs(row["perm_entropy_norm"] - h / math.log(6)) < 1e-5
-    assert 0.0 <= row["perm_entropy_norm"] <= 1.0 + 1e-9
-
-
-def test_bartels_rank_matches_python_mirror(spark, sf_dir):
-    x = list(daily_sums(spark, sf_dir).values())
-    n = len(x)
-    sx = sorted(x)
-    # doubled average ranks with ties
-    dr = []
-    for v in x:
-        lo = sum(1 for u in sx if u < v)
-        t = sum(1 for u in sx if u == v)
-        dr.append(2 * lo + t + 1)
-    num = sum((a - b) ** 2 for a, b in zip(dr, dr[1:]))
-    den = sum((a - (n + 1)) ** 2 for a in dr)
-    rvn = num / den
-    z = (rvn - 2.0) / math.sqrt(20.0 / (5 * n + 7))
-    row = bartels_rank_test_daily_values(spark, sf_dir).collect()[0]
-    assert row["n_days"] == n
-    assert abs(row["rvn_ratio"] - rvn) < 1e-5
-    assert abs(row["z_score"] - z) < 1e-4
-    assert row["nonrandom"] == (abs(round(z, 6)) > 1.959964)
-
-
-def test_cox_stuart_matches_python_mirror(spark, sf_dir):
-    x = list(daily_sums(spark, sf_dir).values())
-    n = len(x)
-    c = math.ceil(n / 2)
-    pairs = [(x[i], x[i + c]) for i in range(n - c)]
-    m = sum(1 for a, b in pairs if a != b)
-    s = sum(1 for a, b in pairs if b > a)
-    z = (2 * s - m) / math.sqrt(m)
-    row = cox_stuart_trend_daily(spark, sf_dir).collect()[0]
-    assert row["n_pairs"] == n // 2
-    assert row["m_untied"] == m
-    assert row["s_pos"] == s
-    assert abs(row["z_score"] - z) < 1e-5
-
-
-def test_hurst_rs_matches_python_mirror(spark, sf_dir):
-    x = list(daily_sums(spark, sf_dir).values())
-    n = len(x)
-    pts = []
-    for s in _HURST_SIZES:
-        if s > n:
-            continue
-        rss = []
-        for b in range(n // s):
-            blk = x[b * s : (b + 1) * s]
-            m = round(sum(blk) / s, 9)
-            dv = [v - m for v in blk]
-            z, cum = [], 0.0
-            for d in dv:
-                cum += d
-                z.append(cum)
-            r = max(z) - min(z)
-            sd = math.sqrt(round(sum(d * d for d in dv) / s, 9))
-            if sd > 0:
-                rss.append(round(r / sd, 9))
-        if rss:
-            mean_rs = round(sum(rss) / len(rss), 9)
-            if mean_rs > 0:
-                pts.append(
-                    (round(math.log(s), 9), round(math.log(mean_rs), 9))
-                )
-    k = len(pts)
-    su = sum(u for u, _ in pts)
-    sv = sum(v for _, v in pts)
-    suv = sum(u * v for u, v in pts)
-    suu = sum(u * u for u, _ in pts)
-    h = (k * suv - su * sv) / (k * suu - su * su)
-    row = hurst_rs_daily_values(spark, sf_dir).collect()[0]
-    assert row["n_sizes"] == k
-    assert abs(row["hurst_h"] - h) < 1e-4
-    assert row["persistent"] == (round(h, 6) > 0.5)
-
-
-def test_esd_outliers_matches_python_mirror(spark, sf_dir):
-    """Three remove-and-retest passes replayed in python, including the
-    shrinking-σ masking behavior."""
-
-    cur = daily_sums(spark, sf_dir)
-    expect = []
-    for it in range(1, 4):
-        n = len(cur)
-        sx = sum(cur.values())
-        sxx = sum(v * v for v in cur.values())
-        m = round(sx / n, 9)
-        sd = round(math.sqrt(round((sxx - sx * sx / n) / (n - 1), 9)), 9)
-        day = min(cur, key=lambda d: (-abs(cur[d] - m), d))
-        z = round(abs(cur[day] - m) / sd, 6)
-        expect.append((it, day, cur[day], z))
-        del cur[day]
-    got = esd_outliers_daily(spark, sf_dir).collect()
-    assert len(got) == 3
-    for row, (it, day, x, z) in zip(got, expect):
-        assert row["iteration"] == it
-        assert row["day"] == day
-        assert abs(row["x"] - x) < 1e-6
-        assert abs(row["z"] - z) < 1e-4
-        assert row["flagged"] == (z > 3.0)
-
-
-def test_transfer_entropy_matches_python_mirror(spark, sf_dir):
-    pv = daily_pv_sums(spark, sf_dir)
-    p = [ps for ps, _ in pv.values()]
-    v = [vs for _, vs in pv.values()]
-    mp = round(sum(p) / len(p), 9)
-    mv = round(sum(v) / len(v), 9)
-    y = [1 if a > mp else 0 for a in p]
-    x = [1 if a > mv else 0 for a in v]
-
-    def te(tgt, src):
-        c3 = Counter(
-            (tgt[i + 1], tgt[i], src[i]) for i in range(len(tgt) - 1)
-        )
-        n = sum(c3.values())
-        cy0 = Counter()
-        c2a = Counter()
-        c2b = Counter()
-        for (t1, t0, s0), c in c3.items():
-            cy0[t0] += c
-            c2a[(t0, s0)] += c
-            c2b[(t1, t0)] += c
-        out = 0.0
-        for (t1, t0, s0), c in c3.items():
-            out += round(
-                (c / n)
-                * (
-                    round(math.log(c), 9)
-                    + round(math.log(cy0[t0]), 9)
-                    - round(math.log(c2a[(t0, s0)]), 9)
-                    - round(math.log(c2b[(t1, t0)]), 9)
-                ),
-                12,
-            )
-        return n, round(out, 6)
-
-    n, fwd = te(y, x)
-    _, rev = te(x, y)
-    row = transfer_entropy_view_purchase_daily(spark, sf_dir).collect()[0]
-    assert row["n_transitions"] == n
-    assert abs(row["te_view_to_purchase"] - fwd) < 1e-6
-    assert abs(row["te_purchase_to_view"] - rev) < 1e-6
-    assert (
-        abs(row["net_flow_view_to_purchase"] - round(fwd - rev, 6)) < 1e-6
-    )
-
-
-def test_croston_matches_python_mirror(spark, sf_dir):
-    rows = spark.read.parquet(f"{sf_dir}/lineitem.parquet").collect()
-    d0 = min(r["l_shipdate"].date() for r in rows)
-    acc = defaultdict(Decimal)
-    for r in rows:
-        if r["l_partkey"] == 0:
-            acc[r["l_shipdate"].date()] += Decimal(str(r["l_quantity"]))
-    pts = sorted(
-        ((d - d0).days + 1, float(z)) for d, z in acc.items()
-    )
-    i1, z1 = pts[0]
-    sz, sq, prev = z1, float(i1), i1
-    a = _CROSTON_ALPHA
-    for i, z in pts[1:]:
-        sz = a * z + (1 - a) * sz
-        sq = a * (i - prev) + (1 - a) * sq
-        prev = i
-    row = croston_intermittent_demand_part(spark, sf_dir).collect()[0]
-    assert row["n_demand_days"] == len(pts)
-    assert abs(row["ses_demand"] - sz) < 1e-5
-    assert abs(row["ses_interval_days"] - sq) < 1e-5
-    assert abs(row["croston_daily_rate"] - sz / sq) < 1e-5
-
-
-def test_theta_method_matches_python_mirror(spark, sf_dir):
-    x = list(daily_sums(spark, sf_dir).values())
-    # NB: t here is the positional index; events cover every calendar
-    # day in the fixtures so it equals the datediff index
-    n = len(x)
-    t = list(range(n))
-    st, sx = sum(t), sum(x)
-    stx = sum(a * b for a, b in zip(t, x))
-    stt = sum(a * a for a in t)
-    b1 = round((n * stx - st * sx) / (n * stt - st * st), 9)
-    b0 = round((sx - ((n * stx - st * sx) / (n * stt - st * st)) * st) / n, 9)
-    y2 = [2 * v - (b0 + b1 * i) for i, v in zip(t, x)]
-    ses = y2[0]
-    for v in y2[1:]:
-        ses = 0.5 * v + 0.5 * ses
-    f1 = 0.5 * (ses + (b0 + b1 * (n - 1 + 1)))
-    f7 = 0.5 * (ses + (b0 + b1 * (n - 1 + 7)))
-    row = theta_method_forecast_daily(spark, sf_dir).collect()[0]
-    assert row["n_days"] == n
-    assert abs(row["drift_per_day"] - b1) < 1e-6
-    assert abs(row["ses_theta2"] - ses) < 1e-4
-    assert abs(row["forecast_1d"] - f1) < 1e-3
-    assert abs(row["forecast_7d"] - f7) < 1e-3
-
-
-def test_spectral_entropy_matches_python_mirror(spark, sf_dir):
-    rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .selectExpr("CAST(ts AS DATE) AS day")
-        .collect()
-    )
-    counts = Counter(r["day"] for r in rows)
-    days = sorted(counts)
-    y = [counts[d] for d in days]
-    n = len(y)
-    mean = sum(y) / n
-    yc = [v - mean for v in y]
-    powers = []
-    for k in range(1, min(_SPEC_K, n // 2) + 1):
-        ak = sum(
-            round(math.cos(2 * math.pi * k * d / n), 9) * yc[d]
-            for d in range(n)
-        )
-        bk = sum(
-            round(math.sin(2 * math.pi * k * d / n), 9) * yc[d]
-            for d in range(n)
-        )
-        p = round((ak * ak + bk * bk) * 2.0 / n, 9)
-        if p > 0:
-            powers.append(p)
-    ptot = sum(powers)
-    h = sum(-(p / ptot) * math.log(p / ptot) for p in powers)
-    row = spectral_entropy_daily_events(spark, sf_dir).collect()[0]
-    assert row["n_harmonics"] == len(powers)
-    assert abs(row["spectral_entropy"] - h) < 1e-4
-    assert abs(row["spectral_entropy_norm"] - h / math.log(len(powers))) < 1e-4
-
-
-def test_dagostino_k2_matches_scipy_formula(spark, sf_dir):
-    """Z1/Z2/K² recomputed with the published transform chain (scipy's
-    normaltest algebra) from the same rounded moments."""
-
-    x = list(daily_sums(spark, sf_dir).values())
-    n = len(x)
-    mu = round(sum(x) / n, 9)
-    m2 = round(sum(v * v for v in x) / n - mu * mu, 9)
-    m3 = round(
-        sum(v**3 for v in x) / n
-        - 3 * mu * (sum(v * v for v in x) / n)
-        + 2 * mu**3,
-        9,
-    )
-    m4 = round(
-        sum(v**4 for v in x) / n
-        - 4 * mu * (sum(v**3 for v in x) / n)
-        + 6 * mu * mu * (sum(v * v for v in x) / n)
-        - 3 * mu**4,
-        9,
-    )
-    g1 = m3 / (m2 * math.sqrt(m2))
-    b2 = m4 / (m2 * m2)
-    y = g1 * math.sqrt((n + 1) * (n + 3) / (6 * (n - 2)))
-    beta2 = (
-        3
-        * (n * n + 27 * n - 70)
-        * (n + 1)
-        * (n + 3)
-        / ((n - 2) * (n + 5) * (n + 7) * (n + 9))
-    )
-    w2 = math.sqrt(2 * (beta2 - 1)) - 1
-    delta = 1 / math.sqrt(math.log(math.sqrt(w2)))
-    alpha = math.sqrt(2 / (w2 - 1))
-    z1 = delta * math.log(y / alpha + math.sqrt((y / alpha) ** 2 + 1))
-    eb2 = 3 * (n - 1) / (n + 1)
-    vb2 = 24 * n * (n - 2) * (n - 3) / ((n + 1) ** 2 * (n + 3) * (n + 5))
-    xk = (b2 - eb2) / math.sqrt(vb2)
-    sb1 = (
-        6
-        * (n * n - 5 * n + 2)
-        / ((n + 7) * (n + 9))
-        * math.sqrt(6 * (n + 3) * (n + 5) / (n * (n - 2) * (n - 3)))
-    )
-    aa = 6 + 8 / sb1 * (2 / sb1 + math.sqrt(1 + 4 / sb1**2))
-    inner = (1 - 2 / aa) / (1 + xk * math.sqrt(2 / (aa - 4)))
-    cbrt = math.copysign(abs(inner) ** (1 / 3), inner)
-    z2 = (1 - 2 / (9 * aa) - cbrt) * math.sqrt(9 * aa / 2)
-    k2 = round(z1, 6) ** 2 + round(z2, 6) ** 2
-    row = dagostino_k2_daily_values(spark, sf_dir).collect()[0]
-    assert row["n"] == n
-    assert abs(row["skewness"] - g1) < 1e-5
-    assert abs(row["kurtosis"] - b2) < 1e-5
-    assert abs(row["z_skew"] - z1) < 1e-4
-    assert abs(row["z_kurt"] - z2) < 1e-4
-    assert abs(row["k2_stat"] - k2) < 1e-3
-    assert row["non_normal"] == (row["k2_stat"] > 5.991465)
-
-
-def test_siegel_slope_matches_python_mirror(spark, sf_dir):
-    """Median-of-per-point-medians replayed with the explicit
-    position-selection convention; plus the 50% breakdown sanity that
-    Siegel lies within the range of per-point medians."""
-
-    x = list(daily_sums(spark, sf_dir).values())
-    n = len(x)
-    t = list(range(n))
-
-    def med(vals):
-        vs = sorted(vals)
-        m = len(vs)
-        lo, hi = (m + 1) // 2, (m + 2) // 2
-        picked = vs[lo - 1 : hi]
-        return sum(picked) / len(picked)
-
-    mis = []
-    for i in range(n):
-        mis.append(
-            med(
-                [
-                    (x[j] - x[i]) / (t[j] - t[i])
-                    for j in range(n)
-                    if j != i
-                ]
-            )
-        )
-    slope = med(mis)
-    icept = med([x[i] - slope * t[i] for i in range(n)])
-    row = siegel_slope_daily_trend(spark, sf_dir).collect()[0]
-    assert row["n_days"] == n
-    assert abs(row["siegel_slope"] - slope) < 1e-5
-    assert abs(row["siegel_intercept"] - icept) < 1e-4
-    assert min(mis) - 1e-9 <= row["siegel_slope"] <= max(mis) + 1e-9
-
-
-def test_cochrane_orcutt_matches_python_mirror(spark, sf_dir):
-    x = list(daily_sums(spark, sf_dir).values())
-    n = len(x)
-    t = list(range(n))
-
-    def ols(tt, xx):
-        m = len(tt)
-        st, sx = sum(tt), sum(xx)
-        stx = sum(a * b for a, b in zip(tt, xx))
-        stt = sum(a * a for a in tt)
-        b1 = round((m * stx - st * sx) / (m * stt - st * st), 9)
-        b0 = round((sx - ((m * stx - st * sx) / (m * stt - st * st)) * st) / m, 9)
-        return b0, b1
-
-    b0, b1 = ols(t, x)
-    e = [x[i] - (b0 + b1 * t[i]) for i in range(n)]
-    rho = round(
-        sum(e[i] * e[i - 1] for i in range(1, n))
-        / sum(e[i - 1] ** 2 for i in range(1, n)),
-        9,
-    )
-    ts = [t[i] - rho * t[i - 1] for i in range(1, n)]
-    xs = [x[i] - rho * x[i - 1] for i in range(1, n)]
-    _, b1_co = ols(ts, xs)
-    row = cochrane_orcutt_daily_trend(spark, sf_dir).collect()[0]
-    assert row["n_days"] == n
-    assert abs(row["rho_hat"] - rho) < 1e-8
-    assert abs(row["slope_ols"] - b1) < 1e-6
-    assert abs(row["slope_co"] - b1_co) < 1e-5
-    assert abs(row["rel_shift"] - (b1_co - b1) / abs(b1)) < 1e-4
-
-
-def test_cusum_squares_matches_python_mirror(spark, sf_dir):
-    acc = daily_sums(spark, sf_dir)
-    days, x = list(acc), list(acc.values())
-    rs = [
-        (days[i], round((x[i] - x[i - 1]) ** 2, 9))
-        for i in range(1, len(x))
-    ]
-    m = len(rs)
-    tot = sum(v for _, v in rs)
-    best = (-1.0, None)
-    cum = 0.0
-    for k, (d, v) in enumerate(rs, start=1):
-        cum += v
-        dev = abs(cum / tot - k / m)
-        if dev > best[0] + 1e-15:
-            best = (dev, d)
-    row = cusum_squares_daily(spark, sf_dir).collect()[0]
-    assert row["n_diffs"] == m
-    assert row["break_day"] == best[1]
-    assert abs(row["cusum_sq_stat"] - best[0]) < 1e-5
-    assert abs(row["crit_05"] - 1.358 / math.sqrt(m)) < 1e-6
-
-
-def test_variance_ratio_matches_python_mirror(spark, sf_dir):
-    x = list(daily_sums(spark, sf_dir).values())
-    nn = len(x)
-    n = nn - 1  # returns
-    mu = round((x[-1] - x[0]) / n, 9)
-    s1 = sum(round((x[i] - x[i - 1] - mu) ** 2, 9) for i in range(1, nn))
-    q = _VR_Q
-    sq = sum(
-        round((x[i] - x[i - q] - q * mu) ** 2, 9) for i in range(q, nn)
-    )
-    var1 = s1 / (n - 1)
-    varq = sq / (q * (n - q + 1) * (1 - q / n))
-    vr = varq / (q * var1)
-    z = (vr - 1) / math.sqrt(2 * (2 * q - 1) * (q - 1) / (3 * q * n))
-    row = variance_ratio_daily(spark, sf_dir).collect()[0]
-    assert row["n_returns"] == n and row["q"] == q
-    assert abs(row["variance_ratio"] - vr) < 1e-5
-    assert abs(row["z_score"] - z) < 1e-4
-
-
-def test_turning_points_matches_python_mirror(spark, sf_dir):
-    x = list(daily_sums(spark, sf_dir).values())
-    n = len(x)
-    t = sum(
-        1
-        for a, b, c in zip(x, x[1:], x[2:])
-        if (b > a and b > c) or (b < a and b < c)
-    )
-    e = 2 * (n - 2) / 3
-    z = (t - e) / math.sqrt((16 * n - 29) / 90)
-    row = turning_points_daily(spark, sf_dir).collect()[0]
-    assert row["n_days"] == n
-    assert row["turning_points"] == t
-    assert abs(row["expected"] - e) < 1e-6
-    assert abs(row["z_score"] - z) < 1e-5
-
-
-def test_whiten_sample_kernel_matches_spark_path(spark):
-    """The mapInArrow whitening kernel must replicate the old Spark-side
-    centered/dot/projection chain bitwise: x = v − mu, dw =
-    cast(sum(cast(x·w as decimal(38,20))) as double), xp = x − dw·w."""
-
-    _n, centered, _u, w, _nrm, mu_vals, wv = _pca_state(spark, SF_SMOKE)
-    got = sorted(
-        map(
-            tuple,
-            _whiten_sample_kernel(
-                load_table(spark, SF_SMOKE, "embeddings").filter(
-                    F.col("vec_id") % 37 == 0
-                ),
-                mu_vals,
-                wv,
-            ).collect(),
-        )
-    )
-    sample = centered.filter(F.col("vec_id") % 37 == 0)
-    sw = sample.join(F.broadcast(w.select(F.col("j").alias("d"), "w")), "d")
-    dots = sw.groupBy("vec_id").agg(
-        F.sum((F.col("x") * F.col("w")).cast("decimal(38,20)"))
-        .cast("double")
-        .alias("dw")
-    )
-    want = sorted(
-        map(
-            tuple,
-            sw.join(dots, "vec_id")
-            .select(
-                "vec_id",
-                "d",
-                "x",
-                (F.col("x") - F.col("dw") * F.col("w")).alias("xp"),
-            )
-            .collect(),
-        )
-    )
-    assert len(got) == len(want) > 0
-    assert got == want  # bitwise: tuples of Python floats compare exact
