@@ -94,6 +94,9 @@ def partitioned_orders_yearly(spark: SparkSession, sf_dir: str) -> DataFrame:
     a partition filter — the scan lists exactly one year directory
     (asserted in pytest via the InMemoryFileIndex partition count)."""
     path = partitioned_orders_path(spark, sf_dir)
+    # a plain read, not catalog.read_parquet: o_year is discovered from the
+    # directory names, under partition settings the schema memo's key
+    # does not carry
     df = spark.read.parquet(path)
     return (
         df.filter(F.col("o_year") == 1995)
@@ -134,6 +137,7 @@ def dpp_ship_year_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     its Postgres tables are unpartitioned heaps — README.md:36-149 queries
     scan whole tables)."""
     path = partitioned_orders_path(spark, sf_dir)
+    # plain read: a partition-discovered layout (see partitioned_orders_yearly)
     fact = spark.read.parquet(path)
     lineitem = load_table(spark, sf_dir, "lineitem")
     ship_years = (

@@ -225,6 +225,8 @@ def zorder_clustered_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     files from footer min/max alone — a single-key sort can only skip on
     its one sort column (overlap measured in pytest). The result is
     layout-independent; the oracle recomputes from the raw table."""
+    # a plain read, not catalog.read_parquet: the layout is rebuilt on every
+    # call under new file names, so a memoized schema would never be hit
     df = spark.read.parquet(zorder_orders_path(spark, sf_dir))
     return (
         df.filter(

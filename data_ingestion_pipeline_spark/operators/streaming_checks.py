@@ -22,7 +22,11 @@ from data_ingestion_pipeline_spark.operators.scratch import (
     scratch_dir,
     sf_tag,
 )
-from data_ingestion_pipeline_spark.sources.catalog import load_table, normalize_event_ts
+from data_ingestion_pipeline_spark.sources.catalog import (
+    load_table,
+    normalize_event_ts,
+    parquet_schema,
+)
 from data_ingestion_pipeline_spark.streaming.ingest import run_stream_to_completion
 from data_ingestion_pipeline_spark.streaming.windows import (
     sessionize_gaps_and_islands,
@@ -95,9 +99,9 @@ def _events_stream_schema(spark: SparkSession, sample_file: str) -> T.StructType
     the actual fixture file. The streaming source requires a user-supplied
     schema; deriving it from the file keeps the checks working across
     fixture vintages (ts as TIMESTAMP(NANOS)-long vs native timestamp[us]).
-    One footer read, driver-side, O(1)."""
+    One footer read per process (``catalog.parquet_schema`` memoizes it)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(sample_file).schema
+    return parquet_schema(spark, sample_file)
 
 
 @contextmanager

@@ -54,6 +54,8 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_ingestion_pipeline_spark.sources.catalog import read_parquet, remember_schema
+
 __all__ = ["ManagedTable", "Snapshot", "ConcurrentWriteError"]
 
 _POINTER = "_LATEST"
@@ -249,6 +251,11 @@ class ManagedTable:
         If the version carries equality-delete sidecars
         (``equality_delete``), they are applied merge-on-read as an
         anti-join.
+
+        The version directory and each sidecar are read with their schema
+        from ``catalog.read_parquet``'s memo, so no read runs an inference
+        job for a version this process committed (``overwrite`` seeds
+        it) or for one it has read before.
         """
         v = version or self.current_version()
         if v is None:
@@ -256,7 +263,7 @@ class ManagedTable:
         path = os.path.join(self.root, v)
         if not os.path.isdir(path):
             raise FileNotFoundError(f"version {v} not retained in {self.root}")
-        df = self.spark.read.parquet(path)
+        df = read_parquet(self.spark, path)
         sidecars = self._delete_sidecars(v)
         if not sidecars:
             return df
@@ -266,7 +273,7 @@ class ManagedTable:
 
         keys = reduce(
             DataFrame.unionByName,
-            [self.spark.read.parquet(p) for p in sidecars],
+            [read_parquet(self.spark, p) for p in sidecars],
         ).distinct()
         # delete sets are small relative to data (bounded by compaction
         # cadence) — broadcast the anti-join so the read stays shuffle-free
@@ -409,11 +416,17 @@ class ManagedTable:
         commit lock. With the ``snapshot`` that ``df`` was derived from,
         the commit raises ConcurrentWriteError instead of silently
         overwriting a concurrent writer's changes; without it, it is a
-        blind replacement (last commit wins)."""
+        blind replacement (last commit wins).
+
+        Once committed, the version's schema (``df.schema``, every field
+        nullable as a parquet read reports it) seeds ``read_parquet``'s
+        memo, so neither the next ``read()`` nor the next commit's
+        ``snapshot()`` runs a schema-inference job."""
         stage = os.path.join(self.root, f"._stage_{uuid.uuid4().hex}")
         df.write.mode("overwrite").parquet(stage)
         version = self._claim_version(stage)
         self._commit_pointer(version, snapshot)
+        remember_schema(self.spark, os.path.join(self.root, version), df.schema)
         self._vacuum()
         return version
 

@@ -3,6 +3,7 @@ from __future__ import annotations
 import os
 import sys
 import tempfile
+import uuid
 from collections import defaultdict
 from decimal import Decimal
 
@@ -35,6 +36,19 @@ def sf_dir() -> str:
 def executed_plan(df) -> str:
     """The executed physical plan of ``df`` as Spark prints it."""
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def spark_jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn started)``, counted by job group."""
+    sc = spark.sparkContext
+    group = f"spark_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def write_sf(tmp_path, **tables) -> str:

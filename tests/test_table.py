@@ -1,6 +1,7 @@
 """ManagedTable (plans/table.py): versions and retention, copy-on-write and
-merge-on-read deletes, time travel, and the snapshot commit protocol
-(conflict, retry, version-slot claims, sidecar races, the pointer lock)."""
+merge-on-read deletes, time travel, the snapshot commit protocol
+(conflict, retry, version-slot claims, sidecar races, the pointer lock) and
+the schema each commit seeds for its reads."""
 
 from __future__ import annotations
 
@@ -15,9 +16,9 @@ from pyspark.sql import types as T
 from data_ingestion_pipeline_spark.plans.merge import merge_upsert
 from data_ingestion_pipeline_spark.plans.schema_evolution import sync_table_schema
 from data_ingestion_pipeline_spark.plans.table import ConcurrentWriteError, ManagedTable
-from data_ingestion_pipeline_spark.sources.catalog import load_table
+from data_ingestion_pipeline_spark.sources.catalog import load_table, parquet_schema
 from data_ingestion_pipeline_spark.streaming.ingest import merge_additive_aggregates
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, spark_jobs
 
 
 def test_managed_table_versions_and_vacuum(spark, tmp_path):
@@ -275,3 +276,71 @@ def test_occ_review_fixes(spark, tmp_path):
         assert committed[0] is read[0], f"{name} must commit the snapshot it read"
         assert read[0].version == t.current_version(), name
         assert read[0].sidecars == t._delete_sidecars(t.current_version()), name
+
+
+def _merge_twice(spark, t):
+    batch = spark.range(6).selectExpr("id AS k", "id AS ord", "'a' AS v")
+    merge_upsert(t, batch, ["k"], "ord")
+    merge_upsert(t, batch.selectExpr("k + 3 AS k", "ord + 1 AS ord", "'b' AS v"), ["k"], "ord")
+
+
+def _merge_with_a_new_column(spark, t):
+    merge_upsert(t, spark.range(4).selectExpr("id AS k", "id AS ord"), ["k"], "ord")
+    widened = spark.range(2, 6).selectExpr("id AS k", "id + 1 AS ord", "id * 1.5 AS score")
+    merge_upsert(t, widened, ["k"], "ord", evolve_schema=True)
+
+
+def _sync_add_and_drop(spark, t):
+    t.overwrite(spark.range(4).selectExpr("id AS k", "'x' AS old", "CAST(id AS INT) AS n"))
+    declared = T.StructType(
+        [
+            T.StructField("k", T.LongType(), False),
+            T.StructField("n", T.LongType(), True),
+            T.StructField("added", T.DateType(), True),
+        ]
+    )
+    assert sync_table_schema(t, declared, protected=["k"]) is not None
+
+
+def _nested_and_non_nullable(spark, t):
+    df = spark.range(3).selectExpr(
+        "id AS k",
+        "array(id, id + 1) AS arr",
+        "map('m', id) AS m",
+        "named_struct('x', id, 'tags', array('a'), 'kv', map(1, 'v')) AS s",
+    )
+    assert not df.schema["k"].nullable and not df.schema["arr"].dataType.containsNull
+    t.overwrite(df)
+
+
+def _compact_after_equality_delete(spark, t):
+    t.overwrite(spark.range(20).selectExpr("id AS k", "id * 2 AS v"))
+    t.equality_delete(spark.range(0, 20, 4).selectExpr("id AS k"), ["k"])
+    t.compact()
+    assert t._delete_sidecars(t.current_version()) == []
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        _merge_twice,
+        _merge_with_a_new_column,
+        _sync_add_and_drop,
+        _nested_and_non_nullable,
+        _compact_after_equality_delete,
+    ],
+    ids=lambda f: f.__name__.lstrip("_"),
+)
+def test_read_serves_the_inferred_schema_of_the_committed_version(spark, tmp_path, build):
+    """The schema a commit seeds is the one inference would return,
+    nullability included, and read() uses it without a Spark job."""
+    t = ManagedTable(spark, str(tmp_path / "t"))
+    build(spark, t)
+    df, jobs = spark_jobs(spark, t.read)
+    assert jobs == 0, "read() of a version this process committed infers nothing"
+    path = os.path.join(t.root, t.current_version())
+    inferred = spark.read.parquet(path).schema
+    assert df.schema == inferred
+    # the memo entry itself, not only the read (which reports every field
+    # nullable whatever schema it is given)
+    assert parquet_schema(spark, path) == inferred
