@@ -6,6 +6,7 @@ export in module order, then definition order. Callers look queries up by
 name; the order carries no priority.
 """
 
+import inspect
 import sys
 
 from data_ingestion_pipeline_spark import registry
@@ -54,9 +55,15 @@ def test_retired_names_stay_out_of_the_registry():
 
 
 def test_oracles_reference_registered_queries():
-    qs = registry.queries()
-    for name in registry.oracle_sql():
-        assert name in qs
+    """Every caller (``perfbench``, ``tools/check_oracle.py``, the
+    ``__spark_entry__.queries()`` contract) runs a query as
+    ``fn(spark, sf_dir)``: a query needing a third argument would fail
+    only when run."""
+    for name, fn in registry.queries().items():
+        try:
+            inspect.signature(fn).bind("spark", "sf_dir")
+        except TypeError as exc:
+            raise AssertionError(f"{name} cannot be called as fn(spark, sf_dir): {exc}") from None
 
 
 def test_no_token_permutation_duplicate_names():
