@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_ingestion_pipeline_spark.pipeline import run_pipeline, with_retries
+from data_ingestion_pipeline_spark.plans import commit
 from data_ingestion_pipeline_spark.plans.merge import dedupe_last_wins, merge_upsert
 from data_ingestion_pipeline_spark.plans.schema_evolution import (
     conform_to_schema,
@@ -177,9 +178,9 @@ def test_merge_folds_pending_sidecars(spark, tmp_path):
     d1, d2 = dt.datetime(2023, 1, 1), dt.datetime(2023, 1, 2)
     merge_upsert(t, _batch(spark, [("a", 1, d1), ("b", 2, d1), ("c", 3, d1)]), ["k"], "ts")
     t.equality_delete(spark.createDataFrame([("b",)], "k string"), ["k"])
-    assert t._delete_sidecars(t.current_version())
+    assert commit.sidecars(t.root, t.current_version())
     merge_upsert(t, _batch(spark, [("d", 4, d2)]), ["k"], "ts")
-    assert t._delete_sidecars(t.current_version()) == []
+    assert commit.sidecars(t.root, t.current_version()) == []
     rows = {r.k: r.v for r in t.read().collect()}
     assert rows == {"a": 1, "c": 3, "d": 4}
 

@@ -19,6 +19,8 @@ import os
 import threading
 import time
 from collections import Counter
+from contextlib import contextmanager
+from unittest import mock
 
 import numpy as np
 import pytest
@@ -49,6 +51,7 @@ from data_ingestion_pipeline_spark.operators.llm_data import (
 from data_ingestion_pipeline_spark.operators.mlprep_checks import (
     textrank_terms_documents,
 )
+from data_ingestion_pipeline_spark.plans import commit
 from data_ingestion_pipeline_spark.plans.table import ManagedTable
 from data_ingestion_pipeline_spark.similarity.pq import train_codebooks
 from tests.conftest import write_sf
@@ -66,23 +69,24 @@ def test_ptr_lock_mutual_exclusion_and_crash_release(spark, tmp_path):
     """The flock lock (a) excludes a second acquirer while held, (b) admits
     it immediately after release, and (c) treats a crashed writer's leftover
     lockFILE (present but not flocked — the fd died with the process) as
-    free, with no mtime-staleness window at all."""
+    free, with no mtime-staleness window at all. The file is never
+    unlinked: one inode serves every acquisition."""
     t = _mk(spark, tmp_path)
-
-    fd = t._ptr_locked()
     got: list[float] = []
+    inodes: list[int] = []
 
     def contender():
-        fd2 = t._ptr_locked()  # must block until the holder releases
-        got.append(time.monotonic())
-        t._ptr_unlock(fd2)
+        with commit.lock(t.root) as fd2:  # must block until the holder releases
+            got.append(time.monotonic())
+            inodes.append(os.fstat(fd2).st_ino)
 
-    th = threading.Thread(target=contender)
-    th.start()
-    time.sleep(0.3)
-    assert not got, "second acquirer entered the critical section while held"
-    released = time.monotonic()
-    t._ptr_unlock(fd)
+    with commit.lock(t.root) as fd:
+        inodes.append(os.fstat(fd).st_ino)
+        th = threading.Thread(target=contender)
+        th.start()
+        time.sleep(0.3)
+        assert not got, "second acquirer entered the critical section while held"
+        released = time.monotonic()
     th.join(timeout=10)
     assert got and got[0] >= released
 
@@ -92,19 +96,18 @@ def test_ptr_lock_mutual_exclusion_and_crash_release(spark, tmp_path):
     with open(lock, "w"):
         pass
     start = time.monotonic()
-    fd3 = t._ptr_locked()
-    assert time.monotonic() - start < 5.0
-    t._ptr_unlock(fd3)
-    assert not os.path.exists(lock)
+    with commit.lock(t.root) as fd3:
+        assert time.monotonic() - start < 5.0
+        inodes.append(os.fstat(fd3).st_ino)
+    assert set(inodes) == {os.stat(lock).st_ino}
 
 
 def test_ptr_lock_inode_check_bounces_orphaned_acquisition(spark, tmp_path):
-    """A waiter that acquires flock on an inode the holder has already
-    unlinked (path now names a different writer's fresh lock) must NOT
-    enter the critical section: the path-vs-fd inode verification retries
-    instead. Simulated directly: flock an orphan fd whose path was
-    re-created by another writer, then assert _ptr_locked excludes against
-    the PATH's current inode, not the orphan."""
+    """A flock held on an orphaned lock inode (one whose path was
+    unlinked and re-created behind it) must not exclude or admit anyone:
+    the lock always flocks the inode its PATH names. Simulated directly:
+    flock an orphan fd whose path was re-created, then assert the lock
+    excludes against the PATH's current inode."""
     t = _mk(spark, tmp_path)
     lock = os.path.join(t.root, ".ptr_lock")
 
@@ -116,10 +119,9 @@ def test_ptr_lock_inode_check_bounces_orphaned_acquisition(spark, tmp_path):
     # the dead inode (fresh path -> fresh inode -> no contention)
 
     fcntl.flock(orphan, fcntl.LOCK_EX | fcntl.LOCK_NB)
-    fd = t._ptr_locked()
-    assert os.fstat(fd).st_ino == os.stat(lock).st_ino
-    assert os.fstat(fd).st_ino != os.fstat(orphan).st_ino
-    t._ptr_unlock(fd)
+    with commit.lock(t.root) as fd:
+        assert os.fstat(fd).st_ino == os.stat(lock).st_ino
+        assert os.fstat(fd).st_ino != os.fstat(orphan).st_ino
     os.close(orphan)
 
 
@@ -189,21 +191,26 @@ def test_pinned_operators_leave_no_catalog_cache(spark, qname, sf_dir):
 
 
 def test_equality_delete_rolls_back_sidecar_on_lock_timeout(spark, tmp_path):
-    """If the post-rename lock acquisition fails, the
-    already-attached sidecar must be detached before the error propagates —
-    otherwise readers of the unchanged version see a half-applied delete."""
+    """If the commit lock cannot be acquired, the delete publishes
+    nothing: a read made while the deleter waits for the lock, and any
+    read after the error, still shows every row."""
     t = _mk(spark, tmp_path)
     v = t.current_version()
-    assert t._delete_sidecars(v) == []
+    assert commit.sidecars(t.root, v) == []
+    seen = []
 
-    def boom():
+    @contextmanager
+    def read_then_time_out(root):
+        seen.append(t.read().count())
         raise RuntimeError("pointer lock held past 30s — live contention?")
+        yield
 
-    t._ptr_locked = boom
-    with pytest.raises(RuntimeError):
+    with mock.patch.object(commit, "lock", read_then_time_out), pytest.raises(RuntimeError):
         t.equality_delete(spark.range(2).withColumnRenamed("id", "k"), ["k"])
-    assert t._delete_sidecars(v) == [], "half-applied delete left attached"
+    assert seen == [5], "a read saw a delete that never committed"
+    assert commit.sidecars(t.root, v) == [], "half-applied delete left attached"
     assert t.read().count() == 5
+    assert not [d for d in os.listdir(t.root) if d.startswith("._stage_")]
 
 
 def test_bigram_perplexity_hand_computed(spark, tmp_path):
