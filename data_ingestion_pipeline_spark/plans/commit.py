@@ -8,7 +8,9 @@ a version, swap the ``_LATEST`` pointer and vacuum. Nothing is renamed
 into a slot until its check has passed, and no other writer runs between
 the rename and the swap, so nothing is ever published and then rolled
 back. Under the lock the slot is the highest taken number plus one, so it
-cannot collide, and each new version is the newest.
+cannot collide, and each new version is the newest. A writer that dies
+between its rename and its swap leaves an orphan numbered above the
+pointer: ``versions`` never lists it, and the next commit removes it.
 
     <root>/
       .ptr_lock                    # flock target, never unlinked
@@ -54,9 +56,17 @@ def current_version(root: str) -> str | None:
         return None
 
 
-def versions(root: str) -> list[str]:
-    """Retained version directories, oldest first."""
+def _slots(root: str) -> list[str]:
+    """Every version directory, oldest first, orphans included."""
     return sorted(d for d in os.listdir(root) if d.startswith("v"))
+
+
+def versions(root: str) -> list[str]:
+    """Retained versions, oldest first: those at or below the pointer. A
+    directory numbered above it is an orphan, claimed by a writer that
+    died before its pointer swap; no reader was ever pointed at it."""
+    cur = current_version(root)
+    return [v for v in _slots(root) if cur is not None and v <= cur]
 
 
 def _deletes_dir(root: str, version: str) -> str:
@@ -143,9 +153,8 @@ def _swap_pointer(root: str, version: str) -> None:
 
 def _vacuum(root: str, current: str, keep_versions: int) -> None:
     """Keep ``current`` and the ``keep_versions - 1`` newest others; remove
-    stages older than ``_STAGE_TTL_S``. Runs under the lock, so every
-    version it sees was published, apart from one whose writer died
-    between its claim and its swap."""
+    stages older than ``_STAGE_TTL_S``. Runs under the lock, after the
+    commit removed the orphans, so every version it sees was published."""
     older = [v for v in versions(root) if v != current]
     for stale in older[: max(0, len(older) - (keep_versions - 1))]:
         shutil.rmtree(os.path.join(root, stale), ignore_errors=True)
@@ -180,6 +189,12 @@ def commit_version(
                 f"sidecars) to {cur!r} since the snapshot was read; re-read and retry"
             )
         version = _claim(stage, root, "v", 8)
+        # Under the lock, a slot above the pointer other than this one is
+        # an orphan. Remove it before the swap, which would put it below
+        # the pointer; the claim counted its number, so none is reused.
+        for orphan in _slots(root):
+            if orphan != version and (cur is None or orphan > cur):
+                shutil.rmtree(os.path.join(root, orphan), ignore_errors=True)
         _swap_pointer(root, version)
         _vacuum(root, version, keep_versions)
     return version

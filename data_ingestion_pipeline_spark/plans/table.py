@@ -79,7 +79,9 @@ class ManagedTable:
         return commit.current_version(self.root)
 
     def versions(self) -> list[str]:
-        """Retained version directories, oldest first (time-travel targets)."""
+        """Retained versions, oldest first (time-travel targets): the
+        current one and older ones, never an orphan a dead writer left
+        above the pointer."""
         return commit.versions(self.root)
 
     # -- read / write -------------------------------------------------------
@@ -103,9 +105,9 @@ class ManagedTable:
         v = version or self.current_version()
         if v is None:
             raise FileNotFoundError(f"table {self.root} has no committed version")
-        path = os.path.join(self.root, v)
-        if not os.path.isdir(path):
+        if v not in self.versions():
             raise FileNotFoundError(f"version {v} not retained in {self.root}")
+        path = os.path.join(self.root, v)
         df = read_parquet(self.spark, path)
         sidecars = commit.sidecars(self.root, v)
         if not sidecars:

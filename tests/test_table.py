@@ -143,20 +143,51 @@ def test_managed_table_occ_conflict_and_retry(spark, tmp_path):
 
 
 def test_managed_table_claim_collision_skips_taken_slot(spark, tmp_path):
-    """A version slot already claimed by a concurrent writer (non-empty
-    directory, pointer not yet moved) is skipped, never overwritten: the
-    commit lands on the next free slot and the pointer resolves to it."""
+    """A version slot claimed by a writer that died before its pointer
+    swap (non-empty directory above the pointer) is skipped, never written
+    into or reused: the commit lands on the next slot, the pointer
+    resolves to it, and the orphan is removed. A live writer's claim
+    cannot be seen here: claim and swap happen under the lock this commit
+    holds."""
     t = ManagedTable(spark, str(tmp_path / "claim"))
     t.overwrite(spark.range(3))
     blocker = os.path.join(t.root, "v00000002")
     os.makedirs(blocker)
     with open(os.path.join(blocker, "part-in-flight"), "w") as f:
-        f.write("concurrent writer's half-commit")
+        f.write("dead writer's half-commit")
     v = t.overwrite(spark.range(4))
     assert v == "v00000003"
     assert t.read().count() == 4
-    with open(os.path.join(blocker, "part-in-flight")) as f:
-        assert f.read(), "the in-flight claim was not clobbered"
+    assert t.versions() == ["v00000001", "v00000003"]
+    assert not os.path.exists(blocker), "the orphan outlived the next commit"
+
+
+def test_an_orphan_above_the_pointer_is_never_listed_read_or_kept(tmp_path):
+    """A writer that dies between its slot rename and its pointer swap
+    leaves an orphan above ``_LATEST``. ``versions()`` and
+    ``read(version=...)`` never name it, it takes no ``keep_versions``
+    slot, and the next commit removes it. Plain directories, no JVM."""
+    root = str(tmp_path / "t")
+    t = ManagedTable(None, root, keep_versions=2)
+
+    def commit_one(tag):
+        with commit.staged(root) as stage:
+            commit_workers.fill(stage, tag)
+            return commit.commit_version(root, stage, None, t.keep_versions)
+
+    commit_one("c1")
+    commit_one("c2")
+    with mock.patch.object(commit, "_swap_pointer", side_effect=OSError("died")):
+        with pytest.raises(OSError, match="died"):
+            commit_one("orphan")
+    assert os.path.isdir(os.path.join(root, "v00000003"))
+    assert t.current_version() == "v00000002"
+    assert t.versions() == ["v00000001", "v00000002"]
+    with pytest.raises(FileNotFoundError, match="not retained"):
+        t.read(version="v00000003")
+    assert commit_one("c4") == "v00000004"
+    assert t.versions() == ["v00000002", "v00000004"]
+    assert not os.path.exists(os.path.join(root, "v00000003"))
 
 
 def test_managed_table_sidecars_pinned_at_commit(spark, tmp_path):
@@ -369,11 +400,13 @@ def test_commit_core_under_concurrent_processes(tmp_path):
         args=(root, str(tmp_path / "dead.jsonl"), 0, 1, ("blind",), "claim", "k", None),
     )
     assert _run_processes([dead]) == [killed]
-    orphan = commit.versions(root)[-1]
-    assert commit.current_version(root) == v != orphan, "claimed, never pointed"
+    orphan = max(d for d in os.listdir(root) if d.startswith("v"))
+    assert commit.current_version(root) == v < orphan, "claimed, never pointed"
+    assert orphan not in commit.versions(root), "an orphan is listed"
     t0 = time.monotonic()
     assert commit_one("after") > orphan
     assert time.monotonic() - t0 < 5.0, "waited for the dead holder's lock"
+    assert not os.path.exists(os.path.join(root, orphan)), "the next commit kept the orphan"
 
     # the leaked stage is swept once it is a day old, not before
     (leaked,) = [d for d in os.listdir(root) if d.startswith("._stage_")]
